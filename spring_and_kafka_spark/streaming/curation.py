@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from spring_and_kafka_spark.llm.text import fingerprint_expr
 from spring_and_kafka_spark.sources.tables import load_table
+from spring_and_kafka_spark.streaming.sinks import foreach_batch_sink
 
 
 def stage_document_chunks(
@@ -115,8 +116,7 @@ def admission_stream(
         ).write.mode("append").parquet(decisions_dir)
 
     return (
-        new_docs.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", decisions_dir + "_ckpt")
+        foreach_batch_sink(new_docs, on_batch, decisions_dir + "_ckpt")
         .trigger(availableNow=True)
         .start()
     )

@@ -13,9 +13,9 @@ divergence itself would be order-dependent and unmergeable.
 Mechanics mirror streaming/mv.py / streaming/sketch.py: each micro-batch
 folds its documents into one partial count row per touched (source,
 token) — map-side combine done early, so state growth is bounded by
-vocabulary × batches, independent of document volume — written to a
-``batch_id=N`` partition (replays overwrite their own partition: the
-same exactly-once merge-on-read contract). The reader merges partials
+vocabulary × batches, independent of document volume — written by
+streaming.sinks.partial_state_stream, which owns the exactly-once
+partial-state contract. The reader merges partials
 and hands the count table to llm/text.py::js_from_counts, the SAME
 readout the batch query uses, so stream ≡ batch is an identity on the
 readout, not a re-derivation.
@@ -36,11 +36,11 @@ from pyspark.sql import functions as F
 
 from spring_and_kafka_spark.llm.text import js_from_counts
 from spring_and_kafka_spark.streaming.sinks import (
-    foreach_batch_sink,
-    read_single_state,
+    partial_state_stream,
+    read_partial_state,
 )
 
-_DRIFT_SCHEMA = "source STRING, tok STRING, c BIGINT"
+_SUBTABLES = (("counts", "source STRING, tok STRING, c BIGINT"),)
 
 
 def token_delta_stream(docs: DataFrame, state_dir: str):
@@ -49,38 +49,30 @@ def token_delta_stream(docs: DataFrame, state_dir: str):
     IDENTICAL to the batch query's (lower, split on space, drop empty)
     — divergent normalization is the classic way stream and batch
     drift monitors silently disagree."""
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.select(
+    return partial_state_stream(
+        docs,
+        state_dir,
+        {
+            "counts": lambda b: b.select(
                 "source",
                 F.explode(F.split(F.lower("text"), " ")).alias("tok"),
             )
             .filter(F.col("tok") != "")
             .groupBy("source", "tok")
             .agg(F.count("*").alias("c"))
-            .write.mode("overwrite")
-            .parquet(f"{state_dir}/batch_id={batch_id}")
-        )
-
-    return (
-        foreach_batch_sink(docs, on_batch, state_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
+        },
     )
 
 
 def maintained_counts(spark: SparkSession, state_dir: str) -> DataFrame:
     """Merged (source, tok, c) counts from all streamed partials. A
     stream that never ran yields an empty count table, not a
-    missing-path error; a torn batch (``batch_id=N`` without its
-    ``_SUCCESS`` marker — a crash during that write) RAISES via
-    read_single_state instead of merging partial counts (the r15
-    standing cleanup). Compaction = this query written back as the
-    new single partial."""
-    partials = read_single_state(
-        spark, state_dir, _DRIFT_SCHEMA, "drift"
-    ).select("source", "tok", "c")
+    missing-path error; a torn batch (a crash during its write) RAISES
+    via streaming.sinks.read_partial_state instead of merging partial
+    counts. Compaction = this query written back as the new single
+    partial."""
+    (counts,) = read_partial_state(spark, state_dir, _SUBTABLES, "drift")
+    partials = counts.select("source", "tok", "c")
     return partials.groupBy("source", "tok").agg(F.sum("c").alias("c"))
 
 

@@ -13,12 +13,12 @@ The per-day health stats split into two merge algebras:
   operators/sketches.py; the audit keeps the exact form because its
   oracle is exact.)
 
-Both partial kinds land under ``batch_id=N`` partitions, so an
-at-least-once replay overwrites its own partition — the same
-exactly-once merge-on-read contract as streaming/sketch.py and
-streaming/mv.py. Derived columns (null rate, day-over-day ratio) are
-computed on READ with the exact expressions of the batch query, never
-merged — ratios don't merge, their numerators and denominators do.
+Both partial kinds are written by streaming.sinks.partial_state_stream,
+which owns the exactly-once partial-state contract (per-batch
+overwrite, tear detection on read). Derived columns (null rate,
+day-over-day ratio) are computed on READ with the exact expressions of
+the batch query, never merged — ratios don't merge, their numerators
+and denominators do.
 
 tests/test_streaming_advanced.py asserts stream-maintained == the batch
 q_dq_freshness answer on the same replayed events, regardless of
@@ -31,7 +31,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from spring_and_kafka_spark.streaming.sinks import foreach_batch_sink
+from spring_and_kafka_spark.streaming.sinks import (
+    partial_state_stream,
+    read_partial_state,
+)
 
 _CNT_SCHEMA = "day DATE, n_rows BIGINT, n_null_value BIGINT"
 _USR_SCHEMA = "day DATE, user_id BIGINT"
@@ -41,36 +44,17 @@ def freshness_delta_stream(events: DataFrame, state_dir: str):
     """Fold an event stream (ts, user_id, value, …) into per-batch
     freshness partials under ``state_dir``: counter rows per day and
     distinct user-presence rows per day."""
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        day = F.to_date("ts").alias("day")
-        # two write jobs consume the batch — persist so the second one
-        # reads the cached rows instead of re-scanning the source files
-        # (the sibling mv/sketch sinks are single-action and skip this)
-        batch_df.persist()
-        try:
-            (
-                batch_df.groupBy(day)
-                .agg(
-                    F.count("*").alias("n_rows"),
-                    (F.count("*") - F.count("value")).alias("n_null_value"),
-                )
-                .write.mode("overwrite")
-                .parquet(f"{state_dir}/counts/batch_id={batch_id}")
-            )
-            (
-                batch_df.select(day, "user_id")
-                .distinct()
-                .write.mode("overwrite")
-                .parquet(f"{state_dir}/users/batch_id={batch_id}")
-            )
-        finally:
-            batch_df.unpersist()
-
-    return (
-        foreach_batch_sink(events, on_batch, state_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
+    day = F.to_date("ts").alias("day")
+    return partial_state_stream(
+        events,
+        state_dir,
+        {
+            "counts": lambda b: b.groupBy(day).agg(
+                F.count("*").alias("n_rows"),
+                (F.count("*") - F.count("value")).alias("n_null_value"),
+            ),
+            "users": lambda b: b.select(day, "user_id").distinct(),
+        },
     )
 
 
@@ -80,14 +64,7 @@ def maintained_freshness(spark: SparkSession, state_dir: str) -> DataFrame:
     6 dp, day-over-day volume ratio via a days-sized lag window. A
     stream that never ran yields an empty audit, not a missing-path
     error. PARTIAL state raises instead of being silently absorbed
-    (ADVICE r6: one try around both reads discarded a successfully-read
-    counts/ when users/ was missing) — the guard now lives in
-    streaming.sinks.read_partial_state (extracted in r15 when
-    templates.py needed the same three-level check, which also added
-    the missing-_SUCCESS tear the original two-level version here
-    could not see)."""
-    from spring_and_kafka_spark.streaming.sinks import read_partial_state
-
+    (streaming.sinks.read_partial_state)."""
     counts, users = read_partial_state(
         spark,
         state_dir,

@@ -6,14 +6,13 @@ integer cents), so a CDC changelog stream maintains it with no stateful
 operator: each micro-batch of changelog rows (deletes retract, updates
 emit the price difference, inserts add — the q_snapshot_diff/
 q_mv_incremental convention) folds into a per-batch PARTIAL delta
-written to a ``batch_id=N`` partition, and a reader answers the current
+(written by streaming.sinks.partial_state_stream, which owns the
+exactly-once partial-state contract), and a reader answers the current
 view by summing base + partials per group. Batch boundaries cannot
 change the merged result (sum is associative/commutative over any
-partitioning of the changelog), and replays overwrite their own
-partition — the same exactly-once merge-on-read contract as
-streaming/sketch.py. At 100 TB this is the nightly-compaction-friendly
-MV shape: the base is re-folded only when partials are compacted into
-it, never on ingest.
+partitioning of the changelog). At 100 TB this is the
+nightly-compaction-friendly MV shape: the base is re-folded only when
+partials are compacted into it, never on ingest.
 
 tests/test_streaming_advanced.py asserts stream-maintained == the batch
 q_mv_incremental answer == the full recompute.
@@ -25,11 +24,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spring_and_kafka_spark.streaming.sinks import (
-    foreach_batch_sink,
-    read_single_state,
+    partial_state_stream,
+    read_partial_state,
 )
 
-_MV_SCHEMA = "month_id BIGINT, n_orders BIGINT, revenue_cents BIGINT"
+_SUBTABLES = (
+    ("deltas", "month_id BIGINT, n_orders BIGINT, revenue_cents BIGINT"),
+)
 
 
 def mv_delta_stream(changelog: DataFrame, state_dir: str):
@@ -40,22 +41,15 @@ def mv_delta_stream(changelog: DataFrame, state_dir: str):
     a batch of millions of changelog rows lands as one row per touched
     month, so state growth is bounded by group cardinality × batches,
     independent of changelog volume."""
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.groupBy("month_id")
-            .agg(
+    return partial_state_stream(
+        changelog,
+        state_dir,
+        {
+            "deltas": lambda b: b.groupBy("month_id").agg(
                 F.sum("d_orders").alias("n_orders"),
                 F.sum("d_cents").alias("revenue_cents"),
             )
-            .write.mode("overwrite")
-            .parquet(f"{state_dir}/batch_id={batch_id}")
-        )
-
-    return (
-        foreach_batch_sink(changelog, on_batch, state_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
+        },
     )
 
 
@@ -70,13 +64,11 @@ def maintained_view(
     shape the partials carry, so compaction (folding partials into a new
     base) is this exact query written back.
 
-    Torn state (a ``batch_id=N`` partition missing its ``_SUCCESS``
-    marker — a crash during that write) RAISES via read_single_state
-    instead of silently merging a partial delta (the r15 standing
-    cleanup)."""
-    partials = read_single_state(spark, state_dir, _MV_SCHEMA, "mv").select(
-        "month_id", "n_orders", "revenue_cents"
-    )
+    Torn state (a crash during a batch's write) RAISES via
+    streaming.sinks.read_partial_state instead of silently merging a
+    partial delta."""
+    (deltas,) = read_partial_state(spark, state_dir, _SUBTABLES, "mv")
+    partials = deltas.select("month_id", "n_orders", "revenue_cents")
     return (
         base_mv.select("month_id", "n_orders", "revenue_cents")
         .unionByName(partials)

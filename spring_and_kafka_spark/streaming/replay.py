@@ -10,8 +10,6 @@ micro-batch.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from spring_and_kafka_spark.sources.tables import load_table
@@ -52,21 +50,15 @@ def read_event_stream(
 
 def drain_to_memory(stream_df: DataFrame, table_name: str, spark: SparkSession) -> DataFrame:
     """Run the stream to completion (availableNow) into an in-memory sink
-    and return the result as a batch DataFrame. Output mode 'complete' for
-    aggregations would drop late rows differently; callers pick mode via
-    the aggregated df they pass (append for raw, complete for agg handled
-    by Spark automatically in memory sink when needed)."""
+    in append mode and return the result as a batch DataFrame. An
+    aggregate without a watermark cannot append, so Spark's analyzer
+    rejects it at start."""
     query = (
         stream_df.writeStream.format("memory")
         .queryName(table_name)
-        .outputMode("complete" if stream_df.isStreaming and _is_aggregated(stream_df) else "append")
+        .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
     query.awaitTermination()
     return spark.table(table_name)
-
-
-def _is_aggregated(df: DataFrame) -> bool:
-    plan = df._jdf.queryExecution().analyzed().toString()
-    return "Aggregate" in plan

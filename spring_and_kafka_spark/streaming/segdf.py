@@ -25,11 +25,10 @@ floor-form share), asserted to bit-equality after a full replay in
 tests/test_streaming_advanced.py.
 
 Delivery contract: exactly-once per checkpointed document for the
-instance sums (replays overwrite their own ``batch_id=N`` partition);
+instance sums (streaming.sinks.partial_state_stream owns the
+partial-state contract: per-batch overwrite, tear detection on read);
 the presence-derived df additionally tolerates a re-delivered document
-by construction. Torn state (a crash between or during on_batch's two
-writes — including the missing-_SUCCESS case) RAISES at read time via
-streaming.sinks.read_partial_state.
+by construction.
 
 Reference parity anchor: no streaming-curation surface in the reference
 (src/main/java/jc/DemoApplication.java is a Kafka pipe) — part of the
@@ -45,7 +44,7 @@ from pyspark.sql import Window as W
 
 from spring_and_kafka_spark.llm.text import boilerplate_segments
 from spring_and_kafka_spark.streaming.sinks import (
-    foreach_batch_sink,
+    partial_state_stream,
     read_partial_state,
 )
 
@@ -59,32 +58,18 @@ def seg_df_delta_stream(docs: DataFrame, state_dir: str):
     ``state_dir`` (availableNow trigger — drains the staged corpus then
     stops, the replay harness convention). NULL doc_id rows are
     excluded exactly as the batch query's scan excludes them."""
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # one cut per batch, two consumers (the templates.py convention;
-        # try/finally so a failed write can't leak the cached batch)
-        seg = boilerplate_segments(
-            batch_df.filter(F.col("doc_id").isNotNull())
-        ).select("seg", "doc_id").persist()
-        try:
-            (
-                seg.groupBy("seg")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .write.mode("overwrite")
-                .parquet(f"{state_dir}/inst/batch_id={batch_id}")
-            )
-            (
-                seg.distinct()
-                .write.mode("overwrite")
-                .parquet(f"{state_dir}/presence/batch_id={batch_id}")
-            )
-        finally:
-            seg.unpersist()
-
-    return (
-        foreach_batch_sink(docs, on_batch, state_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
+    return partial_state_stream(
+        docs,
+        state_dir,
+        {
+            "inst": lambda seg: seg.groupBy("seg").agg(
+                F.count(F.lit(1)).alias("n")
+            ),
+            "presence": lambda seg: seg.distinct(),
+        },
+        prep=lambda b: boilerplate_segments(
+            b.filter(F.col("doc_id").isNotNull())
+        ).select("seg", "doc_id"),
     )
 
 

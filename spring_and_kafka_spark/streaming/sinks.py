@@ -49,6 +49,49 @@ def parquet_sink(stream_df: DataFrame, path: str, checkpoint_dir: str):
     )
 
 
+def partial_state_stream(
+    stream_df: DataFrame,
+    state_dir: str,
+    tables: dict[str, Callable[[DataFrame], DataFrame]],
+    prep: Callable[[DataFrame], DataFrame] | None = None,
+):
+    """Drain ``stream_df`` (availableNow) into a merge-on-read
+    maintainer's partial state and return the started query.
+
+    Each micro-batch is cut once by ``prep`` (the whole batch when
+    None), then every ``tables`` fold, in dict order, writes its partial
+    to ``{state_dir}/{table}/batch_id={batch_id}`` with overwrite. That
+    is the exactly-once half of the contract: foreachBatch is
+    at-least-once, so a replayed batch rewrites its own partitions
+    instead of double-counting, and :func:`read_partial_state` reads the
+    layout back, raising on a batch torn between or during the writes.
+    With more than one table the cut is persisted so later folds reuse
+    it instead of re-scanning the source, and released in ``finally`` so
+    a failed write cannot leak it across retries. Empty batches still
+    write their (empty) partitions. The checkpoint is
+    ``state_dir + "_ckpt"``."""
+    shared = len(tables) > 1
+
+    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
+        cut = prep(batch_df) if prep else batch_df
+        if shared:
+            cut.persist()
+        try:
+            for name, fold in tables.items():
+                fold(cut).write.mode("overwrite").parquet(
+                    f"{state_dir}/{name}/batch_id={batch_id}"
+                )
+        finally:
+            if shared:
+                cut.unpersist()
+
+    return (
+        foreach_batch_sink(stream_df, on_batch, state_dir + "_ckpt")
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def _batch_partitions(spark, table_dir: str) -> tuple[set[str], set[str]]:
     """(committed, uncommitted) ``batch_id=N`` partition names under one
     state table dir, by driver-side Hadoop FS metadata listing (works on
@@ -71,72 +114,13 @@ def _batch_partitions(spark, table_dir: str) -> tuple[set[str], set[str]]:
     return done, torn
 
 
-def read_single_state(
-    spark,
-    state_dir: str,
-    schema: str,
-    what: str,
-    require_success: bool = True,
-):
-    """Single-table variant of :func:`read_partial_state` for
-    maintainers whose state is a flat ``{state_dir}/batch_id=N`` layout
-    (streaming/mv.py, sketch.py, drift.py — the migration the r15
-    guard's docstring named as the standing cleanup): the sibling-table
-    tear levels are vacuous with one table, so only the level-3 check
-    applies — a ``batch_id=N`` partition WITHOUT its ``_SUCCESS``
-    marker is a crash DURING that write (the dir exists from job
-    start, so the bare read absorbs partial data silently) and RAISES.
-    Returns an empty frame when the state dir doesn't exist (the
-    stream simply never ran).
-
-    ``require_success=False`` skips the marker check — for deployments
-    whose committer writes no markers
-    (``mapreduce.fileoutputcommitter.marksuccessfuljobs=false``, the
-    common object-store-committer setting — ADVICE r15): tear
-    detection then degrades to the replay-overwrite contract alone
-    (exactly the pre-guard behavior), but the degradation is chosen
-    EXPLICITLY by the caller instead of silently being the only mode.
-    The default assumes markers, which Spark's parquet batch writes
-    under ``foreachBatch`` produce out of the box."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        frame = spark.read.schema(schema).parquet(state_dir)
-    except AnalysisException:  # no batch ever committed a partition
-        return spark.createDataFrame([], schema)
-    _, torn = _batch_partitions(spark, state_dir)
-    if torn:
-        if require_success:
-            raise RuntimeError(
-                f"partial {what} state under {state_dir}: "
-                f"{sorted(torn)[0]} has no _SUCCESS marker — a crash "
-                "during that write; replay that batch or clear the "
-                "state dir"
-            )
-        # markerless-committer mode: a marker-less partition is expected,
-        # but it is also exactly what a mid-write crash leaves behind —
-        # log so operators can tell the two apart (ADVICE r16)
-        _LOG.warning(
-            "%s state under %s: merging %d marker-less batch "
-            "partition(s) (%s ...) under require_success=False — "
-            "expected for markerless committers, but indistinguishable "
-            "from a mid-write crash; tear detection degrades to the "
-            "replay-overwrite contract",
-            what,
-            state_dir,
-            len(torn),
-            sorted(torn)[0],
-        )
-    return frame
-
-
 def read_partial_state(
     spark, state_dir: str, subtables, what: str, require_success: bool = True
 ):
-    """Read a merge-on-read maintainer's partial state tables, RAISING
-    on torn state instead of silently absorbing it (the freshness.py
-    guard generalized to N sibling tables — ADVICE r6 / round-7 review:
-    independent silent reads of sibling state are the bug shape).
+    """Read the partial state :func:`partial_state_stream` wrote,
+    RAISING on torn state instead of silently absorbing it (independent
+    silent reads of sibling state are the bug shape: one try around two
+    reads once discarded a good table when its sibling was missing).
 
     ``subtables`` is a list of (name, schema) pairs; returns a tuple of
     DataFrames in the same order (all empty when NO table exists — the
@@ -148,16 +132,20 @@ def read_partial_state(
        same crash on any later batch;
     3. a ``batch_id=N`` partition WITHOUT its ``_SUCCESS`` marker — a
        crash DURING that write (the dir exists from job start, so bare
-       dir-presence checks pass while the data inside is partial; the
-       r15 review found this evasion in the first templates guard).
-       Skippable via ``require_success=False`` for committers that
-       write no markers (see :func:`read_single_state`); levels 1-2
-       still apply.
+       dir-presence checks pass while the data inside is partial). With
+       one table, this is the only level that can fire.
+
+    ``require_success=False`` skips level 3 for deployments whose
+    committer writes no markers
+    (``mapreduce.fileoutputcommitter.marksuccessfuljobs=false``, the
+    common object-store-committer setting): each marker-less partition
+    is then merged as a batch, with a logged warning because a mid-write
+    crash looks identical, and levels 1-2 still apply. The default
+    assumes markers, which Spark's parquet batch writes under
+    ``foreachBatch`` produce out of the box.
 
     All checks are driver-side Hadoop FS metadata listings (works on
-    object stores), never a Spark job. Single-table maintainers
-    (streaming/mv.py, sketch.py, drift.py) read the flat-layout twin
-    :func:`read_single_state` (the r15 standing cleanup, closed r16)."""
+    object stores), never a Spark job."""
     from pyspark.errors import AnalysisException
 
     def read_or_none(sub: str, schema: str) -> DataFrame | None:

@@ -3,11 +3,12 @@ operators/sketches.py::q_agg_quantile_sketch.
 
 The decimal histogram is a pure counter grid, so the streaming rollup
 needs no stateful operator at all: each micro-batch contributes its own
-partial (digits, first2, bcnt) histogram written to a batch_id-keyed
-partition, and a reader merges by summing per bucket — the same algebra
-a 100 TB warehouse uses to keep hourly sketch partitions and answer
-any-time-range quantiles by merging the covered hours
-(cf. q_agg_hll_rollup for the distinct-count analog). Batch boundaries
+partial (digits, first2, bcnt) histogram (written by
+streaming.sinks.partial_state_stream, which owns the exactly-once
+partial-state contract), and a reader merges by summing per bucket —
+the same algebra a 100 TB warehouse uses to keep hourly sketch
+partitions and answer any-time-range quantiles by merging the covered
+hours (cf. q_agg_hll_rollup for the distinct-count analog). Batch boundaries
 cannot change the merged result; tests/test_streaming_advanced.py
 asserts stream-merged quantiles == the one-shot batch sketch.
 """
@@ -22,33 +23,18 @@ from spring_and_kafka_spark.operators.sketches import (
     to_cents,
 )
 from spring_and_kafka_spark.streaming.sinks import (
-    foreach_batch_sink,
-    read_single_state,
+    partial_state_stream,
+    read_partial_state,
 )
 
-_SKETCH_SCHEMA = "digits BIGINT, first2 BIGINT, bcnt BIGINT"
+_SUBTABLES = (("hist", "digits BIGINT, first2 BIGINT, bcnt BIGINT"),)
 
 
 def sketch_stream(prices: DataFrame, state_dir: str):
     """Fold a stream of rows with an ``l_extendedprice`` column into
-    per-batch partial histograms under ``state_dir``.
-
-    Exactly-once per the foreach_batch_sink contract: each partial
-    lands in its own ``batch_id=N`` partition with overwrite, so a
-    replayed micro-batch (foreachBatch is at-least-once) rewrites its
-    partition instead of double-counting buckets. Empty batches still
-    write their (empty) partition — the state directory always exists
-    once the query has run."""
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        decimal_histogram(to_cents(batch_df)).write.mode(
-            "overwrite"
-        ).parquet(f"{state_dir}/batch_id={batch_id}")
-
-    return (
-        foreach_batch_sink(prices, on_batch, state_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
+    per-batch partial histograms under ``state_dir``."""
+    return partial_state_stream(
+        prices, state_dir, {"hist": lambda b: decimal_histogram(to_cents(b))}
     )
 
 
@@ -57,13 +43,12 @@ def merged_quantiles(spark: SparkSession, state_dir: str) -> DataFrame:
     partition column ignored) and resolve the standard quantiles —
     (q, approx_cents) rows identical to what the one-shot histogram
     would answer. A stream that never ran yields the empty answer, not
-    a missing-path error; a torn batch (``batch_id=N`` without its
-    ``_SUCCESS`` marker — a crash during that write) RAISES via
-    read_single_state instead of merging a partial histogram (the r15
-    standing cleanup)."""
+    a missing-path error; a torn batch (a crash during its write)
+    RAISES via streaming.sinks.read_partial_state instead of merging a
+    partial histogram."""
     from pyspark.sql import functions as F
 
-    partials = read_single_state(spark, state_dir, _SKETCH_SCHEMA, "sketch")
+    (partials,) = read_partial_state(spark, state_dir, _SUBTABLES, "sketch")
     b = partials.groupBy("digits", "first2").agg(
         F.sum("bcnt").alias("bcnt")
     )

@@ -25,12 +25,10 @@ same df-capped candidate generation, same interval-union sweep,
 asserted to bit-equality after a full replay in
 tests/test_streaming_advanced.py.
 
-Delivery contract: exactly-once per checkpointed document (replays
-overwrite their own ``batch_id=N`` partition); cross-batch
-re-delivery additionally tolerated by the min/distinct merges above.
-Torn state (a crash between or during on_batch's two writes —
-including the missing-_SUCCESS case) RAISES at read time via
-streaming.sinks.read_partial_state.
+Delivery contract: exactly-once per checkpointed document
+(streaming.sinks.partial_state_stream owns the partial-state contract:
+per-batch overwrite, tear detection on read); cross-batch re-delivery
+additionally tolerated by the min/distinct merges above.
 
 Reference parity anchor: no streaming-curation surface in the reference
 (src/main/java/jc/DemoApplication.java is a Kafka pipe) — part of the
@@ -50,7 +48,7 @@ from spring_and_kafka_spark.llm.dedup import (
     _span_cover_readout,
 )
 from spring_and_kafka_spark.streaming.sinks import (
-    foreach_batch_sink,
+    partial_state_stream,
     read_partial_state,
 )
 
@@ -65,40 +63,21 @@ def span_anchor_delta_stream(docs: DataFrame, state_dir: str):
     stops, the replay harness convention). NULL-doc_id / NULL-text /
     empty-text rows are excluded exactly as the batch query's corpus
     filter excludes them."""
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        toks = F.split("text", " ")
-        # one token-table cut per batch, two consumers (the segdf
-        # convention; try/finally so a failed write can't leak it)
-        dd = (
-            batch_df.filter(
-                F.col("doc_id").isNotNull()
-                & F.col("text").isNotNull()
-                & (F.col("text") != "")
-            )
-            .select(
-                "doc_id", toks.alias("ts"), F.size(toks).alias("n")
-            )
-            .persist()
-        )
-        try:
-            (
-                _span_anchor_table(dd)
-                .write.mode("overwrite")
-                .parquet(f"{state_dir}/anchors/batch_id={batch_id}")
-            )
-            (
-                dd.select("doc_id", F.col("n").cast("long").alias("n"))
-                .write.mode("overwrite")
-                .parquet(f"{state_dir}/sizes/batch_id={batch_id}")
-            )
-        finally:
-            dd.unpersist()
-
-    return (
-        foreach_batch_sink(docs, on_batch, state_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
+    toks = F.split("text", " ")
+    return partial_state_stream(
+        docs,
+        state_dir,
+        {
+            "anchors": _span_anchor_table,
+            "sizes": lambda dd: dd.select(
+                "doc_id", F.col("n").cast("long").alias("n")
+            ),
+        },
+        prep=lambda b: b.filter(
+            F.col("doc_id").isNotNull()
+            & F.col("text").isNotNull()
+            & (F.col("text") != "")
+        ).select("doc_id", toks.alias("ts"), F.size(toks).alias("n")),
     )
 
 

@@ -33,9 +33,9 @@ document, but the instance counts (n_segments, n_boiler) are sums and
 would double — an at-least-once upstream needs doc-keyed idempotent
 counts (presence × per-doc segment counts), not this maintainer.
 
-Torn state (a crash between or during on_batch's two writes) RAISES
-at read time via streaming.sinks.read_partial_state — including the
-missing-_SUCCESS case a bare directory check cannot see.
+Both tables are written by streaming.sinks.partial_state_stream, which
+owns the exactly-once partial-state contract (one persisted segment cut
+per batch, per-batch overwrite, tear detection on read).
 
 Reference parity anchor: no streaming-curation surface in the
 reference (src/main/java/jc/DemoApplication.java is a Kafka pipe) —
@@ -54,7 +54,7 @@ from spring_and_kafka_spark.llm.text import (
     boilerplate_segments,
 )
 from spring_and_kafka_spark.streaming.sinks import (
-    foreach_batch_sink,
+    partial_state_stream,
     read_partial_state,
 )
 
@@ -67,33 +67,16 @@ def template_delta_stream(docs: DataFrame, state_dir: str):
     """Fold a document stream into per-batch template-state partials
     under ``state_dir`` (availableNow trigger — drains the staged
     corpus then stops, the replay harness convention)."""
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # one cut per batch: two consumers below (the q_dedup_minhash
-        # materialize lesson, applied per micro-batch); try/finally so a
-        # failed write cannot leak the cached batch across retries (the
-        # freshness.py on_batch convention)
-        seg = boilerplate_segments(batch_df).persist()
-        try:
-            (
-                seg.groupBy("source", "seg")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .write.mode("overwrite")
-                .parquet(f"{state_dir}/counts/batch_id={batch_id}")
-            )
-            (
-                seg.select("source", "doc_id")
-                .distinct()
-                .write.mode("overwrite")
-                .parquet(f"{state_dir}/docs/batch_id={batch_id}")
-            )
-        finally:
-            seg.unpersist()
-
-    return (
-        foreach_batch_sink(docs, on_batch, state_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
+    return partial_state_stream(
+        docs,
+        state_dir,
+        {
+            "counts": lambda seg: seg.groupBy("source", "seg").agg(
+                F.count(F.lit(1)).alias("n")
+            ),
+            "docs": lambda seg: seg.select("source", "doc_id").distinct(),
+        },
+        prep=boilerplate_segments,
     )
 
 

@@ -3,6 +3,8 @@ handle) and the parquet sink with checkpoint."""
 
 from __future__ import annotations
 
+import pytest
+
 from spring_and_kafka_spark.sources.tables import load_table
 from spring_and_kafka_spark.streaming.replay import (
     read_event_stream,
@@ -43,3 +45,55 @@ def test_parquet_sink_exactly_once_restart(spark, tmp_path):
     run()  # restart against the same checkpoint: nothing new → no dupes
     n2 = spark.read.parquet(out).count()
     assert n1 == 1000 and n2 == 1000
+
+
+def test_freshness_resumes_after_crash_between_writes(
+    spark, tmp_path, monkeypatch
+):
+    """Kill a real maintainer stream between a batch's two partial
+    writes, then restart it from the same state dir. In between, the
+    reader must raise on the torn batch; after the restart, the replayed
+    batch overwrites its partials (replayable source + offset log +
+    idempotent sink), so the result equals the batch twin."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from spring_and_kafka_spark.operators.quality import q_dq_freshness
+    from spring_and_kafka_spark.streaming.freshness import (
+        freshness_delta_stream,
+        maintained_freshness,
+    )
+
+    staged = stage_event_chunks(spark, SF_SMOKE, str(tmp_path / "stage3"), n_chunks=4)
+    state = str(tmp_path / "state")
+    write_parquet = DataFrameWriter.parquet
+
+    def crash_before_users_2(self, path, *args, **kwargs):
+        if path.endswith("/users/batch_id=2"):
+            raise OSError("injected crash between a batch's writes")
+        return write_parquet(self, path, *args, **kwargs)
+
+    def drain():
+        stream = read_event_stream(spark, staged, max_files_per_trigger=1)
+        freshness_delta_stream(stream, state).awaitTermination()
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash_before_users_2)
+    with pytest.raises(StreamingQueryException):
+        drain()
+    with pytest.raises(
+        RuntimeError, match="batch_id=2 has counts/ but not users/"
+    ):
+        maintained_freshness(spark, state)
+
+    monkeypatch.undo()
+    drain()
+
+    def audit(df):
+        return {
+            r.day: (r.n_rows, r.n_users, r.null_value_rate, r.dod_ratio)
+            for r in df.collect()
+        }
+
+    assert audit(maintained_freshness(spark, state)) == audit(
+        q_dq_freshness(spark, SF_SMOKE)
+    )

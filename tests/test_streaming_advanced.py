@@ -730,14 +730,15 @@ def test_maintained_templates_dedups_across_batches_and_raises_on_tear(
 def test_single_table_maintainers_raise_on_torn_batch(
     spark, tmp_path, caplog
 ):
-    """r15 standing cleanup closed: the three single-table maintainers
-    (mv, sketch, drift) read through read_single_state, so a batch_id
-    partition missing its _SUCCESS marker (a crash DURING that write)
-    RAISES at read time instead of silently merging partial state —
-    and require_success=False explicitly restores the marker-less
-    committer behavior (ADVICE r15), now logging a warning per merged
-    marker-less partition batch so operators can distinguish a
-    markerless committer from an actual mid-write crash (ADVICE r16)."""
+    """The three single-table maintainers (mv, sketch, drift) read
+    their one ``{state}/{table}/batch_id=N`` table through
+    read_partial_state, so a batch_id partition missing its _SUCCESS
+    marker (a crash DURING that write) RAISES at read time instead of
+    silently merging partial state — and require_success=False
+    explicitly restores the marker-less committer behavior, logging a
+    warning per merged marker-less partition batch so operators can
+    distinguish a markerless committer from an actual mid-write
+    crash."""
     import logging
     import os
 
@@ -745,7 +746,7 @@ def test_single_table_maintainers_raise_on_torn_batch(
 
     from spring_and_kafka_spark.streaming.drift import maintained_counts
     from spring_and_kafka_spark.streaming.mv import maintained_view
-    from spring_and_kafka_spark.streaming.sinks import read_single_state
+    from spring_and_kafka_spark.streaming.sinks import read_partial_state
     from spring_and_kafka_spark.streaming.sketch import merged_quantiles
 
     base_mv = spark.createDataFrame(
@@ -754,6 +755,7 @@ def test_single_table_maintainers_raise_on_torn_batch(
     cases = [
         (
             "mv",
+            "deltas",
             [(1, 1, 100)],
             "month_id long, n_orders long, revenue_cents long",
             lambda s: maintained_view(spark, base_mv, s),
@@ -761,6 +763,7 @@ def test_single_table_maintainers_raise_on_torn_batch(
         ),
         (
             "sketch",
+            "hist",
             [(3, 12, 5)],
             "digits long, first2 long, bcnt long",
             lambda s: merged_quantiles(spark, s),
@@ -768,19 +771,20 @@ def test_single_table_maintainers_raise_on_torn_batch(
         ),
         (
             "drift",
+            "counts",
             [("s0", "tok", 2)],
             "source string, tok string, c long",
             lambda s: maintained_counts(spark, s),
             0,
         ),
     ]
-    for name, rows, schema, read, never_rows in cases:
+    for name, table, rows, schema, read, never_rows in cases:
         state = str(tmp_path / f"{name}-state")
         spark.createDataFrame(rows, schema).write.parquet(
-            f"{state}/batch_id=0"
+            f"{state}/{table}/batch_id=0"
         )
         assert read(state).count() >= 1  # healthy state reads
-        os.remove(f"{state}/batch_id=0/_SUCCESS")
+        os.remove(f"{state}/{table}/batch_id=0/_SUCCESS")
         with pytest.raises(RuntimeError, match="no _SUCCESS marker"):
             read(state).collect()
         # marker-less committer mode: the SAME state reads through when
@@ -792,9 +796,13 @@ def test_single_table_maintainers_raise_on_torn_batch(
         ):
             caplog.clear()
             assert (
-                read_single_state(
-                    spark, state, schema, name, require_success=False
-                ).count()
+                read_partial_state(
+                    spark,
+                    state,
+                    ((table, schema),),
+                    name,
+                    require_success=False,
+                )[0].count()
                 == len(rows)
             )
         assert any(
