@@ -57,11 +57,22 @@ def micros(col: Column | str) -> Column:
     (q_ts_mad/q_ts_anomaly established the pattern; the r12 review
     counted ~8 hand-copied instances across timeseries.py/windows.py,
     the same drift hazard cents() was extracted to kill). New operators
-    must call this; the pre-r12 inline copies are expression-identical
-    and scheduled to migrate as their queries rotate through the
-    verification window."""
+    must call this."""
     c = F.col(col) if isinstance(col, str) else col
     return F.floor(c * 1e6 + F.lit(0.5)).cast("long")
+
+
+def ratio6(num: Column | str, den: Column | str) -> Column:
+    """num/den rounded to 6 dp in the floor form, floor(num*1e6/den +
+    0.5)/1e6 — the ratio twin of micros(): Spark round() is decimal
+    HALF_UP while DuckDB rounds binary, and an exact-integer ratio can
+    land ON the rounding boundary, so every oracle-checked rate uses
+    this form on both sides. Multiplying before dividing keeps the
+    association both engines evaluate; a zero `den` needs a guard at
+    the call site (ANSI Spark throws on it)."""
+    n = F.col(num) if isinstance(num, str) else num
+    d = F.col(den) if isinstance(den, str) else den
+    return F.floor(n * 1e6 / d + F.lit(0.5)) / 1e6
 
 
 def finite_or_null(df: DataFrame, *cols: str) -> DataFrame:

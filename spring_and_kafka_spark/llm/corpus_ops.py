@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from spring_and_kafka_spark.exec_utils import micros
 from spring_and_kafka_spark.llm.dedup import (
     _CLUSTERS_PREFIX,
     q_dedup_clusters_lsh,
@@ -332,7 +333,7 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.select(
         "vec_id",
         F.size(v).alias("n_dims"),
-        (F.floor(scale * 1e6 + F.lit(0.5)) / 1e6).alias("q_scale"),
+        (micros(scale) / 1e6).alias("q_scale"),
         q_sum.alias("q_sum"),
     )
 

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from spring_and_kafka_spark.exec_utils import materialize, spread
+from spring_and_kafka_spark.exec_utils import materialize, ratio6, spread
 from spring_and_kafka_spark.llm.text import _BP_SEG, boilerplate_segments
 from spring_and_kafka_spark.registry import register
 from spring_and_kafka_spark.sources.tables import load_table
@@ -2373,9 +2373,7 @@ def _span_cover_readout(g: DataFrame, sizes: DataFrame) -> DataFrame:
             "n_spans",
             covered.alias("covered_tokens"),
             F.col("n").cast("long").alias("n_tokens"),
-            (
-                F.floor(covered * 1e6 / F.col("n") + F.lit(0.5)) / 1e6
-            ).alias("cover_frac"),
+            ratio6(covered, "n").alias("cover_frac"),
         )
     )
 

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spring_and_kafka_spark.exec_utils import materialize
+from spring_and_kafka_spark.exec_utils import materialize, micros
 from spring_and_kafka_spark.llm.dedup import (
     _PLANTED_CORPUS_SQL,
     lsh_verified_pairs,
@@ -333,9 +333,7 @@ def q_sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tagged.groupBy("lang").agg(
         F.max("n").cast("long").alias("n_docs"),
         F.sum(F.when(kept, 1).otherwise(0)).cast("long").alias("n_kept"),
-        (F.floor(F.max("accept") * 1e6 + F.lit(0.5)) / 1e6).alias(
-            "accept_rate"
-        ),
+        (micros(F.max("accept")) / 1e6).alias("accept_rate"),
         F.sum(F.when(kept, F.col("doc_id")).otherwise(0))
         .cast("long")
         .alias("kept_checksum"),

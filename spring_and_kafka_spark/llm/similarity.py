@@ -6,6 +6,16 @@ IVF (centroid routing: only probed clusters are scanned) and random-
 hyperplane LSH bucketing. All distance math is built-in expression
 composition (zip_with/aggregate) in codegen — doubles end-to-end so the
 DuckDB oracle hash-matches.
+
+Every cross-engine rule lives in ONE Spark kernel and ONE DuckDB twin
+defined next to it, and every query calls the pair instead of restating
+the rule: the scan (`_vecs` / `_E_SQL`), the NULL-at-zero-norm cosine
+(`cosine` / `_cos_sql`), the id-bounded samples (`_sample` /
+`_sample_sql`), the row_number top-k cut (`_rank` / `_rank_sql`), the
+exact and Hamming per-query tops, the single-query heaps, IVF
+assignment and probing, the PQ encode, and the floor-form ratio
+(`exec_utils.ratio6` / `_ratio6_sql`). An edit to a rule is one edit per
+engine, so a query's two halves cannot drift apart.
 """
 
 from __future__ import annotations
@@ -16,12 +26,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from spring_and_kafka_spark.exec_utils import materialize
+from spring_and_kafka_spark.exec_utils import materialize, micros, ratio6
 from spring_and_kafka_spark.registry import register
 from spring_and_kafka_spark.sources.tables import load_table
 
 
-def dot(u: Column, v: Column) -> Column:
+def dot(u: Column | str, v: Column | str) -> Column:
     """Σ u_i·v_i via zip_with + aggregate (sequential fold, matching
     DuckDB's list_dot_product accumulation order)."""
     return F.aggregate(
@@ -36,6 +46,22 @@ def cosine(u: Column, v: Column) -> Column:
     # repeated dot() subtrees, so no extra fold is evaluated)
     denom = F.sqrt(dot(u, u)) * F.sqrt(dot(v, v))
     return F.when(denom != 0, dot(u, v) / denom)
+
+
+def _cos_sql(a: str, b: str) -> str:
+    """DuckDB twin of `cosine`: list_dot_product folds in `dot`'s order,
+    and the NULLIF pins a zero-norm side to NULL in EVERY DuckDB
+    division mode, not just the default one."""
+    return (
+        f"list_dot_product({a}, {b})"
+        f" / NULLIF(sqrt(list_dot_product({a}, {a}))"
+        f" * sqrt(list_dot_product({b}, {b})), 0)"
+    )
+
+
+def _ratio6_sql(num: str, den: str | int) -> str:
+    """DuckDB twin of `exec_utils.ratio6`."""
+    return f"floor({num} * 1e6 / {den} + 0.5) / 1e6"
 
 
 def load_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -53,6 +79,16 @@ def load_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _vecs(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """(vec_id, *cols, v): the `load_vectors` scan with the embedding
+    cast to array<double> — the frame every similarity query starts
+    from. DuckDB twin: the `e` CTE, _E_SQL (or _E_WF_SQL under
+    `_well_formed`)."""
+    return load_vectors(spark, sf_dir).select(
+        "vec_id", *cols, F.col("embedding").cast("array<double>").alias("v")
+    )
+
+
 # Well-formed fixed-dimension vector contract for the sketch/PQ family:
 # exactly 64 components, none NULL. DuckDB's list_dot_product hard-errors
 # on NULL elements and on dimension mismatch (and the signature CTE's
@@ -66,6 +102,11 @@ _WF_SQL = (
     "embedding IS NOT NULL AND len(embedding) = 64 "
     "AND len(list_filter(embedding, x -> x IS NULL)) = 0"
 )
+_E_SQL = (
+    "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v"
+    " FROM embeddings WHERE embedding IS NOT NULL)"
+)
+_E_WF_SQL = _E_SQL.replace("embedding IS NOT NULL", _WF_SQL)
 
 
 def _well_formed(e: DataFrame) -> DataFrame:
@@ -75,15 +116,111 @@ def _well_formed(e: DataFrame) -> DataFrame:
     )
 
 
+def _sample(
+    e: DataFrame, n: int, key: str = "qid", vec: str = "qv"
+) -> DataFrame:
+    """The id-bounded slice vec_id < n renamed to (key, vec): the query
+    samples (qid, qv) and the 16 seed centroids (centroid_id, cv). The
+    bound is a pushed scan predicate. Twin: _sample_sql."""
+    return e.filter(F.col("vec_id") < n).select(
+        F.col("vec_id").alias(key), F.col("v").alias(vec)
+    )
+
+
+def _sample_sql(
+    n: int, name: str = "qs", key: str = "qid", vec: str = "qv"
+) -> str:
+    return (
+        f"{name} AS (SELECT vec_id AS {key}, v AS {vec} FROM e"
+        f" WHERE vec_id < {n})"
+    )
+
+
+_N_CENTS = 16  # IVF seed centroids: vec_id < 16
+_CENTS_SQL = _sample_sql(_N_CENTS, "cents", "centroid_id", "cv")
+_Q0_SQL = "SELECT v AS qv FROM e WHERE vec_id = 0"  # the single query vector
+
+
+def _rank(
+    df: DataFrame, k: int, *order, by: tuple = ("qid",), rn: str = "rn"
+) -> DataFrame:
+    """Keep the first k rows per `by` group under `order` (a total
+    order: every caller ends it with an id tie-break), numbered in
+    column `rn`. The rn <= k filter over a row_number window plans as
+    WindowGroupLimit — a per-partition heap, never a full per-group
+    sort. Twin: _rank_sql."""
+    w = W.partitionBy(*by).orderBy(*order)
+    return df.withColumn(rn, F.row_number().over(w)).filter(F.col(rn) <= k)
+
+
+def _rank_sql(
+    cols: str, src: str, order: str, k: int, by: str = "q.qid", rn: str = "rn"
+) -> str:
+    return (
+        f"SELECT * FROM (SELECT {cols}, row_number() OVER (PARTITION BY {by}"
+        f" ORDER BY {order}) AS {rn} FROM {src}) WHERE {rn} <= {k}"
+    )
+
+
+def _cos_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Per-query exact cosine top-k over (qid, qv) × (vec_id, v) pairs,
+    self excluded: (qid, vec_id, rn). Ranks on the raw cosine — IEEE
+    +,*,sqrt,/ are correctly rounded and engine-identical (unlike libm
+    log/trig) — DESC NULLS LAST (zero-norm → NULL) with vec_id as the
+    total tie-break, so the rn <= k edge is deterministic in both
+    engines. Twin: _exact_top_sql."""
+    scored = pairs.filter(F.col("vec_id") != F.col("qid")).select(
+        "qid", "vec_id", cosine(F.col("v"), F.col("qv")).alias("sim")
+    )
+    return _rank(scored, k, F.col("sim").desc_nulls_last(), "vec_id").select(
+        "qid", "vec_id", "rn"
+    )
+
+
+def _exact_topk(e: DataFrame, qs: DataFrame, k: int) -> DataFrame:
+    """Brute-force ground truth: every vector against the broadcast
+    query sample — one corpus pass, never all-pairs."""
+    return _cos_topk(e.crossJoin(F.broadcast(qs)), k)
+
+
+def _exact_top_sql(k: int, pairs: str = "e x CROSS JOIN qs q") -> str:
+    return _rank_sql(
+        "q.qid, x.vec_id",
+        f"{pairs} WHERE x.vec_id <> q.qid",
+        f"{_cos_sql('x.v', 'q.qv')} DESC NULLS LAST, x.vec_id",
+        k,
+    )
+
+
+def _cosine_heap(e: DataFrame, q: DataFrame, k: int) -> DataFrame:
+    """Top-k of (vec_id, raw_sim) against the one-row query `q` (qv),
+    query vector 0 itself excluded. The query rides as a broadcast
+    single-row cross join and orderBy().limit() plans
+    TakeOrderedAndProject: a per-partition heap, no global sort.
+    Twin: _cos_heap_sql."""
+    return (
+        e.filter(F.col("vec_id") != 0)
+        .crossJoin(F.broadcast(q))
+        .select("vec_id", cosine(F.col("v"), F.col("qv")).alias("raw_sim"))
+        .orderBy(F.col("raw_sim").desc_nulls_last(), "vec_id")
+        .limit(k)
+    )
+
+
+def _cos_heap_sql(k: int, src: str = "e") -> str:
+    return (
+        f"SELECT x.vec_id, {_cos_sql('x.v', 'q.qv')} AS raw_sim"
+        f" FROM {src} x, ({_Q0_SQL}) q WHERE x.vec_id <> 0"
+        f" ORDER BY raw_sim DESC NULLS LAST, x.vec_id LIMIT {k}"
+    )
+
+
 @register(
     "q_sim_pairwise",
-    oracle="""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE embedding IS NOT NULL)
+    oracle=f"""
+    WITH {_E_SQL}
     SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-           round(list_dot_product(a.v, b.v)
-                 / NULLIF(sqrt(list_dot_product(a.v, a.v))
-                          * sqrt(list_dot_product(b.v, b.v)), 0),
-                 6) AS cos_sim
+           round({_cos_sql('a.v', 'b.v')}, 6) AS cos_sim
     FROM e a JOIN e b ON b.vec_id = a.vec_id + 1
     """,
 )
@@ -92,9 +229,7 @@ def q_sim_pairwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle's NULLIF pin mirrors the guarded `cosine` helper on
     zero-norm vectors (the q_embed_centroid precedent, discharged here
     as the r15 rotation backlog was pre-paid in r14)."""
-    e = load_vectors(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    e = _vecs(spark, sf_dir)
     a = e.alias("a")
     b = e.alias("b")
     return a.join(b, F.col("b.vec_id") == F.col("a.vec_id") + 1).select(
@@ -106,20 +241,9 @@ def q_sim_pairwise(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_sim_topk",
-    oracle="""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE embedding IS NOT NULL),
-    q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
-    SELECT vec_id,
-           round(list_dot_product(v, qv)
-                 / NULLIF(sqrt(list_dot_product(v, v))
-                          * sqrt(list_dot_product(qv, qv)), 0),
-                 6) AS cos_sim
-    FROM e, q WHERE vec_id <> 0
-    ORDER BY list_dot_product(v, qv)
-             / NULLIF(sqrt(list_dot_product(v, v))
-                      * sqrt(list_dot_product(qv, qv)), 0)
-             DESC NULLS LAST, vec_id
-    LIMIT 10
+    oracle=f"""
+    WITH {_E_SQL}
+    SELECT vec_id, round(raw_sim, 6) AS cos_sim FROM ({_cos_heap_sql(10)})
     """,
 )
 def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -130,18 +254,10 @@ def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject (no global sort at 100 TB). Tie-break: vec_id;
     zero-norm vectors cosine to NULL under the guarded helper, pinned
     NULLS LAST on both sides (the NULLIF backlog discharged in r14)."""
-    e = load_vectors(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    e = _vecs(spark, sf_dir)
     q = e.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-    sim = cosine(F.col("v"), F.col("qv"))
-    return (
-        e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", sim.alias("raw_sim"))
-        .orderBy(F.col("raw_sim").desc_nulls_last(), "vec_id")
-        .limit(10)
-        .select("vec_id", F.round("raw_sim", 6).alias("cos_sim"))
+    return _cosine_heap(e, q, 10).select(
+        "vec_id", F.round("raw_sim", 6).alias("cos_sim")
     )
 
 
@@ -150,8 +266,11 @@ def ivf_assign(
 ) -> DataFrame:
     """Assign each vector to its nearest centroid (IVF coarse quantizer).
 
-    Centroids are broadcast; argmin via min_by — one pass, no shuffle of
-    the vector side beyond the final groupBy key."""
+    Centroids are broadcast; argmax via max_by — one pass, no shuffle of
+    the vector side beyond the final groupBy key. A NULL sim loses to any
+    non-NULL and an all-NULL vector falls to the smallest centroid_id
+    (struct ordering sorts a NULL field smallest) — the total order the
+    twin, _assign_sql, ranks with DESC NULLS LAST + centroid_id."""
     scored = vectors.crossJoin(F.broadcast(centroids)).select(
         id_col,
         "v",
@@ -164,46 +283,73 @@ def ivf_assign(
     )
 
 
+def _assign_sql(cents: str, src: str = "e") -> str:
+    """DuckDB twin of `ivf_assign`: every column of `src` plus cluster
+    (and the rank column rn = 1)."""
+    return _rank_sql(
+        "x.*, c.centroid_id AS cluster",
+        f"{src} x CROSS JOIN {cents} c",
+        f"{_cos_sql('x.v', 'c.cv')} DESC NULLS LAST, c.centroid_id",
+        1,
+        by="x.vec_id",
+    )
+
+
+def _probe(cents: DataFrame, qs: DataFrame, n: int) -> DataFrame:
+    """Each sampled query's n nearest centroids: (qid, cluster, crn),
+    crn the probe rank. Ranked on the 16 × |sample| broadcast product
+    with the centroid_id tie-break. Twin: _probe_sql."""
+    scored = cents.crossJoin(F.broadcast(qs)).select(
+        "qid",
+        F.col("centroid_id").alias("cluster"),
+        cosine(F.col("cv"), F.col("qv")).alias("csim"),
+    )
+    order = (F.col("csim").desc_nulls_last(), "cluster")
+    return _rank(scored, n, *order, rn="crn").select("qid", "cluster", "crn")
+
+
+def _probe_sql(n: int) -> str:
+    return _rank_sql(
+        "q.qid, c.centroid_id AS cluster",
+        "cents c CROSS JOIN qs q",
+        f"{_cos_sql('c.cv', 'q.qv')} DESC NULLS LAST, c.centroid_id",
+        n,
+        rn="crn",
+    )
+
+
+def _ivf_top10(e: DataFrame, cents: DataFrame) -> DataFrame:
+    """IVF search for query vector 0: route every vector to its nearest
+    centroid, probe the query's 4 nearest cells, cosine top-10 over
+    their members only. Twin: _ivf_top10_sql."""
+    q = e.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
+    probe = (
+        cents.crossJoin(F.broadcast(q))
+        .select("centroid_id", cosine(F.col("cv"), F.col("qv")).alias("sim"))
+        .orderBy(F.col("sim").desc(), "centroid_id")
+        .limit(4)
+        .select(F.col("centroid_id").alias("cluster"))
+    )
+    cand = ivf_assign(e, cents).join(F.broadcast(probe), "cluster")
+    return _cosine_heap(cand, q, 10).select(
+        "vec_id", F.round("raw_sim", 6).alias("cos_sim")
+    )
+
+
+def _ivf_top10_sql(cents: str) -> str:
+    return f"""assigned AS ({_assign_sql(cents)}),
+    probe AS (
+      SELECT centroid_id AS cluster FROM {cents}, ({_Q0_SQL}) q
+      ORDER BY {_cos_sql('cv', 'qv')} DESC NULLS LAST, centroid_id LIMIT 4
+    )
+    SELECT vec_id, round(raw_sim, 6) AS cos_sim FROM ({_cos_heap_sql(
+        10, "(SELECT a.* FROM assigned a JOIN probe USING (cluster))"
+    )})"""
+
+
 @register(
     "q_sim_ann_ivf",
-    oracle="""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE embedding IS NOT NULL),
-    cents AS (SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id < 16),
-    scored AS (
-      SELECT e.vec_id, e.v, c.centroid_id,
-             list_dot_product(e.v, c.cv)
-             / NULLIF(sqrt(list_dot_product(e.v, e.v))
-                      * sqrt(list_dot_product(c.cv, c.cv)), 0) AS sim
-      FROM e CROSS JOIN cents c
-    ),
-    assigned AS (
-      SELECT vec_id, v, centroid_id AS cluster FROM (
-        SELECT vec_id, v, centroid_id,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY sim DESC NULLS LAST,
-                                           centroid_id) AS rn
-        FROM scored
-      ) WHERE rn = 1
-    ),
-    q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-    probe AS (
-      SELECT centroid_id AS cluster FROM cents CROSS JOIN q
-      ORDER BY list_dot_product(cv, qv)
-               / NULLIF(sqrt(list_dot_product(cv, cv))
-                        * sqrt(list_dot_product(qv, qv)), 0)
-               DESC NULLS LAST, centroid_id
-      LIMIT 4
-    )
-    SELECT vec_id, round(raw_sim, 6) AS cos_sim FROM (
-      SELECT a.vec_id,
-             list_dot_product(a.v, q.qv)
-             / NULLIF(sqrt(list_dot_product(a.v, a.v))
-                      * sqrt(list_dot_product(q.qv, q.qv)), 0) AS raw_sim
-      FROM assigned a JOIN probe p ON a.cluster = p.cluster
-      CROSS JOIN q
-      WHERE a.vec_id <> 0
-    ) ORDER BY raw_sim DESC NULLS LAST, vec_id LIMIT 10
-    """,
+    oracle=f"WITH {_E_SQL}, {_CENTS_SQL}, {_ivf_top10_sql('cents')}",
     tags=("ann",),
 )
 def q_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -216,33 +362,8 @@ def q_sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     so DuckDB replays the identical algorithm (argmax via rank window;
     ties broken by centroid/vec id on both sides). Recall vs brute-force
     truth additionally asserted in unit tests."""
-    e = load_vectors(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    centroids = (
-        e.filter(F.col("vec_id") < 16)
-        .select(F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv"))
-    )
-    assigned = ivf_assign(e, centroids)
-    q = e.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-    probe = (
-        centroids.crossJoin(F.broadcast(q))
-        .select("centroid_id", cosine(F.col("cv"), F.col("qv")).alias("sim"))
-        .orderBy(F.col("sim").desc(), "centroid_id")
-        .limit(4)
-        .select(F.col("centroid_id").alias("cluster"))
-    )
-    candidates = assigned.join(F.broadcast(probe), "cluster").filter(
-        F.col("vec_id") != 0
-    )
-    sim = cosine(F.col("v"), F.col("qv"))
-    return (
-        candidates.crossJoin(F.broadcast(q))
-        .select("vec_id", sim.alias("raw_sim"))
-        .orderBy(F.col("raw_sim").desc(), "vec_id")
-        .limit(10)
-        .select("vec_id", F.round("raw_sim", 6).alias("cos_sim"))
-    )
+    e = _vecs(spark, sf_dir)
+    return _ivf_top10(e, _sample(e, _N_CENTS, "centroid_id", "cv"))
 
 
 def auto_block_count(n_vectors: int, rows_per_block: int = 2000) -> int:
@@ -254,8 +375,6 @@ def auto_block_count(n_vectors: int, rows_per_block: int = 2000) -> int:
     compute by definition — q_sim_ann_ivf / q_sim_lsh_bucket are the
     sub-quadratic scale paths; this bound just keeps the exact path from
     hitting a single-executor memory cliff."""
-    import math
-
     return max(2, math.ceil(n_vectors / rows_per_block))
 
 
@@ -302,6 +421,12 @@ def knn_all_topk(
     ``n_blocks=None`` derives B from a count so block size (and thus
     per-group memory) is constant as n grows.
 
+    Ranking follows the `cosine` contract in both passes: a zero-norm
+    vector's cosines are NULL (NaN out of the kernel, NULL across
+    Arrow), ranked by (cosine DESC NULLS LAST, nid) — so a zero-norm
+    query still gets k neighbors, in nid order, as the oracle's NULLIF
+    ranking gives.
+
     Replication is MAP-SIDE: each row explodes a sequence of its B
     partner blocks and computes pair_id = least·B + greatest in place —
     O(n·B) rows with no join. (The previous broadcast pair-table with an
@@ -315,76 +440,67 @@ def knn_all_topk(
         n_blocks = auto_block_count(e.count())
     replicated = blocked_pair_replicate(e, "vec_id", n_blocks)
 
+    def block_top(q_ids, n_ids, sims) -> pd.DataFrame:
+        # n_ids ascend, so a stable sort on the NaN-last key breaks
+        # cosine ties by nid; k + 1 per row leaves k after the
+        # self-pair is dropped
+        key = np.where(np.isnan(sims), np.inf, -sims)
+        kk = min(k + 1, sims.shape[1])
+        top = np.argsort(key, axis=1, kind="stable")[:, :kk]
+        return pd.DataFrame(
+            {
+                "qid": np.repeat(q_ids, kk),
+                "nid": n_ids[top.ravel()],
+                "c": np.take_along_axis(sims, top, axis=1).ravel(),
+            }
+        )
+
     def topk_block(pdf: pd.DataFrame) -> pd.DataFrame:
         i, j = int(pdf["i"].iloc[0]), int(pdf["j"].iloc[0])
-        A = pdf[pdf["blk"] == i]
-        B = pdf[pdf["blk"] == j]
+        A = pdf[pdf["blk"] == i].sort_values("vec_id")
+        B = pdf[pdf["blk"] == j].sort_values("vec_id")
         if A.empty or B.empty:
             return pd.DataFrame({"qid": [], "nid": [], "c": []}).astype(
                 {"qid": "int64", "nid": "int64", "c": "float64"}
             )
         ma = np.stack(A["v"].to_numpy())
         mb = np.stack(B["v"].to_numpy())
-        ma /= np.linalg.norm(ma, axis=1, keepdims=True)
-        mb /= np.linalg.norm(mb, axis=1, keepdims=True)
+        with np.errstate(invalid="ignore"):  # zero norm -> NaN row
+            ma /= np.linalg.norm(ma, axis=1, keepdims=True)
+            mb /= np.linalg.norm(mb, axis=1, keepdims=True)
         sims = ma @ mb.T
         a_ids = A["vec_id"].to_numpy()
         b_ids = B["vec_id"].to_numpy()
-        if i == j:
-            np.fill_diagonal(sims, -np.inf)  # exclude self-pairs
-        frames = []
-        kk = min(k, sims.shape[1])
-        top = np.argpartition(-sims, kth=kk - 1, axis=1)[:, :kk]
-        frames.append(
-            pd.DataFrame(
-                {
-                    "qid": np.repeat(a_ids, kk),
-                    "nid": b_ids[top.ravel()],
-                    "c": np.take_along_axis(sims, top, axis=1).ravel(),
-                }
-            )
-        )
+        frames = [block_top(a_ids, b_ids, sims)]
         if i != j:  # B-side rows also need their candidates from A
-            kk2 = min(k, sims.shape[0])
-            top2 = np.argpartition(-sims.T, kth=kk2 - 1, axis=1)[:, :kk2]
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "qid": np.repeat(b_ids, kk2),
-                        "nid": a_ids[top2.ravel()],
-                        "c": np.take_along_axis(sims.T, top2, axis=1).ravel(),
-                    }
-                )
-            )
+            frames.append(block_top(b_ids, a_ids, sims.T))
         out = pd.concat(frames, ignore_index=True)
-        return out[np.isfinite(out["c"])]
+        return out[out["qid"] != out["nid"]]
 
     candidates = replicated.groupBy("pair_id").applyInPandas(
         topk_block, "qid BIGINT, nid BIGINT, c DOUBLE"
     )
-    w = W.partitionBy("qid").orderBy(F.col("c").desc(), "nid")
-    return (
-        candidates.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("qid", "nid", F.round("c", 6).alias("cos_sim"), "rn")
+    return _rank(candidates, k, F.col("c").desc_nulls_last(), "nid").select(
+        "qid",
+        "nid",
+        F.round("c", 6).alias("cos_sim"),
+        F.col("rn").cast("long").alias("rn"),
     )
 
 
 @register(
     "q_sim_knn_all",
-    oracle="""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE embedding IS NOT NULL),
-    pairs AS (
-      SELECT a.vec_id AS qid, b.vec_id AS nid,
-             list_dot_product(a.v, b.v)
-             / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) AS c
-      FROM e a JOIN e b ON a.vec_id <> b.vec_id
-    )
+    oracle=f"""
+    WITH {_E_SQL}
     SELECT qid, nid, round(c, 6) AS cos_sim, CAST(rn AS BIGINT) AS rn
-    FROM (SELECT qid, nid, c,
-                 row_number() OVER (PARTITION BY qid ORDER BY c DESC, nid) AS rn
-          FROM pairs)
-    WHERE rn <= 3
+    FROM ({_rank_sql(
+        "*",
+        f"(SELECT a.vec_id AS qid, b.vec_id AS nid, {_cos_sql('a.v', 'b.v')}"
+        " AS c FROM e a JOIN e b ON a.vec_id <> b.vec_id)",
+        "c DESC NULLS LAST, nid",
+        3,
+        by="qid",
+    )})
     """,
 )
 def q_sim_knn_all(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -392,10 +508,37 @@ def q_sim_knn_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale similarity-search workload, vs q_sim_topk's single query).
     Thin wrapper over :func:`knn_all_topk` with the auto-derived block
     count (bounded per-group GEMM memory at any corpus size)."""
-    e = load_vectors(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    return knn_all_topk(spark, _vecs(spark, sf_dir), k=3, n_blocks=None)
+
+
+def _centroids(df: DataFrame, key: str) -> DataFrame:
+    """Element-wise mean vector `cv` per `key` over a frame carrying
+    `v`: posexplode → avg per (key, dim) → re-assembled in dim order
+    with array_sort(collect_list(struct)). The reduce stream is keys ×
+    dims rows, map-side combined. Twin: _centroids_sql."""
+    ex = df.select(key, F.posexplode("v").alias("pos", "x"))
+    return (
+        ex.groupBy(key, "pos")
+        .agg(F.avg("x").alias("c"))
+        .groupBy(key)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "c"))),
+                lambda s: s["c"],
+            ).alias("cv")
+        )
     )
-    return knn_all_topk(spark, e, k=3, n_blocks=None)
+
+
+_DIMS_SQL = "dims AS (SELECT unnest(range(64)) AS i)"
+
+
+def _centroids_sql(key: str, src: str) -> str:
+    return (
+        f"SELECT {key}, list(c ORDER BY i) AS cv FROM (SELECT {key}, i,"
+        f" avg(v[CAST(i AS INT) + 1]) AS c FROM {src}, dims"
+        f" GROUP BY {key}, i) GROUP BY {key}"
+    )
 
 
 def ivf_train_kmeans(
@@ -408,105 +551,31 @@ def ivf_train_kmeans(
     a driver-side loop over DataFrame ops (the iterative-algorithm pattern:
     the loop is short and fixed; each step is fully distributed). Refined
     centroids tighten clusters, so probing fewer clusters reaches the same
-    recall."""
-    centroids = vectors.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
-    )
+    recall. Twin: _lloyd_round_sql, one CTE pair per round."""
+    centroids = _sample(vectors, k, "centroid_id", "cv")
     for _ in range(iters):
         assigned = ivf_assign(vectors, centroids)
-        # element-wise mean per cluster: explode dims → avg → rebuild array
-        dims = assigned.select(
-            "cluster", F.posexplode("v").alias("dim", "x")
-        )
-        means = dims.groupBy("cluster", "dim").agg(F.avg("x").alias("m"))
-        centroids = (
-            means.groupBy("cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("dim"), F.col("m")))
-                    ),
-                    lambda s: s.getField("m"),
-                ).alias("cv")
-            )
-            .select(F.col("cluster").alias("centroid_id"), "cv")
+        centroids = _centroids(assigned, "cluster").select(
+            F.col("cluster").alias("centroid_id"), "cv"
         )
     return centroids
 
 
+def _lloyd_round_sql(i: int) -> str:
+    return (
+        f"a{i} AS ({_assign_sql(f'c{i - 1}')}),\n    c{i} AS (SELECT cluster"
+        f" AS centroid_id, cv FROM ({_centroids_sql('cluster', f'a{i}')}))"
+    )
+
+
 @register(
     "q_sim_ann_ivf_refined",
-    oracle="""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE embedding IS NOT NULL),
-    dims AS (SELECT unnest(range(64)) AS i),
-    c0 AS (SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id < 16),
-    a1 AS (
-      SELECT vec_id, v, centroid_id AS cluster FROM (
-        SELECT e.vec_id, e.v, c.centroid_id,
-               row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                 list_dot_product(e.v, c.cv)
-                 / NULLIF(sqrt(list_dot_product(e.v, e.v))
-                          * sqrt(list_dot_product(c.cv, c.cv)), 0)
-                 DESC NULLS LAST, c.centroid_id) AS rn
-        FROM e CROSS JOIN c0 c
-      ) WHERE rn = 1
-    ),
-    m1 AS (
-      SELECT cluster, i, avg(v[CAST(i AS INT) + 1]) AS m
-      FROM a1 CROSS JOIN dims GROUP BY cluster, i
-    ),
-    c1 AS (
-      SELECT cluster AS centroid_id, list(m ORDER BY i) AS cv
-      FROM m1 GROUP BY cluster
-    ),
-    a2 AS (
-      SELECT vec_id, v, centroid_id AS cluster FROM (
-        SELECT e.vec_id, e.v, c.centroid_id,
-               row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                 list_dot_product(e.v, c.cv)
-                 / NULLIF(sqrt(list_dot_product(e.v, e.v))
-                          * sqrt(list_dot_product(c.cv, c.cv)), 0)
-                 DESC NULLS LAST, c.centroid_id) AS rn
-        FROM e CROSS JOIN c1 c
-      ) WHERE rn = 1
-    ),
-    m2 AS (
-      SELECT cluster, i, avg(v[CAST(i AS INT) + 1]) AS m
-      FROM a2 CROSS JOIN dims GROUP BY cluster, i
-    ),
-    c2 AS (
-      SELECT cluster AS centroid_id, list(m ORDER BY i) AS cv
-      FROM m2 GROUP BY cluster
-    ),
-    a3 AS (
-      SELECT vec_id, v, centroid_id AS cluster FROM (
-        SELECT e.vec_id, e.v, c.centroid_id,
-               row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                 list_dot_product(e.v, c.cv)
-                 / NULLIF(sqrt(list_dot_product(e.v, e.v))
-                          * sqrt(list_dot_product(c.cv, c.cv)), 0)
-                 DESC NULLS LAST, c.centroid_id) AS rn
-        FROM e CROSS JOIN c2 c
-      ) WHERE rn = 1
-    ),
-    q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-    probe AS (
-      SELECT centroid_id AS cluster FROM c2 CROSS JOIN q
-      ORDER BY list_dot_product(cv, qv)
-               / NULLIF(sqrt(list_dot_product(cv, cv))
-                        * sqrt(list_dot_product(qv, qv)), 0)
-               DESC NULLS LAST, centroid_id
-      LIMIT 4
-    )
-    SELECT vec_id, round(raw_sim, 6) AS cos_sim FROM (
-      SELECT a.vec_id,
-             list_dot_product(a.v, q.qv)
-             / NULLIF(sqrt(list_dot_product(a.v, a.v))
-                      * sqrt(list_dot_product(q.qv, q.qv)), 0) AS raw_sim
-      FROM a3 a JOIN probe p ON a.cluster = p.cluster
-      CROSS JOIN q
-      WHERE a.vec_id <> 0
-    ) ORDER BY raw_sim DESC NULLS LAST, vec_id LIMIT 10
+    oracle=f"""
+    WITH {_E_SQL}, {_DIMS_SQL},
+    {_sample_sql(_N_CENTS, "c0", "centroid_id", "cv")},
+    {_lloyd_round_sql(1)},
+    {_lloyd_round_sql(2)},
+    {_ivf_top10_sql("c2")}
     """,
     tags=("ann",),
 )
@@ -520,30 +589,8 @@ def q_sim_ann_ivf_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank window, element-wise means via a dims cross join + ordered
     list()). Cross-engine float risk is summation order inside avg();
     cluster-assignment margins (≫1e-12) dwarf it."""
-    e = load_vectors(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    centroids = ivf_train_kmeans(e, k=16, iters=2)
-    assigned = ivf_assign(e, centroids)
-    q = e.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-    probe = (
-        centroids.crossJoin(F.broadcast(q))
-        .select("centroid_id", cosine(F.col("cv"), F.col("qv")).alias("sim"))
-        .orderBy(F.col("sim").desc(), "centroid_id")
-        .limit(4)
-        .select(F.col("centroid_id").alias("cluster"))
-    )
-    candidates = assigned.join(F.broadcast(probe), "cluster").filter(
-        F.col("vec_id") != 0
-    )
-    sim = cosine(F.col("v"), F.col("qv"))
-    return (
-        candidates.crossJoin(F.broadcast(q))
-        .select("vec_id", sim.alias("raw_sim"))
-        .orderBy(F.col("raw_sim").desc(), "vec_id")
-        .limit(10)
-        .select("vec_id", F.round("raw_sim", 6).alias("cos_sim"))
-    )
+    e = _vecs(spark, sf_dir)
+    return _ivf_top10(e, ivf_train_kmeans(e, k=_N_CENTS, iters=2))
 
 
 # Integer hyperplane component for (plane j, dimension i), both 0-based:
@@ -591,9 +638,7 @@ def q_sim_lsh_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     sin-hyperplane formulation was unverifiable. Quantization at 3
     decimals moves a bit only for |v·r| < 1e-2·‖r‖₁ relative noise,
     irrelevant for bucketing quality."""
-    e = load_vectors(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    e = _vecs(spark, sf_dir)
     qv = F.transform(
         F.col("v"), lambda x: F.floor(x * 1000 + F.lit(0.5)).cast("long")
     )
@@ -618,21 +663,13 @@ def q_sim_lsh_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_embed_centroid",
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE embedding IS NOT NULL
     ),
-    idx AS (SELECT unnest(range(64)) AS i),
-    cent AS (
-      SELECT label, list(c ORDER BY i) AS cv FROM (
-        SELECT label, i, avg(v[i + 1]) AS c FROM e, idx GROUP BY label, i
-      ) GROUP BY label
-    )
-    SELECT vec_id, label,
-           round(list_dot_product(v, cv)
-                 / NULLIF(sqrt(list_dot_product(v, v))
-                          * sqrt(list_dot_product(cv, cv)), 0), 4)
-             AS cos_centroid
+    {_DIMS_SQL},
+    cent AS ({_centroids_sql("label", "e")})
+    SELECT vec_id, label, round({_cos_sql('v', 'cv')}, 4) AS cos_centroid
     FROM e JOIN cent USING (label)
     """,
 )
@@ -650,22 +687,8 @@ def q_embed_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     TreeAggregate-style partial (per-partition vector sums via
     VectorizedAgg) would cut it, but avg-per-dim is already map-side
     combined so the reduce stream is labels×64×partitions, not rows."""
-    e = load_vectors(spark, sf_dir).select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-    )
-    ex = e.select("label", F.posexplode("v").alias("pos", "x"))
-    cent = (
-        ex.groupBy("label", "pos")
-        .agg(F.avg("x").alias("c"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda s: s["c"],
-            ).alias("cv")
-        )
-    )
-    return e.join(F.broadcast(cent), "label").select(
+    e = _vecs(spark, sf_dir, "label")
+    return e.join(F.broadcast(_centroids(e, "label")), "label").select(
         "vec_id",
         "label",
         # 4 dp, not 6: the centroid is an avg of doubles whose partial-sum
@@ -681,11 +704,9 @@ _PCA_ITERS = 3
 
 @register(
     "q_embed_pca",
-    oracle="""
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE embedding IS NOT NULL
-    ),
-    dims AS (SELECT unnest(range(64)) AS i),
+    oracle=f"""
+    WITH {_E_SQL},
+    {_DIMS_SQL},
     -- iteration 1: s = v . v0 with v0 = (1/8, ..., 1/8)
     s1 AS (SELECT vec_id, v, list_sum(v) * 0.125 AS s FROM e),
     w1 AS (
@@ -745,25 +766,15 @@ def q_embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed all-positive init keeps the sign deterministic in both
     engines; scores round to 4 dp against ~1e-12 cross-engine
     summation-order drift."""
-    e = load_vectors(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    e = _vecs(spark, sf_dir)
     dim, iters = _PCA_DIM, _PCA_ITERS
-
-    def dot_c(v: str | F.Column, c: str | F.Column) -> F.Column:
-        return F.aggregate(
-            F.zip_with(v, c, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     # current direction: a broadcastable 1-row DataFrame, array column c
     cur = spark.range(1).select(
         F.array(*[F.lit(1.0 / dim**0.5)] * dim).alias("c")
     )
     for _ in range(iters):
         j = e.crossJoin(F.broadcast(cur))
-        proj = j.select("v", dot_c("v", "c").alias("s")).select(
+        proj = j.select("v", dot("v", "c").alias("s")).select(
             F.posexplode("v").alias("i", "x"), "s"
         )
         w = proj.groupBy("i").agg(F.sum(F.col("x") * F.col("s")).alias("w"))
@@ -775,14 +786,14 @@ def q_embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(
             F.transform(
                 "wv",
-                lambda x: x / F.sqrt(dot_c("wv", "wv")),
+                lambda x: x / F.sqrt(dot("wv", "wv")),
             ).alias("c")
         )
     scores = e.filter(F.col("vec_id") < 50).crossJoin(F.broadcast(cur))
     # + 0.0 collapses IEEE -0.0 to 0.0 (semistructured.py convention):
     # a score rounding to zero must format identically in both engines
     return scores.select(
-        "vec_id", (F.round(dot_c("v", "c"), 4) + 0.0).alias("pc1_score")
+        "vec_id", (F.round(dot("v", "c"), 4) + 0.0).alias("pc1_score")
     )
 
 
@@ -821,12 +832,7 @@ def q_embed_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-sum order drift between the engines cannot touch the hash
     (ratio-column discipline, registry.py header); `+ 0.0` collapses
     IEEE -0.0 (semistructured.py convention)."""
-    e = load_vectors(spark, sf_dir)
-    ex = e.select(
-        F.posexplode(F.col("embedding").cast("array<double>")).alias(
-            "pos", "x"
-        )
-    )
+    ex = _vecs(spark, sf_dir).select(F.posexplode("v").alias("pos", "x"))
     return ex.groupBy("pos").agg(
         F.count("*").alias("n"),
         (F.round(F.avg("x"), 4) + 0.0).alias("mean_x"),
@@ -841,7 +847,7 @@ def q_embed_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_embed_cluster_purity",
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
       WHERE embedding IS NOT NULL
@@ -849,30 +855,12 @@ def q_embed_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     -- the quantizer is LABEL-AGNOSTIC: the same 16 seed centroids
     -- q_sim_ann_ivf routes with (an unlabeled seed must not shrink the
     -- index being evaluated — r11 review finding); only the VOTING
-    -- vectors require a label
-    cents AS (SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id < 16),
-    scored AS (
-      -- NULLIF pins the zero-norm shape: sim is NULL (matching the
-      -- Spark cosine() guard) in EVERY division-by-zero mode, not just
-      -- the default (ADVICE r11)
-      SELECT e.vec_id, e.label, c.centroid_id,
-             list_dot_product(e.v, c.cv)
-             / NULLIF(sqrt(list_dot_product(e.v, e.v))
-                      * sqrt(list_dot_product(c.cv, c.cv)), 0) AS sim
-      FROM e CROSS JOIN cents c
-      WHERE e.label IS NOT NULL
-    ),
+    -- vectors require a label. _cos_sql's NULLIF pins the zero-norm
+    -- sim to NULL in every division mode (ADVICE r11) and the NULLS
+    -- LAST rank is the total order Spark's max_by walks
+    {_CENTS_SQL},
     assigned AS (
-      -- NULLS LAST pinned: a NULL sim loses to any non-NULL; an
-      -- all-NULL vec falls to the smallest centroid_id — the same
-      -- total order Spark's max_by(struct(sim, -centroid_id)) walks
-      -- (null struct field sorts smallest, tie falls to -centroid_id)
-      SELECT vec_id, label, centroid_id AS cluster FROM (
-        SELECT vec_id, label, centroid_id,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY sim DESC NULLS LAST, centroid_id) AS rn
-        FROM scored
-      ) WHERE rn = 1
+      {_assign_sql("cents", "(SELECT * FROM e WHERE label IS NOT NULL)")}
     ),
     cl AS (SELECT cluster, label, count(*) AS n_lab FROM assigned GROUP BY 1, 2),
     r AS (
@@ -910,18 +898,8 @@ def q_embed_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule: no vote from an unlabeled or failed-encode row); ties on the
     majority break by smaller label id in both engines; purity is a
     bare IEEE division of exact longs."""
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("embedding").isNotNull())
-        .select(
-            "vec_id",
-            "label",
-            F.col("embedding").cast("array<double>").alias("v"),
-        )
-    )
-    cents = e.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
-    )
+    e = _vecs(spark, sf_dir, "label")
+    cents = _sample(e, _N_CENTS, "centroid_id", "cv")
     # one pass over the vector side: the label rides THROUGH the
     # broadcast-centroid argmax (constant per vec_id, so first() is
     # exact) — an ivf_assign + join-back would shuffle the per-vector
@@ -966,25 +944,18 @@ def q_embed_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_embed_outlier",
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
       FROM embeddings
       WHERE embedding IS NOT NULL AND label IS NOT NULL
     ),
-    idx AS (SELECT unnest(range(64)) AS i),
-    cent AS (
-      SELECT label, list(c ORDER BY i) AS cv FROM (
-        SELECT label, i, avg(v[i + 1]) AS c FROM e, idx GROUP BY label, i
-      ) GROUP BY label
-    ),
+    {_DIMS_SQL},
+    cent AS ({_centroids_sql("label", "e")}),
     scored AS (
-      -- NULLIF pins zero-norm cosine to NULL in every division mode
-      -- (the q_embed_cluster_purity ADVICE r11 lesson, applied at birth)
-      SELECT e.vec_id, e.label,
-             round(list_dot_product(v, cv)
-                   / NULLIF(sqrt(list_dot_product(v, v))
-                            * sqrt(list_dot_product(cv, cv)), 0), 4) AS cos_r
+      -- _cos_sql's NULLIF pins zero-norm cosine to NULL in every
+      -- division mode (the q_embed_cluster_purity ADVICE r11 lesson)
+      SELECT e.vec_id, e.label, round({_cos_sql('v', 'cv')}, 4) AS cos_r
       FROM e JOIN cent USING (label)
     ),
     st AS (
@@ -1028,22 +999,8 @@ def q_embed_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     the row in both engines; zero-norm cosines are NULL by the guard
     (Spark) and NULLIF (oracle) and vanish from avg/stddev/flagging
     identically."""
-    e = load_vectors(spark, sf_dir).filter(F.col("label").isNotNull()).select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-    )
-    ex = e.select("label", F.posexplode("v").alias("pos", "x"))
-    cent = (
-        ex.groupBy("label", "pos")
-        .agg(F.avg("x").alias("c"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                lambda s: s["c"],
-            ).alias("cv")
-        )
-    )
-    scored = e.join(F.broadcast(cent), "label").select(
+    e = _vecs(spark, sf_dir, "label").filter(F.col("label").isNotNull())
+    scored = e.join(F.broadcast(_centroids(e, "label")), "label").select(
         "vec_id",
         "label",
         F.round(cosine(F.col("v"), F.col("cv")), 4).alias("cos_r"),
@@ -1074,82 +1031,76 @@ _RECALL_NQ = 8  # evaluated query sample: vec_id < 8
 _RECALL_NPROBE = 4  # probed clusters per query (of 16 centroids)
 
 
-def _recall_cos_sql(a: str, b: str) -> str:
-    return (
-        f"list_dot_product({a}, {b})"
-        f" / (sqrt(list_dot_product({a}, {a}))"
-        f" * sqrt(list_dot_product({b}, {b})))"
+def _recall_stats(
+    qs: DataFrame, truth: DataFrame, cand: DataFrame, name: str
+) -> DataFrame:
+    """Per sampled query: n_true, `name` (the candidate-list size), hits
+    and recall = hits/n_true in the floor form, from ONE full-outer join
+    of the two (qid, vec_id) top-k sets and one groupBy — each top gets
+    exactly one consumer, so its corpus pass is planned once (three
+    separate count-joins re-planned each top per consumer: 36 windows
+    in the static plan, the q_tcloseness single-consumer lesson). The
+    qs-driven left join keeps every sampled query. Twin:
+    _recall_stats_sql."""
+    fo = truth.select("qid", "vec_id", F.lit(1).alias("ex")).join(
+        cand.select("qid", "vec_id", F.lit(1).alias(name)),
+        ["qid", "vec_id"],
+        "full",
     )
+    both = F.col("ex").isNotNull() & F.col(name).isNotNull()
+    stats = fo.groupBy("qid").agg(
+        F.count("ex").alias("n_true"),
+        F.count(name).alias(name),
+        F.count(F.when(both, 1)).alias("hits"),
+    )
+    n_true = F.coalesce("n_true", F.lit(0))
+    hits = F.coalesce("hits", F.lit(0))
+    return qs.select("qid").join(F.broadcast(stats), "qid", "left").select(
+        "qid",
+        n_true.alias("n_true"),
+        F.coalesce(name, F.lit(0)).alias(name),
+        hits.alias("hits"),
+        F.when(n_true > 0, ratio6(hits, F.col("n_true"))).alias("recall"),
+    )
+
+
+def _recall_stats_sql(truth: str, cand: str, name: str) -> str:
+    return f"""fo AS (
+      SELECT coalesce(x.qid, c.qid) AS qid, x.qid AS ex, c.qid AS ca
+      FROM {truth} x FULL JOIN {cand} c
+        ON c.qid = x.qid AND c.vec_id = x.vec_id
+    ),
+    st AS (
+      SELECT qid, CAST(count(ex) AS BIGINT) AS n_true,
+             CAST(count(ca) AS BIGINT) AS n_ca,
+             CAST(count(CASE WHEN ex IS NOT NULL AND ca IS NOT NULL
+                             THEN 1 END) AS BIGINT) AS hits
+      FROM fo GROUP BY 1
+    ),
+    rs AS (
+      SELECT q.qid, coalesce(s.n_true, 0) AS n_true,
+             coalesce(s.n_ca, 0) AS {name}, coalesce(s.hits, 0) AS hits,
+             CASE WHEN coalesce(s.n_true, 0) > 0
+                  THEN {_ratio6_sql("coalesce(s.hits, 0)", "s.n_true")}
+             END AS recall
+      FROM qs q LEFT JOIN st s ON s.qid = q.qid
+    )"""
 
 
 @register(
     "q_embed_recall_eval",
     oracle=f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings WHERE embedding IS NOT NULL),
-    cents AS (SELECT vec_id AS centroid_id, v AS cv FROM e
-              WHERE vec_id < 16),
-    qs AS (SELECT vec_id AS qid, v AS qv FROM e
-           WHERE vec_id < {_RECALL_NQ}),
-    assigned AS (
-      SELECT vec_id, v, centroid_id AS cluster FROM (
-        SELECT e.vec_id, e.v, c.centroid_id,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_recall_cos_sql('e.v', 'c.cv')} DESC NULLS LAST,
-                          c.centroid_id) AS rn
-        FROM e CROSS JOIN cents c
-      ) WHERE rn = 1
-    ),
-    exact_top AS (
-      SELECT qid, vec_id FROM (
-        SELECT q.qid, e.vec_id,
-               row_number() OVER (PARTITION BY q.qid
-                 ORDER BY {_recall_cos_sql('e.v', 'q.qv')} DESC NULLS LAST,
-                          e.vec_id) AS rn
-        FROM e CROSS JOIN qs q WHERE e.vec_id <> q.qid
-      ) WHERE rn <= {_RECALL_K}
-    ),
-    probe AS (
-      SELECT qid, cluster FROM (
-        SELECT q.qid, c.centroid_id AS cluster,
-               row_number() OVER (PARTITION BY q.qid
-                 ORDER BY {_recall_cos_sql('c.cv', 'q.qv')} DESC NULLS LAST,
-                          c.centroid_id) AS rn
-        FROM cents c CROSS JOIN qs q
-      ) WHERE rn <= {_RECALL_NPROBE}
-    ),
-    ann_top AS (
-      SELECT qid, vec_id FROM (
-        SELECT p.qid, a.vec_id,
-               row_number() OVER (PARTITION BY p.qid
-                 ORDER BY {_recall_cos_sql('a.v', 'q.qv')} DESC NULLS LAST,
-                          a.vec_id) AS rn
-        FROM assigned a JOIN probe p ON a.cluster = p.cluster
-        JOIN qs q ON q.qid = p.qid
-        WHERE a.vec_id <> p.qid
-      ) WHERE rn <= {_RECALL_K}
-    ),
-    h AS (
-      SELECT x.qid, CAST(count(*) AS BIGINT) AS hits
-      FROM exact_top x JOIN ann_top a
-        ON x.qid = a.qid AND x.vec_id = a.vec_id
-      GROUP BY 1
-    ),
-    nt AS (SELECT qid, CAST(count(*) AS BIGINT) AS n_true
-           FROM exact_top GROUP BY 1),
-    na AS (SELECT qid, CAST(count(*) AS BIGINT) AS n_ann
-           FROM ann_top GROUP BY 1)
-    SELECT q.qid,
-           coalesce(nt.n_true, 0) AS n_true,
-           coalesce(na.n_ann, 0) AS n_ann,
-           coalesce(h.hits, 0) AS hits,
-           CASE WHEN coalesce(nt.n_true, 0) > 0
-                THEN floor(coalesce(h.hits, 0) * 1e6
-                           / nt.n_true + 0.5) / 1e6 END AS recall
-    FROM qs q
-    LEFT JOIN nt ON nt.qid = q.qid
-    LEFT JOIN na ON na.qid = q.qid
-    LEFT JOIN h ON h.qid = q.qid
+    WITH {_E_SQL}, {_CENTS_SQL}, {_sample_sql(_RECALL_NQ)},
+    assigned AS ({_assign_sql("cents")}),
+    exact_top AS ({_exact_top_sql(_RECALL_K)}),
+    probe AS ({_probe_sql(_RECALL_NPROBE)}),
+    ann_top AS ({_exact_top_sql(
+        _RECALL_K,
+        "assigned x JOIN probe p ON p.cluster = x.cluster"
+        " JOIN qs q ON q.qid = p.qid",
+    )}),
+    {_recall_stats_sql("exact_top", "ann_top", "n_ann")}
+    SELECT * FROM rs
     """,
     tags=("ann", "eval"),
 )
@@ -1180,87 +1131,16 @@ def q_embed_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one corpus pass), probe selection on the 16-row centroid table,
     candidates = the probed quarter of the corpus. The per-query
     top-{_RECALL_K} sets and the recall join are a few dozen rows."""
-    e = load_vectors(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    centroids = e.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
-    )
-    qs = e.filter(F.col("vec_id") < _RECALL_NQ).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-    )
-    assigned = ivf_assign(e, centroids)
-
-    def topk(scored: DataFrame, k: int) -> DataFrame:
-        w = W.partitionBy("qid").orderBy(
-            F.col("sim").desc_nulls_last(), F.col("vec_id")
-        )
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .select("qid", "vec_id")
-        )
-
-    exact_top = topk(
-        e.crossJoin(F.broadcast(qs))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", cosine(F.col("v"), F.col("qv")).alias("sim")),
-        _RECALL_K,
-    )
-    probe = (
-        centroids.crossJoin(F.broadcast(qs))
-        .select(
-            "qid",
-            F.col("centroid_id").alias("cluster"),
-            cosine(F.col("cv"), F.col("qv")).alias("sim"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("qid").orderBy(
-                    F.col("sim").desc_nulls_last(), F.col("cluster")
-                )
-            ),
-        )
-        .filter(F.col("rn") <= _RECALL_NPROBE)
-        .select("qid", "cluster")
-    )
-    ann_top = topk(
-        assigned.join(F.broadcast(probe), "cluster")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .join(F.broadcast(qs), "qid")
-        .select("qid", "vec_id", cosine(F.col("v"), F.col("qv")).alias("sim")),
-        _RECALL_K,
-    )
-    # one FULL OUTER join of the two top-k sets, then one groupBy —
-    # exact_top and ann_top each get exactly ONE consumer, so their
-    # corpus passes are planned once (three separate count-joins
-    # re-planned each top per consumer: 36 windows in the static plan,
-    # the q_tcloseness single-consumer lesson applied here)
-    fo = exact_top.withColumn("ex", F.lit(1)).join(
-        ann_top.withColumn("an", F.lit(1)),
-        ["qid", "vec_id"],
-        "full",
-    )
-    stats = fo.groupBy("qid").agg(
-        F.count("ex").alias("n_true"),
-        F.count("an").alias("n_ann"),
-        F.count(F.when(F.col("ex").isNotNull() & F.col("an").isNotNull(), 1))
-        .alias("hits"),
-    )
-    return qs.select("qid").join(F.broadcast(stats), "qid", "left").select(
-        "qid",
-        F.coalesce("n_true", F.lit(0)).alias("n_true"),
-        F.coalesce("n_ann", F.lit(0)).alias("n_ann"),
-        F.coalesce("hits", F.lit(0)).alias("hits"),
-        F.when(
-            F.coalesce("n_true", F.lit(0)) > 0,
-            F.floor(
-                F.coalesce("hits", F.lit(0)) * 1e6 / F.col("n_true")
-                + F.lit(0.5)
-            )
-            / 1e6,
-        ).alias("recall"),
+    e = _vecs(spark, sf_dir)
+    cents = _sample(e, _N_CENTS, "centroid_id", "cv")
+    qs = _sample(e, _RECALL_NQ)
+    probe = _probe(cents, qs, _RECALL_NPROBE)
+    ann = ivf_assign(e, cents).join(F.broadcast(probe), "cluster")
+    return _recall_stats(
+        qs,
+        _exact_topk(e, qs, _RECALL_K),
+        _cos_topk(ann.join(F.broadcast(qs), "qid"), _RECALL_K),
+        "n_ann",
     )
 
 
@@ -1271,40 +1151,70 @@ _PQ_NQ = 8  # evaluated query sample: vec_id < 8
 _PQ_TOPK = 10  # recall@k of the ADC ranking
 
 
-@register(
-    "q_embed_pq_eval",
-    oracle=f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings WHERE {_WF_SQL}),
-    ms AS (SELECT unnest(range({_PQ_M})) AS m),
+def _pq_recon(e: DataFrame) -> DataFrame:
+    """PQ encode + reconstruct: (vec_id, r). Each vector explodes to
+    _PQ_M subvectors; each subvector takes the codeword (the same
+    slice of a seed vector vec_id < _PQ_K) minimizing
+    dot(c,c) − 2·dot(sub,c) — argmin of L2² with the constant
+    dot(sub,sub) dropped, ties identical to full-L2 ties — tie-break
+    centroid_id; the codewords re-concatenate in subspace order
+    (array_sort(collect_list(struct(m, csub))) ≡ list(csub ORDER BY m),
+    m unique per vector). One corpus pass: the M·K-row codebook
+    broadcasts, shuffle keys are (vec_id, m)/(vec_id), never all-pairs.
+    Twin: _PQ_RECON_SQL."""
+    m = F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("m")
+    subs = e.select("vec_id", m, "v").select(
+        "vec_id",
+        "m",
+        F.expr(f"slice(v, m*{_PQ_SUBDIM}+1, {_PQ_SUBDIM})").alias("sub"),
+    )
+    cb = subs.filter(F.col("vec_id") < _PQ_K).select(
+        F.col("vec_id").alias("centroid_id"), "m", F.col("sub").alias("csub")
+    )
+    score = dot(F.col("csub"), F.col("csub")) - 2 * dot(
+        F.col("sub"), F.col("csub")
+    )
+    codes = (
+        subs.join(F.broadcast(cb), "m")
+        .select("vec_id", "m", "centroid_id", "csub", score.alias("score"))
+        .groupBy("vec_id", "m")
+        .agg(F.expr("min_by(csub, struct(score, centroid_id))").alias("csub"))
+    )
+    return codes.groupBy("vec_id").agg(
+        F.flatten(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("m", "csub"))),
+                lambda x: x["csub"],
+            )
+        ).alias("r")
+    )
+
+
+_PQ_RECON_SQL = f"""ms AS (SELECT unnest(range({_PQ_M})) AS m),
     subs AS (
       SELECT e.vec_id, ms.m,
              list_slice(e.v, ms.m*{_PQ_SUBDIM}+1,
                         ms.m*{_PQ_SUBDIM}+{_PQ_SUBDIM}) AS sub
       FROM e CROSS JOIN ms
     ),
-    cb AS (
-      SELECT ms.m, e.vec_id AS centroid_id,
-             list_slice(e.v, ms.m*{_PQ_SUBDIM}+1,
-                        ms.m*{_PQ_SUBDIM}+{_PQ_SUBDIM}) AS csub
-      FROM e CROSS JOIN ms WHERE e.vec_id < {_PQ_K}
-    ),
-    codes AS (
-      SELECT vec_id, m, csub FROM (
-        SELECT s.vec_id, s.m, c.csub,
-               row_number() OVER (
-                 PARTITION BY s.vec_id, s.m
-                 ORDER BY list_dot_product(c.csub, c.csub)
-                          - 2*list_dot_product(s.sub, c.csub) ASC NULLS LAST,
-                          c.centroid_id
-               ) AS rn
-        FROM subs s JOIN cb c ON c.m = s.m
-      ) WHERE rn = 1
-    ),
+    codes AS ({_rank_sql(
+        "s.vec_id, s.m, c.sub AS csub",
+        f"subs s JOIN subs c ON c.m = s.m AND c.vec_id < {_PQ_K}",
+        "list_dot_product(c.sub, c.sub) - 2*list_dot_product(s.sub, c.sub)"
+        " ASC NULLS LAST, c.vec_id",
+        1,
+        by="s.vec_id, s.m",
+    )}),
     recon AS (
       SELECT vec_id, flatten(list(csub ORDER BY m)) AS r
       FROM codes GROUP BY vec_id
-    ),
+    )"""
+
+
+@register(
+    "q_embed_pq_eval",
+    oracle=f"""
+    WITH {_E_WF_SQL}, {_PQ_RECON_SQL},
     dist AS (
       SELECT CAST(count(*) AS BIGINT) AS n_vec,
              CASE WHEN count(*) > 0 THEN CAST(
@@ -1315,55 +1225,13 @@ _PQ_TOPK = 10  # recall@k of the ADC ranking
                // count(*) AS BIGINT) END AS mean_sq_err_micros
       FROM e JOIN recon r USING (vec_id)
     ),
-    qs AS (SELECT vec_id AS qid, v AS qv FROM e
-           WHERE vec_id < {_PQ_NQ}),
-    exact_top AS (
-      SELECT qid, vec_id FROM (
-        SELECT q.qid, e.vec_id,
-               row_number() OVER (
-                 PARTITION BY q.qid
-                 ORDER BY {_recall_cos_sql('e.v', 'q.qv')} DESC NULLS LAST,
-                          e.vec_id
-               ) AS rn
-        FROM e CROSS JOIN qs q WHERE e.vec_id <> q.qid
-      ) WHERE rn <= {_PQ_TOPK}
-    ),
-    pq_top AS (
-      SELECT qid, vec_id FROM (
-        SELECT q.qid, r.vec_id,
-               row_number() OVER (
-                 PARTITION BY q.qid
-                 ORDER BY {_recall_cos_sql('r.r', 'q.qv')} DESC NULLS LAST,
-                          r.vec_id
-               ) AS rn
-        FROM recon r CROSS JOIN qs q WHERE r.vec_id <> q.qid
-      ) WHERE rn <= {_PQ_TOPK}
-    ),
-    fo AS (
-      SELECT coalesce(x.qid, p.qid) AS qid,
-             CASE WHEN x.qid IS NOT NULL THEN 1 END AS ex,
-             CASE WHEN p.qid IS NOT NULL THEN 1 END AS pq
-      FROM exact_top x FULL JOIN pq_top p
-        ON p.qid = x.qid AND p.vec_id = x.vec_id
-    ),
-    stats AS (
-      SELECT qid, CAST(count(ex) AS BIGINT) AS n_true,
-             CAST(count(pq) AS BIGINT) AS n_pq,
-             CAST(count(CASE WHEN ex IS NOT NULL AND pq IS NOT NULL
-                             THEN 1 END) AS BIGINT) AS hits
-      FROM fo GROUP BY 1
-    )
-    SELECT q.qid,
-           coalesce(s.n_true, 0) AS n_true,
-           coalesce(s.n_pq, 0) AS n_pq,
-           coalesce(s.hits, 0) AS hits,
-           CASE WHEN coalesce(s.n_true, 0) > 0
-                THEN floor(coalesce(s.hits, 0) * 1e6
-                           / s.n_true + 0.5) / 1e6 END AS recall,
-           d.n_vec, d.mean_sq_err_micros
-    FROM qs q
-    LEFT JOIN stats s ON s.qid = q.qid
-    CROSS JOIN dist d
+    {_sample_sql(_PQ_NQ)},
+    exact_top AS ({_exact_top_sql(_PQ_TOPK)}),
+    pq_top AS ({_exact_top_sql(
+        _PQ_TOPK, "(SELECT vec_id, r AS v FROM recon) x CROSS JOIN qs q"
+    )}),
+    {_recall_stats_sql("exact_top", "pq_top", "n_pq")}
+    SELECT rs.*, d.n_vec, d.mean_sq_err_micros FROM rs CROSS JOIN dist d
     """,
     tags=("ann", "eval"),
 )
@@ -1411,65 +1279,12 @@ def q_embed_pq_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a NULL subspace score (corrupt vector) would rank FIRST in
     # Spark's min_by struct ordering and LAST in the oracle — the
     # well-formed contract excludes such rows in both engines
-    e = _well_formed(
-        load_vectors(spark, sf_dir).select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-    )
-    ms = F.explode(
-        F.sequence(F.lit(0), F.lit(_PQ_M - 1))
-    ).alias("m")
-    subs = e.select(
-        "vec_id",
-        ms,
-        "v",
-    ).select(
-        "vec_id",
-        "m",
-        F.expr(f"slice(v, m*{_PQ_SUBDIM}+1, {_PQ_SUBDIM})").alias("sub"),
-    )
-    cb = (
-        e.filter(F.col("vec_id") < _PQ_K)
-        .select(F.col("vec_id").alias("centroid_id"), ms, "v")
-        .select(
-            "m",
-            "centroid_id",
-            F.expr(f"slice(v, m*{_PQ_SUBDIM}+1, {_PQ_SUBDIM})").alias("csub"),
-        )
-    )
-    scored = subs.join(F.broadcast(cb), "m").select(
-        "vec_id",
-        "m",
-        "centroid_id",
-        "csub",
-        (dot(F.col("csub"), F.col("csub")) - 2 * dot(F.col("sub"), F.col("csub"))).alias(
-            "score"
-        ),
-    )
-    codes = scored.groupBy("vec_id", "m").agg(
-        F.expr("min_by(csub, struct(score, centroid_id))").alias("csub")
-    )
-    recon = codes.groupBy("vec_id").agg(
-        F.flatten(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("m", "csub"))),
-                lambda x: x["csub"],
-            )
-        ).alias("r")
-    )
-    er = e.join(recon, "vec_id").select(
+    e = _well_formed(_vecs(spark, sf_dir))
+    v, r = F.col("v"), F.col("r")
+    er = e.join(_pq_recon(e), "vec_id").select(
         "vec_id",
         "r",
-        F.floor(
-            (
-                (dot(F.col("v"), F.col("v")) - 2 * dot(F.col("v"), F.col("r")))
-                + dot(F.col("r"), F.col("r"))
-            )
-            * 1e6
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("qerr_micros"),
+        micros((dot(v, v) - 2 * dot(v, r)) + dot(r, r)).alias("qerr_micros"),
     )
     # er feeds both the distortion aggregate and the ADC ranking — cut
     # would be overkill (each consumer prunes different columns); the
@@ -1483,63 +1298,11 @@ def q_embed_pq_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("mean_sq_err_micros"),
     )
-    qs = e.filter(F.col("vec_id") < _PQ_NQ).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-    )
-
-    def topk(scored_df: DataFrame) -> DataFrame:
-        w = W.partitionBy("qid").orderBy(
-            F.col("sim").desc_nulls_last(), F.col("vec_id")
-        )
-        return (
-            scored_df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= _PQ_TOPK)
-            .select("qid", "vec_id")
-        )
-
-    exact_top = topk(
-        e.crossJoin(F.broadcast(qs))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", cosine(F.col("v"), F.col("qv")).alias("sim"))
-    )
-    pq_top = topk(
-        er.crossJoin(F.broadcast(qs))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", cosine(F.col("r"), F.col("qv")).alias("sim"))
-    )
-    fo = exact_top.withColumn("ex", F.lit(1)).join(
-        pq_top.withColumn("pq", F.lit(1)),
-        ["qid", "vec_id"],
-        "full",
-    )
-    stats = fo.groupBy("qid").agg(
-        F.count("ex").alias("n_true"),
-        F.count("pq").alias("n_pq"),
-        F.count(
-            F.when(F.col("ex").isNotNull() & F.col("pq").isNotNull(), 1)
-        ).alias("hits"),
-    )
-    return (
-        qs.select("qid")
-        .join(F.broadcast(stats), "qid", "left")
-        .crossJoin(F.broadcast(dist))
-        .select(
-            "qid",
-            F.coalesce("n_true", F.lit(0)).alias("n_true"),
-            F.coalesce("n_pq", F.lit(0)).alias("n_pq"),
-            F.coalesce("hits", F.lit(0)).alias("hits"),
-            F.when(
-                F.coalesce("n_true", F.lit(0)) > 0,
-                F.floor(
-                    F.coalesce("hits", F.lit(0)) * 1e6 / F.col("n_true")
-                    + F.lit(0.5)
-                )
-                / 1e6,
-            ).alias("recall"),
-            "n_vec",
-            "mean_sq_err_micros",
-        )
-    )
+    qs = _sample(e, _PQ_NQ)
+    pq_top = _exact_topk(er.select("vec_id", r.alias("v")), qs, _PQ_TOPK)
+    return _recall_stats(
+        qs, _exact_topk(e, qs, _PQ_TOPK), pq_top, "n_pq"
+    ).crossJoin(F.broadcast(dist))
 
 
 _HAM_K = 10  # returned neighbors
@@ -1588,20 +1351,77 @@ def _signatures(e: DataFrame) -> DataFrame:
     )
 
 
+def _hamming() -> Column:
+    """Hamming distance between a sketch (lo, hi) and a query sketch
+    (qlo, qhi): XOR + popcount per word — small exact INTs, so every
+    Hamming ranking (vec_id tie-break) is fully deterministic.
+    Twin: _HAM_SQL."""
+    return F.bit_count(F.col("lo").bitwiseXOR(F.col("qlo"))) + F.bit_count(
+        F.col("hi").bitwiseXOR(F.col("qhi"))
+    )
+
+
+_HAM_SQL = "bit_count(xor(s.lo, q.qlo)) + bit_count(xor(s.hi, q.qhi))"
+
+
+def _hamming_heap(sig: DataFrame, k: int) -> DataFrame:
+    """Top-k (vec_id, hamming) sketches nearest query vector 0's: the
+    query sketch broadcasts (1-row BNLJ) and the top-k plans
+    TakeOrderedAndProject. Twin: _ham_heap_sql."""
+    q = sig.filter(F.col("vec_id") == 0).select(
+        F.col("lo").alias("qlo"), F.col("hi").alias("qhi")
+    )
+    return (
+        sig.filter(F.col("vec_id") != 0)
+        .crossJoin(F.broadcast(q))
+        .select("vec_id", _hamming().alias("hamming"))
+        .orderBy("hamming", "vec_id")
+        .limit(k)
+    )
+
+
+def _ham_heap_sql(k: int) -> str:
+    return (
+        f"SELECT s.vec_id, {_HAM_SQL} AS hamming FROM sig s,"
+        " (SELECT lo AS qlo, hi AS qhi FROM sig WHERE vec_id = 0) q"
+        f" WHERE s.vec_id <> 0 ORDER BY hamming, s.vec_id LIMIT {k}"
+    )
+
+
+def _hamming_topk(sig: DataFrame, n: int, k: int) -> DataFrame:
+    """Per-query Hamming top-k for the sketch sample vec_id < n:
+    (qid, vec_id, rn), self excluded, one pass over the 8-byte
+    signatures against the broadcast query sketches.
+    Twin: _ham_top_sql."""
+    qsig = sig.filter(F.col("vec_id") < n).select(
+        F.col("vec_id").alias("qid"),
+        F.col("lo").alias("qlo"),
+        F.col("hi").alias("qhi"),
+    )
+    pairs = (
+        sig.crossJoin(F.broadcast(qsig))
+        .filter(F.col("vec_id") != F.col("qid"))
+        .select("qid", "vec_id", _hamming().alias("ham"))
+    )
+    return _rank(pairs, k, "ham", "vec_id").select("qid", "vec_id", "rn")
+
+
+def _ham_top_sql(n: int, k: int) -> str:
+    return _rank_sql(
+        "q.qid, s.vec_id",
+        "sig s CROSS JOIN (SELECT vec_id AS qid, lo AS qlo, hi AS qhi"
+        f" FROM sig WHERE vec_id < {n}) q WHERE s.vec_id <> q.qid",
+        f"{_HAM_SQL}, s.vec_id",
+        k,
+    )
+
+
 @register(
     "q_sim_hamming_topk",
     oracle=f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings WHERE {_WF_SQL}),
-    {_SIG_CTE}
-    SELECT s.vec_id,
-           CAST(bit_count(xor(s.lo, q.lo))
-                + bit_count(xor(s.hi, q.hi)) AS INT) AS hamming
-    FROM sig s, (SELECT lo, hi FROM sig WHERE vec_id = 0) q
-    WHERE s.vec_id <> 0
-    ORDER BY bit_count(xor(s.lo, q.lo)) + bit_count(xor(s.hi, q.hi)),
-             s.vec_id
-    LIMIT {_HAM_K}
+    WITH {_E_WF_SQL}, {_SIG_CTE}
+    SELECT vec_id, CAST(hamming AS INT) AS hamming
+    FROM ({_ham_heap_sql(_HAM_K)})
     """,
     tags=("ann",),
 )
@@ -1630,26 +1450,8 @@ def q_sim_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force scan over sketches is itself the production pattern
     (sketch scan → shortlist → exact re-rank on the shortlist only).
     """
-    e = _well_formed(
-        load_vectors(spark, sf_dir).select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-    )
-    sig = _signatures(e)
-    q = sig.filter(F.col("vec_id") == 0).select(
-        F.col("lo").alias("qlo"), F.col("hi").alias("qhi")
-    )
-    ham = (
-        F.bit_count(F.col("lo").bitwiseXOR(F.col("qlo")))
-        + F.bit_count(F.col("hi").bitwiseXOR(F.col("qhi")))
-    ).cast("int")
-    return (
-        sig.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", ham.alias("hamming"))
-        .orderBy("hamming", "vec_id")
-        .limit(_HAM_K)
-    )
+    sig = _signatures(_well_formed(_vecs(spark, sf_dir)))
+    return _hamming_heap(sig, _HAM_K)
 
 
 _RRF_C = 60  # the standard RRF constant (Cormack et al.)
@@ -1660,35 +1462,17 @@ _RRF_K = 10  # fused results returned
 @register(
     "q_embed_rrf",
     oracle=f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings WHERE {_WF_SQL}),
-    q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-    {_SIG_CTE},
+    WITH {_E_WF_SQL}, {_SIG_CTE},
     cosl AS (
       SELECT vec_id,
-             CAST(row_number() OVER (ORDER BY sim DESC NULLS LAST, vec_id)
+             CAST(row_number() OVER (ORDER BY raw_sim DESC NULLS LAST, vec_id)
                   AS INT) AS ra
-      FROM (
-        SELECT e.vec_id,
-               list_dot_product(e.v, q.qv)
-               / NULLIF(sqrt(list_dot_product(e.v, e.v))
-                        * sqrt(list_dot_product(q.qv, q.qv)), 0) AS sim
-        FROM e, q WHERE e.vec_id <> 0
-        ORDER BY sim DESC NULLS LAST, e.vec_id LIMIT {_RRF_LIST}
-      )
+      FROM ({_cos_heap_sql(_RRF_LIST)})
     ),
     haml AS (
       SELECT vec_id,
-             CAST(row_number() OVER (ORDER BY hamming, vec_id) AS INT)
-               AS rb
-      FROM (
-        SELECT s.vec_id,
-               bit_count(xor(s.lo, sq.lo)) + bit_count(xor(s.hi, sq.hi))
-                 AS hamming
-        FROM sig s, (SELECT lo, hi FROM sig WHERE vec_id = 0) sq
-        WHERE s.vec_id <> 0
-        ORDER BY hamming, s.vec_id LIMIT {_RRF_LIST}
-      )
+             CAST(row_number() OVER (ORDER BY hamming, vec_id) AS INT) AS rb
+      FROM ({_ham_heap_sql(_RRF_LIST)})
     ),
     f AS (
       SELECT coalesce(c.vec_id, h.vec_id) AS vec_id, c.ra, h.rb,
@@ -1734,49 +1518,15 @@ def q_embed_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ending in a per-partition heap; the fusion is a full-outer join of
     two 50-row lists (broadcast, trivially) — each list built ONCE with
     a single consumer (the q_tcloseness lesson)."""
-    e = _well_formed(
-        load_vectors(spark, sf_dir).select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-    )
+    e = _well_formed(_vecs(spark, sf_dir))
     q = e.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-    cos50 = (
-        e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", cosine(F.col("v"), F.col("qv")).alias("sim"))
-        .orderBy(F.col("sim").desc_nulls_last(), "vec_id")
-        .limit(_RRF_LIST)
+    cos_order = W.orderBy(F.col("raw_sim").desc_nulls_last(), "vec_id")
+    cosr = _cosine_heap(e, q, _RRF_LIST).select(
+        "vec_id", F.row_number().over(cos_order).alias("ra")
     )
-    cosr = cos50.select(
-        "vec_id",
-        F.row_number()
-        .over(W.orderBy(F.col("sim").desc_nulls_last(), "vec_id"))
-        .cast("int")
-        .alias("ra"),
-    )
-    sig = _signatures(e)
-    sq = sig.filter(F.col("vec_id") == 0).select(
-        F.col("lo").alias("qlo"), F.col("hi").alias("qhi")
-    )
-    ham50 = (
-        sig.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(sq))
-        .select(
-            "vec_id",
-            (
-                F.bit_count(F.col("lo").bitwiseXOR(F.col("qlo")))
-                + F.bit_count(F.col("hi").bitwiseXOR(F.col("qhi")))
-            ).alias("hamming"),
-        )
-        .orderBy("hamming", "vec_id")
-        .limit(_RRF_LIST)
-    )
-    hamr = ham50.select(
-        "vec_id",
-        F.row_number()
-        .over(W.orderBy("hamming", "vec_id"))
-        .cast("int")
-        .alias("rb"),
+    ham_order = W.orderBy("hamming", "vec_id")
+    hamr = _hamming_heap(_signatures(e), _RRF_LIST).select(
+        "vec_id", F.row_number().over(ham_order).alias("rb")
     )
     fo = cosr.join(hamr, "vec_id", "full")
     score = F.coalesce(
@@ -1820,36 +1570,13 @@ _NDCG_DISC_SQL = "[" + ", ".join(repr(d) for d in _NDCG_DISC) + "]"
 @register(
     "q_embed_ndcg_eval",
     oracle=f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings WHERE {_WF_SQL}),
-    qs AS (SELECT vec_id AS qid, v AS qv FROM e
-           WHERE vec_id < {_NDCG_NQ}),
-    {_SIG_CTE},
-    qsig AS (SELECT vec_id AS qid, lo AS qlo, hi AS qhi FROM sig
-             WHERE vec_id < {_NDCG_NQ}),
-    exact_top AS (
-      SELECT qid, vec_id, CAST({_NDCG_K} + 1 - rn AS BIGINT) AS rel
-      FROM (
-        SELECT q.qid, e.vec_id,
-               row_number() OVER (PARTITION BY q.qid
-                 ORDER BY {_recall_cos_sql('e.v', 'q.qv')} DESC NULLS LAST,
-                          e.vec_id) AS rn
-        FROM e CROSS JOIN qs q WHERE e.vec_id <> q.qid
-      ) WHERE rn <= {_NDCG_K}
-    ),
-    ham_top AS (
-      SELECT qid, vec_id, CAST(rn AS INT) AS pos FROM (
-        SELECT q.qid, s.vec_id,
-               row_number() OVER (PARTITION BY q.qid
-                 ORDER BY bit_count(xor(s.lo, q.qlo))
-                          + bit_count(xor(s.hi, q.qhi)), s.vec_id) AS rn
-        FROM sig s CROSS JOIN qsig q WHERE s.vec_id <> q.qid
-      ) WHERE rn <= {_NDCG_K}
-    ),
+    WITH {_E_WF_SQL}, {_sample_sql(_NDCG_NQ)}, {_SIG_CTE},
+    exact_top AS ({_exact_top_sql(_NDCG_K)}),
+    ham_top AS ({_ham_top_sql(_NDCG_NQ, _NDCG_K)}),
     terms AS (
       SELECT h.qid,
-             CAST(floor((coalesce(x.rel, 0)
-                         * (CAST({_NDCG_DISC_SQL} AS DOUBLE[]))[h.pos])
+             CAST(floor((coalesce({_NDCG_K} + 1 - x.rn, 0)
+                         * (CAST({_NDCG_DISC_SQL} AS DOUBLE[]))[h.rn])
                         * 1e6 + 0.5) AS BIGINT) AS tm
       FROM ham_top h LEFT JOIN exact_top x
         ON x.qid = h.qid AND x.vec_id = h.vec_id
@@ -1858,8 +1585,9 @@ _NDCG_DISC_SQL = "[" + ", ".join(repr(d) for d in _NDCG_DISC) + "]"
           FROM terms GROUP BY qid)
     SELECT q.qid,
            coalesce(d.dcg_micros, 0) AS dcg_micros,
-           floor(CAST(coalesce(d.dcg_micros, 0) AS DOUBLE) * 1e6
-                 / {_NDCG_IDCG_MICROS} + 0.5) / 1e6 AS ndcg
+           {_ratio6_sql(
+               "CAST(coalesce(d.dcg_micros, 0) AS DOUBLE)", _NDCG_IDCG_MICROS
+           )} AS ndcg
     FROM qs q LEFT JOIN d ON d.qid = q.qid
     """,
     tags=("ann", "eval"),
@@ -1897,107 +1625,34 @@ def q_embed_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     top list is a per-partition heap; the term join and per-query sum
     touch ≤ {_NDCG_NQ}·{_NDCG_K} rows. exact_top and ham_top each have
     exactly ONE consumer (the single-consumer lesson)."""
-    e = _well_formed(
-        load_vectors(spark, sf_dir).select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-    )
-    qs = e.filter(F.col("vec_id") < _NDCG_NQ).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-    )
-    exact_top = (
-        e.crossJoin(F.broadcast(qs))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", cosine(F.col("v"), F.col("qv")).alias("sim"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("qid").orderBy(
-                    F.col("sim").desc_nulls_last(), "vec_id"
-                )
-            ),
-        )
-        .filter(F.col("rn") <= _NDCG_K)
-        .select(
-            "qid",
-            "vec_id",
-            (F.lit(_NDCG_K + 1) - F.col("rn")).cast("long").alias("rel"),
-        )
-    )
-    sig = _signatures(e)
-    qsig = sig.filter(F.col("vec_id") < _NDCG_NQ).select(
-        F.col("vec_id").alias("qid"),
-        F.col("lo").alias("qlo"),
-        F.col("hi").alias("qhi"),
-    )
-    ham_top = (
-        sig.crossJoin(F.broadcast(qsig))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            (
-                F.bit_count(F.col("lo").bitwiseXOR(F.col("qlo")))
-                + F.bit_count(F.col("hi").bitwiseXOR(F.col("qhi")))
-            ).alias("hamming"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("qid").orderBy("hamming", "vec_id")
-            ),
-        )
-        .filter(F.col("rn") <= _NDCG_K)
-        .select("qid", "vec_id", F.col("rn").cast("int").alias("pos"))
-    )
-    disc = F.element_at(
-        F.array(*[F.lit(d) for d in _NDCG_DISC]), F.col("pos")
-    )
-    terms = ham_top.join(exact_top, ["qid", "vec_id"], "left").select(
+    e = _well_formed(_vecs(spark, sf_dir))
+    qs = _sample(e, _NDCG_NQ)
+    exact_top = _exact_topk(e, qs, _NDCG_K).select(
         "qid",
-        F.floor(
-            (F.coalesce(F.col("rel"), F.lit(0)) * disc) * 1e6 + F.lit(0.5)
-        ).alias("tm"),
+        "vec_id",
+        (F.lit(_NDCG_K + 1) - F.col("rn")).cast("long").alias("rel"),
+    )
+    ham_top = _hamming_topk(_signatures(e), _NDCG_NQ, _NDCG_K)
+    disc = F.element_at(F.array(*[F.lit(d) for d in _NDCG_DISC]), F.col("rn"))
+    terms = ham_top.join(exact_top, ["qid", "vec_id"], "left").select(
+        "qid", micros(F.coalesce(F.col("rel"), F.lit(0)) * disc).alias("tm")
     )
     d = terms.groupBy("qid").agg(F.sum("tm").alias("dcg_micros"))
     dcg = F.coalesce(F.col("dcg_micros"), F.lit(0))
     return qs.select("qid").join(F.broadcast(d), "qid", "left").select(
         "qid",
         dcg.alias("dcg_micros"),
-        (
-            F.floor(
-                dcg.cast("double") * 1e6 / F.lit(_NDCG_IDCG_MICROS)
-                + F.lit(0.5)
-            )
-            / 1e6
-        ).alias("ndcg"),
+        ratio6(dcg.cast("double"), F.lit(_NDCG_IDCG_MICROS)).alias("ndcg"),
     )
 
 
 @register(
     "q_embed_ivf_balance",
-    oracle="""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE embedding IS NOT NULL),
-    cents AS (SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id < 16),
-    scored AS (
-      SELECT e.vec_id, c.centroid_id,
-             list_dot_product(e.v, c.cv)
-             / NULLIF(sqrt(list_dot_product(e.v, e.v))
-                      * sqrt(list_dot_product(c.cv, c.cv)), 0) AS sim
-      FROM e CROSS JOIN cents c
-    ),
-    assigned AS (
-      SELECT vec_id, centroid_id AS cluster FROM (
-        SELECT vec_id, centroid_id,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY sim DESC NULLS LAST,
-                                           centroid_id) AS rn
-        FROM scored
-      ) WHERE rn = 1
-    ),
+    oracle=f"""
+    WITH {_E_SQL}, {_CENTS_SQL},
     counts AS (
       SELECT cluster, CAST(count(*) AS BIGINT) AS n_vecs
-      FROM assigned GROUP BY 1
+      FROM ({_assign_sql("cents")}) GROUP BY 1
     ),
     w AS (
       SELECT cluster, n_vecs,
@@ -2007,8 +1662,8 @@ def q_embed_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM counts
     )
     SELECT cluster, n_vecs,
-           floor(n_vecs * 1e6 / total + 0.5) / 1e6 AS share,
-           floor(mx * ncl * 1e6 / total + 0.5) / 1e6 AS imbalance,
+           {_ratio6_sql("n_vecs", "total")} AS share,
+           {_ratio6_sql("mx * ncl", "total")} AS imbalance,
            n_vecs * ncl > 2 * total AS hot
     FROM w
     """,
@@ -2038,14 +1693,9 @@ def q_embed_ivf_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_sim_ann_ivf assignment shuffle, reduced map-side to ≤k rows),
     then window sums over the k-row cell table (single consumer, no
     rejoin — the q_tcloseness lesson). Nothing else moves."""
-    e = load_vectors(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    centroids = e.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
-    )
+    e = _vecs(spark, sf_dir)
     counts = (
-        ivf_assign(e, centroids)
+        ivf_assign(e, _sample(e, _N_CENTS, "centroid_id", "cv"))
         .groupBy("cluster")
         .agg(F.count(F.lit(1)).alias("n_vecs"))
     )
@@ -2060,15 +1710,8 @@ def q_embed_ivf_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return withg.select(
         "cluster",
         "n_vecs",
-        (
-            F.floor(F.col("n_vecs") * 1e6 / F.col("total") + F.lit(0.5)) / 1e6
-        ).alias("share"),
-        (
-            F.floor(
-                F.col("mx") * F.col("ncl") * 1e6 / F.col("total") + F.lit(0.5)
-            )
-            / 1e6
-        ).alias("imbalance"),
+        ratio6("n_vecs", "total").alias("share"),
+        ratio6(F.col("mx") * F.col("ncl"), "total").alias("imbalance"),
         (F.col("n_vecs") * F.col("ncl") > 2 * F.col("total")).alias("hot"),
     )
 
@@ -2084,10 +1727,7 @@ _CURVE_TS = [0.8, 0.9, 0.95, 0.99]
                FROM embeddings
                WHERE {_WF_SQL} AND vec_id < {_CURVE_N}),
     pairs AS (
-      SELECT a.v AS av, b.v AS bv,
-             list_dot_product(a.v, b.v)
-             / NULLIF(sqrt(list_dot_product(a.v, a.v))
-                      * sqrt(list_dot_product(b.v, b.v)), 0) AS sim
+      SELECT {_cos_sql('a.v', 'b.v')} AS sim
       FROM e a JOIN e b ON b.vec_id > a.vec_id
     ),
     agg AS (
@@ -2103,7 +1743,7 @@ _CURVE_TS = [0.8, 0.9, 0.95, 0.99]
     SELECT CAST(t.threshold AS DOUBLE) AS threshold, a.n_scored,
            t.n_pairs,
            CASE WHEN a.n_scored > 0
-                THEN floor(t.n_pairs * 1e6 / a.n_scored + 0.5) / 1e6
+                THEN {_ratio6_sql("t.n_pairs", "a.n_scored")}
            END AS dup_rate
     FROM agg a CROSS JOIN (
       {' UNION ALL '.join(
@@ -2146,11 +1786,7 @@ def q_embed_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate), the pair space is sample², never corpus², and the
     4-threshold readout is ONE conditional aggregation over the pair
     stream (no per-threshold rescan) unpivoted to 4 rows."""
-    e = _well_formed(
-        load_vectors(spark, sf_dir)
-        .filter(F.col("vec_id") < _CURVE_N)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    )
+    e = _well_formed(_vecs(spark, sf_dir).filter(F.col("vec_id") < _CURVE_N))
     a = e.alias("a")
     b = e.alias("b")
     pairs = a.join(b, F.col("b.vec_id") > F.col("a.vec_id")).select(
@@ -2179,9 +1815,7 @@ def q_embed_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_scored",
         F.col("r.n_pairs").alias("n_pairs"),
         F.when(
-            F.col("n_scored") > 0,
-            F.floor(F.col("r.n_pairs") * 1e6 / F.col("n_scored") + F.lit(0.5))
-            / 1e6,
+            F.col("n_scored") > 0, ratio6("r.n_pairs", "n_scored")
         ).alias("dup_rate"),
     )
 
@@ -2206,33 +1840,11 @@ _RBO_MAX_NANOS = sum(
 @register(
     "q_embed_rbo",
     oracle=f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings WHERE {_WF_SQL}),
-    qs AS (SELECT vec_id AS qid, v AS qv FROM e
-           WHERE vec_id < {_RBO_NQ}),
-    {_SIG_CTE},
-    qsig AS (SELECT vec_id AS qid, lo AS qlo, hi AS qhi FROM sig
-             WHERE vec_id < {_RBO_NQ}),
-    exact_top AS (
-      SELECT qid, vec_id, CAST(rn AS INT) AS pa FROM (
-        SELECT q.qid, e.vec_id,
-               row_number() OVER (PARTITION BY q.qid
-                 ORDER BY {_recall_cos_sql('e.v', 'q.qv')} DESC NULLS LAST,
-                          e.vec_id) AS rn
-        FROM e CROSS JOIN qs q WHERE e.vec_id <> q.qid
-      ) WHERE rn <= {_RBO_K}
-    ),
-    ham_top AS (
-      SELECT qid, vec_id, CAST(rn AS INT) AS pb FROM (
-        SELECT q.qid, s.vec_id,
-               row_number() OVER (PARTITION BY q.qid
-                 ORDER BY bit_count(xor(s.lo, q.qlo))
-                          + bit_count(xor(s.hi, q.qhi)), s.vec_id) AS rn
-        FROM sig s CROSS JOIN qsig q WHERE s.vec_id <> q.qid
-      ) WHERE rn <= {_RBO_K}
-    ),
+    WITH {_E_WF_SQL}, {_sample_sql(_RBO_NQ)}, {_SIG_CTE},
+    exact_top AS ({_exact_top_sql(_RBO_K)}),
+    ham_top AS ({_ham_top_sql(_RBO_NQ, _RBO_K)}),
     common AS (
-      SELECT x.qid, greatest(x.pa, h.pb) AS m
+      SELECT x.qid, greatest(x.rn, h.rn) AS m
       FROM exact_top x JOIN ham_top h
         ON h.qid = x.qid AND h.vec_id = x.vec_id
     ),
@@ -2255,8 +1867,7 @@ _RBO_MAX_NANOS = sum(
     SELECT qid,
            CAST(max(ov_at_k) AS BIGINT) AS n_common,
            CAST(sum(tm) AS BIGINT) AS rbo_nanos,
-           floor(CAST(sum(tm) AS DOUBLE) * 1e6 / {_RBO_MAX_NANOS} + 0.5)
-             / 1e6 AS rbo
+           {_ratio6_sql("CAST(sum(tm) AS DOUBLE)", _RBO_MAX_NANOS)} AS rbo
     FROM terms GROUP BY qid
     """,
     tags=("ann", "eval"),
@@ -2292,62 +1903,15 @@ def q_embed_rbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity anchor: no vector surface in the reference
     (src/main/java/jc/DemoApplication.java is a Kafka pipe) — part
     of the beyond-the-reference similarity-search family."""
-    e = _well_formed(
-        load_vectors(spark, sf_dir).select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-    )
-    qs = e.filter(F.col("vec_id") < _RBO_NQ).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-    )
-    cosj = e.crossJoin(F.broadcast(qs)).filter(F.col("vec_id") != F.col("qid"))
-    exact_top = (
-        cosj.select(
-            "qid",
-            "vec_id",
-            F.row_number()
-            .over(
-                W.partitionBy("qid").orderBy(
-                    cosine(F.col("v"), F.col("qv")).desc_nulls_last(),
-                    "vec_id",
-                )
-            )
-            .alias("pa"),
-        )
-        .filter(F.col("pa") <= _RBO_K)
-    )
-    sig = _signatures(e)
-    qsig = sig.filter(F.col("vec_id") < _RBO_NQ).select(
-        F.col("vec_id").alias("qid"),
-        F.col("lo").alias("qlo"),
-        F.col("hi").alias("qhi"),
-    )
-    hamj = sig.crossJoin(F.broadcast(qsig)).filter(
-        F.col("vec_id") != F.col("qid")
-    )
-    ham_top = (
-        hamj.select(
-            "qid",
-            "vec_id",
-            F.row_number()
-            .over(
-                W.partitionBy("qid").orderBy(
-                    (
-                        F.bit_count(F.col("lo").bitwiseXOR(F.col("qlo")))
-                        + F.bit_count(F.col("hi").bitwiseXOR(F.col("qhi")))
-                    ),
-                    "vec_id",
-                )
-            )
-            .alias("pb"),
-        )
-        .filter(F.col("pb") <= _RBO_K)
-    )
+    e = _well_formed(_vecs(spark, sf_dir))
+    qs = _sample(e, _RBO_NQ)
+    exact_top = _exact_topk(e, qs, _RBO_K).withColumnRenamed("rn", "pa")
+    ham_top = _hamming_topk(_signatures(e), _RBO_NQ, _RBO_K)
     # both ranked lists are NQ·K rows by construction — broadcast the
     # overlap join (the pre-fix plan planned a sort-merge join over two
     # ≤80-row inputs)
     common = exact_top.join(F.broadcast(ham_top), ["qid", "vec_id"]).select(
-        "qid", F.greatest("pa", "pb").alias("m")
+        "qid", F.greatest("pa", "rn").alias("m")
     )
     depths = spark.range(1, _RBO_K + 1).select(
         F.col("id").cast("int").alias("d")
@@ -2385,13 +1949,7 @@ def q_embed_rbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     return terms.groupBy("qid").agg(
         F.max("ov_at_k").alias("n_common"),
         F.sum("tm").alias("rbo_nanos"),
-        (
-            F.floor(
-                F.sum("tm").cast("double") * 1e6 / F.lit(_RBO_MAX_NANOS)
-                + F.lit(0.5)
-            )
-            / 1e6
-        ).alias("rbo"),
+        ratio6(F.sum("tm").cast("double"), F.lit(_RBO_MAX_NANOS)).alias("rbo"),
     )
 
 
@@ -2404,24 +1962,15 @@ _MRL_K = 10  # recall@k against the full-dimension ranking
 @register(
     "q_embed_matryoshka_eval",
     oracle=f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings WHERE {_WF_SQL}),
-    qs AS (SELECT vec_id AS qid, v AS qv FROM e
-           WHERE vec_id < {_MRL_NQ}),
+    WITH {_E_WF_SQL}, {_sample_sql(_MRL_NQ)},
     dims AS (SELECT CAST(unnest({_MRL_DIMS}) AS INT) AS d),
-    scored AS (
-      SELECT q.qid, dm.d, e.vec_id,
-             row_number() OVER (PARTITION BY q.qid, dm.d
-               ORDER BY list_dot_product(e.v[1:dm.d], q.qv[1:dm.d])
-                        / NULLIF(sqrt(list_dot_product(e.v[1:dm.d],
-                                                       e.v[1:dm.d]))
-                                 * sqrt(list_dot_product(q.qv[1:dm.d],
-                                                         q.qv[1:dm.d])), 0)
-                        DESC NULLS LAST, e.vec_id) AS rn
-      FROM e CROSS JOIN qs q CROSS JOIN dims dm
-      WHERE e.vec_id <> q.qid
-    ),
-    ranked AS (SELECT qid, d, vec_id FROM scored WHERE rn <= {_MRL_K}),
+    ranked AS ({_rank_sql(
+        "q.qid, dm.d, e.vec_id",
+        "e CROSS JOIN qs q CROSS JOIN dims dm WHERE e.vec_id <> q.qid",
+        f"{_cos_sql('e.v[1:dm.d]', 'q.qv[1:dm.d]')} DESC NULLS LAST, e.vec_id",
+        _MRL_K,
+        by="q.qid, dm.d",
+    )}),
     truth AS (SELECT qid, vec_id FROM ranked WHERE d = {_MRL_FULL}),
     ov AS (
       SELECT r.d, CAST(count(*) AS BIGINT) AS sum_overlap
@@ -2432,10 +1981,9 @@ _MRL_K = 10  # recall@k against the full-dimension ranking
     nq AS (SELECT CAST(count(*) AS BIGINT) AS n_queries FROM qs)
     SELECT dm.d AS trunc_dim, nq.n_queries,
            CAST(coalesce(ov.sum_overlap, 0) AS BIGINT) AS sum_overlap,
-           CASE WHEN nq.n_queries > 0 THEN
-             floor(coalesce(ov.sum_overlap, 0) * 1e6
-                   / (nq.n_queries * {_MRL_K}) + 0.5) / 1e6
-           END AS mean_recall
+           CASE WHEN nq.n_queries > 0 THEN {_ratio6_sql(
+               "coalesce(ov.sum_overlap, 0)", f"(nq.n_queries * {_MRL_K})"
+           )} END AS mean_recall
     FROM dims dm CROSS JOIN nq LEFT JOIN ov ON ov.d = dm.d
     """,
     tags=("ann", "eval"),
@@ -2470,14 +2018,8 @@ def q_embed_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity anchor: no vector surface in the reference
     (src/main/java/jc/DemoApplication.java is a Kafka pipe) — part
     of the beyond-the-reference similarity-search family."""
-    e = _well_formed(
-        load_vectors(spark, sf_dir).select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-    )
-    qs = e.filter(F.col("vec_id") < _MRL_NQ).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-    )
+    e = _well_formed(_vecs(spark, sf_dir))
+    qs = _sample(e, _MRL_NQ)
     dims = spark.createDataFrame([(d,) for d in _MRL_DIMS], "d int")
     cosj = (
         e.crossJoin(F.broadcast(qs))
@@ -2486,20 +2028,9 @@ def q_embed_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sv = F.slice(F.col("v"), F.lit(1), F.col("d"))
     sq = F.slice(F.col("qv"), F.lit(1), F.col("d"))
+    order = (cosine(sv, sq).desc_nulls_last(), "vec_id")
     ranked = (
-        cosj.select(
-            "qid",
-            "d",
-            "vec_id",
-            F.row_number()
-            .over(
-                W.partitionBy("qid", "d").orderBy(
-                    cosine(sv, sq).desc_nulls_last(), "vec_id"
-                )
-            )
-            .alias("rn"),
-        )
-        .filter(F.col("rn") <= _MRL_K)
+        _rank(cosj, _MRL_K, *order, by=("qid", "d"))
         .select("qid", "d", "vec_id")
         .alias("r")
     )
@@ -2518,25 +2049,26 @@ def q_embed_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("sum_overlap"))
     )
     nq = qs.agg(F.count(F.lit(1)).alias("n_queries"))
+    overlap = F.coalesce("sum_overlap", F.lit(0))
     return (
         dims.crossJoin(F.broadcast(nq))
         .join(F.broadcast(ov), "d", "left")
         .select(
             F.col("d").alias("trunc_dim"),
             "n_queries",
-            F.coalesce("sum_overlap", F.lit(0)).alias("sum_overlap"),
+            overlap.alias("sum_overlap"),
             F.when(
                 F.col("n_queries") > 0,
-                F.floor(
-                    F.coalesce("sum_overlap", F.lit(0))
-                    * 1e6
-                    / (F.col("n_queries") * _MRL_K)
-                    + F.lit(0.5)
-                )
-                / 1e6,
+                ratio6(overlap, F.col("n_queries") * _MRL_K),
             ).alias("mean_recall"),
         )
     )
+
+
+def _levels(spark: SparkSession, levels: list, name: str) -> DataFrame:
+    """The swept knob values as a broadcastable BIGINT column."""
+    values = F.array(*[F.lit(x) for x in levels]).cast("array<bigint>")
+    return spark.range(1).select(F.explode(values).alias(name))
 
 
 _RERANK_LIST = 100  # Hamming shortlist length fed to the exact re-rank
@@ -2546,43 +2078,20 @@ _RERANK_K = 10  # re-ranked neighbors returned
 @register(
     "q_sim_rerank",
     oracle=f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings WHERE {_WF_SQL}),
-    {_SIG_CTE},
-    q AS (SELECT lo, hi FROM sig WHERE vec_id = 0),
-    short AS (
-      SELECT s.vec_id FROM sig s, q
-      WHERE s.vec_id <> 0
-      ORDER BY bit_count(xor(s.lo, q.lo)) + bit_count(xor(s.hi, q.hi)),
-               s.vec_id
-      LIMIT {_RERANK_LIST}
-    ),
-    qv AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-    rr AS (
-      SELECT e.vec_id,
-             list_dot_product(e.v, qv)
-               / NULLIF(sqrt(list_dot_product(e.v, e.v))
-                        * sqrt(list_dot_product(qv, qv)), 0) AS raw
-      FROM short JOIN e USING (vec_id) CROSS JOIN qv
-      ORDER BY raw DESC NULLS LAST, e.vec_id
-      LIMIT {_RERANK_K}
-    ),
+    WITH {_E_WF_SQL}, {_SIG_CTE},
+    rr AS ({_cos_heap_sql(
+        _RERANK_K,
+        f"(SELECT e.* FROM ({_ham_heap_sql(_RERANK_LIST)})"
+        " JOIN e USING (vec_id))",
+    )}),
     ranked AS (
       SELECT CAST(row_number()
-               OVER (ORDER BY raw DESC NULLS LAST, vec_id) AS INT) AS rnk,
-             vec_id, raw
+               OVER (ORDER BY raw_sim DESC NULLS LAST, vec_id) AS INT) AS rnk,
+             vec_id, raw_sim
       FROM rr
     ),
-    truth AS (
-      SELECT e.vec_id FROM e CROSS JOIN qv
-      WHERE e.vec_id <> 0
-      ORDER BY list_dot_product(e.v, qv)
-                 / NULLIF(sqrt(list_dot_product(e.v, e.v))
-                          * sqrt(list_dot_product(qv, qv)), 0)
-               DESC NULLS LAST, e.vec_id
-      LIMIT {_RERANK_K}
-    )
-    SELECT r.rnk, r.vec_id, round(r.raw, 6) AS cos_sim,
+    truth AS ({_cos_heap_sql(_RERANK_K)})
+    SELECT r.rnk, r.vec_id, round(r.raw_sim, 6) AS cos_sim,
            t.vec_id IS NOT NULL AS in_exact,
            CAST(count(t.vec_id) OVER () AS BIGINT) AS n_agree
     FROM ranked r LEFT JOIN truth t ON t.vec_id = r.vec_id
@@ -2624,60 +2133,24 @@ def q_sim_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity anchor: no vector surface in the reference
     (src/main/java/jc/DemoApplication.java is a Kafka pipe) — part of
     the beyond-the-reference similarity family."""
-    e = materialize(
-        _well_formed(
-            load_vectors(spark, sf_dir).select(
-                "vec_id", F.col("embedding").cast("array<double>").alias("v")
-            )
-        )
-    )
-    sig = _signatures(e)
-    qs = sig.filter(F.col("vec_id") == 0).select(
-        F.col("lo").alias("qlo"), F.col("hi").alias("qhi")
-    )
-    ham = (
-        F.bit_count(F.col("lo").bitwiseXOR(F.col("qlo")))
-        + F.bit_count(F.col("hi").bitwiseXOR(F.col("qhi")))
-    ).cast("int")
-    short = (
-        sig.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(qs))
-        .select("vec_id", ham.alias("hamming"))
-        .orderBy("hamming", "vec_id")
-        .limit(_RERANK_LIST)
-    )
-    qv = e.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-    raw = cosine(F.col("v"), F.col("qv"))
-    rr = (
-        F.broadcast(short.select("vec_id"))
-        .join(e, "vec_id")
-        .crossJoin(F.broadcast(qv))
-        .select("vec_id", raw.alias("raw"))
-        .orderBy(F.col("raw").desc_nulls_last(), "vec_id")
-        .limit(_RERANK_K)
-    )
+    e = materialize(_well_formed(_vecs(spark, sf_dir)))
+    short = _hamming_heap(_signatures(e), _RERANK_LIST).select("vec_id")
+    q = e.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
+    rr = _cosine_heap(F.broadcast(short).join(e, "vec_id"), q, _RERANK_K)
     ranked = rr.select(
         F.row_number()
-        .over(W.orderBy(F.col("raw").desc_nulls_last(), "vec_id"))
-        .cast("int")
+        .over(W.orderBy(F.col("raw_sim").desc_nulls_last(), "vec_id"))
         .alias("rnk"),
         "vec_id",
-        "raw",
+        "raw_sim",
     )
-    truth = (
-        e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(qv))
-        .select("vec_id", raw.alias("t_raw"))
-        .orderBy(F.col("t_raw").desc_nulls_last(), "vec_id")
-        .limit(_RERANK_K)
-        .select(F.col("vec_id").alias("t_id"))
-    )
+    truth = _cosine_heap(e, q, _RERANK_K).select(F.col("vec_id").alias("t_id"))
     return (
         ranked.join(truth, ranked.vec_id == truth.t_id, "left")
         .select(
             "rnk",
             "vec_id",
-            F.round("raw", 6).alias("cos_sim"),
+            F.round("raw_sim", 6).alias("cos_sim"),
             F.col("t_id").isNotNull().alias("in_exact"),
             F.count("t_id").over(W.partitionBy()).alias("n_agree"),
         )
@@ -2685,60 +2158,36 @@ def q_sim_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _RERANK_LS = [10, 25, 50, 100]  # shortlist lengths swept by the curve
-_RERANK_LS_SQL = "[" + ", ".join(str(l) for l in _RERANK_LS) + "]"
 
 
 @register(
     "q_sim_rerank_curve",
     oracle=f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings WHERE {_WF_SQL}),
-    {_SIG_CTE},
-    q AS (SELECT lo, hi FROM sig WHERE vec_id = 0),
-    short AS (
-      SELECT s.vec_id,
-             bit_count(xor(s.lo, q.lo)) + bit_count(xor(s.hi, q.hi)) AS ham
-      FROM sig s, q
-      WHERE s.vec_id <> 0
-      ORDER BY ham, s.vec_id
-      LIMIT {max(_RERANK_LS)}
-    ),
+    WITH {_E_WF_SQL}, {_SIG_CTE},
     rh AS (
-      SELECT vec_id,
-             row_number() OVER (ORDER BY ham, vec_id) AS rh
-      FROM short
+      SELECT vec_id, row_number() OVER (ORDER BY hamming, vec_id) AS rh
+      FROM ({_ham_heap_sql(max(_RERANK_LS))})
     ),
-    qv AS (SELECT v AS qv FROM e WHERE vec_id = 0),
     cand AS (
-      SELECT rh.vec_id, rh.rh,
-             list_dot_product(e.v, qv)
-               / NULLIF(sqrt(list_dot_product(e.v, e.v))
-                        * sqrt(list_dot_product(qv, qv)), 0) AS raw
-      FROM rh JOIN e USING (vec_id) CROSS JOIN qv
+      SELECT rh.vec_id, rh.rh, {_cos_sql('e.v', 'q.qv')} AS raw
+      FROM rh JOIN e USING (vec_id), ({_Q0_SQL}) q
     ),
-    ls AS (SELECT CAST(unnest({_RERANK_LS_SQL}) AS BIGINT) AS shortlist_len),
-    rr AS (
-      SELECT ls.shortlist_len, cand.vec_id,
-             row_number() OVER (PARTITION BY ls.shortlist_len
-               ORDER BY cand.raw DESC NULLS LAST, cand.vec_id) AS rc
-      FROM cand JOIN ls ON cand.rh <= ls.shortlist_len
-    ),
-    sel AS (SELECT shortlist_len, vec_id FROM rr WHERE rc <= {_RERANK_K}),
-    truth AS (
-      SELECT e.vec_id FROM e CROSS JOIN qv
-      WHERE e.vec_id <> 0
-      ORDER BY list_dot_product(e.v, qv)
-                 / NULLIF(sqrt(list_dot_product(e.v, e.v))
-                          * sqrt(list_dot_product(qv, qv)), 0)
-               DESC NULLS LAST, e.vec_id
-      LIMIT {_RERANK_K}
-    ),
+    ls AS (SELECT CAST(unnest({_RERANK_LS}) AS BIGINT) AS shortlist_len),
+    sel AS ({_rank_sql(
+        "ls.shortlist_len, cand.vec_id",
+        "cand JOIN ls ON cand.rh <= ls.shortlist_len",
+        "cand.raw DESC NULLS LAST, cand.vec_id",
+        _RERANK_K,
+        by="ls.shortlist_len",
+        rn="rc",
+    )}),
+    truth AS ({_cos_heap_sql(_RERANK_K)}),
     tn AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truth)
     SELECT s.shortlist_len,
            CAST(count(t.vec_id) AS BIGINT) AS n_hits,
            max(tn.n_truth) AS n_truth,
            CASE WHEN max(tn.n_truth) > 0 THEN
-             floor(count(t.vec_id) * 1e6 / max(tn.n_truth) + 0.5) / 1e6
+             {_ratio6_sql("count(t.vec_id)", "max(tn.n_truth)")}
            END AS recall
     FROM sel s LEFT JOIN truth t ON t.vec_id = s.vec_id CROSS JOIN tn
     GROUP BY s.shortlist_len
@@ -2776,66 +2225,28 @@ def q_sim_rerank_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity anchor: no vector surface in the reference
     (src/main/java/jc/DemoApplication.java is a Kafka pipe) — part of
     the beyond-the-reference similarity family."""
-    e = materialize(
-        _well_formed(
-            load_vectors(spark, sf_dir).select(
-                "vec_id", F.col("embedding").cast("array<double>").alias("v")
-            )
-        )
+    e = materialize(_well_formed(_vecs(spark, sf_dir)))
+    ham_order = W.orderBy("hamming", "vec_id")
+    rh = _hamming_heap(_signatures(e), max(_RERANK_LS)).select(
+        "vec_id", F.row_number().over(ham_order).alias("rh")
     )
-    sig = _signatures(e)
-    qs = sig.filter(F.col("vec_id") == 0).select(
-        F.col("lo").alias("qlo"), F.col("hi").alias("qhi")
-    )
-    ham = (
-        F.bit_count(F.col("lo").bitwiseXOR(F.col("qlo")))
-        + F.bit_count(F.col("hi").bitwiseXOR(F.col("qhi")))
-    ).cast("int")
-    short = (
-        sig.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(qs))
-        .select("vec_id", ham.alias("ham"))
-        .orderBy("ham", "vec_id")
-        .limit(max(_RERANK_LS))
-    )
-    rh = short.select(
-        "vec_id",
-        F.row_number().over(W.orderBy("ham", "vec_id")).alias("rh"),
-    )
-    qv = e.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-    raw = cosine(F.col("v"), F.col("qv"))
+    q = e.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
     cand = (
         F.broadcast(rh)
         .join(e, "vec_id")
-        .crossJoin(F.broadcast(qv))
-        .select("vec_id", "rh", raw.alias("raw"))
+        .crossJoin(F.broadcast(q))
+        .select("vec_id", "rh", cosine(F.col("v"), F.col("qv")).alias("raw"))
     )
-    ls = spark.range(1).select(
-        F.explode(F.array(*[F.lit(l) for l in _RERANK_LS])).alias("_l")
-    ).select(F.col("_l").cast("long").alias("shortlist_len"))
-    rr = (
-        cand.join(F.broadcast(ls), F.col("rh") <= F.col("shortlist_len"))
-        .select(
-            "shortlist_len",
-            "vec_id",
-            F.row_number()
-            .over(
-                W.partitionBy("shortlist_len").orderBy(
-                    F.col("raw").desc_nulls_last(), "vec_id"
-                )
-            )
-            .alias("rc"),
-        )
-        .filter(F.col("rc") <= _RERANK_K)
+    ls = _levels(spark, _RERANK_LS, "shortlist_len")
+    rr = _rank(
+        cand.join(F.broadcast(ls), F.col("rh") <= F.col("shortlist_len")),
+        _RERANK_K,
+        F.col("raw").desc_nulls_last(),
+        "vec_id",
+        by=("shortlist_len",),
+        rn="rc",
     )
-    truth = (
-        e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(qv))
-        .select("vec_id", raw.alias("t_raw"))
-        .orderBy(F.col("t_raw").desc_nulls_last(), "vec_id")
-        .limit(_RERANK_K)
-        .select(F.col("vec_id").alias("t_id"))
-    )
+    truth = _cosine_heap(e, q, _RERANK_K).select(F.col("vec_id").alias("t_id"))
     tn = truth.agg(F.count(F.lit(1)).alias("n_truth"))
     return (
         rr.join(F.broadcast(truth), rr.vec_id == truth.t_id, "left")
@@ -2846,10 +2257,7 @@ def q_sim_rerank_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("n_truth").alias("n_truth"),
             F.when(
                 F.max("n_truth") > 0,
-                F.floor(
-                    F.count("t_id") * 1e6 / F.max("n_truth") + F.lit(0.5)
-                )
-                / 1e6,
+                ratio6(F.count("t_id"), F.max("n_truth")),
             ).alias("recall"),
         )
     )
@@ -2861,52 +2269,22 @@ _GRID_NQ = 8  # evaluated query sample: vec_id < 8 (the NDCG/RBO budget)
 @register(
     "q_sim_rerank_grid",
     oracle=f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings WHERE {_WF_SQL}),
-    {_SIG_CTE},
-    qs AS (SELECT vec_id AS qid, v AS qv FROM e
-           WHERE vec_id < {_GRID_NQ}),
-    qsig AS (SELECT vec_id AS qid, lo AS qlo, hi AS qhi FROM sig
-             WHERE vec_id < {_GRID_NQ}),
-    rh AS (
-      SELECT qid, vec_id, rn AS rh FROM (
-        SELECT q.qid, s.vec_id,
-               row_number() OVER (PARTITION BY q.qid
-                 ORDER BY bit_count(xor(s.lo, q.qlo))
-                          + bit_count(xor(s.hi, q.qhi)), s.vec_id) AS rn
-        FROM sig s CROSS JOIN qsig q WHERE s.vec_id <> q.qid
-      ) WHERE rn <= {max(_RERANK_LS)}
-    ),
+    WITH {_E_WF_SQL}, {_SIG_CTE}, {_sample_sql(_GRID_NQ)},
+    rh AS ({_ham_top_sql(_GRID_NQ, max(_RERANK_LS))}),
     cand AS (
-      SELECT rh.qid, rh.vec_id, rh.rh,
-             list_dot_product(e.v, q.qv)
-               / NULLIF(sqrt(list_dot_product(e.v, e.v))
-                        * sqrt(list_dot_product(q.qv, q.qv)), 0) AS raw
+      SELECT rh.qid, rh.vec_id, rh.rn AS rh, {_cos_sql('e.v', 'q.qv')} AS raw
       FROM rh JOIN e USING (vec_id) JOIN qs q ON q.qid = rh.qid
     ),
-    ls AS (SELECT CAST(unnest({_RERANK_LS_SQL}) AS BIGINT)
-             AS shortlist_len),
-    sel AS (
-      SELECT shortlist_len, qid, vec_id FROM (
-        SELECT ls.shortlist_len, cand.qid, cand.vec_id,
-               row_number() OVER (
-                 PARTITION BY ls.shortlist_len, cand.qid
-                 ORDER BY cand.raw DESC NULLS LAST, cand.vec_id) AS rc
-        FROM cand JOIN ls ON cand.rh <= ls.shortlist_len
-      ) WHERE rc <= {_RERANK_K}
-    ),
-    truth AS (
-      SELECT qid, vec_id FROM (
-        SELECT q.qid, e.vec_id,
-               row_number() OVER (PARTITION BY q.qid
-                 ORDER BY list_dot_product(e.v, q.qv)
-                            / NULLIF(sqrt(list_dot_product(e.v, e.v))
-                                     * sqrt(list_dot_product(q.qv, q.qv)),
-                                     0)
-                          DESC NULLS LAST, e.vec_id) AS rn
-        FROM e CROSS JOIN qs q WHERE e.vec_id <> q.qid
-      ) WHERE rn <= {_RERANK_K}
-    ),
+    ls AS (SELECT CAST(unnest({_RERANK_LS}) AS BIGINT) AS shortlist_len),
+    sel AS ({_rank_sql(
+        "ls.shortlist_len, cand.qid, cand.vec_id",
+        "cand JOIN ls ON cand.rh <= ls.shortlist_len",
+        "cand.raw DESC NULLS LAST, cand.vec_id",
+        _RERANK_K,
+        by="ls.shortlist_len, cand.qid",
+        rn="rc",
+    )}),
+    truth AS ({_exact_top_sql(_RERANK_K)}),
     tn AS (SELECT qid, CAST(count(*) AS BIGINT) AS nt
            FROM truth GROUP BY qid),
     perq AS (
@@ -2923,10 +2301,9 @@ _GRID_NQ = 8  # evaluated query sample: vec_id < 8 (the NDCG/RBO budget)
            CAST(count(*) AS BIGINT) AS n_queries,
            CAST(sum(h) AS BIGINT) AS n_hits,
            CAST(sum(nt) AS BIGINT) AS n_truth,
-           CASE WHEN sum(nt) > 0 THEN
-             floor(sum(h) * 1e6 / sum(nt) + 0.5) / 1e6
+           CASE WHEN sum(nt) > 0 THEN {_ratio6_sql("sum(h)", "sum(nt)")}
            END AS recall,
-           min(floor(h * 1e6 / nt + 0.5)) / 1e6 AS worst_recall
+           min({_ratio6_sql("h", "nt")}) AS worst_recall
     FROM perq GROUP BY shortlist_len
     """,
     tags=("ann", "eval"),
@@ -2952,8 +2329,9 @@ def q_sim_rerank_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     order is additionally pinned by the r17 adversarial near-tie
     fixture, tests/test_property_r17.py), NULLIF-pinned zero norms
     NULLS LAST, and floor-form recalls on exact integer hit/truth
-    counts (the worst-recall min is taken over per-query integer
-    micros, never floats).
+    counts (the worst-recall min is taken over per-query floor-form
+    ratios of integers — division by 1e6 is monotone, so the min is
+    the same value in both engines).
 
     Shape at 100 TB: both ranked passes are per-qid window heaps over
     a broadcast {_GRID_NQ}-row query sample (WindowGroupLimit pushes
@@ -2969,86 +2347,28 @@ def q_sim_rerank_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity anchor: no vector surface in the reference
     (src/main/java/jc/DemoApplication.java is a Kafka pipe) — part of
     the beyond-the-reference similarity family."""
-    e = materialize(
-        _well_formed(
-            load_vectors(spark, sf_dir).select(
-                "vec_id", F.col("embedding").cast("array<double>").alias("v")
-            )
-        )
-    )
-    sig = _signatures(e)
-    qs = e.filter(F.col("vec_id") < _GRID_NQ).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-    )
-    qsig = sig.filter(F.col("vec_id") < _GRID_NQ).select(
-        F.col("vec_id").alias("qid"),
-        F.col("lo").alias("qlo"),
-        F.col("hi").alias("qhi"),
-    )
-    ham = (
-        F.bit_count(F.col("lo").bitwiseXOR(F.col("qlo")))
-        + F.bit_count(F.col("hi").bitwiseXOR(F.col("qhi")))
-    ).cast("int")
-    rh = (
-        sig.crossJoin(F.broadcast(qsig))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", ham.alias("ham"))
-        .withColumn(
-            "rh",
-            F.row_number().over(
-                W.partitionBy("qid").orderBy("ham", "vec_id")
-            ),
-        )
-        .filter(F.col("rh") <= max(_RERANK_LS))
-        .select("qid", "vec_id", "rh")
-    )
-    raw = cosine(F.col("v"), F.col("qv"))
+    e = materialize(_well_formed(_vecs(spark, sf_dir)))
+    qs = _sample(e, _GRID_NQ)
+    rh = _hamming_topk(_signatures(e), _GRID_NQ, max(_RERANK_LS))
     cand = (
-        F.broadcast(rh)
+        F.broadcast(rh.withColumnRenamed("rn", "rh"))
         .join(e, "vec_id")
         .join(F.broadcast(qs), "qid")
-        .select("qid", "vec_id", "rh", raw.alias("raw"))
-    )
-    ls = (
-        spark.range(1)
         .select(
-            F.explode(F.array(*[F.lit(l) for l in _RERANK_LS])).alias("_l")
+            "qid", "vec_id", "rh", cosine(F.col("v"), F.col("qv")).alias("raw")
         )
-        .select(F.col("_l").cast("long").alias("shortlist_len"))
     )
-    sel = (
-        cand.join(F.broadcast(ls), F.col("rh") <= F.col("shortlist_len"))
-        .select(
-            "shortlist_len",
-            "qid",
-            "vec_id",
-            F.row_number()
-            .over(
-                W.partitionBy("shortlist_len", "qid").orderBy(
-                    F.col("raw").desc_nulls_last(), "vec_id"
-                )
-            )
-            .alias("rc"),
-        )
-        .filter(F.col("rc") <= _RERANK_K)
-        .select("shortlist_len", "qid", "vec_id")
-    )
-    truth = (
-        e.crossJoin(F.broadcast(qs))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", raw.alias("t_raw"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("qid").orderBy(
-                    F.col("t_raw").desc_nulls_last(), "vec_id"
-                )
-            ),
-        )
-        .filter(F.col("rn") <= _RERANK_K)
-        .select(
-            F.col("qid").alias("t_qid"), F.col("vec_id").alias("t_id")
-        )
+    ls = _levels(spark, _RERANK_LS, "shortlist_len")
+    sel = _rank(
+        cand.join(F.broadcast(ls), F.col("rh") <= F.col("shortlist_len")),
+        _RERANK_K,
+        F.col("raw").desc_nulls_last(),
+        "vec_id",
+        by=("shortlist_len", "qid"),
+        rn="rc",
+    ).select("shortlist_len", "qid", "vec_id")
+    truth = _exact_topk(e, qs, _RERANK_K).select(
+        F.col("qid").alias("t_qid"), F.col("vec_id").alias("t_id")
     )
     tn = truth.groupBy("t_qid").agg(F.count(F.lit(1)).alias("nt"))
     hits = (
@@ -3068,64 +2388,35 @@ def q_sim_rerank_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("h").alias("n_hits"),
         F.sum("nt").alias("n_truth"),
         F.when(
-            F.sum("nt") > 0,
-            F.floor(F.sum("h") * 1e6 / F.sum("nt") + F.lit(0.5)) / 1e6,
+            F.sum("nt") > 0, ratio6(F.sum("h"), F.sum("nt"))
         ).alias("recall"),
-        (
-            F.min(F.floor(F.col("h") * 1e6 / F.col("nt") + F.lit(0.5)))
-            / 1e6
-        ).alias("worst_recall"),
+        F.min(ratio6("h", "nt")).alias("worst_recall"),
     )
 
 
 _PROBE_LS = [1, 2, 4, 8, 16]  # swept probed-cluster counts (16 = scan all)
-_PROBE_LS_SQL = "[" + ", ".join(str(l) for l in _PROBE_LS) + "]"
 
 
 @register(
     "q_sim_ivf_probe_curve",
     oracle=f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings WHERE embedding IS NOT NULL),
-    cents AS (SELECT vec_id AS centroid_id, v AS cv FROM e
-              WHERE vec_id < 16),
-    qs AS (SELECT vec_id AS qid, v AS qv FROM e
-           WHERE vec_id < {_RECALL_NQ}),
-    assigned AS (
-      SELECT vec_id, v, centroid_id AS cluster FROM (
-        SELECT e.vec_id, e.v, c.centroid_id,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_recall_cos_sql('e.v', 'c.cv')} DESC NULLS LAST,
-                          c.centroid_id) AS rn
-        FROM e CROSS JOIN cents c
-      ) WHERE rn = 1
-    ),
-    crank AS (
-      SELECT q.qid, c.centroid_id AS cluster,
-             row_number() OVER (PARTITION BY q.qid
-               ORDER BY {_recall_cos_sql('c.cv', 'q.qv')} DESC NULLS LAST,
-                        c.centroid_id) AS crn
-      FROM cents c CROSS JOIN qs q
-    ),
+    WITH {_E_SQL}, {_CENTS_SQL}, {_sample_sql(_RECALL_NQ)},
+    assigned AS ({_assign_sql("cents")}),
+    crank AS ({_probe_sql(_N_CENTS)}),
     scored AS (
-      SELECT q.qid, a.vec_id, cr.crn,
-             {_recall_cos_sql('a.v', 'q.qv')} AS sim
+      SELECT q.qid, a.vec_id, cr.crn, {_cos_sql('a.v', 'q.qv')} AS sim
       FROM assigned a CROSS JOIN qs q
       JOIN crank cr ON cr.qid = q.qid AND cr.cluster = a.cluster
       WHERE a.vec_id <> q.qid
     ),
-    truth AS (
-      SELECT qid, vec_id FROM (
-        SELECT qid, vec_id,
-               row_number() OVER (PARTITION BY qid
-                 ORDER BY sim DESC NULLS LAST, vec_id) AS rn
-        FROM scored
-      ) WHERE rn <= {_RECALL_K}
-    ),
+    truth AS ({_rank_sql(
+        "qid, vec_id", "scored", "sim DESC NULLS LAST, vec_id", _RECALL_K,
+        by="qid",
+    )}),
     tn AS (SELECT qid, CAST(count(*) AS BIGINT) AS nt
            FROM truth GROUP BY 1),
     na AS (SELECT CAST(count(*) AS BIGINT) AS n_all FROM scored),
-    ls AS (SELECT CAST(unnest({_PROBE_LS_SQL}) AS BIGINT) AS nprobe),
+    ls AS (SELECT CAST(unnest({_PROBE_LS}) AS BIGINT) AS nprobe),
     g AS (
       SELECT ls.nprobe, s.qid, s.vec_id,
              row_number() OVER (PARTITION BY ls.nprobe, s.qid
@@ -3144,13 +2435,12 @@ _PROBE_LS_SQL = "[" + ", ".join(str(l) for l in _PROBE_LS) + "]"
            FROM perq p JOIN tn USING (qid))
     SELECT nprobe, CAST(count(*) AS BIGINT) AS n_queries,
            CAST(sum(n_cand) AS BIGINT) AS n_cand,
-           floor(sum(n_cand) * 1e6 / na.n_all + 0.5) / 1e6 AS cand_frac,
+           {_ratio6_sql("sum(n_cand)", "na.n_all")} AS cand_frac,
            CAST(sum(h) AS BIGINT) AS n_hits,
            CAST(sum(nt) AS BIGINT) AS n_truth,
-           CASE WHEN sum(nt) > 0 THEN
-             floor(sum(h) * 1e6 / sum(nt) + 0.5) / 1e6
+           CASE WHEN sum(nt) > 0 THEN {_ratio6_sql("sum(h)", "sum(nt)")}
            END AS recall,
-           min(floor(h * 1e6 / nt + 0.5)) / 1e6 AS worst_recall
+           min({_ratio6_sql("h", "nt")}) AS worst_recall
     FROM pq CROSS JOIN na GROUP BY nprobe, na.n_all
     """,
     tags=("ann", "eval"),
@@ -3172,7 +2462,7 @@ def q_sim_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     +,*,sqrt,/ — never libm) DESC NULLS LAST with vec_id /
     centroid_id as total tie-breaks; hit/candidate/truth counts are
     exact integers; the three ratios are floor-form micros, and
-    worst_recall takes its min over per-query integer micros.
+    worst_recall takes its min over per-query floor-form ratios.
 
     Shape at 100 TB: ONE corpus×{_RECALL_NQ} cosine pass (the scored
     table, materialized for its three consumers: truth heap, grid
@@ -3188,35 +2478,13 @@ def q_sim_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity anchor: no vector surface in the reference
     (src/main/java/jc/DemoApplication.java is a Kafka pipe) — part of
     the beyond-the-reference similarity family."""
-    e = load_vectors(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    cents = e.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
-    )
-    qs = e.filter(F.col("vec_id") < _RECALL_NQ).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-    )
-    assigned = ivf_assign(e, cents)
-    crank = (
-        cents.crossJoin(F.broadcast(qs))
-        .select(
-            "qid",
-            "centroid_id",
-            cosine(F.col("cv"), F.col("qv")).alias("csim"),
-        )
-        .withColumn(
-            "crn",
-            F.row_number().over(
-                W.partitionBy("qid").orderBy(
-                    F.col("csim").desc_nulls_last(), "centroid_id"
-                )
-            ),
-        )
-        .select("qid", F.col("centroid_id").alias("cluster"), "crn")
-    )
+    e = _vecs(spark, sf_dir)
+    cents = _sample(e, _N_CENTS, "centroid_id", "cv")
+    qs = _sample(e, _RECALL_NQ)
+    crank = _probe(cents, qs, _N_CENTS)  # every centroid ranked
     scored = materialize(
-        assigned.crossJoin(F.broadcast(qs))
+        ivf_assign(e, cents)
+        .crossJoin(F.broadcast(qs))
         .filter(F.col("vec_id") != F.col("qid"))
         .join(F.broadcast(crank), ["qid", "cluster"])
         .select(
@@ -3226,30 +2494,13 @@ def q_sim_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             cosine(F.col("v"), F.col("qv")).alias("sim"),
         )
     )
-    truth = (
-        scored.select(
-            "qid",
-            "vec_id",
-            F.row_number()
-            .over(
-                W.partitionBy("qid").orderBy(
-                    F.col("sim").desc_nulls_last(), "vec_id"
-                )
-            )
-            .alias("rn"),
-        )
-        .filter(F.col("rn") <= _RECALL_K)
-        .select(F.col("qid").alias("t_qid"), F.col("vec_id").alias("t_id"))
+    sim_order = (F.col("sim").desc_nulls_last(), "vec_id")
+    truth = _rank(scored, _RECALL_K, *sim_order).select(
+        F.col("qid").alias("t_qid"), F.col("vec_id").alias("t_id")
     )
     tn = truth.groupBy("t_qid").agg(F.count(F.lit(1)).alias("nt"))
     na = scored.agg(F.count(F.lit(1)).alias("n_all"))
-    ls = (
-        spark.range(1)
-        .select(
-            F.explode(F.array(*[F.lit(l) for l in _PROBE_LS])).alias("_l")
-        )
-        .select(F.col("_l").cast("long").alias("nprobe"))
-    )
+    ls = _levels(spark, _PROBE_LS, "nprobe")
     g = (
         scored.join(F.broadcast(ls), F.col("crn") <= F.col("nprobe"))
         .join(
@@ -3262,11 +2513,7 @@ def q_sim_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qid",
             "t_id",
             F.row_number()
-            .over(
-                W.partitionBy("nprobe", "qid").orderBy(
-                    F.col("sim").desc_nulls_last(), "vec_id"
-                )
-            )
+            .over(W.partitionBy("nprobe", "qid").orderBy(*sim_order))
             .alias("rc"),
         )
     )
@@ -3286,24 +2533,15 @@ def q_sim_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("h").alias("n_hits"),
             F.sum("nt").alias("n_truth"),
             F.when(
-                F.sum("nt") > 0,
-                F.floor(F.sum("h") * 1e6 / F.sum("nt") + F.lit(0.5)) / 1e6,
+                F.sum("nt") > 0, ratio6(F.sum("h"), F.sum("nt"))
             ).alias("recall"),
-            (
-                F.min(
-                    F.floor(F.col("h") * 1e6 / F.col("nt") + F.lit(0.5))
-                )
-                / 1e6
-            ).alias("worst_recall"),
+            F.min(ratio6("h", "nt")).alias("worst_recall"),
         )
         .select(
             "nprobe",
             "n_queries",
             F.col("sum_cand").alias("n_cand"),
-            (
-                F.floor(F.col("sum_cand") * 1e6 / F.col("n_all") + F.lit(0.5))
-                / 1e6
-            ).alias("cand_frac"),
+            ratio6("sum_cand", "n_all").alias("cand_frac"),
             "n_hits",
             "n_truth",
             "recall",
@@ -3315,74 +2553,17 @@ def q_sim_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_sim_ivfpq_search",
     oracle=f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings WHERE {_WF_SQL}),
-    ms AS (SELECT unnest(range({_PQ_M})) AS m),
-    subs AS (
-      SELECT e.vec_id, ms.m,
-             list_slice(e.v, ms.m*{_PQ_SUBDIM}+1,
-                        ms.m*{_PQ_SUBDIM}+{_PQ_SUBDIM}) AS sub
-      FROM e CROSS JOIN ms
-    ),
-    cb AS (
-      SELECT ms.m, e.vec_id AS centroid_id,
-             list_slice(e.v, ms.m*{_PQ_SUBDIM}+1,
-                        ms.m*{_PQ_SUBDIM}+{_PQ_SUBDIM}) AS csub
-      FROM e CROSS JOIN ms WHERE e.vec_id < {_PQ_K}
-    ),
-    codes AS (
-      SELECT vec_id, m, csub FROM (
-        SELECT s.vec_id, s.m, c.csub,
-               row_number() OVER (
-                 PARTITION BY s.vec_id, s.m
-                 ORDER BY list_dot_product(c.csub, c.csub)
-                          - 2*list_dot_product(s.sub, c.csub) ASC NULLS LAST,
-                          c.centroid_id
-               ) AS rn
-        FROM subs s JOIN cb c ON c.m = s.m
-      ) WHERE rn = 1
-    ),
-    recon AS (
-      SELECT vec_id, flatten(list(csub ORDER BY m)) AS r
-      FROM codes GROUP BY vec_id
-    ),
-    cents AS (SELECT vec_id AS centroid_id, v AS cv FROM e
-              WHERE vec_id < 16),
-    qs AS (SELECT vec_id AS qid, v AS qv FROM e
-           WHERE vec_id < {_PQ_NQ}),
-    assigned AS (
-      SELECT vec_id, centroid_id AS cluster FROM (
-        SELECT e.vec_id, c.centroid_id,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY {_recall_cos_sql('e.v', 'c.cv')} DESC NULLS LAST,
-                          c.centroid_id) AS rn
-        FROM e CROSS JOIN cents c
-      ) WHERE rn = 1
-    ),
-    probe AS (
-      SELECT qid, cluster FROM (
-        SELECT q.qid, c.centroid_id AS cluster,
-               row_number() OVER (PARTITION BY q.qid
-                 ORDER BY {_recall_cos_sql('c.cv', 'q.qv')} DESC NULLS LAST,
-                          c.centroid_id) AS rn
-        FROM cents c CROSS JOIN qs q
-      ) WHERE rn <= {_RECALL_NPROBE}
-    ),
-    truth AS (
-      SELECT qid, vec_id FROM (
-        SELECT q.qid, e.vec_id,
-               row_number() OVER (PARTITION BY q.qid
-                 ORDER BY {_recall_cos_sql('e.v', 'q.qv')} DESC NULLS LAST,
-                          e.vec_id) AS rn
-        FROM e CROSS JOIN qs q WHERE e.vec_id <> q.qid
-      ) WHERE rn <= {_PQ_TOPK}
-    ),
+    WITH {_E_WF_SQL}, {_PQ_RECON_SQL},
+    {_CENTS_SQL}, {_sample_sql(_PQ_NQ)},
+    assigned AS ({_assign_sql("cents")}),
+    probe AS ({_probe_sql(_RECALL_NPROBE)}),
+    truth AS ({_exact_top_sql(_PQ_TOPK)}),
     tn AS (SELECT qid, CAST(count(*) AS BIGINT) AS nt
            FROM truth GROUP BY 1),
     g AS (
       SELECT p.qid, a.vec_id,
              row_number() OVER (PARTITION BY p.qid
-               ORDER BY {_recall_cos_sql('r.r', 'q.qv')} DESC NULLS LAST,
+               ORDER BY {_cos_sql('r.r', 'q.qv')} DESC NULLS LAST,
                         a.vec_id) AS rc,
              t.vec_id AS t_id
       FROM assigned a
@@ -3406,8 +2587,8 @@ def q_sim_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
            coalesce(p.n_ivfpq, 0) AS n_ivfpq,
            coalesce(p.hits, 0) AS hits,
            CASE WHEN coalesce(tn.nt, 0) > 0
-                THEN floor(coalesce(p.hits, 0) * 1e6
-                           / tn.nt + 0.5) / 1e6 END AS recall
+                THEN {_ratio6_sql("coalesce(p.hits, 0)", "tn.nt")}
+           END AS recall
     FROM qs q
     LEFT JOIN perq p ON p.qid = q.qid
     LEFT JOIN tn ON tn.qid = q.qid
@@ -3453,103 +2634,22 @@ def q_sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity anchor: no vector surface in the reference
     (src/main/java/jc/DemoApplication.java is a Kafka pipe) — part of
     the beyond-the-reference similarity family."""
-    e = _well_formed(
-        load_vectors(spark, sf_dir).select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-    )
-    ms = F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("m")
-    subs = e.select("vec_id", ms, "v").select(
-        "vec_id",
-        "m",
-        F.expr(f"slice(v, m*{_PQ_SUBDIM}+1, {_PQ_SUBDIM})").alias("sub"),
-    )
-    cb = (
-        e.filter(F.col("vec_id") < _PQ_K)
-        .select(F.col("vec_id").alias("centroid_id"), ms, "v")
-        .select(
-            "m",
-            "centroid_id",
-            F.expr(f"slice(v, m*{_PQ_SUBDIM}+1, {_PQ_SUBDIM})").alias(
-                "csub"
-            ),
-        )
-    )
-    codes = (
-        subs.join(F.broadcast(cb), "m")
-        .select(
-            "vec_id",
-            "m",
-            "centroid_id",
-            "csub",
-            (
-                dot(F.col("csub"), F.col("csub"))
-                - 2 * dot(F.col("sub"), F.col("csub"))
-            ).alias("score"),
-        )
-        .groupBy("vec_id", "m")
-        .agg(F.expr("min_by(csub, struct(score, centroid_id))").alias("csub"))
-    )
-    recon = codes.groupBy("vec_id").agg(
-        F.flatten(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("m", "csub"))),
-                lambda x: x["csub"],
-            )
-        ).alias("r")
-    )
-    cents = e.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
-    )
-    qs = e.filter(F.col("vec_id") < _PQ_NQ).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-    )
-    assigned = ivf_assign(e, cents).select("vec_id", "cluster")
-    probe = (
-        cents.crossJoin(F.broadcast(qs))
-        .select(
-            "qid",
-            "centroid_id",
-            cosine(F.col("cv"), F.col("qv")).alias("csim"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("qid").orderBy(
-                    F.col("csim").desc_nulls_last(), "centroid_id"
-                )
-            ),
-        )
-        .filter(F.col("rn") <= _RECALL_NPROBE)
-        .select("qid", F.col("centroid_id").alias("cluster"))
-    )
-    truth = (
-        e.crossJoin(F.broadcast(qs))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid", "vec_id", cosine(F.col("v"), F.col("qv")).alias("sim")
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("qid").orderBy(
-                    F.col("sim").desc_nulls_last(), "vec_id"
-                )
-            ),
-        )
-        .filter(F.col("rn") <= _PQ_TOPK)
-        .select(F.col("qid").alias("t_qid"), F.col("vec_id").alias("t_id"))
+    e = _well_formed(_vecs(spark, sf_dir))
+    cents = _sample(e, _N_CENTS, "centroid_id", "cv")
+    qs = _sample(e, _PQ_NQ)
+    truth = _exact_topk(e, qs, _PQ_TOPK).select(
+        F.col("qid").alias("t_qid"), F.col("vec_id").alias("t_id")
     )
     tn = truth.groupBy("t_qid").agg(F.count(F.lit(1)).alias("nt"))
     cand = (
-        assigned.join(F.broadcast(probe), "cluster")
+        ivf_assign(e, cents)
+        .select("vec_id", "cluster")
+        .join(F.broadcast(_probe(cents, qs, _RECALL_NPROBE)), "cluster")
         .filter(F.col("vec_id") != F.col("qid"))
-        .join(recon, "vec_id")
+        .join(_pq_recon(e), "vec_id")
         .join(F.broadcast(qs), "qid")
         .select(
-            "qid",
-            "vec_id",
-            cosine(F.col("r"), F.col("qv")).alias("sim_adc"),
+            "qid", "vec_id", cosine(F.col("r"), F.col("qv")).alias("sim_adc")
         )
     )
     g = cand.join(
@@ -3567,13 +2667,14 @@ def q_sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .alias("rc"),
     )
+    top = F.col("rc") <= _PQ_TOPK
     perq = g.groupBy("qid").agg(
         F.count(F.lit(1)).alias("n_cand"),
-        F.count(F.when(F.col("rc") <= _PQ_TOPK, 1)).alias("n_ivfpq"),
-        F.count(F.when(F.col("rc") <= _PQ_TOPK, F.col("t_id"))).alias(
-            "hits"
-        ),
+        F.count(F.when(top, 1)).alias("n_ivfpq"),
+        F.count(F.when(top, F.col("t_id"))).alias("hits"),
     )
+    n_true = F.coalesce("nt", F.lit(0))
+    hits = F.coalesce("hits", F.lit(0))
     return (
         qs.select("qid")
         .join(F.broadcast(perq), "qid", "left")
@@ -3581,16 +2682,9 @@ def q_sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "qid",
             F.coalesce("n_cand", F.lit(0)).alias("n_cand"),
-            F.coalesce("nt", F.lit(0)).alias("n_true"),
+            n_true.alias("n_true"),
             F.coalesce("n_ivfpq", F.lit(0)).alias("n_ivfpq"),
-            F.coalesce("hits", F.lit(0)).alias("hits"),
-            F.when(
-                F.coalesce("nt", F.lit(0)) > 0,
-                F.floor(
-                    F.coalesce("hits", F.lit(0)) * 1e6 / F.col("nt")
-                    + F.lit(0.5)
-                )
-                / 1e6,
-            ).alias("recall"),
+            hits.alias("hits"),
+            F.when(n_true > 0, ratio6(hits, F.col("nt"))).alias("recall"),
         )
     )

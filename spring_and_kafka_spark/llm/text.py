@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from spring_and_kafka_spark.exec_utils import materialize
+from spring_and_kafka_spark.exec_utils import materialize, ratio6
 from spring_and_kafka_spark.registry import register
 from spring_and_kafka_spark.sources.tables import load_table
 
@@ -1753,17 +1753,12 @@ def q_text_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "n_toks",
         "n_uniq_toks",
-        F.when(
-            F.col("n_toks") > 0,
-            F.floor(F.col("n_uniq_toks") * 1e6 / F.col("n_toks") + F.lit(0.5))
-            / 1e6,
-        ).alias("distinct_1"),
+        F.when(F.col("n_toks") > 0, ratio6("n_uniq_toks", "n_toks")).alias(
+            "distinct_1"
+        ),
         n_bi.alias("n_bigrams"),
         n_ubi.alias("n_uniq_bigrams"),
-        F.when(
-            n_bi > 0,
-            F.floor(n_ubi * 1e6 / n_bi + F.lit(0.5)) / 1e6,
-        ).alias("distinct_2"),
+        F.when(n_bi > 0, ratio6(n_ubi, n_bi)).alias("distinct_2"),
     )
 
 

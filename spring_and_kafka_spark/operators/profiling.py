@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from spring_and_kafka_spark.exec_utils import cents as ex_cents
-from spring_and_kafka_spark.exec_utils import ts_micros
+from spring_and_kafka_spark.exec_utils import ratio6, ts_micros
 from spring_and_kafka_spark.registry import register
 from spring_and_kafka_spark.sources.tables import load_table
 
@@ -775,10 +775,7 @@ def q_tcloseness(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_nationkey",
         "c_mktsegment",
         F.col("ng").alias("n"),
-        (
-            F.floor(scaled * 1e6 / (2.0 * F.col("ng") * F.col("n")) + F.lit(0.5))
-            / 1e6
-        ).alias("tvd"),
+        ratio6(scaled, 2.0 * F.col("ng") * F.col("n")).alias("tvd"),
         (scaled > F.lit(_TCLOSE_T) * 2.0 * F.col("ng") * F.col("n")).alias(
             "breach"
         ),

@@ -700,9 +700,7 @@ def q_er_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_name",
         "c_nationkey",
         "c_mktsegment",
-        F.floor(F.col("c_acctbal") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("bal_cents"),
+        ex_cents("c_acctbal").alias("bal_cents"),
         F.substring("c_name", 10, 8).alias("blk"),
     )
     a = b.alias("a")

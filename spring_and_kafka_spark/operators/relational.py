@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from spring_and_kafka_spark.exec_utils import cents
 from spring_and_kafka_spark.registry import register
 from spring_and_kafka_spark.sources.tables import load_table
 
@@ -49,12 +50,11 @@ def q_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical across engines."""
     li = load_table(spark, sf_dir, "lineitem")
     net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    cents = lambda c: F.floor(c * 100 + 0.5) / 100  # noqa: E731
     return li.select(
         "l_orderkey",
         "l_linenumber",
-        cents(net).alias("net_price"),
-        cents(net * (1 + F.col("l_tax"))).alias("charged"),
+        (cents(net) / 100).alias("net_price"),
+        (cents(net * (1 + F.col("l_tax"))) / 100).alias("charged"),
     )
 
 

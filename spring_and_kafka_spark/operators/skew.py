@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spring_and_kafka_spark.exec_utils import cents
 from spring_and_kafka_spark.registry import register
 
 
@@ -173,9 +174,7 @@ def q_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return joined.groupBy("c_mktsegment").agg(
         F.count("*").alias("n_orders"),
-        (F.floor(F.sum("o_totalprice") * 100 + F.lit(0.5)) / 100).alias(
-            "revenue"
-        ),
+        (cents(F.sum("o_totalprice")) / 100).alias("revenue"),
     )
 
 

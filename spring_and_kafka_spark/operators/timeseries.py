@@ -257,7 +257,7 @@ def q_ts_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     single sorted pass per partition, state is two running integers. The
     full-frame gate (cnt = 20) suppresses warm-up noise."""
     e = load_table(spark, sf_dir, "events")
-    vi = F.floor(F.col("value") * 1e6 + F.lit(0.5)).cast("long")
+    vi = micros("value")
     scaled = e.select("user_id", "event_id", "ts", "value", vi.alias("vi"))
     w = (
         W.partitionBy("user_id")
@@ -343,7 +343,7 @@ def q_ts_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     window-function formulation, which would add a per-partition sort and
     carry every row to the reducer."""
     e = load_table(spark, sf_dir, "events")
-    vi = F.floor(F.col("value") * 1e6 + F.lit(0.5)).cast("long")
+    vi = micros("value")
     bucket = (ts_micros("ts") / _BUCKET_US).cast("long")
     keyed = e.select(
         "user_id",
@@ -489,7 +489,7 @@ def q_ts_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     slot when 1e-3 quantile error is acceptable."""
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
-        F.floor(F.col("value") * 1e6 + F.lit(0.5)).cast("long").alias("vi"),
+        micros("value").alias("vi"),
     )
     med = e.groupBy("event_type").agg(
         F.percentile("vi", F.lit(0.5)).alias("med")
@@ -569,10 +569,7 @@ def q_ts_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "event_id",
         ts_micros("ts").alias("us"),
-        (
-            F.floor(F.col("value") * 1e6 + F.lit(0.5)).cast("long")
-            - 60_000_000
-        ).alias("d"),
+        (micros("value") - 60_000_000).alias("d"),
     )
     wk = (
         W.partitionBy("event_type")
@@ -971,7 +968,7 @@ def q_ts_stl_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
         (F.weekday("ts") + 1).cast("int").alias("dow"),
-        F.floor(F.col("value") * 1e6 + F.lit(0.5)).cast("long").alias("vi"),
+        micros("value").alias("vi"),
     )
     g = (
         e.groupBy("event_type", "dow")

@@ -213,10 +213,8 @@ def q_win_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderpriority",
         "o_orderkey",
         F.ntile(4).over(w).alias("quartile"),
-        (F.floor(F.percent_rank().over(w) * 1e6 + F.lit(0.5)) / 1e6).alias(
-            "pct_rank"
-        ),
-        (F.floor(F.cume_dist().over(w) * 1e6 + F.lit(0.5)) / 1e6).alias("cume"),
+        (ex_micros(F.percent_rank().over(w)) / 1e6).alias("pct_rank"),
+        (ex_micros(F.cume_dist().over(w)) / 1e6).alias("cume"),
     )
 
 
@@ -487,7 +485,7 @@ def q_win_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         "value",
-        F.floor(F.col("value") * 1e6 + F.lit(0.5)).cast("long").alias("vi"),
+        ex_micros("value").alias("vi"),
         F.row_number()
         .over(W.partitionBy("user_id").orderBy("ts", "event_id"))
         .cast("long")
