@@ -75,6 +75,24 @@ def ratio6(num: Column | str, den: Column | str) -> Column:
     return F.floor(n * 1e6 / d + F.lit(0.5)) / 1e6
 
 
+def array_pairs(arr: Column | str, a: str, b: str) -> Column:
+    """ARRAY<STRUCT<a, b>> of every (x, y) with x before y in `arr` — the
+    in-array pair expansion behind the grouped candidate generators
+    (explode it for one row per pair). On a sorted distinct array that
+    is exactly the x < y pairs. The pair count is quadratic in the array
+    length, so callers bound the length before expanding."""
+    xs = F.col(arr) if isinstance(arr, str) else arr
+    return F.flatten(
+        F.transform(
+            xs,
+            lambda x, i: F.transform(
+                F.slice(xs, i + F.lit(2), F.size(xs)),
+                lambda y: F.struct(x.alias(a), y.alias(b)),
+            ),
+        )
+    )
+
+
 def finite_or_null(df: DataFrame, *cols: str) -> DataFrame:
     """Normalize NaN and ±Infinity in the named double columns to NULL —
     the ingest-boundary enforcement of the engine's float contract:

@@ -26,7 +26,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from spring_and_kafka_spark.exec_utils import materialize, ratio6, spread
+from spring_and_kafka_spark.exec_utils import (
+    array_pairs,
+    materialize,
+    ratio6,
+    spread,
+)
 from spring_and_kafka_spark.llm.text import _BP_SEG, boilerplate_segments
 from spring_and_kafka_spark.registry import register
 from spring_and_kafka_spark.sources.tables import load_table
@@ -87,23 +92,11 @@ def shingle_ctes_sql(src: str = "corpus") -> str:
     )"""
 
 
-# The exact-pair tail shared verbatim by q_dedup_ngram and q_dedup_near
-# (near adds only the constant est_ok column via `extra_cols`).
-def pairs_select_sql(extra_cols: str = "") -> str:
-    return f"""common AS (
-      SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS c
-      FROM shj a JOIN shj b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT a_id, b_id, round(c / (sa.n + sb.n - c), 4) AS jaccard{extra_cols}
-    FROM common
-    JOIN sizes sa ON sa.doc_id = a_id
-    JOIN sizes sb ON sb.doc_id = b_id
-    WHERE c / (sa.n + sb.n - c) >= {_NGRAM_JACCARD}"""
-
-
-_EDGES_SQL = f"""edges AS (
-      SELECT c.a_id, c.b_id
+# The `ov` CTE: DuckDB twin of shingle_overlap(), composed after
+# shingle_ctes_sql(). Every oracle that scores a < b shingle overlap
+# reads it.
+_OV_SQL = """ov AS (
+      SELECT c.a_id, c.b_id, c.c, sa.n AS na, sb.n AS nb
       FROM (
         SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS c
         FROM shj a JOIN shj b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
@@ -111,7 +104,21 @@ _EDGES_SQL = f"""edges AS (
       ) c
       JOIN sizes sa ON sa.doc_id = c.a_id
       JOIN sizes sb ON sb.doc_id = c.b_id
-      WHERE c.c / (sa.n + sb.n - c.c) >= {_NGRAM_JACCARD}
+    )"""
+
+
+# The exact-pair tail shared verbatim by q_dedup_ngram and q_dedup_near
+# (near adds only the constant est_ok column via `extra_cols`).
+def pairs_select_sql(extra_cols: str = "") -> str:
+    return f"""{_OV_SQL}
+    SELECT a_id, b_id, round(c / (na + nb - c), 4) AS jaccard{extra_cols}
+    FROM ov
+    WHERE c / (na + nb - c) >= {_NGRAM_JACCARD}"""
+
+
+_EDGES_SQL = f"""{_OV_SQL},
+    edges AS (
+      SELECT a_id, b_id FROM ov WHERE c / (na + nb - c) >= {_NGRAM_JACCARD}
     )"""
 
 
@@ -144,6 +151,60 @@ def shingles(df: DataFrame, n: int = 3) -> DataFrame:
         lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
     )
     return clean.select("doc_id", F.explode(F.array_distinct(sh)).alias("shingle"))
+
+
+def hot_keys(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
+    """(keys…, n): the key values of `df` holding more than `cap` rows —
+    the dedup family's one hot-key guard (a key shared by d rows emits
+    d² pair rows and carries no signal). Callers anti-join it away or
+    left-join it back as a flag. It carries no broadcast hint: the hot
+    set is tiny on real data, but AQE and static planning decide."""
+    return (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") > cap)
+    )
+
+
+def shingle_overlap(corpus: DataFrame, n: int, df_cap: int) -> DataFrame:
+    """(a_id, b_id, c, na, nb) with a_id < b_id: for each doc pair that
+    shares a shingle of doc-frequency ≤ df_cap, the shared-shingle count
+    c and both FULL shingle-set sizes — the family's one overlap kernel
+    (Jaccard pairs, containment and the threshold curve score it;
+    _OV_SQL is its DuckDB twin). A fired cap lowers c, never a size, so
+    a score built on it is a lower bound, never an invented pair.
+
+    Shingles hash to 64-bit s64 before the materialize, so the persisted
+    table, the df groupBy and the self-join move 16-byte rows, not text.
+    xxhash64 collisions (P ≈ (#distinct shingles)²/2⁶⁵, ~1e-10 at sf0.1)
+    are the only delta from the string form the oracles state."""
+    # materialized: the shingle table feeds sizes, the df guard and both
+    # join sides
+    sh = materialize(
+        shingles(spread(corpus), n).select(
+            "doc_id", F.xxhash64("shingle").alias("s64")
+        )
+    )
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    shj = sh.join(hot_keys(sh, ["s64"], df_cap), "s64", "left_anti")
+    a = shj.alias("a")
+    b = shj.alias("b")
+    common = (
+        a.join(
+            b,
+            (F.col("a.s64") == F.col("b.s64"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .groupBy(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    sa = sizes.select(F.col("doc_id").alias("a_id"), F.col("n").alias("na"))
+    sb = sizes.select(F.col("doc_id").alias("b_id"), F.col("n").alias("nb"))
+    return (
+        common.join(sa, "a_id")
+        .join(sb, "b_id")
+        .select("a_id", "b_id", "c", "na", "nb")
+    )
 
 
 @register(
@@ -202,49 +263,9 @@ def ngram_jaccard_pairs(
     (hot shingles would emit df² join rows and carry no signal); Jaccard
     denominators use the FULL shingle sets, so a fired cap can only
     under-report similarity, never invent a pair."""
-    # sh feeds four consumers (join sides + sizes + the df filter):
-    # materialize once so the corpus scan + shingle expansion doesn't rerun
-    # per consumer — ~20% wall-clock at sf0.1.
-    # r17 change 9 (guide §2.3 "narrower types"): shingle strings hash to
-    # 64-bit s64 BEFORE the materialize — the _doc_features discipline
-    # applied to the exact tool — so the persisted table, the df groupBy,
-    # and the pair self-join all move 16-byte long rows instead of text.
-    # Per-doc counts, doc-frequencies and pair intersections are
-    # identical modulo xxhash64 collisions (P ≈ (#distinct shingles)²/2⁶⁵
-    # ≈ 1e-10 at sf0.1); the string formulation stays the oracle's
-    # ground truth, and every SF + degenerate sweep hash-verifies it.
-    sh = materialize(
-        shingles(spread(corpus), n).select(
-            "doc_id", F.xxhash64("shingle").alias("s64")
-        )
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    hot = (
-        sh.groupBy("s64")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > df_cap)
-        .select("s64")
-    )
-    shj = sh.join(F.broadcast(hot), "s64", "left_anti")
-    a = shj.alias("a")
-    b = shj.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.s64") == F.col("b.s64"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .agg(F.count("*").alias("c"))
-    )
-    # sizes is O(docs) — broadcast it so the (potentially huge) common-pairs
-    # stream is never reshuffled for these joins
-    sa = sizes.select(F.col("doc_id").alias("a_id"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("b_id"), F.col("n").alias("nb"))
     jac = F.col("c") / (F.col("na") + F.col("nb") - F.col("c"))
     return (
-        common.join(F.broadcast(sa), "a_id")
-        .join(F.broadcast(sb), "b_id")
+        shingle_overlap(corpus, n, df_cap)
         .filter(jac >= threshold)
         .select("a_id", "b_id", F.round(jac, 4).alias("jaccard"))
     )
@@ -328,15 +349,12 @@ def _band_bucket_rows(
             F.col("bb.bucket").alias("bucket"),
         )
     )
-    counts = buckets.groupBy("band", "bucket").agg(F.count("*").alias("n"))
-    cool = counts.filter(F.col("n") <= bucket_cap).select("band", "bucket")
+    hot = hot_keys(buckets, ["band", "bucket"], bucket_cap)
     if stats is not None:
-        hot = counts.filter(F.col("n") > bucket_cap).agg(
-            F.count("*").alias("k"), F.sum("n").alias("d")
-        ).first()
-        stats["hot_buckets"] = int(hot["k"] or 0)
-        stats["docs_in_hot_buckets"] = int(hot["d"] or 0)
-    return buckets.join(F.broadcast(cool), ["band", "bucket"])
+        h = hot.agg(F.count(F.lit(1)).alias("k"), F.sum("n").alias("d")).first()
+        stats["hot_buckets"] = int(h["k"] or 0)
+        stats["docs_in_hot_buckets"] = int(h["d"] or 0)
+    return buckets.join(hot, ["band", "bucket"], "left_anti")
 
 
 def lsh_candidate_pairs(
@@ -417,18 +435,9 @@ def lsh_candidate_pairs(
         stats["hot_buckets"] = int(hot["k"] or 0)
         stats["docs_in_hot_buckets"] = int(hot["d"] or 0)
     ds = F.col("ds")
-    pair_arr = F.flatten(
-        F.transform(
-            ds,
-            lambda x, i: F.transform(
-                F.slice(ds, i + F.lit(2), F.size(ds)),
-                lambda y: F.struct(x.alias("a_id"), y.alias("b_id")),
-            ),
-        )
-    )
     return (
         grp.filter((F.size(ds) >= 2) & (F.size(ds) <= bucket_cap))
-        .select(F.explode(pair_arr).alias("p"))
+        .select(F.explode(array_pairs(ds, "a_id", "b_id")).alias("p"))
         .select("p.a_id", "p.b_id")
         .distinct()
     )
@@ -446,36 +455,15 @@ def _doc_features(corpus: DataFrame, n: int, df_cap: int) -> DataFrame:
     symmetric (lsh_verified_pairs) and asymmetric
     (incremental_near_matches) detectors so their documented-identical
     semantics cannot drift apart."""
-    # r18 (ADVICE r17 medium; guide §2.3/§2.5): the over-cap shingle set
-    # is computed by a map-side-combined groupBy(s64) and LEFT-joined
-    # back as a broadcast hot-flag — replacing r17's
-    # count() OVER (PARTITION BY s64) window. The window exchanged the
-    # RAW shingle stream on s64 with no partial aggregation, so every
-    # row of a corpus-hot shingle (exactly the df > df_cap keys the cap
-    # guards against) landed in ONE window task — a single-task
-    # straggler at 100 TB — and left the stream non-doc-partitioned, so
-    # the wide per-doc agg re-exchanged it semi-combined. This form
-    # shuffles only the partially-combined (s64, count) pairs (hot keys
-    # pre-aggregated inside each map task), broadcasts the tiny over-cap
-    # list, and lets the wide agg's partial aggregation collapse each
-    # doc map-side (the explode keeps a doc's shingles in one
-    # partition), so the doc-keyed exchange carries ~|docs| rows, not
-    # the stream. Price: the shingle explode is computed twice
-    # (map-side CPU, no checkpoint — the r17-before form's corpus-sized
-    # materialize stays gone). Interleaved A/B through q_dedup_near at
-    # sf0.1: statistical tie (med 3.96 vs 3.94 s, min 3.82 vs 3.79),
-    # adopted for the scale shape; outputs verified identical and
-    # pinned against the window reference in tests/test_opt_r17.py.
+    # the hot flag comes from a partially combined count (hot_keys), not
+    # a window over s64: a window would send every row of a hot shingle
+    # to one task. The explode keeps a doc's shingles in one partition,
+    # so the wide agg still collapses each doc map-side.
     sh = shingles(spread(corpus), n).select(
         "doc_id", F.xxhash64("shingle").alias("s64")
     )
-    hot = (
-        sh.groupBy("s64")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > df_cap)
-        .select("s64", F.lit(True).alias("_hot"))
-    )
-    shx = sh.join(F.broadcast(hot), "s64", "left")
+    hot = hot_keys(sh, ["s64"], df_cap).select("s64", F.lit(True).alias("_hot"))
+    shx = sh.join(hot, "s64", "left")
     docfeat = shx.groupBy("doc_id").agg(
         *[
             F.min(F.xxhash64(F.lit(i), F.col("s64"))).alias(f"mh{i}")
@@ -493,15 +481,6 @@ def _doc_features(corpus: DataFrame, n: int, df_cap: int) -> DataFrame:
             "n",
             "hs",
         )
-    )
-
-
-def shingle_hash_sets(sh: DataFrame) -> DataFrame:
-    """(doc_id, hs ARRAY<LONG>): each doc's shingle set as sorted 64-bit
-    hashes — the compact form for exact-Jaccard verification of candidate
-    pairs (array_intersect on two sorted long arrays, no string shuffle)."""
-    return sh.groupBy("doc_id").agg(
-        F.sort_array(F.collect_set(F.xxhash64("shingle"))).alias("hs")
     )
 
 
@@ -739,13 +718,8 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c.bucket").alias("bucket"),
         )
     )
-    cool = (
-        bb.groupBy("band", "bucket")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") <= _SIMHASH_BUCKET_CAP)
-        .select("band", "bucket")
-    )
-    bb = bb.join(F.broadcast(cool), ["band", "bucket"])
+    hot = hot_keys(bb, ["band", "bucket"], _SIMHASH_BUCKET_CAP)
+    bb = bb.join(hot, ["band", "bucket"], "left_anti")
     a = bb.alias("a")
     b = bb.alias("b")
     cand = a.join(
@@ -1127,46 +1101,32 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the union dominates), so boilerplate-in-page and quote-of-article
     duplication only shows up here.
 
-    Same machinery as ngram_jaccard_pairs — one materialized shingle
-    table, df-capped equi-join, broadcast sizes — but ordered pairs (both
-    directions kept; containment is not symmetric) and an |A|-only
+    Same kernel as ngram_jaccard_pairs (shingle_overlap), read in both
+    directions — containment is not symmetric — with an |A|-only
     denominator. Shuffle cost identical to the Jaccard tool; at 100 TB
     the LSH candidate generator bounds the pair stream the same way
     (minhash agreement estimates Jaccard, and C ≥ J always, so LSH
     candidates at a lower band threshold cover the containment search)."""
-    corpus = planted_corpus(spark, sf_dir)
-    # r17 change 9: s64-hashed shingles before the materialize (see
-    # ngram_jaccard_pairs — identical argument, ordered-pair variant)
-    sh = materialize(
-        shingles(spread(corpus), 3).select(
-            "doc_id", F.xxhash64("shingle").alias("s64")
-        )
+    ov = shingle_overlap(planted_corpus(spark, sf_dir), 3, _SHINGLE_DF_CAP)
+    # both directions from the one a < b overlap in a single pass (the
+    # graph._sym_edges explode: a union of two projections would plan
+    # the overlap subtree twice)
+    both = ov.select(
+        "c",
+        F.explode(
+            F.array(
+                F.struct(F.col("a_id"), F.col("b_id"), F.col("na").alias("n")),
+                F.struct(
+                    F.col("b_id").alias("a_id"),
+                    F.col("a_id").alias("b_id"),
+                    F.col("nb").alias("n"),
+                ),
+            )
+        ).alias("d"),
     )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    hot = (
-        sh.groupBy("s64")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > _SHINGLE_DF_CAP)
-        .select("s64")
-    )
-    shj = sh.join(F.broadcast(hot), "s64", "left_anti")
-    a = shj.alias("a")
-    b = shj.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.s64") == F.col("b.s64"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .agg(F.count("*").alias("c"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("a_id"), F.col("n").alias("na"))
-    cont = F.col("c").cast("double") / F.col("na")
-    return (
-        common.join(F.broadcast(sa), "a_id")
-        .filter(cont >= _CONTAINMENT_T)
-        .select("a_id", "b_id", F.round(cont, 4).alias("containment"))
+    cont = F.col("c").cast("double") / F.col("d.n")
+    return both.filter(cont >= _CONTAINMENT_T).select(
+        "d.a_id", "d.b_id", F.round(cont, 4).alias("containment")
     )
 
 
@@ -1312,19 +1272,8 @@ _JCURVE_CORPUS_SQL = f"""corpus AS (
     oracle=f"""
     WITH {_JCURVE_CORPUS_SQL},
     {shingle_ctes_sql()},
-    common AS (
-      SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-             CAST(count(*) AS BIGINT) AS c
-      FROM shj a JOIN shj b
-        ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    scored AS (
-      SELECT c.c, sa.n + sb.n - c.c AS u
-      FROM common c
-      JOIN sizes sa ON sa.doc_id = c.a_id
-      JOIN sizes sb ON sb.doc_id = c.b_id
-    ),
+    {_OV_SQL},
+    scored AS (SELECT c, na + nb - c AS u FROM ov),
     agg AS (
       SELECT CAST(count(*) AS BIGINT) AS n_considered,
              {', '.join(
@@ -1386,40 +1335,8 @@ def q_dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.regexp_replace("text", r"\s+\S+$", "").alias("text"),
     )
     corpus = base.unionByName(perturbed)
-    # r17 change 9: s64-hashed shingles before the materialize (see
-    # ngram_jaccard_pairs — identical argument, sampled-corpus variant)
-    sh = materialize(
-        shingles(spread(corpus), 3).select(
-            "doc_id", F.xxhash64("shingle").alias("s64")
-        )
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    hot = (
-        sh.groupBy("s64")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > _SHINGLE_DF_CAP)
-        .select("s64")
-    )
-    shj = sh.join(F.broadcast(hot), "s64", "left_anti")
-    a = shj.alias("a")
-    b = shj.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.s64") == F.col("b.s64"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id")
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("a_id"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("b_id"), F.col("n").alias("nb"))
-    scored = (
-        common.join(F.broadcast(sa), "a_id")
-        .join(F.broadcast(sb), "b_id")
-        .select("c", (F.col("na") + F.col("nb") - F.col("c")).alias("u"))
+    scored = shingle_overlap(corpus, 3, _SHINGLE_DF_CAP).select(
+        "c", (F.col("na") + F.col("nb") - F.col("c")).alias("u")
     )
     agg = scored.agg(
         F.count(F.lit(1)).alias("n_considered"),
@@ -1490,20 +1407,14 @@ def _mhest_hash_sql(hv: str = "h") -> str:
                         for i in range(_MHEST_PERMS))}
       FROM ph GROUP BY doc_id
     ),
-    common AS (
-      SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS c
-      FROM shj a JOIN shj b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
+    {_OV_SQL},
     pairs AS (
       SELECT c.a_id, c.b_id,
-             CAST(floor(c.c * 1e6 / (sa.n + sb.n - c.c) + 0.5) AS BIGINT)
+             CAST(floor(c.c * 1e6 / (c.na + c.nb - c.c) + 0.5) AS BIGINT)
                AS jmicros,
              ({' + '.join(f"CASE WHEN sa2.mh{i} = sb2.mh{i} THEN 1 ELSE 0 END"
                           for i in range(_MHEST_PERMS))}) AS n_matches
-      FROM common c
-      JOIN sizes sa ON sa.doc_id = c.a_id
-      JOIN sizes sb ON sb.doc_id = c.b_id
+      FROM ov c
       JOIN sig sa2 ON sa2.doc_id = c.a_id
       JOIN sig sb2 ON sb2.doc_id = c.b_id
     )
@@ -1574,14 +1485,9 @@ def q_dedup_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = materialize(shingles(d, 3))
     # df-cap twin of shingle_ctes_sql's shj: drop corpus-stopword
     # shingles before pairing (same guard, same constant)
-    hot = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > _SHINGLE_DF_CAP)
-        .select("shingle")
-    )
+    hot = hot_keys(sh, ["shingle"], _SHINGLE_DF_CAP)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    shj = materialize(sh.join(F.broadcast(hot), "shingle", "left_anti"))
+    shj = materialize(sh.join(hot, "shingle", "left_anti"))
     aggs = [
         F.min(
             F.conv(
@@ -2041,13 +1947,7 @@ def _alignments_from_anchors(an: DataFrame) -> DataFrame:
     MATERIALIZED anchor table (it feeds the hot-list groupBy AND both
     join sides): the surviving pair alignments
     (a_id, b_id, delta, n_anchors, amin, amax)."""
-    hot = (
-        an.groupBy("hv")
-        .agg(F.count(F.lit(1)).alias("dfh"))
-        .filter(F.col("dfh") > _ALIGN_DF_CAP)
-        .select("hv")
-    )
-    anc = an.join(F.broadcast(hot), "hv", "left_anti")
+    anc = an.join(hot_keys(an, ["hv"], _ALIGN_DF_CAP), "hv", "left_anti")
     a = anc.alias("a")
     b = anc.alias("b")
     g = (
@@ -2170,8 +2070,8 @@ def q_dedup_span_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     per distinct phrase). The self-join is an equi-join on the 8-byte
     hash whose per-key fan-out the {_ALIGN_DF_CAP}-doc cap bounds
     (the _SHINGLE_DF_CAP discipline: a hotter anchor is boilerplate,
-    which the segment family already handles — broadcast anti-join of
-    the tiny hot list); the (pair, delta) groupBy is map-side combined
+    which the segment family already handles — anti-join of the tiny
+    hot list, hot_keys); the (pair, delta) groupBy is map-side combined
     and touches only anchor matches; the per-pair best-alignment
     window partitions on the pair key. After the one segment pass the
     align-and-extend step moves only 8-byte hashes and integer

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from spring_and_kafka_spark.exec_utils import materialize, micros
 from spring_and_kafka_spark.llm.dedup import (
+    _OV_SQL,
     _PLANTED_CORPUS_SQL,
     lsh_verified_pairs,
     planted_corpus,
@@ -51,16 +52,9 @@ _PIPE_JACCARD = 0.6
       WHERE n_toks >= 30 AND stop_ratio <= 0.2
     ),
     {shingle_ctes_sql("kept")},
+    {_OV_SQL},
     dup AS (
-      SELECT c.a_id, c.b_id
-      FROM (
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS c
-        FROM shj a JOIN shj b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-      ) c
-      JOIN sizes sa ON sa.doc_id = c.a_id
-      JOIN sizes sb ON sb.doc_id = c.b_id
-      WHERE c.c / (sa.n + sb.n - c.c) >= {_PIPE_JACCARD}
+      SELECT a_id, b_id FROM ov WHERE c / (na + nb - c) >= {_PIPE_JACCARD}
     ),
     survivors AS (
       SELECT k.doc_id, k.n_toks FROM kept k

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from spring_and_kafka_spark.exec_utils import materialize
+from spring_and_kafka_spark.exec_utils import array_pairs, materialize
 from spring_and_kafka_spark.registry import register
 from spring_and_kafka_spark.sources.tables import load_table
 
@@ -670,25 +670,11 @@ def q_graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eh feeds three sides (both undirected halves + the is_edge probe)
     # — cut here so the co-order build runs once
     eh = materialize(_co_order_und(spark, sf_dir))
-    # r18 (guide §2.4/§7.2; the lsh_candidate_pairs pattern): ONE
-    # materialized groupBy(src) adjacency build replaces the old
-    # deg-groupBy + cap semi-join + wedge self-join. The r17 plan audit
-    # (plans/r17/q_graph_jaccard_after.txt) showed the degree aggregate
-    # planned FOUR times (the semi-join build side once per self-join
-    # alias, plus du and dv) and the capped edge stream planned twice —
-    # none of it deduplicated by ReuseExchange because each reference
-    # sits under a different join side. Now: degree = size of the
-    # collected neighbor set (a projection of the checkpoint), the hub
-    # cap = the same size filter, and the wedge pairs expand IN-ARRAY
-    # (long-keyed, cap-bounded groups — the regime where the grouped
-    # form wins; contrast the string-keyed shingle revert, r17).
-    # Resident-memory bound, as documented on lsh_candidate_pairs: an
-    # over-cap hub's neighbor list is collected then dropped — 8 bytes
-    # × degree in ONE aggregation buffer, never a pair fan-out.
-    # Interleaved A/B at sf0.1 (5 reps): grouped med 2.13/min 1.98 s vs
-    # shipped 2.40/2.34 (won all 5); the materialize-deg+ecap
-    # alternative measured 2.34/2.08. Outputs row-identical; oracle
-    # hash parity at all three SFs.
+    # ONE materialized adjacency build: degree is the neighbor array's
+    # size, the hub cap a size filter, and the wedge pairs expand
+    # in-array. Resident-memory bound (as on lsh_candidate_pairs): an
+    # over-cap hub's list is collected then dropped — 8 bytes × degree
+    # in one aggregation buffer, never a pair fan-out.
     grp = materialize(
         _sym_edges(eh)
         .groupBy("src")
@@ -697,19 +683,9 @@ def q_graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg = grp.select(
         F.col("src").alias("node"), F.size("ds").cast("long").alias("d")
     )
-    ds = F.col("ds")
-    pair_arr = F.flatten(
-        F.transform(
-            ds,
-            lambda x, i: F.transform(
-                F.slice(ds, i + F.lit(2), F.size(ds)),
-                lambda y: F.struct(x.alias("u"), y.alias("v")),
-            ),
-        )
-    )
     cand = (
-        grp.filter(F.size(ds) <= _JACCARD_CENTER_CAP)
-        .select(F.explode(pair_arr).alias("p"))
+        grp.filter(F.size("ds") <= _JACCARD_CENTER_CAP)
+        .select(F.explode(array_pairs("ds", "u", "v")).alias("p"))
         .groupBy(F.col("p.u").alias("u"), F.col("p.v").alias("v"))
         .agg(F.count(F.lit(1)).alias("common"))
     )
@@ -915,17 +891,9 @@ def _co_order_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_orderkey")
         .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
     )
-    ps = F.col("ps")
-    pair_arr = F.flatten(
-        F.transform(
-            ps,
-            lambda x, i: F.transform(
-                F.slice(ps, i + F.lit(2), F.size(ps)),
-                lambda y: F.struct(x.alias("u"), y.alias("v")),
-            ),
-        )
-    )
-    return per_order.select(F.explode(pair_arr).alias("p")).select("p.u", "p.v")
+    return per_order.select(
+        F.explode(array_pairs("ps", "u", "v")).alias("p")
+    ).select("p.u", "p.v")
 
 
 def _co_order_und(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -338,3 +338,124 @@ def test_substring_planted_repeated_passages(spark, tmp_path):
     for k in (3, 4):
         assert (got[k]["n_segments"], got[k]["n_dup"]) == (3, 2)
         assert got[k]["longest_run"] == 1
+
+
+def _multiset(rows, cols):
+    from tools.selfcheck import normalize
+
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    return sorted(
+        (tuple(normalize(r[i]) for i in order) for r in rows), key=str
+    )
+
+
+def test_hot_keys_cap_boundary(spark):
+    """A key holding exactly `cap` rows is not hot (the anti-join keeps
+    its rows); one holding cap + 1 is hot and reports its row count —
+    for a single long key and for the composite (band, bucket) key."""
+    from spring_and_kafka_spark.llm.dedup import hot_keys
+
+    cap = 3
+    df = spark.createDataFrame(
+        [(7,)] * cap + [(8,)] * (cap + 1), "s64 long"
+    )
+    hot = hot_keys(df, ["s64"], cap)
+    assert [tuple(r) for r in hot.collect()] == [(8, cap + 1)]
+    kept = df.join(hot, "s64", "left_anti")
+    assert [r["s64"] for r in kept.collect()] == [7] * cap
+
+    bb = spark.createDataFrame(
+        [(0, 7)] * cap + [(0, 8)] * (cap + 1) + [(1, 7)] * (cap + 1),
+        "band int, bucket long",
+    )
+    hot = hot_keys(bb, ["band", "bucket"], cap)
+    assert sorted(tuple(r) for r in hot.collect()) == [
+        (0, 8, cap + 1),
+        (1, 7, cap + 1),
+    ]
+    kept = bb.join(hot, ["band", "bucket"], "left_anti")
+    assert sorted(tuple(r) for r in kept.collect()) == [(0, 7)] * cap
+
+
+def test_band_bucket_rows_match_cool_set_join(spark):
+    """_band_bucket_rows' anti-join against the hot set keeps the same
+    rows and reports the same stats as the former inner join against
+    the broadcast cool set, rebuilt here as the reference."""
+    from spring_and_kafka_spark.llm.dedup import (
+        _band_bucket_rows,
+        _band_structs,
+        minhash_signatures,
+        shingles,
+    )
+
+    bands, rpb, cap = 8, 4, 5
+    # six identical docs share every bucket (hot); the rest are distinct
+    same = [(i, "s0 s1 s2 s3 s4 s5") for i in range(6)]
+    distinct = [
+        (100 + i, " ".join(f"w{i}_{k}" for k in range(8))) for i in range(30)
+    ]
+    docs = spark.createDataFrame(same + distinct, "doc_id LONG, text STRING")
+    sig = minhash_signatures(shingles(docs, 3))
+
+    buckets = sig.select(
+        "doc_id", F.explode(_band_structs(bands, rpb)).alias("bb")
+    ).select("doc_id", "bb.band", "bb.bucket")
+    counts = buckets.groupBy("band", "bucket").agg(F.count("*").alias("n"))
+    cool = counts.filter(F.col("n") <= cap).select("band", "bucket")
+    hot = counts.filter(F.col("n") > cap).agg(
+        F.count("*").alias("k"), F.sum("n").alias("d")
+    ).first()
+    ref = buckets.join(F.broadcast(cool), ["band", "bucket"])
+
+    stats: dict = {}
+    got = _band_bucket_rows(sig, bands, rpb, bucket_cap=cap, stats=stats)
+    assert got.columns == ref.columns
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, ref.collect())
+    )
+    assert stats == {
+        "hot_buckets": int(hot["k"]),
+        "docs_in_hot_buckets": int(hot["d"]),
+    }
+    assert stats == {"hot_buckets": bands, "docs_in_hot_buckets": 6 * bands}
+
+
+def test_shingle_overlap_matches_its_ov_twin(spark, duck):
+    from spring_and_kafka_spark.llm.dedup import (
+        _OV_SQL,
+        _PLANTED_CORPUS_SQL,
+        _SHINGLE_DF_CAP,
+        planted_corpus,
+        shingle_ctes_sql,
+        shingle_overlap,
+    )
+
+    df = shingle_overlap(planted_corpus(spark, SF_SMOKE), 3, _SHINGLE_DF_CAP)
+    res = duck.execute(
+        f"WITH {_PLANTED_CORPUS_SQL}, {shingle_ctes_sql()}, {_OV_SQL} "
+        "SELECT a_id, b_id, c, na, nb FROM ov"
+    )
+    orows, ocols = res.fetchall(), [d[0] for d in res.description]
+    srows = df.collect()
+    assert df.columns == ocols == ["a_id", "b_id", "c", "na", "nb"]
+    assert srows and len(srows) == len(orows)
+    assert _multiset(srows, df.columns) == _multiset(orows, ocols)
+
+
+def test_containment_matches_its_oracle(spark, duck):
+    """Containment reads both directions off the one a < b overlap; its
+    oracle joins a.doc_id <> b.doc_id on its own, so this pins the
+    derivation (the registered-oracle battery is in the slow set)."""
+    from spring_and_kafka_spark import registry
+
+    spec = registry.all_specs()["q_dedup_containment"]
+    df = spec.fn(spark, SF_SMOKE)
+    res = duck.execute(spec.oracle)
+    orows, ocols = res.fetchall(), [d[0] for d in res.description]
+    srows = df.collect()
+    assert sorted(df.columns) == sorted(ocols)
+    assert srows and len(srows) == len(orows)
+    # both directions present: the planted copy is contained in its
+    # original, and the original nearly in its copy
+    assert any(r["a_id"] > r["b_id"] for r in srows)
+    assert _multiset(srows, df.columns) == _multiset(orows, ocols)
