@@ -5,18 +5,18 @@ cross-SOURCE template table, this maintains the per-SEGMENT df state the
 threshold-calibration histogram (and any df-thresholded excision pass)
 reads.
 
-Two mergeable partial tables per micro-batch (DESIGN.md item 17 —
-counters merge by sum, distincts by presence-key union):
+One mergeable partial table per micro-batch, ``seg_docs``: (seg,
+doc_id, n), one row per touched (segment, doc) pair with its instance
+count — bounded by touched pairs per batch, never by instance volume
+(DESIGN.md items 17 and 30). Both statistics read off those rows:
 
-- ``inst``:     (seg, n) segment-instance sums — a batch of millions of
-  docs lands as one row per touched segment, map-side combined;
-- ``presence``: distinct (seg, doc_id) rows — bounded by touched
-  (segment, doc) pairs per batch, never by instance volume. df is NOT a
-  foldable counter (a doc re-seen in a later batch must count once), so
-  the flag derives on read from the presence keys — the same
-  r15-review simplification the templates maintainer uses for its
-  distinct-source flag. At web scale this is the table to sketch (HLL);
-  kept exact so stream ≡ batch is bit-testable.
+- instance sums are a COUNTER keyed by seg, a prefix of the presence
+  key, so they ride on the presence rows and merge by sum;
+- df is NOT a foldable counter (a doc re-seen in a later batch must
+  count once), so it derives on read as a count-distinct of the
+  presence keys, as the templates maintainer derives its
+  distinct-source flag. At web scale this is the table to sketch
+  (HLL); kept exact so stream ≡ batch is bit-testable.
 
 Read-time ``maintained_seg_df_hist`` reproduces q_dedup_seg_df_hist's
 output EXACTLY (same segment builder — llm.text.boilerplate_segments —
@@ -48,9 +48,7 @@ from spring_and_kafka_spark.streaming.sinks import (
     read_partial_state,
 )
 
-_INST_SCHEMA = "seg STRING, n BIGINT"
-_PRESENCE_SCHEMA = "seg STRING, doc_id BIGINT"
-_SUBTABLES = (("inst", _INST_SCHEMA), ("presence", _PRESENCE_SCHEMA))
+_SCHEMA = "seg STRING, doc_id BIGINT, n BIGINT"
 
 
 def seg_df_delta_stream(docs: DataFrame, state_dir: str):
@@ -62,10 +60,9 @@ def seg_df_delta_stream(docs: DataFrame, state_dir: str):
         docs,
         state_dir,
         {
-            "inst": lambda seg: seg.groupBy("seg").agg(
+            "seg_docs": lambda seg: seg.groupBy("seg", "doc_id").agg(
                 F.count(F.lit(1)).alias("n")
-            ),
-            "presence": lambda seg: seg.distinct(),
+            )
         },
         prep=lambda b: boilerplate_segments(
             b.filter(F.col("doc_id").isNotNull())
@@ -77,22 +74,21 @@ def maintained_seg_df_hist(spark: SparkSession, state_dir: str) -> DataFrame:
     """Current df histogram from the accumulated partials —
     column-identical to q_dedup_seg_df_hist's batch output.
 
-    The presence columns are projected BEFORE the distinct-count (the
-    templates.py batch_id-partition-column lesson: partitioned reads
-    append batch_id even when the user schema omits it, and a distinct
-    keyed on it would double-count a (seg, doc) pair re-seen in a later
-    batch); instance counts merge by sum. Torn state raises (module
+    The partial columns are projected BEFORE the per-seg merge:
+    partitioned reads append the batch_id partition column even when
+    the user schema omits it, and nothing may key on it, or a (seg,
+    doc) pair re-seen in a later batch would count twice in df.
+    Instance counts merge by sum. Torn state raises (module
     docstring)."""
-    inst, presence = read_partial_state(
-        spark, state_dir, _SUBTABLES, "seg-df"
+    (parts,) = read_partial_state(
+        spark, state_dir, (("seg_docs", _SCHEMA),), "seg-df"
     )
     f = (
-        presence.select("seg", "doc_id")
+        parts.select("seg", "doc_id", "n")
         .groupBy("seg")
-        .agg(F.count_distinct("doc_id").alias("df"))
-        .join(
-            inst.groupBy("seg").agg(F.sum("n").alias("inst")),
-            "seg",
+        .agg(
+            F.count_distinct("doc_id").alias("df"),
+            F.sum("n").alias("inst"),
         )
     )
     h = f.groupBy(

@@ -92,25 +92,32 @@ def partial_state_stream(
     )
 
 
+def _fs(spark, path: str):
+    """(Hadoop FileSystem, Path) for ``path``: driver-side metadata
+    calls only (works on object stores, never a Spark job)."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def _names(spark, dir_path: str) -> list[str]:
+    """Entry names directly under ``dir_path`` (none when it does not
+    exist), by one listing."""
+    fs, p = _fs(spark, dir_path)
+    if not fs.exists(p):
+        return []
+    return [st.getPath().getName() for st in fs.listStatus(p)]
+
+
 def _batch_partitions(spark, table_dir: str) -> tuple[set[str], set[str]]:
     """(committed, uncommitted) ``batch_id=N`` partition names under one
-    state table dir, by driver-side Hadoop FS metadata listing (works on
-    object stores, never a Spark job). Committed = the partition carries
-    its ``_SUCCESS`` marker."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(table_dir)
-    fs = path.getFileSystem(conf)
+    state table dir. Committed = the partition carries its ``_SUCCESS``
+    marker."""
     done: set[str] = set()
     torn: set[str] = set()
-    for st in fs.listStatus(path):
-        name = st.getPath().getName()
-        if not name.startswith("batch_id="):
-            continue
-        ok = fs.exists(
-            jvm.org.apache.hadoop.fs.Path(f"{table_dir}/{name}/_SUCCESS")
-        )
-        (done if ok else torn).add(name)
+    for name in _names(spark, table_dir):
+        if name.startswith("batch_id="):
+            fs, marker = _fs(spark, f"{table_dir}/{name}/_SUCCESS")
+            (done if fs.exists(marker) else torn).add(name)
     return done, torn
 
 
@@ -124,7 +131,11 @@ def read_partial_state(
 
     ``subtables`` is a list of (name, schema) pairs; returns a tuple of
     DataFrames in the same order (all empty when NO table exists — the
-    stream simply never ran). Three tear levels are checked:
+    stream simply never ran). A visible top-level entry of ``state_dir``
+    that is none of the tables raises too: it is state of an older
+    layout (a flat ``batch_id=N``, or a table a maintainer no longer
+    writes), which would otherwise read as "never ran". Three tear
+    levels are checked:
 
     1. a top-level table dir missing while a sibling exists — a crash
        between a batch's first and later writes on the FIRST batch;
@@ -146,18 +157,20 @@ def read_partial_state(
 
     All checks are driver-side Hadoop FS metadata listings (works on
     object stores), never a Spark job."""
-    from pyspark.errors import AnalysisException
-
-    def read_or_none(sub: str, schema: str) -> DataFrame | None:
-        try:
-            return spark.read.schema(schema).parquet(f"{state_dir}/{sub}")
-        except AnalysisException:
-            return None
-
-    frames = {sub: read_or_none(sub, sch) for sub, sch in subtables}
-    present = [sub for sub, df in frames.items() if df is not None]
-    if present and len(present) < len(subtables):
-        missing = [sub for sub, df in frames.items() if df is None]
+    names = [sub for sub, _ in subtables]
+    entries = _names(spark, state_dir)
+    stray = sorted(
+        e for e in entries if not e.startswith(("_", ".")) and e not in names
+    )
+    if stray:
+        raise RuntimeError(
+            f"{what} state under {state_dir} holds {stray}, none of its "
+            f"tables {names} — state of an older layout; clear or "
+            "re-drain the state dir"
+        )
+    present = [sub for sub in names if sub in entries]
+    if present and len(present) < len(names):
+        missing = [sub for sub in names if sub not in entries]
         raise RuntimeError(
             f"partial {what} state under {state_dir}: {present} exist "
             f"but {missing} are missing — a crash between on_batch's "
@@ -207,4 +220,7 @@ def read_partial_state(
                 "between on_batch's writes; replay that batch or clear "
                 "the state dir"
             )
-    return tuple(frames[sub] for sub, _ in subtables)
+    return tuple(
+        spark.read.schema(sch).parquet(f"{state_dir}/{sub}")
+        for sub, sch in subtables
+    )

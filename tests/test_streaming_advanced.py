@@ -484,11 +484,12 @@ def test_stream_maintained_mv_equals_batch(spark, tmp_path):
 
 
 def test_stream_maintained_freshness_equals_batch(spark, tmp_path):
-    """Freshness partials folded per micro-batch (counter rows + distinct
-    user presence under batch_id partitions) must merge on read to
-    EXACTLY the batch q_dq_freshness audit for the same events — the
-    counter/presence split is what makes the audit maintainable at
-    ingest without rescanning the day's partition."""
+    """Freshness partials folded per micro-batch ((day, user_id)
+    presence rows carrying their counters, under batch_id partitions)
+    must merge on read to EXACTLY the batch q_dq_freshness audit for
+    the same events — the counter/presence split is what makes the
+    audit maintainable at ingest without rescanning the day's
+    partition."""
     from pyspark.sql import functions as F
     from pyspark.sql import Window as W
 
@@ -534,32 +535,22 @@ def test_stream_maintained_freshness_equals_batch(spark, tmp_path):
     empty = maintained_freshness(spark, str(tmp_path / "nostate"))
     assert empty.count() == 0
 
-    # PARTIAL state (counts/ committed, users/ missing — a crash between
-    # on_batch's two writes) must raise, not read as 'never ran'
-    # (ADVICE r6: the old single try silently discarded the good half).
-    import shutil
+    # a partition without its _SUCCESS marker (a crash DURING the one
+    # write of that batch) must raise, naming the batch, not silently
+    # undercount that batch's days.
+    import os
 
     import pytest
 
-    torn = str(tmp_path / "torn")
-    shutil.copytree(f"{state}/counts", f"{torn}/counts")
-    with pytest.raises(RuntimeError, match="partial freshness state"):
-        maintained_freshness(spark, torn).collect()
-
-    # PER-BATCH tear: both dirs exist, but one batch committed counts
-    # and crashed before users — must also raise, naming the batch,
-    # not silently undercount that batch's days.
-    torn2 = str(tmp_path / "torn2")
-    shutil.copytree(state, torn2)
-    victims = [
-        d
-        for d in sorted((tmp_path / "torn2" / "users").iterdir())
-        if d.name.startswith("batch_id=")
-    ]
+    victims = sorted(
+        d for d in os.listdir(f"{state}/day_users") if d.startswith("batch_id=")
+    )
     assert len(victims) >= 2, "need multi-batch state for this case"
-    shutil.rmtree(victims[-1])
-    with pytest.raises(RuntimeError, match=r"batch_id=\d+ has counts/"):
-        maintained_freshness(spark, torn2).collect()
+    os.remove(f"{state}/day_users/{victims[-1]}/_SUCCESS")
+    with pytest.raises(
+        RuntimeError, match=rf"{victims[-1]} under day_users/ has no _SUCCESS"
+    ):
+        maintained_freshness(spark, state).collect()
 
 
 def test_stream_maintained_js_drift_equals_batch(spark, tmp_path):
@@ -730,8 +721,8 @@ def test_maintained_templates_dedups_across_batches_and_raises_on_tear(
 def test_single_table_maintainers_raise_on_torn_batch(
     spark, tmp_path, caplog
 ):
-    """The three single-table maintainers (mv, sketch, drift) read
-    their one ``{state}/{table}/batch_id=N`` table through
+    """The single-table maintainers (mv, sketch, drift, freshness,
+    segdf) read their one ``{state}/{table}/batch_id=N`` table through
     read_partial_state, so a batch_id partition missing its _SUCCESS
     marker (a crash DURING that write) RAISES at read time instead of
     silently merging partial state — and require_success=False
@@ -745,7 +736,9 @@ def test_single_table_maintainers_raise_on_torn_batch(
     import pytest
 
     from spring_and_kafka_spark.streaming.drift import maintained_counts
+    from spring_and_kafka_spark.streaming.freshness import maintained_freshness
     from spring_and_kafka_spark.streaming.mv import maintained_view
+    from spring_and_kafka_spark.streaming.segdf import maintained_seg_df_hist
     from spring_and_kafka_spark.streaming.sinks import read_partial_state
     from spring_and_kafka_spark.streaming.sketch import merged_quantiles
 
@@ -775,6 +768,22 @@ def test_single_table_maintainers_raise_on_torn_batch(
             [("s0", "tok", 2)],
             "source string, tok string, c long",
             lambda s: maintained_counts(spark, s),
+            0,
+        ),
+        (
+            "freshness",
+            "day_users",
+            [(None, 7, 2, 1)],
+            "day date, user_id long, n_rows long, n_null_value long",
+            lambda s: maintained_freshness(spark, s),
+            0,
+        ),
+        (
+            "seg-df",
+            "seg_docs",
+            [("alpha beta", 7, 2)],
+            "seg string, doc_id long, n long",
+            lambda s: maintained_seg_df_hist(spark, s),
             0,
         ),
     ]
@@ -822,7 +831,7 @@ def test_stream_maintained_seg_df_hist_equals_batch(spark, tmp_path):
     because a distinct count is not a foldable counter), a NULL-doc_id
     row (excluded at the sink exactly as the batch scan excludes it),
     and the floor-form instance shares. Torn state raises through the
-    shared multi-table guard."""
+    shared partial-state guard."""
     import os
 
     import pytest
@@ -880,13 +889,13 @@ def test_stream_maintained_seg_df_hist_equals_batch(spark, tmp_path):
     # the planted passage reached df >= 2 (bucket >= 1 has mass)
     assert any(r[0] >= 1 and r[3] >= 2 for r in got)
 
-    # torn state: a presence partition missing its _SUCCESS marker
+    # torn state: a partition missing its _SUCCESS marker
     victims = sorted(
         d
-        for d in os.listdir(f"{state}/presence")
+        for d in os.listdir(f"{state}/seg_docs")
         if d.startswith("batch_id=")
     )
-    os.remove(f"{state}/presence/{victims[-1]}/_SUCCESS")
+    os.remove(f"{state}/seg_docs/{victims[-1]}/_SUCCESS")
     with pytest.raises(RuntimeError, match="no _SUCCESS marker"):
         maintained_seg_df_hist(spark, state).collect()
 

@@ -187,9 +187,9 @@ STREAMING_ONLY = [
     ("ingest-time near-dup admission (foreachBatch incremental LSH vs corpus)", "streaming/curation.py:admission_stream (tests/test_streaming.py::test_stream_admission_equals_batch_incremental)"),
     ("incremental quantile-sketch rollup (per-batch partial histograms, merge-on-read, _SUCCESS-aware torn-state guard)", "streaming/sketch.py (tests/test_streaming_advanced.py::test_stream_merged_sketch_equals_batch)"),
     ("incremental MV maintenance (CDC changelog stream → per-batch partial deltas, merge-on-read view, _SUCCESS-aware torn-state guard)", "streaming/mv.py (tests/test_streaming_advanced.py::test_stream_maintained_mv_equals_batch)"),
-    ("incrementally-maintained ingest freshness audit (counter partials + distinct user presence, merge-on-read with the torn-state guard; ratios derived on read)", "streaming/freshness.py (tests/test_streaming_advanced.py::test_stream_maintained_freshness_equals_batch)"),
+    ("incrementally-maintained ingest freshness audit (one (day, user) presence partial per batch carrying its row/null counters, merge-on-read with the torn-state guard; ratios derived on read)", "streaming/freshness.py (tests/test_streaming_advanced.py::test_stream_maintained_freshness_equals_batch)"),
     ("incrementally-maintained boilerplate template table (instance-count + doc-presence partials, merge-on-read flag derivation, _SUCCESS-aware torn-state guard; stream ≡ q_text_boilerplate)", "streaming/templates.py (tests/test_streaming_advanced.py::test_stream_maintained_templates_equals_batch)"),
-    ("incrementally-maintained segment-df state (instance-count + (seg, doc) presence partials, merge-on-read bit-length histogram, torn-state guard; stream ≡ q_dedup_seg_df_hist)", "streaming/segdf.py (tests/test_streaming_advanced.py::test_stream_maintained_seg_df_hist_equals_batch)"),
+    ("incrementally-maintained segment-df state (one (seg, doc) presence partial per batch carrying its instance count, merge-on-read bit-length histogram, torn-state guard; stream ≡ q_dedup_seg_df_hist)", "streaming/segdf.py (tests/test_streaming_advanced.py::test_stream_maintained_seg_df_hist_equals_batch)"),
     ("incrementally-maintained span-anchor state (min-pos anchor partials, foldable re-min merge + distinct sizes, batch alignment/sweep tail reused verbatim, torn-state guard; stream ≡ q_dedup_span_cover)", "streaming/spananchor.py (tests/test_streaming_advanced.py::test_stream_maintained_span_cover_equals_batch)"),
     ("stream-stream join (time-range state bound)", "streaming/joins.py (tests/test_streaming_advanced.py)"),
     ("stream-static enrich (broadcast dim per micro-batch)", "streaming/joins.py:stream_static_enrich"),
