@@ -28,8 +28,11 @@ def stage_event_chunks(
 def read_event_stream(
     spark: SparkSession, stage_dir: str, max_files_per_trigger: int = 2
 ) -> DataFrame:
-    """File-source streaming DataFrame over staged event chunks, schema
-    locked from the static table (file streams require explicit schema).
+    """File-source streaming DataFrame over staged event chunks. File
+    streams require an explicit schema, so it is read from the staged
+    chunks themselves (``spark.read.parquet(stage_dir).schema``). That
+    lists ``stage_dir`` and reads a parquet footer in a one-task Spark
+    job, on every call, before the stream starts.
 
     The finite-or-null float contract is applied here too: staged
     chunks are already clean (stage_events writes through load_table's

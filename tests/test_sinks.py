@@ -7,14 +7,42 @@ import os
 
 import pytest
 
+from spring_and_kafka_spark.llm.dedup import q_dedup_seg_df_hist, q_dedup_span_cover
+from spring_and_kafka_spark.llm.text import q_text_boilerplate, q_text_js_shift
+from spring_and_kafka_spark.operators.layout import q_mv_incremental
+from spring_and_kafka_spark.operators.quality import q_dq_freshness
+from spring_and_kafka_spark.operators.sketches import (
+    decimal_histogram,
+    select_quantile_buckets,
+    to_cents,
+)
 from spring_and_kafka_spark.sources.tables import load_table
+from spring_and_kafka_spark.streaming.drift import maintained_js, token_delta_stream
+from spring_and_kafka_spark.streaming.freshness import (
+    freshness_delta_stream,
+    maintained_freshness,
+)
+from spring_and_kafka_spark.streaming.mv import maintained_view, mv_delta_stream
 from spring_and_kafka_spark.streaming.replay import (
     read_event_stream,
     stage_event_chunks,
 )
+from spring_and_kafka_spark.streaming.segdf import (
+    maintained_seg_df_hist,
+    seg_df_delta_stream,
+)
 from spring_and_kafka_spark.streaming.sinks import foreach_batch_sink, parquet_sink
+from spring_and_kafka_spark.streaming.sketch import merged_quantiles, sketch_stream
+from spring_and_kafka_spark.streaming.spananchor import (
+    maintained_span_cover,
+    span_anchor_delta_stream,
+)
+from spring_and_kafka_spark.streaming.templates import (
+    maintained_templates,
+    template_delta_stream,
+)
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, mv_base_and_changelog
 
 
 def test_foreach_batch_sees_every_batch(spark, tmp_path):
@@ -69,57 +97,19 @@ def _crash_writes(monkeypatch, suffix: str, mid_write: bool = False):
     monkeypatch.setattr(DataFrameWriter, "parquet", crashing)
 
 
-def _stage_documents(spark, stage: str, n_files: int) -> str:
-    load_table(spark, SF_SMOKE, "documents").repartition(n_files).write.mode(
-        "overwrite"
-    ).parquet(stage)
+def _stage(df, stage: str, n_files: int = 4) -> str:
+    """Write ``df`` as ``n_files`` parquet files under ``stage``: the
+    topic a file stream replays, one file per trigger."""
+    df.repartition(n_files).write.mode("overwrite").parquet(stage)
     return stage
 
 
-def _doc_stream(spark, stage: str):
+def _file_stream(spark, stage: str):
     return (
         spark.readStream.schema(spark.read.parquet(stage).schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
     )
-
-
-def test_templates_resume_after_crash_between_writes(
-    spark, tmp_path, monkeypatch
-):
-    """Kill a real two-table maintainer stream between a batch's two
-    partial writes, then restart it from the same state dir. In
-    between, the reader must raise on the torn batch; after the
-    restart, the replayed batch overwrites its partials (replayable
-    source + offset log + idempotent sink), so the result equals the
-    batch twin."""
-    from pyspark.errors import StreamingQueryException
-
-    from spring_and_kafka_spark.llm.text import q_text_boilerplate
-    from spring_and_kafka_spark.streaming.templates import (
-        maintained_templates,
-        template_delta_stream,
-    )
-
-    staged = _stage_documents(spark, str(tmp_path / "docs"), 4)
-    state = str(tmp_path / "state")
-
-    def drain():
-        template_delta_stream(_doc_stream(spark, staged), state).awaitTermination()
-
-    _crash_writes(monkeypatch, "/docs/batch_id=2")
-    with pytest.raises(StreamingQueryException):
-        drain()
-    with pytest.raises(
-        RuntimeError, match="batch_id=2 has counts/ but not docs/"
-    ):
-        maintained_templates(spark, state)
-
-    monkeypatch.undo()
-    drain()
-    assert {tuple(r) for r in maintained_templates(spark, state).collect()} == {
-        tuple(r) for r in q_text_boilerplate(spark, SF_SMOKE).collect()
-    }
 
 
 def _audit(df):
@@ -129,41 +119,93 @@ def _audit(df):
     }
 
 
-def test_freshness_resumes_after_crash_during_its_write(
-    spark, tmp_path, monkeypatch
+def _table(name):
+    return lambda spark: load_table(spark, SF_SMOKE, name)
+
+
+def _prices(spark):
+    return load_table(spark, SF_SMOKE, "lineitem").select("l_extendedprice")
+
+
+def _quantiles(spark):
+    return select_quantile_buckets(
+        spark, decimal_histogram(to_cents(_prices(spark)))
+    ).select("q", "approx_cents")
+
+
+def _changelog(spark):
+    return mv_base_and_changelog(spark, SF_SMOKE)[1]
+
+
+def _view(spark, state):
+    return maintained_view(spark, mv_base_and_changelog(spark, SF_SMOKE)[0], state)
+
+
+def _twin(q):
+    return lambda spark: q(spark, SF_SMOKE)
+
+
+# One row per merge-on-read maintainer: (maintainer, staged input,
+# drain, merged read, batch twin, table write to fail, whether the
+# crash hits during that write rather than before it). A crash before
+# the second table's write tears the batch between its writes; a crash
+# during a write leaves the partition without its _SUCCESS marker.
+RECOVERY = [
+    ("templates", _table("documents"), template_delta_stream,
+     maintained_templates, _twin(q_text_boilerplate), "docs", False),
+    ("spananchor", _table("documents"), span_anchor_delta_stream,
+     maintained_span_cover, _twin(q_dedup_span_cover), "sizes", False),
+    ("freshness", _table("events"), freshness_delta_stream,
+     maintained_freshness, _twin(q_dq_freshness), "day_users", True),
+    ("mv", _changelog, mv_delta_stream,
+     _view, _twin(q_mv_incremental), "deltas", True),
+    ("sketch", _prices, sketch_stream,
+     merged_quantiles, _quantiles, "hist", True),
+    ("drift", _table("documents"), token_delta_stream,
+     maintained_js, _twin(q_text_js_shift), "counts", True),
+    ("segdf", _table("documents"), seg_df_delta_stream,
+     maintained_seg_df_hist, _twin(q_dedup_seg_df_hist), "seg_docs", True),
+]
+
+
+@pytest.mark.parametrize(
+    "rows, start, read, twin, table, during",
+    [row[1:] for row in RECOVERY],
+    ids=[row[0] for row in RECOVERY],
+)
+def test_maintainer_resumes_after_crash(
+    spark, tmp_path, monkeypatch, rows, start, read, twin, table, during
 ):
-    """Kill the freshness stream during its one partial write of
-    batch 2, leaving that partition without its _SUCCESS marker. The
-    reader must raise on it; the restart replays batch 2 over its own
-    partition, and the result equals the batch twin."""
+    """Kill a real maintainer stream at batch 2's write of ``table``,
+    then restart it from the same state dir. In between, the merged
+    read must raise on the torn batch; after the restart, the replayed
+    batch overwrites its own partials (replayable source + offset log +
+    idempotent sink), so the merged read equals the batch twin."""
     from pyspark.errors import StreamingQueryException
 
-    from spring_and_kafka_spark.operators.quality import q_dq_freshness
-    from spring_and_kafka_spark.streaming.freshness import (
-        freshness_delta_stream,
-        maintained_freshness,
-    )
-
-    staged = stage_event_chunks(spark, SF_SMOKE, str(tmp_path / "stage"), n_chunks=4)
+    staged = _stage(rows(spark), str(tmp_path / "stage"))
     state = str(tmp_path / "state")
 
     def drain():
-        stream = read_event_stream(spark, staged, max_files_per_trigger=1)
-        freshness_delta_stream(stream, state).awaitTermination()
+        start(_file_stream(spark, staged), state).awaitTermination()
 
-    _crash_writes(monkeypatch, "/day_users/batch_id=2", mid_write=True)
+    _crash_writes(monkeypatch, f"/{table}/batch_id=2", mid_write=during)
     with pytest.raises(StreamingQueryException):
         drain()
-    with pytest.raises(
-        RuntimeError, match="batch_id=2 under day_users/ has no _SUCCESS"
-    ):
-        maintained_freshness(spark, state)
+    if during:
+        torn = f"batch_id=2 under {table}/ has no _SUCCESS"
+    else:
+        torn = f"batch_id=2 has .*/ but not {table}/"
+    with pytest.raises(RuntimeError, match=torn):
+        read(spark, state)
 
     monkeypatch.undo()
     drain()
-    assert _audit(maintained_freshness(spark, state)) == _audit(
-        q_dq_freshness(spark, SF_SMOKE)
-    )
+    got = read(spark, state)
+    cols = got.columns
+    assert {tuple(r[c] for c in cols) for r in got.collect()} == {
+        tuple(r[c] for c in cols) for r in twin(spark).collect()
+    }
 
 
 def test_freshness_and_segdf_write_one_partial_per_batch(
@@ -174,10 +216,6 @@ def test_freshness_and_segdf_write_one_partial_per_batch(
     so no batch can be torn between two writes."""
     from pyspark.sql.readwriter import DataFrameWriter
 
-    from spring_and_kafka_spark.streaming.freshness import (
-        freshness_delta_stream,
-    )
-    from spring_and_kafka_spark.streaming.segdf import seg_df_delta_stream
 
     written: list[str] = []
     write_parquet = DataFrameWriter.parquet
@@ -188,7 +226,7 @@ def test_freshness_and_segdf_write_one_partial_per_batch(
 
     monkeypatch.setattr(DataFrameWriter, "parquet", counting)
     events = stage_event_chunks(spark, SF_SMOKE, str(tmp_path / "ev"), n_chunks=4)
-    docs = _stage_documents(spark, str(tmp_path / "docs"), 4)
+    docs = _stage(load_table(spark, SF_SMOKE, "documents"), str(tmp_path / "docs"))
     for name, table, start in (
         (
             "fresh",
@@ -200,7 +238,7 @@ def test_freshness_and_segdf_write_one_partial_per_batch(
         (
             "segdf",
             "seg_docs",
-            lambda s: seg_df_delta_stream(_doc_stream(spark, docs), s),
+            lambda s: seg_df_delta_stream(_file_stream(spark, docs), s),
         ),
     ):
         written.clear()
@@ -215,7 +253,6 @@ def test_reader_raises_on_legacy_state_layout(spark, tmp_path):
     ``{state}/batch_id=N`` layout and freshness' two-table
     ``counts/`` + ``users/`` layout. Hidden entries are not strays."""
     from spring_and_kafka_spark.streaming.drift import maintained_counts
-    from spring_and_kafka_spark.streaming.freshness import maintained_freshness
 
     flat = str(tmp_path / "flat")
     spark.createDataFrame(
@@ -251,11 +288,6 @@ def test_maintained_freshness_with_nulls_equals_batch(spark, tmp_path):
     counts once."""
     import datetime as dt
 
-    from spring_and_kafka_spark.operators.quality import q_dq_freshness
-    from spring_and_kafka_spark.streaming.freshness import (
-        freshness_delta_stream,
-        maintained_freshness,
-    )
 
     d1, d2 = dt.datetime(2024, 1, 1, 10), dt.datetime(2024, 1, 2, 9)
     schema = (

@@ -397,58 +397,15 @@ def test_stream_maintained_mv_equals_batch(spark, tmp_path):
     to EXACTLY the batch q_mv_incremental answer (whose own oracle is
     the full recompute) — the mergeable-counter property that lets a
     100 TB view absorb a day's changelog without rescanning the base."""
-    from pyspark.sql import functions as F
-
-    from spring_and_kafka_spark.operators.layout import (
-        _MV_DEL,
-        _MV_INS,
-        _MV_UPD,
-        q_mv_incremental,
-    )
-    from spring_and_kafka_spark.sources.tables import load_table
+    from spring_and_kafka_spark.operators.layout import q_mv_incremental
     from spring_and_kafka_spark.streaming.mv import (
         maintained_view,
         mv_delta_stream,
     )
 
-    from .conftest import SF_SMOKE
+    from .conftest import SF_SMOKE, mv_base_and_changelog
 
-    o = load_table(spark, SF_SMOKE, "orders")
-    month_id = (F.year("o_orderdate") * 12 + F.month("o_orderdate")).cast(
-        "long"
-    )
-    cents = lambda c: F.floor(c * 100 + F.lit(0.5)).cast("long")  # noqa: E731
-    key = F.col("o_orderkey")
-
-    base = o.groupBy(month_id.alias("month_id")).agg(
-        F.count("*").alias("n_orders"),
-        F.sum(cents(F.col("o_totalprice"))).alias("revenue_cents"),
-    )
-    changelog = (
-        o.filter(key % _MV_DEL == 0)
-        .select(
-            month_id.alias("month_id"),
-            F.lit(-1).cast("long").alias("d_orders"),
-            (-cents(F.col("o_totalprice"))).alias("d_cents"),
-        )
-        .unionByName(
-            o.filter((key % _MV_DEL != 0) & (key % _MV_UPD == 0)).select(
-                month_id.alias("month_id"),
-                F.lit(0).cast("long").alias("d_orders"),
-                (
-                    cents(F.col("o_totalprice") * 1.1)
-                    - cents(F.col("o_totalprice"))
-                ).alias("d_cents"),
-            )
-        )
-        .unionByName(
-            o.filter(key % _MV_INS == 0).select(
-                month_id.alias("month_id"),
-                F.lit(1).cast("long").alias("d_orders"),
-                cents(F.col("o_totalprice")).alias("d_cents"),
-            )
-        )
-    )
+    base, changelog = mv_base_and_changelog(spark, SF_SMOKE)
     stage = str(tmp_path / "changelog")
     changelog.repartition(4).write.mode("overwrite").parquet(stage)
     stream = (
