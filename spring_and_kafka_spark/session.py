@@ -37,13 +37,47 @@ multi-executor cluster:
   FileContext default, whose rename is atomic there. Re-measure with
   ``python tools/jvm_forks.py``, which prints JVM process starts per
   non-empty micro-batch by command.
+- A ``file:`` filesystem that sets permissions without forking. Without
+  libhadoop, Hadoop's ``RawLocalFileSystem.setPermission`` runs the
+  ``chmod`` command for every file and directory created through
+  ``LocalFileSystem``: each checkpoint file and its ``.crc``, each state
+  changelog and its checksum file, each parquet part file, committer
+  directory and ``_SUCCESS``. That was ~24 forks per micro-batch of
+  ``tumbling_counts`` and ~16 of the freshness maintainer.
+  ``jvm/NioLocalFileSystem.java`` is Hadoop's own ``LocalFileSystem``
+  (so every ``.crc`` is still written and verified) over a raw layer
+  whose ``setPermission`` calls ``Files.setPosixFilePermissions``: the
+  same ``chmod(2)`` with the same mode, following symlinks, and no
+  process. A sticky-bit mode, or a target that already carries setuid
+  or setgid, still goes to Hadoop's forking ``chmod``. The class is put
+  on the driver classpath and named as ``fs.file.impl`` at JVM launch,
+  before the first ``file:`` FileSystem is cached. Scope: the
+  ``local[N]`` sessions this factory starts, whose executors share the
+  driver JVM; the vanilla driver session of ``__spark_entry__.py`` keeps
+  Hadoop's default. Rebuild the committed jar from its source with
+  ``python tools/build_jar.py``.
 """
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+NIO_LOCAL_FS = "spring_and_kafka_spark.jvm.NioLocalFileSystem"
+NIO_LOCAL_FS_JAR = Path(__file__).resolve().parent / "jvm" / "nio-local-fs.jar"
+
+
+def _nio_local_fs_loadable() -> bool:
+    """True unless this process already runs a JVM launched without the
+    jar (a session stopped earlier), where naming the class as
+    ``fs.file.impl`` would fail every ``file:`` access."""
+    jvm = SparkContext._jvm
+    return jvm is None or jvm.org.apache.spark.util.Utils.classIsLoadable(
+        NIO_LOCAL_FS
+    )
 
 
 def get_spark(
@@ -55,7 +89,7 @@ def get_spark(
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
         shuffle_partitions = cpus
-    spark = (
+    builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -84,7 +118,12 @@ def get_spark(
             "org.apache.spark.sql.execution.streaming.checkpointing."
             "FileSystemBasedCheckpointFileManager",
         )
-        .getOrCreate()
     )
+    if _nio_local_fs_loadable():
+        # Fork-free chmod on file: — see module docstring.
+        builder = builder.config(
+            "spark.driver.extraClassPath", str(NIO_LOCAL_FS_JAR)
+        ).config("spark.hadoop.fs.file.impl", NIO_LOCAL_FS)
+    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

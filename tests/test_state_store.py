@@ -10,13 +10,21 @@ changelog deltas) in the checkpoint's state directory — asserting the
 conf alone would pass even if Spark silently fell back to the heap
 provider. Checkpoints go through Spark's FileSystem-based checkpoint
 file manager (a fork-free rename on ``file:``, see session.py), which
-must still write a Hadoop ``.crc`` beside every checkpoint file."""
+must still write a Hadoop ``.crc`` beside every checkpoint file.
+``file:`` itself is Hadoop's LocalFileSystem over a raw layer that sets
+permissions without forking ``chmod`` (session.py); it must leave the
+same mode bits as Hadoop's own raw layer."""
 
 from __future__ import annotations
 
 import glob
+import json
 import os
+import subprocess
+import sys
+from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 ROCKSDB = (
@@ -27,6 +35,7 @@ FS_CHECKPOINTS = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
 )
+NIO_LOCAL_FS = "spring_and_kafka_spark.jvm.NioLocalFileSystem"
 
 
 def test_session_configures_rocksdb_provider(spark):
@@ -48,6 +57,48 @@ def test_session_configures_filesystem_checkpoint_manager(spark):
         spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
         == FS_CHECKPOINTS
     )
+
+
+def test_file_scheme_sets_permissions_like_hadoop(spark, tmp_path):
+    """``file:`` is the NIO LocalFileSystem, and its setPermission leaves
+    the same ``st_mode`` bits as the forking RawLocalFileSystem does on
+    a twin path: plain modes on files and directories, a directory that
+    keeps its setgid bit under chmod, and a sticky mode, which goes to
+    the fallback."""
+    jvm = spark._jvm
+    hfs = jvm.org.apache.hadoop.fs
+    root = jvm.java.net.URI("file:///")
+    conf = spark._jsc.hadoopConfiguration()
+    fs = hfs.FileSystem.get(root, conf)
+    assert fs.getClass().getName() == NIO_LOCAL_FS
+    assert fs.getRaw().getClass().getName() == NIO_LOCAL_FS + "$Raw"
+    assert hfs.LocalFileSystem._java_lang_class.isInstance(fs)
+    forking = hfs.RawLocalFileSystem()
+    forking.initialize(root, conf)
+
+    def mode_after(layer, side: str, kind: str, before: int, mode: int) -> int:
+        p = tmp_path / side / f"{kind}-{before:o}-{mode:o}"
+        p.parent.mkdir(exist_ok=True)
+        p.mkdir() if kind == "dir" else p.touch()
+        os.chmod(p, before)
+        layer.setPermission(hfs.Path(str(p)), hfs.permission.FsPermission(f"{mode:o}"))
+        return os.stat(p).st_mode & 0o7777
+
+    cases = [
+        (kind, 0o700, mode)
+        for kind in ("file", "dir")
+        for mode in (0o600, 0o640, 0o644, 0o700, 0o750, 0o755, 0o777)
+    ]
+    cases += [("dir", 0o2755, 0o750), ("file", 0o2755, 0o640), ("dir", 0o755, 0o1777)]
+    got = {c: mode_after(fs.getRaw(), "nio", *c) for c in cases}
+    assert got == {c: mode_after(forking, "ref", *c) for c in cases}
+    assert got["dir", 0o2755, 0o750] == 0o2750
+    assert got["dir", 0o755, 0o1777] == 0o1777
+
+    out = fs.create(hfs.Path(str(tmp_path / "part-0")))
+    out.write(bytearray(b"payload"))
+    out.close()
+    assert (tmp_path / ".part-0.crc").is_file()
 
 
 def test_stateful_query_writes_rocksdb_state(spark, tmp_path):
@@ -354,3 +405,23 @@ def test_attribution_keyed_state_resumes_from_checkpoint(spark, tmp_path):
             assert streamed[c][1] is None
         else:
             assert math.isclose(streamed[c][1], rev, abs_tol=0.02)
+
+
+@pytest.mark.slow
+def test_micro_batches_start_no_process():
+    """DESIGN item 31 as a check: the forks tool drains tumbling_counts
+    and the freshness maintainer over SF_CORRECT and counts the driver
+    JVM's process starts per non-empty micro-batch; neither job may
+    start a ``readlink`` or a ``chmod``."""
+    from .conftest import SF_CORRECT
+
+    repo = Path(__file__).resolve().parent.parent
+    res = subprocess.run(
+        [sys.executable, str(repo / "tools" / "jvm_forks.py"), SF_CORRECT],
+        capture_output=True, text=True, check=True, timeout=600,
+    )
+    report = json.loads(res.stdout.strip().splitlines()[-1])
+    for job, per_batch in report["per_job"].items():
+        assert report["batches"][job] > 0, job
+        for cmd in ("readlink", "chmod"):
+            assert per_batch.get(cmd, 0) == 0, (job, cmd, res.stdout)

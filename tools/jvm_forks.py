@@ -9,9 +9,11 @@ chunk files and drains two jobs over them, one file per trigger: the
 stateful ``tumbling_counts`` job (memory sink, complete mode) and the
 freshness maintainer. Each drain gets a fresh checkpoint. It then reads
 the ``jdk.ProcessStart`` events back with ``jfr print --json`` and
-prints process starts per non-empty micro-batch, by command and job.
-One warm-up drain of each job runs first, and only starts inside the
-measured drains count.
+prints process starts per non-empty micro-batch, by command and job,
+and under each command by its calling frame: the first stack frame
+outside the JDK, Hadoop's ``Shell`` and Hadoop's ``fs`` package, such as
+the Spark method that created the file. One warm-up drain of each job
+runs first, and only starts inside the measured drains count.
 
     python tools/jvm_forks.py [SF_DIR]
 
@@ -19,7 +21,7 @@ measured drains count.
 ``local[N]`` on this process's N usable cores, as the benchmark's does.
 The per-batch counts scale with N: each shuffle partition of the
 stateful job commits its own state changelog. session.py explains
-which checkpoint writes used to fork and why they no longer do.
+which durable writes used to fork and why they no longer do.
 """
 
 from __future__ import annotations
@@ -43,6 +45,10 @@ JOBS = ("tumbling_counts", "freshness")
 RECORDING = "jvm_forks"
 CHUNKS = 8  # staged files, so micro-batches per drain
 DRAINS = 2  # measured drains of each job
+STACK_DEPTH = 64  # frames printed per process start
+# frames that only pass a process start along: the JDK's process API,
+# Hadoop's command runner and Hadoop's filesystem layers
+FORKING_FRAMES = ("java.", "org.apache.hadoop.util.Shell", "org.apache.hadoop.fs.")
 
 
 def _epoch(stamp: str) -> float:
@@ -53,18 +59,45 @@ def _epoch(stamp: str) -> float:
     return t.timestamp() + float(f"0.{frac or 0}")
 
 
-def process_starts(doc: dict, windows: list[tuple[float, float]]) -> Counter:
+def caller(stack: dict | None) -> str:
+    """``Class.method`` of the first frame of a JFR stack trace outside
+    ``FORKING_FRAMES``, or ``?`` when the recorded frames hold none."""
+    for frame in (stack or {}).get("frames", []):
+        cls = frame["method"]["type"]["name"].replace("/", ".")
+        if not cls.startswith(FORKING_FRAMES):
+            return f"{cls}.{frame['method']['name']}"
+    return "?"
+
+
+def process_starts_by_caller(
+    doc: dict, windows: list[tuple[float, float]]
+) -> Counter:
     """Count the process starts of a ``jfr print --json --events
     jdk.ProcessStart`` document that began inside one of ``windows``
-    (epoch-second ``(start, end)`` pairs), by command: the base name of
-    the command line's first word."""
+    (epoch-second ``(start, end)`` pairs), by ``(command, caller)``:
+    the base name of the command line's first word, and ``caller`` of
+    the event's stack trace."""
     counts: Counter = Counter()
     for event in doc["recording"]["events"]:
         v = event["values"]
         t = _epoch(v["startTime"])
         if any(lo <= t <= hi for lo, hi in windows):
-            counts[os.path.basename(v["command"].split()[0])] += 1
+            cmd = os.path.basename(v["command"].split()[0])
+            counts[cmd, caller(v.get("stackTrace"))] += 1
     return counts
+
+
+def by_command(starts: Counter) -> Counter:
+    """Sum ``(command, caller)`` counts by command."""
+    counts: Counter = Counter()
+    for (cmd, _), n in starts.items():
+        counts[cmd] += n
+    return counts
+
+
+def process_starts(doc: dict, windows: list[tuple[float, float]]) -> Counter:
+    """``process_starts_by_caller`` summed by command."""
+    return by_command(process_starts_by_caller(doc, windows))
 
 
 def stage(sf_dir: str, topic: Path, n_chunks: int) -> None:
@@ -161,26 +194,44 @@ def main(argv=None) -> int:
     try:
         windows, batches, jfr = record(args.sf_dir, cpus, work)
         text = subprocess.run(
-            [jfr_bin, "print", "--json", "--stack-depth", "1",
+            [jfr_bin, "print", "--json", "--stack-depth", str(STACK_DEPTH),
              "--events", "jdk.ProcessStart", str(jfr)],
             check=True, capture_output=True, text=True,
         ).stdout
     finally:
         shutil.rmtree(work, ignore_errors=True)
     doc = json.loads(text)
-    counts = {job: process_starts(doc, windows[job]) for job in JOBS}
-    total = sum(counts.values(), Counter())
-    n_all = sum(batches.values())
+    cols = (*JOBS, "all")
+    starts = {job: process_starts_by_caller(doc, windows[job]) for job in JOBS}
+    starts["all"] = sum(starts.values(), Counter())
+    cmds = {col: by_command(starts[col]) for col in cols}
+    n = {**batches, "all": sum(batches.values())}
+
+    def rate(counts: dict, key) -> dict:
+        return {col: counts[col][key] / max(n.get(col, 0), 1) for col in cols}
+
+    def line(head: str, rates: dict, tail: str = "") -> str:
+        return f"{head:<12}" + "".join(f"{rates[c]:>17.2f}" for c in cols) + tail
+
     print(f"local[{cpus}], {DRAINS} measured drains of each job; "
           f"non-empty micro-batches: {batches}")
-    print(f"{'command':<12}" + "".join(f"{j:>17}" for j in JOBS) + f"{'all':>17}")
-    for cmd in sorted(total, key=lambda c: (-total[c], c)):
-        row = [counts[j][cmd] / max(batches.get(j, 0), 1) for j in JOBS]
-        row.append(total[cmd] / max(n_all, 1))
-        print(f"{cmd:<12}" + "".join(f"{x:>17.2f}" for x in row))
+    print(f"{'command':<12}" + "".join(f"{c:>17}" for c in cols) + "  caller")
+    callers: dict = {}
+    total = starts["all"]
+    for cmd in sorted(cmds["all"], key=lambda c: (-cmds["all"][c], c)):
+        print(line(cmd, rate(cmds, cmd)))
+        keys = sorted((k for k in total if k[0] == cmd), key=lambda k: (-total[k], k))
+        for key in keys:
+            print(line("", rate(starts, key), f"  {key[1]}"))
+        callers[cmd] = {key[1]: rate(starts, key)["all"] for key in keys}
     print(json.dumps({
         "batches": batches,
-        "per_batch": {c: total[c] / max(n_all, 1) for c in sorted(total)},
+        "per_batch": {c: rate(cmds, c)["all"] for c in sorted(cmds["all"])},
+        "per_job": {
+            job: {c: rate(cmds, c)[job] for c in sorted(cmds["all"])}
+            for job in JOBS
+        },
+        "callers": callers,
     }))
     return 0
 
