@@ -159,7 +159,12 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 (local supplier volume): revenue from orders where the
     customer and the line's supplier share an ASIA nation. supplier,
     nation, region broadcast; the c=s nationkey equality rides the
-    supplier join condition so no post-join filter remains."""
+    supplier join condition so no post-join filter remains.
+
+    lineitem joins orders first, then customer. Without CBO, Catalyst
+    sizes a join as the product of its inputs, so a customer⋈orders
+    side dwarfs lineitem and lineitem's whole projection would be
+    broadcast (tests/test_plans.py pins that it is not)."""
     c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     o = _t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= _ts("1997-01-01 00:00:00"))
@@ -172,8 +177,8 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey", "n_name")
     r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     return (
-        c.join(o, F.col("c_custkey") == F.col("o_custkey"))
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
+        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(c, F.col("c_custkey") == F.col("o_custkey"))
         .join(
             F.broadcast(s),
             (F.col("l_suppkey") == F.col("s_suppkey"))

@@ -36,3 +36,37 @@ def count_shuffles(df: DataFrame) -> int:
 
 def has_node(df: DataFrame, node_name: str) -> bool:
     return node_name in formatted_plan(df)
+
+
+def _plan_nodes(node):
+    """Pre-order walk of a JVM physical plan, looking through AQE's
+    wrapper (its current plan: the initial one before execution) and
+    through query stages."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _plan_nodes(node.executedPlan())
+        return
+    if name.endswith("QueryStageExec"):
+        yield from _plan_nodes(node.plan())
+        return
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def broadcast_scans(df: DataFrame) -> list[list[str]]:
+    """For each BroadcastExchange in ``df``'s physical plan, the root
+    paths of the file scans in its subtree: what the plan ships to every
+    task. Read off the plan tree, not the explain text."""
+    out = []
+    for node in _plan_nodes(df._jdf.queryExecution().executedPlan()):
+        if node.getClass().getSimpleName() != "BroadcastExchangeExec":
+            continue
+        paths = []
+        for scan in _plan_nodes(node):
+            if scan.getClass().getSimpleName() == "FileSourceScanExec":
+                roots = scan.relation().location().rootPaths()
+                paths += [roots.apply(i).toString() for i in range(roots.size())]
+        out.append(sorted(paths))
+    return out

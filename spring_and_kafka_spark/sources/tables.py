@@ -8,11 +8,13 @@ pruning. Tables per /root/repo/FIXTURES.md.
 
 from __future__ import annotations
 
+import json
 import os
 from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -99,15 +101,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     The resolved (scan + contract) DataFrame is MEMOIZED per
     (SparkSession, sf_dir, table): DataFrames are immutable, so sharing
     one logical subtree across query builds is safe, and it removes the
-    per-build parquet schema-inference + file-listing + contract
-    re-analysis that the r11 interleaved A/B traced the whole bench
-    inflation to (≈half the wall time of sub-second sf0.1 queries was
-    driver-side plan work repeated per build; BASELINE.md r11 row).
-    This is the programmatic equivalent of registering tables in a
-    catalog once instead of re-listing 100 TB of object-store files on
-    every query. Contract: an sf_dir's table files are immutable for
-    the session's lifetime — the engine's data model (tables are
-    snapshot directories; writers create NEW directories). Call
+    per-build file listing + contract re-analysis that the r11
+    interleaved A/B traced the whole bench inflation to (≈half the wall
+    time of sub-second sf0.1 queries was driver-side plan work repeated
+    per build; BASELINE.md r11 row). This is the programmatic equivalent
+    of registering tables in a catalog once instead of re-listing 100 TB
+    of object-store files on every query. Registering launches no Spark
+    job: the scan takes its schema from :func:`parquet_schema`, one
+    footer read on the driver, instead of Spark's one-task inference
+    job. Contract: an sf_dir's table files are immutable for the
+    session's lifetime — the engine's data model (tables are snapshot
+    directories; writers create NEW directories). Call
     clear_table_cache() if a test must violate that."""
     if name not in TABLES:
         raise KeyError(
@@ -142,7 +146,9 @@ def clear_table_cache() -> None:
 def _load_table_uncached(
     spark: SparkSession, sf_dir: str, name: str
 ) -> DataFrame:
-    if name == "events":
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
+    if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
         # The fixture events.ts is parquet TIMESTAMP(NANOS); Spark reads it
         # natively as TIMESTAMP_NTZ with ns truncated to µs — the identical
         # values DuckDB's ns→µs read produces. Read it PLAIN so the type the
@@ -151,18 +157,84 @@ def _load_table_uncached(
         # both NTZ and LTZ. A session that still carries the legacy
         # nanosAsLong conf yields LongType instead — convert that to the
         # same NTZ wall-time (exact under the engine's UTC sessions).
-        from pyspark.sql import types as T
+        df = df.withColumn(
+            "ts",
+            F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
+        )
+    return _enforce_float_contract(df, name)
 
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            df = df.withColumn(
-                "ts",
-                F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
+
+# Parquet summary files, which Spark's inference reads before any data
+# file, in this order.
+_SUMMARIES = ("_common_metadata", "_metadata")
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema ``spark.read.parquet(path)`` infers, read without a
+    Spark job.
+
+    Spark's inference lists ``path`` on the driver, picks one file and
+    reads its footer in a one-task job whose closure carries the whole
+    Hadoop conf (``ParquetFileFormat.mergeSchemasInParallel``), which is
+    ~0.1 s per call on a warm local session. This helper makes the same
+    pick and the same conversion on the driver:
+
+    - the file: ``_common_metadata``, else ``_metadata``, else the first
+      data file in path order, under the listing rule of Spark's file
+      index (names starting with ``_`` or ``.`` are skipped, so
+      ``_SUCCESS`` and ``.crc`` sidecars are never picked);
+    - the footer only, without row groups;
+    - Spark's own ``ParquetFileFormat.readSchemaFromFooter`` with a
+      ``ParquetToSparkSchemaConverter`` built from the session's
+      ``SQLConf``, so the Spark row-metadata key, INT96, NTZ inference and
+      the legacy ``nanosAsLong`` conf resolve exactly as under inference.
+
+    The result is nullable throughout, as every file read reports it.
+    Like Spark's default, it assumes all data files share one schema
+    (``mergeSchema`` off). Raises FileNotFoundError naming ``path`` when
+    it holds no parquet file (a dir with only ``_SUCCESS``, say)."""
+
+    def cls(name: str):
+        """A JVM class by full name: one py4j round trip, where walking
+        ``jvm.org.apache...`` takes one per package segment."""
+        return getattr(spark._jvm, name)
+
+    state = spark._jsparkSession.sessionState()
+    conf = state.newHadoopConf()
+    root = cls("org.apache.hadoop.fs.Path")(path)
+    fs = root.getFileSystem(conf)
+
+    def leaves(st):
+        """(path, name, status) of every file the file index lists."""
+        p = st.getPath()
+        if not st.isDirectory():
+            yield p.toString(), p.getName(), st
+            return
+        for child in fs.listStatus(p):
+            n = child.getPath().getName()
+            hidden = (
+                (n.startswith("_") and "=" not in n)
+                or n.startswith(".")
+                or n.endswith("._COPYING_")
             )
-        return _enforce_float_contract(df, name)
-    return _enforce_float_contract(
-        spark.read.parquet(f"{sf_dir}/{name}.parquet"), name
+            if not hidden or n.startswith(_SUMMARIES):
+                yield from leaves(child)
+
+    files = list(leaves(fs.getFileStatus(root)))
+    if not files:
+        raise FileNotFoundError(f"no parquet file under {path}")
+    rank = {n: i for i, n in enumerate(_SUMMARIES)}
+    _, _, pick = min(files, key=lambda f: (rank.get(f[1], len(rank)), f[0]))
+    pq = "org.apache.spark.sql.execution.datasources.parquet."
+    meta = cls(pq + "ParquetFooterReader").readFooter(
+        cls("org.apache.parquet.hadoop.util.HadoopInputFile").fromStatus(pick, conf),
+        cls("org.apache.parquet.format.converter.ParquetMetadataConverter").SKIP_ROW_GROUPS,
     )
+    schema = cls(pq + "ParquetFileFormat").readSchemaFromFooter(
+        cls("org.apache.parquet.hadoop.Footer")(pick.getPath(), meta),
+        cls(pq + "ParquetToSparkSchemaConverter")(state.conf()),
+    )
+    return T.StructType.fromJson(json.loads(schema.asNullable().json()))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spring_and_kafka_spark.llm.text import fingerprint_expr
-from spring_and_kafka_spark.sources.tables import load_table
+from spring_and_kafka_spark.sources.tables import load_table, parquet_schema
 from spring_and_kafka_spark.streaming.sinks import foreach_batch_sink
 
 
@@ -42,9 +42,8 @@ def stage_document_chunks(
 def read_document_stream(
     spark: SparkSession, stage_dir: str, max_files_per_trigger: int = 2
 ) -> DataFrame:
-    schema = spark.read.parquet(stage_dir).schema
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(parquet_schema(spark, stage_dir))
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .parquet(stage_dir)
     )

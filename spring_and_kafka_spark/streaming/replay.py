@@ -12,7 +12,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from spring_and_kafka_spark.sources.tables import load_table
+from spring_and_kafka_spark.sources.tables import (
+    _enforce_float_contract,
+    load_table,
+    parquet_schema,
+)
 
 
 def stage_event_chunks(
@@ -30,9 +34,8 @@ def read_event_stream(
 ) -> DataFrame:
     """File-source streaming DataFrame over staged event chunks. File
     streams require an explicit schema, so it is read from the staged
-    chunks themselves (``spark.read.parquet(stage_dir).schema``). That
-    lists ``stage_dir`` and reads a parquet footer in a one-task Spark
-    job, on every call, before the stream starts.
+    chunks themselves by :func:`parquet_schema`: one listing of
+    ``stage_dir`` and one footer read on the driver, no Spark job.
 
     The finite-or-null float contract is applied here too: staged
     chunks are already clean (stage_events writes through load_table's
@@ -40,11 +43,8 @@ def read_event_stream(
     external parquet must get the same ingest boundary the batch scan
     guarantees — the normalization is a no-op on clean data and fuses
     into the stream's source projection."""
-    from spring_and_kafka_spark.sources.tables import _enforce_float_contract
-
-    schema = spark.read.parquet(stage_dir).schema
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(parquet_schema(spark, stage_dir))
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .parquet(stage_dir)
     )

@@ -6,7 +6,7 @@ sort, rank-filter pushdown into windows, no cartesian products."""
 from __future__ import annotations
 
 from spring_and_kafka_spark import registry
-from spring_and_kafka_spark.plans import formatted_plan
+from spring_and_kafka_spark.plans import broadcast_scans, formatted_plan
 
 from .conftest import SF_SMOKE
 
@@ -480,6 +480,18 @@ def test_tpch_q2_broadcasts_dims_prunes_before_agg(spark):
     # window partitions by part key — never an empty PARTITION BY
     w = [ln for ln in p.splitlines() if "windowspecdefinition" in ln.lower()]
     assert w and all("l_partkey" in ln for ln in w)
+
+
+def test_tpch_q5_broadcasts_dims_never_lineitem(spark):
+    # lineitem is the fact side: it must stream, never be collected into
+    # a broadcast. Without CBO a customer⋈orders join is sized as the
+    # product of its inputs, so joining those two first made lineitem
+    # look like the small side. The hinted supplier/nation/region and
+    # the filtered orders and customer are the broadcast sides.
+    shipped = broadcast_scans(SPECS["q_tpch_q5"].fn(spark, SF_SMOKE))
+    tables = [{path.rsplit("/", 1)[-1] for path in b} for b in shipped]
+    assert {"supplier.parquet"} in tables and {"region.parquet"} in tables
+    assert all("lineitem.parquet" not in t for t in tables), tables
 
 
 def test_tpch_q11_single_fact_shuffle_scalar_broadcast(spark):
