@@ -13,9 +13,14 @@ subplans). It picks the mechanism by deployment:
 - cluster without a checkpoint dir → ``persist(MEMORY_AND_DISK)`` + a
   forcing count: keeps lineage (recompute on executor loss is slow but
   correct) rather than risking irrecoverable localCheckpoint blocks.
+
+`message_edges`, `fixpoint` and `min_step` are the one kernel of the
+synchronized fixed-point loops (connected components, BFS, k-core, LPA).
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -141,6 +146,114 @@ def materialize(df: DataFrame) -> DataFrame:
     pinned = df.persist(StorageLevel.MEMORY_AND_DISK)
     pinned.count()
     return pinned
+
+
+def sym_edges(pairs: DataFrame) -> DataFrame:
+    """(src, dst) symmetric directed edges from a (u, v) undirected
+    edge table: each row exploded into both directions in ONE pass. A
+    union of two projections would plan an unmaterialized ``pairs``
+    subtree twice."""
+    return pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("u").alias("src"), F.col("v").alias("dst")),
+                F.struct(F.col("v").alias("src"), F.col("u").alias("dst")),
+            )
+        ).alias("e")
+    ).select("e.src", "e.dst")
+
+
+def message_edges(pairs: DataFrame, nodes: DataFrame | None = None) -> DataFrame:
+    """The materialized (src, dst, w) message table of a `fixpoint` loop:
+    both directions of every (u, v) pair at w = 1, plus one w = 0
+    self-loop per ``nodes`` row (column ``node``; default: the pairs'
+    distinct endpoints). The self-loop delivers a node's own state as a
+    message, so a round needs no join back onto the state frame. The one
+    Union stays inside this materialize: a Union inside an iterated plan
+    trips Spark 4.1's UnionBase.rewriteConstraints on some input shapes
+    (NoSuchElementException, seen on tests/test_dedup.py's path graph)."""
+    sym = sym_edges(pairs)
+    if nodes is None:
+        nodes = sym.select(F.col("src").alias("node")).distinct()
+    w = F.lit(1).cast("long").alias("w")
+    return materialize(
+        sym.select("src", "dst", w).unionByName(
+            nodes.select(
+                F.col("node").alias("src"),
+                F.col("node").alias("dst"),
+                F.lit(0).cast("long").alias("w"),
+            )
+        )
+    )
+
+
+Step = Callable[[DataFrame, DataFrame, bool], DataFrame]
+
+
+def fixpoint(
+    edges: DataFrame, state: DataFrame, step: Step, blocks: int, block: int
+) -> tuple[DataFrame, bool]:
+    """Run a synchronized fixed-point loop over a `message_edges` table;
+    returns ``(state, converged)``.
+
+    ``step(edges, state, flag)`` is one round. Each block runs
+    ``block - 1`` lazy rounds and then one flagged round whose output
+    carries a boolean ``_ch`` column; that output is materialized (the
+    lineage cut) and probed once, and the loop stops when no row is
+    flagged. A step's round references the state frame once, so the
+    lazy block's plan depth is linear in ``block``. For a monotone
+    update (min labels, distances, a shrinking alive set) "the last
+    round changed nothing" proves its input was already the fixed
+    point, and the rounds after a mid-block fixed point are no-ops.
+
+    Cap parity: at most ``blocks * block`` rounds run. Early stop
+    happens only at a fixed point of the round (or, for a step whose
+    flag compares across the block, of the block), where every later
+    block is a no-op, so the result always equals the
+    ``blocks * block``-round iterate a SQL oracle unrolls; when the cap
+    binds, ``converged`` is False and both engines hold the same
+    partial iterate.
+
+    The driver holds only the probe's count. Each replaced block is
+    unpersisted, and ``edges`` when the loop ends: on `materialize`'s
+    persist fallback, at most the returned block stays cached."""
+    prev, converged = state, False
+    try:
+        for _ in range(blocks):
+            for _k in range(block - 1):
+                state = step(edges, state, False)
+            new = materialize(step(edges, state, True))
+            converged = new.filter(F.col("_ch")).limit(1).count() == 0
+            prev.unpersist()
+            prev, state = new, new.drop("_ch")
+            if converged:
+                break
+    finally:
+        edges.unpersist()
+    return state, converged
+
+
+def min_step(col: str, msg: Column) -> Step:
+    """A `fixpoint` step: ``col`` becomes the min of ``msg`` over a
+    node's incoming messages, its own (w = 0) included, so it never
+    rises. ``msg`` is evaluated on the edges ⋈ state rows (``w`` and the
+    sender's ``col`` are in scope). The join is null-safe, so a NULL
+    node still receives its own message; min() skips NULLs, so a NULL
+    state is a faithful ∞. The flagged round recovers the pre-round
+    value from the own message, so its ``_ch`` needs no extra join."""
+
+    def step(edges: DataFrame, state: DataFrame, flag: bool) -> DataFrame:
+        g = edges.join(state, edges.src.eqNullSafe(state.node)).groupBy(
+            F.col("dst").alias("node")
+        )
+        if not flag:
+            return g.agg(F.min(msg).alias(col))
+        own = F.max(F.when(F.col("w") == 0, F.col(col)))
+        return g.agg(F.min(msg).alias(col), own.alias("_own")).select(
+            "node", col, (~F.col(col).eqNullSafe(F.col("_own"))).alias("_ch")
+        )
+
+    return step
 
 
 def spread(df: DataFrame) -> DataFrame:

@@ -28,7 +28,10 @@ from pyspark.sql import Window as W
 
 from spring_and_kafka_spark.exec_utils import (
     array_pairs,
+    fixpoint,
     materialize,
+    message_edges,
+    min_step,
     ratio6,
     spread,
 )
@@ -743,165 +746,31 @@ def connected_components(
     nodes: (node BIGINT); edges: (a, b) undirected pairs. Returns
     (node, component) where component = min node id reachable.
 
-    PRECONDITION (ADVICE r17): ``nodes`` must cover every edge endpoint
-    (nodes ⊇ {a} ∪ {b}). The r17 groupBy-dst propagation emits a label
-    row for every node that RECEIVES a message, so an endpoint missing
-    from ``nodes`` would still appear in the output (the pre-r17
-    left-join-onto-labels form silently confined output to ``nodes``).
-    Every current caller passes the full corpus/node universe, which by
-    construction contains all pair endpoints; a future caller with stray
-    edges must semi-join them against ``nodes`` first if it wants the
-    confinement behavior.
+    PRECONDITION: ``nodes`` must cover every edge endpoint (nodes ⊇
+    {a} ∪ {b}). A round emits a label row for every node that RECEIVES
+    a message, so an endpoint missing from ``nodes`` would still appear
+    in the output. Every caller passes the full corpus, which contains
+    all pair endpoints; a caller with stray edges must semi-join them
+    against ``nodes`` first.
 
-    Iterative DataFrame loop (r17 self-loop message form, shared with
-    q_graph_cc): the materialized edge table carries one w = 0
-    self-loop per node next to the symmetrized pairs, so each round is
-    ONE join of labels across the sparse edge list plus ONE per-node
-    min — the self-loop delivers "keep own label" through the same
-    join, no join-back onto the label frame. Stops when the last round
-    of a block changed nothing (driver-side flag, exact because labels
-    are monotone non-increasing). Rounds = graph diameter — tiny for
-    dedup clusters (near-cliques, diameter ≤ 2). Deterministic.
-
-    History of this shape: round 5 tried self-loop folding WITHOUT the
-    per-round change flag (a fixed unroll that always paid unroll+1
-    rounds, re-verified each block against the block input) and it
-    A/B'd at parity with the join-back loop, so round 6 reverted to the
-    simpler form. The r17 rework differs in the two places that made
-    the earlier attempt a wash: the flag rides in the block's last
-    round (adaptive early stop at exactly diameter+1 rounds, one
-    materialize+count for a diameter-2 graph), and the label frame
-    enters each round's plan once, keeping the lazy block's plan depth
-    linear (the join-back form doubled its subtree per round). A/B
-    through q_dedup_clusters_lsh at sf0.1: med 4.02 s vs 4.20 s, with
-    the same LSH front end. Pagerank keeps its nodes-join unroll: its
-    fan table is dense and its round count fixed, so there the
-    dangling-node join is a cheap broadcast and routing |V| zero-rows
-    through the per-round exchange measured ~80% slower
-    (operators/graph.py q_graph_pagerank note).
-
-    Iteration discipline: edges are persisted once and labels are
-    materialized each round (exec_utils.materialize — localCheckpoint on
-    local mode, reliable checkpoint/persist on a cluster) — without this,
-    round k's action would lazily recompute the whole upstream pipeline
-    (pair detection included) k times over, and the plan lineage would
-    grow unboundedly."""
-    # EAGER cut (r17): with two lazy propagation rounds per block, sym
-    # appears twice in one job's plan — a lazily-persisted sym would
-    # race its own cache fill and compute the (expensive, themselves
-    # unmaterialized) upstream pair pipelines twice. One explode pass
-    # symmetrizes without planning the edge subtree per union side.
-    #
-    # r17 change 8 (self-loop message form — see q_graph_cc for the
-    # full argument): the checkpointed edge table carries one w = 0
-    # SELF-LOOP per node next to the w = 1 real edges, so each round's
-    # min() over the join messages alone reproduces
-    # least(own, coalesce(neighbor_min, own)) bit for bit — one join +
-    # one map-side-combinable agg per round, no join-back, and the
-    # label frame enters each round's plan exactly once. The flag round
-    # recovers the pre-round label from the w = 0 message, so the
-    # change flag costs no join either. A union of the label rows into
-    # the aggregate computes the same value but puts a Union inside the
-    # iterated plan, which trips Spark 4.1.2's
-    # UnionBase.rewriteConstraints on some input shapes (reproduced in
-    # tests/test_dedup.py's path-graph fixture); the one Union here is
-    # inside the materialize and executes exactly once. The join is
-    # null-safe so a NULL node's self-loop still returns it: all NULL
-    # nodes collapse to ONE (NULL, NULL) label row — exactly the
-    # oracle's GROUP BY node over the reach seeds (doc_id is an
-    # identity key, unique and non-null on every fixture and sweep, so
-    # this branch is unobservable there; it exists so degenerate inputs
-    # match the oracle rather than silently dropping rows).
-    sym = materialize(
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("a").alias("src"),
-                        F.col("b").alias("dst"),
-                        F.lit(1).cast("long").alias("w"),
-                    ),
-                    F.struct(
-                        F.col("b").alias("src"),
-                        F.col("a").alias("dst"),
-                        F.lit(1).cast("long").alias("w"),
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst", "e.w")
-        .unionByName(
-            nodes.select(
-                F.col("node").alias("src"),
-                F.col("node").alias("dst"),
-                F.lit(0).cast("long").alias("w"),
-            )
-        )
+    Contract: the shared fixpoint kernel (exec_utils.fixpoint with
+    min_step) runs blocks of 3 rounds, at most ``max_iter`` rounds
+    rounded up to whole blocks; dedup clusters are near-cliques
+    (diameter ≤ 2), so one block converges. A loop that does not
+    converge raises instead of returning labels mid-propagation. The
+    join is null-safe, so all NULL nodes collapse to ONE (NULL, NULL)
+    row — the oracle's GROUP BY node over the reach seeds."""
+    msgs = message_edges(
+        edges.select(F.col("a").alias("u"), F.col("b").alias("v")), nodes
     )
-    # r0 falls out of the checkpointed edge table for free (w = 0 rows
-    # are exactly the node set) — the separate labels materialize job
-    # the old form paid is gone
-    labels = sym.filter(F.col("w") == 0).select(
+    labels = msgs.filter(F.col("w") == 0).select(
         F.col("src").alias("node"), F.col("src").alias("component")
     )
-    prev = labels
-    converged = False
-
-    def propagate(lab_df: DataFrame, with_flag: bool) -> DataFrame:
-        j = sym.join(lab_df, sym.src.eqNullSafe(lab_df.node))
-        if not with_flag:
-            return j.groupBy(F.col("dst").alias("node")).agg(
-                F.min("component").alias("component")
-            )
-        return (
-            j.groupBy(F.col("dst").alias("node"))
-            .agg(
-                F.min("component").alias("component"),
-                F.max(F.when(F.col("w") == 0, F.col("component"))).alias(
-                    "_own"
-                ),
-            )
-            .select(
-                "node",
-                "component",
-                (F.col("component") < F.col("_own")).alias("__changed"),
-            )
-        )
-
-    # THREE propagation rounds per materialize + convergence check (the
-    # q_graph_cc block discipline, r17; the self-loop form keeps the
-    # lazy unroll's plan depth linear in the block): dedup cluster
-    # graphs have diameter ≤ 2, so rounds 1-2 reach the fixed point and
-    # the third (flag) round detects it — ONE materialize + count for
-    # the whole clustering instead of the 2-round block's two
-    # (interleaved A/B through q_dedup_clusters_lsh at sf0.1: med
-    # 4.02 s vs 4.20 s). Convergence is decided by the block's LAST
-    # round's own change flag: labels are monotone non-increasing, so
-    # "the last round changed nothing" means its input was already a
-    # fixed point, and the returned labels equal it. (If an earlier
-    # round converged, later in-block rounds are no-ops and the flag is
-    # still false — detected with zero extra joins.)
-    try:
-        for _ in range(max(1, (max_iter + 2) // 3)):
-            stepped = propagate(labels, with_flag=False)
-            stepped = propagate(stepped, with_flag=False)
-            chk = materialize(propagate(stepped, with_flag=True))
-            changed = chk.filter(F.col("__changed")).limit(1).count()
-            # previous block's blocks are dead once chk is computed; on
-            # materialize's persist fallback (cluster without checkpoint
-            # dir) skipping this would stack one cached copy per block
-            prev.unpersist()
-            prev = chk
-            labels = chk.drop("__changed")
-            if changed == 0:
-                converged = True
-                break
-    finally:
-        sym.unpersist()
+    step = min_step("component", F.col("component"))
+    labels, converged = fixpoint(
+        msgs, labels, step, max(1, (max_iter + 2) // 3), 3
+    )
     if not converged:
-        # a silent fall-through here would return labels mid-propagation
-        # (wrong components on graphs whose diameter exceeds the round
-        # budget) — fail loudly; callers raise max_iter instead
         raise RuntimeError(
             f"connected_components did not converge within {max_iter} "
             f"propagation rounds; raise max_iter for graphs of this diameter"
@@ -1109,7 +978,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates at a lower band threshold cover the containment search)."""
     ov = shingle_overlap(planted_corpus(spark, sf_dir), 3, _SHINGLE_DF_CAP)
     # both directions from the one a < b overlap in a single pass (the
-    # graph._sym_edges explode: a union of two projections would plan
+    # exec_utils.sym_edges explode: a union of two projections would plan
     # the overlap subtree twice)
     both = ov.select(
         "c",

@@ -1,10 +1,9 @@
-"""Graph analytics over relational data: integer-exact PageRank on the
-part co-purchase graph.
+"""Graph analytics over relational data on the part co-purchase graph.
 
-The dedup family already covers the other canonical iterative graph op
-(connected components, llm/dedup.py); this module adds the ranked-
-importance side. Both follow the same iterative discipline: per-round
-`materialize` to cut lineage, driver holds only loop COUNTERS, never data.
+The convergence loops (cc, k-core, BFS, LPA) and dedup's connected
+components run on one kernel, exec_utils.fixpoint over a
+message_edges table: lineage cut per block, the driver holds only loop
+COUNTERS, never data. PageRank's FIXED rounds unroll into one lazy job.
 
 Why integer arithmetic: a float PageRank can never hash-match across
 engines — per-node sums run in engine-specific order and float addition
@@ -25,13 +24,34 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from spring_and_kafka_spark.exec_utils import array_pairs, materialize
+from spring_and_kafka_spark.exec_utils import (
+    array_pairs,
+    fixpoint,
+    materialize,
+    message_edges,
+    min_step,
+    sym_edges,
+)
 from spring_and_kafka_spark.registry import register
 from spring_and_kafka_spark.sources.tables import load_table
 
 _PR_ITERS = 5
 _PR_SCALE = 1_000_000  # rank 1.0 == 1e6
 _PR_BASE = 150_000  # (1 - d) * scale, d = 0.85
+
+
+# The thinned co-order edge universe (u < v, sharing >= 2 orders): the
+# SQL twin of _co_order_und, shared by every graph oracle but pagerank's.
+_CO_ORDER_EDGES_SQL = """items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+    eh AS (
+      SELECT a.l_partkey AS u, b.l_partkey AS v
+      FROM items a JOIN items b
+        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+      GROUP BY 1, 2 HAVING count(*) >= 2
+    )"""
+# both directions of eh: the SQL twin of exec_utils.sym_edges
+_SYM_EDGES_SQL = """edges AS MATERIALIZED (SELECT u AS src, v AS dst FROM eh
+              UNION ALL SELECT v, u FROM eh)"""
 
 
 def _pr_iter_sql(k: int) -> str:
@@ -154,21 +174,13 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_graph_triangles",
-    oracle="""
-    WITH items AS (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ),
-    edges AS (   -- co-order graph, thinned to repeat co-occurrences
-      SELECT a.l_partkey AS u, b.l_partkey AS v
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2 HAVING count(*) >= 2
-    )
-    SELECT CAST((SELECT count(*) FROM edges) AS BIGINT) AS n_edges,
+    oracle=f"""
+    WITH {_CO_ORDER_EDGES_SQL}
+    SELECT CAST((SELECT count(*) FROM eh) AS BIGINT) AS n_edges,
            CAST(count(*) AS BIGINT) AS n_triangles
-    FROM edges e1
-    JOIN edges e2 ON e2.u = e1.v
-    JOIN edges e3 ON e3.u = e1.u AND e3.v = e2.v
+    FROM eh e1
+    JOIN eh e2 ON e2.u = e1.v
+    JOIN eh e3 ON e3.u = e1.u AND e3.v = e2.v
     """,
 )
 def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -232,19 +244,11 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_graph_degree",
-    oracle="""
-    WITH items AS (
-      SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ),
-    edges AS (
-      SELECT a.l_partkey AS u, b.l_partkey AS v
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2 HAVING count(*) >= 2
-    ),
+    oracle=f"""
+    WITH {_CO_ORDER_EDGES_SQL},
     deg AS (
       SELECT n, count(*) AS d FROM (
-        SELECT u AS n FROM edges UNION ALL SELECT v FROM edges
+        SELECT u AS n FROM eh UNION ALL SELECT v FROM eh
       ) GROUP BY n
     )
     SELECT CAST(d AS BIGINT) AS degree,
@@ -300,15 +304,8 @@ def _cc_iter_sql(k: int) -> str:
 @register(
     "q_graph_cc",
     oracle=f"""
-    WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    eh AS (
-      SELECT a.l_partkey AS u, b.l_partkey AS v
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2 HAVING count(*) >= 2
-    ),
-    edges AS MATERIALIZED (SELECT u AS src, v AS dst FROM eh
-              UNION ALL SELECT v, u FROM eh),
+    WITH {_CO_ORDER_EDGES_SQL},
+    {_SYM_EDGES_SQL},
     nodes AS (SELECT DISTINCT src AS node FROM edges),
     r0 AS MATERIALIZED (SELECT node, node AS lab FROM nodes),
     {','.join(_cc_iter_sql(k) for k in range(1, _CC_ROUNDS + 1))}
@@ -340,102 +337,27 @@ def q_graph_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.01), so on shipped data the cap never binds.
 
     Shape at 100 TB: per-round cost is one edges⋈labels shuffle on the
-    node key plus a map-side-combined min-groupBy — the sparse-edge
-    iterative discipline of llm/dedup.py (labels materialized per
-    round to cut lineage, the driver holds only the loop counter and a
-    1-row changed count; synchronized propagation needs diameter
-    rounds, the documented trade vs pointer-jumping's denser
-    intermediate edge sets). Integer labels: min() is order-free and
-    exact, so the hash check is exact, not approximate.
+    node key plus a map-side-combined min-groupBy, run by the shared
+    fixpoint kernel (exec_utils.fixpoint: 2 blocks of 8 rounds, lineage
+    cut per block, the driver holds only a 1-row probe; synchronized
+    propagation needs diameter rounds, the documented trade vs
+    pointer-jumping's denser intermediate edge sets). Integer labels:
+    min() is order-free and exact, so the hash check is exact, not
+    approximate.
 
     Reference parity anchor: the reference app has no graph surface at
     all (src/main/java/jc/DemoApplication.java is a Kafka pipe);
     this extends the engine's beyond-the-reference analytics family.
     """
-    # r17 change 8 (guide §2.4, self-loop message form): each round used
-    # to LEFT-JOIN the aggregated neighbor-min back onto the label table
-    # — least(own, coalesce(min, own)). The same value is min() over the
-    # messages alone once the edge table carries one SELF-LOOP per node
-    # (built ONCE, outside the loop): the self-loop delivers the node's
-    # own label as a message, so a round is one join + one map-side-
-    # combinable aggregate — no join-back, and the label frame enters
-    # each round's plan exactly once (the old form referenced it twice,
-    # doubling the lazy subtree per unrolled round). Per-round labels
-    # are bit-identical (exact BIGINT min is order-free; a node with no
-    # neighbor message keeps its self-delivered label — exactly the
-    # oracle's coalesce), so the unroll ≡ the oracle's 16 chained CTEs.
-    # A plain union of label rows into the aggregate computes the same
-    # value but plants a Union inside the iterated plan, which trips
-    # Spark 4.1.2's UnionBase.rewriteConstraints on some input shapes
-    # (java.util.NoSuchElementException: key not found — reproduced in
-    # tests/test_dedup.py's path-graph fixture); the self-loop rows
-    # keep every iterated plan Union-free. The one Union here is inside
-    # the materialize and executes exactly once.
-    und = materialize(_co_order_und(spark, sf_dir))
-    sym = _sym_edges(und)
-    edges = materialize(
-        sym.select("src", "dst", F.lit(1).cast("long").alias("w"))
-        .unionByName(
-            sym.select("src")
-            .distinct()
-            .select(
-                "src", F.col("src").alias("dst"), F.lit(0).cast("long").alias("w")
-            )
-        )
-    )
-    # r0 falls out of the checkpointed edge table for free: the w = 0
-    # rows are exactly one row per node
+    edges = message_edges(materialize(_co_order_und(spark, sf_dir)))
     labels = edges.filter(F.col("w") == 0).select(
         F.col("src").alias("node"), F.col("src").alias("lab")
     )
-
-    def propagate(lab_df: DataFrame, with_flag: bool = False) -> DataFrame:
-        j = edges.join(lab_df, edges.src == lab_df.node)
-        if not with_flag:
-            return j.groupBy(F.col("dst").alias("node")).agg(
-                F.min("lab").alias("lab")
-            )
-        # final round of a block: the self-loop message (w = 0) IS the
-        # pre-round label, so the change flag needs no join against the
-        # block input — and, because labels are monotone non-increasing,
-        # "the LAST round changed nothing" already proves its input was
-        # a fixed point, stopping one whole block earlier than the old
-        # block-input comparison whenever the fixed point lands inside
-        # a block (sf0.1 converges at round 7: 2 blocks, was 3).
-        return (
-            j.groupBy(F.col("dst").alias("node"))
-            .agg(
-                F.min("lab").alias("lab"),
-                F.max(F.when(F.col("w") == 0, F.col("lab"))).alias("_own"),
-            )
-            .select(
-                "node", "lab", (F.col("lab") < F.col("_own")).alias("_ch")
-            )
-        )
-
-    # EIGHT propagation rounds per materialize + convergence check
-    # (2 x 8 = the oracle's 16-round cap exactly). The r12/r17 block
-    # tuning history: the OLD two-reference propagate doubled its lazy
-    # subtree per round, so 8-round blocks exploded optimizer time
-    # (10-14 s) and 4 was the sweet spot; the self-loop form references
-    # the label frame once per round — plan depth is LINEAR in the
-    # block — and the re-run A/B (sf0.1, warm, 3 reps) moved the
-    # optimum: block-8 med 3.54 s vs block-4 med 4.03 s vs block-16
-    # med 4.94 s (one 16-round block overshoots the ~round-7 fixed
-    # point by 8 wasted lazy rounds before the flag can stop it).
-    # Over-stepping a mid-block fixed point stays free: converged
-    # labels are a fixed point, so extra propagations inside the block
-    # are no-ops (same argument that makes early-stop ≡ the oracle
-    # unroll); the flag in the block's LAST round detects it.
-    for _ in range(_CC_ROUNDS // 8):
-        stepped = labels.select("node", "lab")
-        for _k in range(7):
-            stepped = propagate(stepped)
-        new = materialize(propagate(stepped, with_flag=True))
-        changed = new.filter(F.col("_ch")).limit(1).count()
-        labels = new.drop("_ch")
-        if changed == 0:
-            break
+    # block-8 beat block-4 and one 16-round block at sf0.1 (3.54 vs
+    # 4.03 vs 4.94 s): the fixed point lands near round 7
+    labels, _ = fixpoint(
+        edges, labels, min_step("lab", F.col("lab")), _CC_ROUNDS // 8, 8
+    )
     return labels.groupBy(F.col("lab").alias("component")).agg(
         F.count(F.lit(1)).alias("n_nodes")
     )
@@ -461,15 +383,8 @@ def _kcore_iter_sql(k: int) -> str:
 @register(
     "q_graph_kcore",
     oracle=f"""
-    WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    eh AS (
-      SELECT a.l_partkey AS u, b.l_partkey AS v
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2 HAVING count(*) >= 2
-    ),
-    edges AS MATERIALIZED (SELECT u AS src, v AS dst FROM eh
-              UNION ALL SELECT v, u FROM eh),
+    WITH {_CO_ORDER_EDGES_SQL},
+    {_SYM_EDGES_SQL},
     a0 AS MATERIALIZED (SELECT DISTINCT src AS node, CAST(0 AS BIGINT) AS deg
                         FROM edges),
     {','.join(_kcore_iter_sql(k) for k in range(1, _KCORE_ROUNDS + 1))}
@@ -490,97 +405,56 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Parity by fixed point (the q_graph_cc trick verbatim): the oracle
     unrolls exactly {_KCORE_ROUNDS} peel rounds; Spark iterates the
     identical recurrence but may stop once the alive set stops
-    shrinking — the alive set is MONOTONE decreasing, so an unchanged
-    count across a block means every round in it was a no-op and all
-    later rounds are too; the reported deg is a pure function of the
+    shrinking — the alive set is MONOTONE decreasing, so a round in
+    which nobody dies proves its input was the fixed point and all
+    later rounds are no-ops; the reported deg is a pure function of the
     alive set, so it is stable at the fixed point with it. If a
     pathological graph needed more than {_KCORE_ROUNDS} rounds, both
     engines return the same round-{_KCORE_ROUNDS} partial peel (a
     documented cap, not an assertion); on shipped fixtures the deepest
     measured peel is 6 rounds.
 
-    Shape at 100 TB: per-round cost is two semi-join-shaped hash joins
-    of the edge table against the (small, shrinking) alive set plus one
-    map-side-combined count — edges are materialized ONCE and never
-    rebuilt; the iterative discipline (lineage cut per block, driver
-    holds only a count) is the same as q_graph_cc. SIX peel rounds
-    run per materialize block (2 blocks at the {_KCORE_ROUNDS}-round
-    cap; the self-loop form keeps the lazy unroll's plan depth linear
-    in the block) — the alive table is small enough that job overhead,
-    not data, dominates a round, the same measurement that set
-    q_graph_cc's cadence.
+    Shape at 100 TB: per-round cost is one semi-join-shaped hash join
+    of the message table against the (small, shrinking) alive set plus
+    one map-side-combined aggregate; the edges are materialized ONCE,
+    and the shared fixpoint kernel runs 2 blocks of 6 peel rounds (the
+    alive table is small enough that job overhead, not data, dominates
+    a round, the measurement that set q_graph_cc's cadence).
 
     Reference parity anchor: the reference app has no graph surface
     (src/main/java/jc/DemoApplication.java is a Kafka pipe); this
     extends the beyond-the-reference analytics family.
     """
-    # r17 change 8 (self-loop message form — see q_graph_cc for the
-    # Union-avoidance argument): the old peel joined the edge table
-    # against the alive set TWICE (once per endpoint). With one w = 0
-    # self-loop per node in the edge table, the same degree falls out of
-    # ONE semi-shaped join: every edge whose src is alive sends its
-    # weight to its dst, sum(w) counts exactly the alive real neighbors
-    # (the self-loop adds 0), and min(w) = 0 marks the nodes whose OWN
-    # self-loop fired — i.e. alive membership — so dead dst rows drop on
-    # that filter without a second join. On the symmetric edge table,
-    # # in-neighbors alive == # out-neighbors alive, so deg is
-    # bit-identical to the oracle's two-join count; an alive node with
-    # zero alive neighbors keeps its self-loop row and peels on
-    # deg = 0 < K, exactly as it vanished from the old groupBy. The
-    # flag round reports would-be deaths instead of filtering them, so
-    # convergence is read per ROUND, not per block — "nobody died in
-    # the block's last round" proves the alive set was already a fixed
-    # point (monotone decreasing), one block earlier than the old
-    # whole-block count comparison when the fixed point lands mid-block
-    # (sf0.1 peels dry at round 6: 2 blocks, was 3) — and the per-block
-    # full count() job disappears with it.
-    und = materialize(_co_order_und(spark, sf_dir))
-    sym = _sym_edges(und)
-    edges = materialize(
-        sym.select("src", "dst", F.lit(1).cast("long").alias("w"))
-        .unionByName(
-            sym.select("src")
-            .distinct()
-            .select(
-                "src", F.col("src").alias("dst"), F.lit(0).cast("long").alias("w")
-            )
-        )
-    )
+    edges = message_edges(materialize(_co_order_und(spark, sf_dir)))
+    # every node starts alive; a round reads only membership, so the
+    # seed deg is just the alive mark
     alive = edges.filter(F.col("w") == 0).select(
-        F.col("src").alias("node"), F.lit(0).cast("long").alias("deg")
+        F.col("src").alias("node"), F.lit(_KCORE_K).cast("long").alias("deg")
     )
 
-    def peel(alive_df: DataFrame, with_flag: bool = False) -> DataFrame:
+    def peel(edges: DataFrame, alive: DataFrame, flag: bool) -> DataFrame:
+        # drop the input's dead rows (the flagged round keeps them to
+        # report them). One join: every alive src sends w to its dst;
+        # sum(w) counts the alive real neighbors (the self-loop adds 0)
+        # and min(w) = 0 keeps only dsts whose own self-loop fired, i.e.
+        # alive nodes. On the symmetric table that is the oracle's
+        # two-join count bit for bit.
+        alive = alive.filter(F.col("deg") >= _KCORE_K)
         g = (
-            edges.join(alive_df, edges.src == alive_df.node)
-            .groupBy(F.col("dst").alias("gnode"))
-            .agg(F.sum("w").alias("deg"), F.min("w").alias("_mw"))
+            edges.join(alive, edges.src == alive.node)
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.sum("w").cast("long").alias("deg"), F.min("w").alias("_mw"))
             .filter(F.col("_mw") == 0)
+            .select("node", "deg")
         )
-        if with_flag:
-            return g.select(
-                F.col("gnode").alias("node"),
-                F.col("deg").cast("long").alias("deg"),
-                (F.col("deg") < _KCORE_K).alias("_die"),
-            )
-        return g.filter(F.col("deg") >= _KCORE_K).select(
-            F.col("gnode").alias("node"), F.col("deg").cast("long").alias("deg")
-        )
+        return g.withColumn("_ch", F.col("deg") < _KCORE_K) if flag else g
 
-    # SIX peel rounds per materialize block (2 x 6 = the 12-round cap;
-    # the q_graph_cc block-retuning argument — linear plan depth under
-    # the self-loop form — re-measured here: block-6 med 3.10 s vs
-    # block-4 med 3.46 s vs one 12-round block med 3.62 s at sf0.1)
-    for _ in range(_KCORE_ROUNDS // 6):
-        stepped = alive
-        for _k in range(5):
-            stepped = peel(stepped)
-        new = materialize(peel(stepped, with_flag=True))
-        changed = new.filter(F.col("_die")).limit(1).count()
-        alive = new.filter(~F.col("_die")).drop("_die")
-        if changed == 0:
-            break
-    return alive.select("node", F.col("deg").cast("long").alias("core_deg"))
+    # block-6 beat block-4 and one 12-round block at sf0.1 (3.10 vs
+    # 3.46 vs 3.62 s)
+    alive, _ = fixpoint(edges, alive, peel, _KCORE_ROUNDS // 6, 6)
+    return alive.filter(F.col("deg") >= _KCORE_K).select(
+        "node", F.col("deg").alias("core_deg")
+    )
 
 
 _JACCARD_CENTER_CAP = 256  # wedge hub guard (see q_graph_jaccard)
@@ -589,15 +463,8 @@ _JACCARD_CENTER_CAP = 256  # wedge hub guard (see q_graph_jaccard)
 @register(
     "q_graph_jaccard",
     oracle=f"""
-    WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    eh AS (
-      SELECT a.l_partkey AS u, b.l_partkey AS v
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2 HAVING count(*) >= 2
-    ),
-    edges AS MATERIALIZED (SELECT u AS src, v AS dst FROM eh
-              UNION ALL SELECT v, u FROM eh),
+    WITH {_CO_ORDER_EDGES_SQL},
+    {_SYM_EDGES_SQL},
     deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS d
             FROM edges GROUP BY 1),
     ecap AS (
@@ -676,7 +543,7 @@ def q_graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over-cap hub's list is collected then dropped — 8 bytes × degree
     # in one aggregation buffer, never a pair fan-out.
     grp = materialize(
-        _sym_edges(eh)
+        sym_edges(eh)
         .groupBy("src")
         .agg(F.array_sort(F.collect_set("dst")).alias("ds"))
     )
@@ -737,15 +604,8 @@ def _bfs_iter_sql(k: int) -> str:
 @register(
     "q_graph_bfs",
     oracle=f"""
-    WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    eh AS (
-      SELECT a.l_partkey AS u, b.l_partkey AS v
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2 HAVING count(*) >= 2
-    ),
-    edges AS MATERIALIZED (SELECT u AS src, v AS dst FROM eh
-              UNION ALL SELECT v, u FROM eh),
+    WITH {_CO_ORDER_EDGES_SQL},
+    {_SYM_EDGES_SQL},
     nodes AS (SELECT DISTINCT src AS node FROM edges),
     r0 AS MATERIALIZED (
       SELECT node, CASE WHEN node < {_BFS_ANCHOR}
@@ -779,89 +639,22 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     faithful ∞.
 
     Shape at 100 TB: per-round cost is one edges⋈frontier shuffle plus
-    a map-side-combined min-groupBy — the sparse iterative discipline
-    shared with CC (SIX relaxation rounds per materialize block, 2
-    blocks at the cap; lineage cut per block; the driver holds only a
-    changed count). Synchronized relaxation needs eccentricity rounds —
-    the documented trade vs pointer-doubling's denser intermediates."""
-    # r17 change 8 (self-loop message form — see q_graph_cc for the full
-    # argument, including why a Union inside the iterated plan is
-    # avoided): the edge table carries one w = 0 self-loop per node and
-    # w = 1 real edges, so a relaxation round is min(dist + w) over the
-    # join messages alone — the self-loop delivers the node's own
-    # distance unchanged, reproducing least(dist, md) bit for bit. NULL
-    # is still a faithful ∞: NULL + w = NULL, min() skips NULLs in both
-    # engines, and an all-NULL group stays NULL. The flag round recovers
-    # the pre-round distance from the w = 0 message (null-safe
-    # inequality), stopping one block earlier when the fixed point
-    # lands mid-block.
-    und = materialize(_co_order_und(spark, sf_dir))
-    sym = _sym_edges(und)
-    edges = materialize(
-        sym.select("src", "dst", F.lit(1).cast("long").alias("w"))
-        .unionByName(
-            sym.select("src")
-            .distinct()
-            .select(
-                "src", F.col("src").alias("dst"), F.lit(0).cast("long").alias("w")
-            )
-        )
-    )
+    a map-side-combined min-groupBy, run by the shared fixpoint kernel
+    (exec_utils.fixpoint: 2 blocks of 6 rounds, lineage cut per block,
+    the driver holds only a 1-row probe). Synchronized relaxation needs
+    eccentricity rounds — the documented trade vs pointer-doubling's
+    denser intermediates."""
+    edges = message_edges(materialize(_co_order_und(spark, sf_dir)))
     dist = edges.filter(F.col("w") == 0).select(
         F.col("src").alias("node"),
         F.when(F.col("src") < _BFS_ANCHOR, F.lit(0)).cast("long").alias("dist"),
     )
-
-    def relax(dist_df: DataFrame, with_flag: bool = False) -> DataFrame:
-        j = edges.join(dist_df, edges.src == dist_df.node)
-        nd = (F.col("dist") + F.col("w")).cast("long")
-        if not with_flag:
-            return j.groupBy(F.col("dst").alias("node")).agg(
-                F.min(nd).cast("long").alias("dist")
-            )
-        return (
-            j.groupBy(F.col("dst").alias("node"))
-            .agg(
-                F.min(nd).cast("long").alias("dist"),
-                F.max(F.when(F.col("w") == 0, F.col("dist"))).alias("_own"),
-            )
-            .select(
-                "node",
-                "dist",
-                (~F.col("dist").eqNullSafe(F.col("_own"))).alias("_ch"),
-            )
-        )
-
-    # SIX relaxation rounds per materialize block (2 x 6 = the 12-round
-    # cap; the q_graph_cc block-retuning argument — linear plan depth
-    # under the self-loop form — re-measured here: block-6 med 3.00 s
-    # vs block-4 med 3.64 s vs one 12-round block med 3.87 s at sf0.1)
-    for _ in range(_BFS_ROUNDS // 6):
-        stepped = dist.select("node", "dist")
-        for _k in range(5):
-            stepped = relax(stepped)
-        new = materialize(relax(stepped, with_flag=True))
-        changed = new.filter(F.col("_ch")).limit(1).count()
-        dist = new.drop("_ch")
-        if changed == 0:
-            break
+    # min(dist + w) over the messages is least(dist, min(nbr + 1)): the
+    # w = 0 self-loop delivers the node's own distance. Block-6 beat
+    # block-4 and one 12-round block at sf0.1 (3.00 vs 3.64 vs 3.87 s).
+    relax = min_step("dist", F.col("dist") + F.col("w"))
+    dist, _ = fixpoint(edges, dist, relax, _BFS_ROUNDS // 6, 6)
     return dist.groupBy("dist").agg(F.count(F.lit(1)).alias("n_nodes"))
-
-
-
-
-# The thinned co-order edge universe shared by the node-statistic family
-# (lcc, degree histogram, assortativity, modularity — extracted r14 after
-# the fourth hand copy; the older iterative operators' inline copies
-# migrate as they rotate through the verification window, the
-# exec_utils.cents precedent: hand-copied instances are a drift hazard).
-_CO_ORDER_EDGES_SQL = """items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    eh AS (
-      SELECT a.l_partkey AS u, b.l_partkey AS v
-      FROM items a JOIN items b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY 1, 2 HAVING count(*) >= 2
-    )"""
 
 
 def _co_order_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -910,23 +703,6 @@ def _co_order_und(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("m") >= 2)
         .select("u", "v")
     )
-
-
-def _sym_edges(eh: DataFrame) -> DataFrame:
-    """(src, dst) symmetric directed edges from a (u, v) undirected
-    edge table: each row exploded into both directions in ONE pass.
-    Replaces the unionByName of two projections of ``eh``, which — on
-    an UNMATERIALIZED eh — plans the whole edge-build subtree twice
-    (the r17 plan audit caught q_graph_cc/bfs/kcore/degree computing
-    the co-order build once per union side inside one job)."""
-    return eh.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("u").alias("src"), F.col("v").alias("dst")),
-                F.struct(F.col("v").alias("src"), F.col("u").alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
 
 
 @register(
@@ -1417,8 +1193,7 @@ def _lpa_iter_sql(k: int) -> str:
     "q_graph_lpa",
     oracle=f"""
     WITH {_CO_ORDER_EDGES_SQL},
-    edges AS MATERIALIZED (SELECT u AS src, v AS dst FROM eh
-              UNION ALL SELECT v, u FROM eh),
+    {_SYM_EDGES_SQL},
     nodes AS (SELECT DISTINCT src AS node FROM edges),
     r0 AS MATERIALIZED (SELECT node, node AS lab FROM nodes),
     {','.join(_lpa_iter_sql(k) for k in range(1, _LPA_ROUNDS + 1))},
@@ -1493,11 +1268,11 @@ def q_graph_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined (node, lab) count + a map-side-combinable max_by argmax
     per node (r17: replaced the row_number window — one exchange +
     per-partition SORT per round — with the second aggregation; both
-    aggs key on the node, so AQE reuses one partitioning);
-    labels materialized every 2 rounds to cut lineage (the q_graph_cc
-    4-per-block lesson, halved because each LPA round is two stages
-    deeper). The modularity tail is the extracted modularity_readout —
-    dimension-sized joins, |communities| output rows.
+    aggs key on the node, so AQE reuses one partitioning); the shared
+    fixpoint kernel cuts lineage every 2 rounds (each LPA round is two
+    aggregations deep). The modularity tail is the extracted
+    modularity_readout — dimension-sized joins, |communities| output
+    rows.
 
     Hot-node bound (r16 verdict watch item, adjudicated r17): a hub
     node's per-round vote table is degree-sized — but only BEFORE the
@@ -1522,58 +1297,27 @@ def q_graph_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     (src/main/java/jc/DemoApplication.java is a Kafka pipe) — part of
     the beyond-the-reference analytics family."""
     und = materialize(_co_order_und(spark, sf_dir))
-    # r17 change 8 (self-loop message form — see q_graph_cc for the
-    # Union-avoidance argument): the checkpointed edge table carries one
-    # w = 0 self-loop per node next to the real edges, so the SELF-VOTE
-    # arrives through the same join as the neighbor votes and the
-    # per-round unionByName of the label table into the vote stream is
-    # gone — a round is one join + the two vote aggregations, with the
-    # label frame entering the plan exactly once.
-    sym = _sym_edges(und)
-    edges = materialize(
-        sym.select("src", "dst", F.lit(1).cast("long").alias("w"))
-        .unionByName(
-            sym.select("src")
-            .distinct()
-            .select(
-                "src", F.col("src").alias("dst"), F.lit(0).cast("long").alias("w")
-            )
-        )
-    )
-    # r0 falls out of the checkpointed edge table for free (w = 0 rows)
+    edges = message_edges(und)
     labels = edges.filter(F.col("w") == 0).select(
         F.col("src").alias("node"), F.col("src").alias("lab")
     )
 
-    def propagate(lab_df: DataFrame) -> DataFrame:
-        # lab_df: (node, lab, lab0) — lab0 is the BLOCK-input label,
-        # threaded through the rounds for the convergence flag; it
-        # rides only on the self-loop (w = 0) vote row and max() pulls
-        # it back out of both aggregations (every other vote row
-        # contributes NULL), so the across-block comparison costs one
-        # nullable column on the vote exchange instead of a per-block
-        # join of the label table against the block input — locally a
-        # wash-to-slight-win (pooled 7-pair A/B med 5.17 vs 5.27 s),
-        # structurally the removal of an O(|V|)⋈O(|V|) join per block.
-        votes = edges.join(lab_df, edges.src == lab_df.node).select(
+    def vote(edges: DataFrame, labels: DataFrame, flag: bool) -> DataFrame:
+        # The self-loop (w = 0) casts the self-vote, so the argmax's
+        # groups are exactly the node set and the oracle's
+        # coalesce(m.nlab, r.lab) never fires. max_by over (c, -lab) is
+        # the oracle's (count DESC, label ASC) ranking. Non-monotone, so
+        # the flag compares across the block (round k vs k - 2, the
+        # period-2 argument): a block's first round seeds lab0, which
+        # rides only on the self-vote row and max() pulls back out.
+        if "lab0" not in labels.columns:
+            labels = labels.withColumn("lab0", F.col("lab"))
+        votes = edges.join(labels, edges.src == labels.node).select(
             F.col("dst").alias("vnode"),
             "lab",
             F.when(F.col("w") == 0, F.col("lab0")).alias("_l0"),
         )
-        # r17: the per-node argmax is a max_by over the counted votes —
-        # max (c, -lab) == (count DESC, label ASC), the identical total
-        # order the previous row_number window ranked by — so the
-        # second aggregation replaces the window's exchange + SORT with
-        # a map-side-combinable agg (interleaved A/B at sf0.1: 2.7-2.9 s
-        # vs 3.0-3.9 s warm full-query). r17 change 8: the join-back of
-        # the argmax onto the label table is gone — the self-vote puts
-        # every lab_df node into votes (each node's self-loop delivers
-        # exactly one own-label vote), so the argmax's group set IS the
-        # node set and its result is total (the oracle's
-        # coalesce(m.nlab, r.lab) provably never fires: m covers every
-        # node); returning the argmax directly removes one join per
-        # round with bit-identical labels.
-        return (
+        new = (
             votes.groupBy("vnode", "lab")
             .agg(F.count(F.lit(1)).alias("c"), F.max("_l0").alias("_l0"))
             .groupBy("vnode")
@@ -1583,28 +1327,13 @@ def q_graph_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select(F.col("vnode").alias("node"), "lab", "lab0")
         )
-
-    # TWO propagation rounds per materialize + convergence check (the
-    # q_graph_cc block pattern at half stride: an LPA round adds a
-    # second aggregation on top of CC's join+agg, so the lazy unroll is
-    # deeper per round — and unlike the monotone families the flag MUST
-    # compare across the whole block: round k vs k-2 at even spans is
-    # what makes early stop agree with the even-round oracle unroll
-    # under period-2 oscillation). The block-input label arrives
-    # through the threaded lab0 column (see propagate).
-    for _ in range(_LPA_ROUNDS // 2):
-        stepped = labels.select("node", "lab", F.col("lab").alias("lab0"))
-        for _k in range(2):
-            stepped = propagate(stepped)
-        new = materialize(
-            stepped.select(
-                "node", "lab", (F.col("lab") != F.col("lab0")).alias("_ch")
-            )
+        if not flag:
+            return new
+        return new.select(
+            "node", "lab", (F.col("lab") != F.col("lab0")).alias("_ch")
         )
-        changed = new.filter(F.col("_ch")).limit(1).count()
-        labels = new.drop("_ch")
-        if changed == 0:
-            break
+
+    labels, _ = fixpoint(edges, labels, vote, _LPA_ROUNDS // 2, 2)
     deg = co_order_degrees(und)
     nb = materialize(
         deg.join(labels.select("node", F.col("lab").alias("com")), "node")

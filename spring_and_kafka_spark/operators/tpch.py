@@ -86,14 +86,15 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     market segment. o_orderpriority stands in for the absent
     o_shippriority. The segment filter prunes customer before its join,
     and the ORDER BY sorts the rounded revenue (both engines pick the
-    same top-10; ties broken by the unique order key)."""
+    same top-10; ties broken by the unique order key). lineitem joins
+    orders before customer, so it is never the broadcast side (the q5
+    rule)."""
     c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < _ts("1998-06-01 00:00:00"))
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > _ts("1998-06-01 00:00:00"))
     return (
-        c.select("c_custkey")
-        .join(o, F.col("c_custkey") == F.col("o_custkey"))
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
+        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(c.select("c_custkey"), F.col("c_custkey") == F.col("o_custkey"))
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(F.round(F.sum(_rev()), 2).alias("revenue"))
         .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
@@ -415,7 +416,8 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 (returned item reporting): customers who returned the most
     revenue in one quarter. Grouping carries the raw c_acctbal through
     (no arithmetic on it — exact in both engines); top-20 on rounded
-    revenue with the unique custkey tie-break."""
+    revenue with the unique custkey tie-break. lineitem joins orders
+    before customer (the q5 rule)."""
     c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_acctbal", "c_nationkey")
     o = _t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= _ts("1997-01-01 00:00:00"))
@@ -426,8 +428,8 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
-        c.join(o, F.col("c_custkey") == F.col("o_custkey"))
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
+        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(c, F.col("c_custkey") == F.col("o_custkey"))
         .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
         .agg(F.round(F.sum(_rev()), 2).alias("revenue"))

@@ -13,7 +13,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from spring_and_kafka_spark.exec_utils import materialize, spread
+from spring_and_kafka_spark.exec_utils import (
+    materialize,
+    message_edges,
+    min_step,
+    spread,
+    sym_edges,
+)
 from spring_and_kafka_spark.llm.dedup import (
     _MINHASH_PERMS,
     _SHINGLE_DF_CAP,
@@ -22,7 +28,7 @@ from spring_and_kafka_spark.llm.dedup import (
     planted_corpus,
     shingles,
 )
-from spring_and_kafka_spark.operators.graph import _co_order_pairs, _sym_edges
+from spring_and_kafka_spark.operators.graph import _co_order_pairs
 from spring_and_kafka_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -107,7 +113,7 @@ def test_co_order_pairs_null_keys_never_pair(spark):
 
 def test_sym_edges_matches_union_form(spark):
     eh = spark.createDataFrame([(1, 2), (2, 3), (1, 3)], "u bigint, v bigint")
-    new = _rows(_sym_edges(eh))
+    new = _rows(sym_edges(eh))
     old = _rows(
         eh.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionByName(
             eh.select(F.col("v").alias("src"), F.col("u").alias("dst"))
@@ -257,34 +263,11 @@ def test_doc_features_window_df_cap_fires_identically(spark):
 
 
 def _edges_with_self_loops(spark, pairs, nodes):
-    """(src, dst, w) table: both directions of each pair at w=1 plus one
-    w=0 self-loop per node — the change-8 build."""
-    e = spark.createDataFrame(pairs, "a long, b long")
-    n = spark.createDataFrame([(x,) for x in nodes], "node long")
-    sym = e.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("a").alias("src"),
-                    F.col("b").alias("dst"),
-                    F.lit(1).cast("long").alias("w"),
-                ),
-                F.struct(
-                    F.col("b").alias("src"),
-                    F.col("a").alias("dst"),
-                    F.lit(1).cast("long").alias("w"),
-                ),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst", "e.w")
-    return materialize(
-        sym.unionByName(
-            n.select(
-                F.col("node").alias("src"),
-                F.col("node").alias("dst"),
-                F.lit(0).cast("long").alias("w"),
-            )
-        )
+    """(src, dst, w) message table: both directions of each pair at w=1
+    plus one w=0 self-loop per node."""
+    return message_edges(
+        spark.createDataFrame(pairs, "u long, v long"),
+        spark.createDataFrame([(x,) for x in nodes], "node long"),
     )
 
 
@@ -299,11 +282,7 @@ def test_self_loop_cc_round_matches_join_back_reference(spark):
                              (11, 11), (12, 10), (13, 13), (99, 99)]],
         "node long, lab long",
     )
-    new = (
-        edges.join(lab, edges.src == lab.node)
-        .groupBy(F.col("dst").alias("node"))
-        .agg(F.min("lab").alias("lab"))
-    )
+    new = min_step("lab", F.col("lab"))(edges, lab, False)
     real = edges.filter(F.col("w") == 1)
     msgs = (
         real.join(lab, real.src == lab.node)
@@ -324,12 +303,7 @@ def test_self_loop_bfs_round_matches_join_back_reference(spark):
          (12, None), (13, None), (99, None)],
         "node long, dist long",
     )
-    nd = (F.col("dist") + F.col("w")).cast("long")
-    new = (
-        edges.join(dist, edges.src == dist.node)
-        .groupBy(F.col("dst").alias("node"))
-        .agg(F.min(nd).cast("long").alias("dist"))
-    )
+    new = min_step("dist", F.col("dist") + F.col("w"))(edges, dist, False)
     real = edges.filter(F.col("w") == 1)
     msgs = (
         real.join(dist, real.src == dist.node)

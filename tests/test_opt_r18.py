@@ -48,16 +48,15 @@ def test_graph_jaccard_grouped_wedges_match_self_join_reference(spark):
     # adjacency build (degree = size(ds), cap = size filter, wedges =
     # in-array u<v pairs). Pin the full query against the pre-r18
     # reference: deg groupBy + cap semi-join + wedge self-join.
-    from spring_and_kafka_spark.exec_utils import materialize
+    from spring_and_kafka_spark.exec_utils import materialize, sym_edges
     from spring_and_kafka_spark.operators.graph import (
         _JACCARD_CENTER_CAP,
         _co_order_und,
-        _sym_edges,
         q_graph_jaccard,
     )
 
     eh = materialize(_co_order_und(spark, SF))
-    edges = _sym_edges(eh)
+    edges = sym_edges(eh)
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("d")
     )

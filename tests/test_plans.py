@@ -5,6 +5,8 @@ sort, rank-filter pushdown into windows, no cartesian products."""
 
 from __future__ import annotations
 
+import pytest
+
 from spring_and_kafka_spark import registry
 from spring_and_kafka_spark.plans import broadcast_scans, formatted_plan
 
@@ -482,15 +484,17 @@ def test_tpch_q2_broadcasts_dims_prunes_before_agg(spark):
     assert w and all("l_partkey" in ln for ln in w)
 
 
-def test_tpch_q5_broadcasts_dims_never_lineitem(spark):
+@pytest.mark.parametrize("name", ["q_tpch_q5", "q_tpch_q3", "q_tpch_q10"])
+def test_tpch_q5_broadcasts_dims_never_lineitem(spark, name):
     # lineitem is the fact side: it must stream, never be collected into
     # a broadcast. Without CBO a customer⋈orders join is sized as the
     # product of its inputs, so joining those two first made lineitem
     # look like the small side. The hinted supplier/nation/region and
     # the filtered orders and customer are the broadcast sides.
-    shipped = broadcast_scans(SPECS["q_tpch_q5"].fn(spark, SF_SMOKE))
+    shipped = broadcast_scans(SPECS[name].fn(spark, SF_SMOKE))
     tables = [{path.rsplit("/", 1)[-1] for path in b} for b in shipped]
-    assert {"supplier.parquet"} in tables and {"region.parquet"} in tables
+    if name == "q_tpch_q5":
+        assert {"supplier.parquet"} in tables and {"region.parquet"} in tables
     assert all("lineitem.parquet" not in t for t in tables), tables
 
 
