@@ -33,8 +33,8 @@ def ts_micros(col: Column | str) -> Column:
 
     ``F.unix_micros`` rejects NTZ outright — and the fixture parquet's
     ``TIMESTAMP(NANOS)`` column reads as NTZ on stock sessions (the
-    round-3 driver crash on q_stream_session). ``to_utc_timestamp(c,
-    'UTC')`` interprets an NTZ wall-time as UTC — exactly the stored
+    crash q_stream_session once hit). ``to_utc_timestamp(c, 'UTC')``
+    interprets an NTZ wall-time as UTC — exactly the stored
     parquet value, independent of the session timezone — and is a no-op
     for LTZ under the UTC sessions this engine always builds
     (session.py). The result is the raw integer DuckDB's ``epoch_us``
@@ -48,7 +48,7 @@ def cents(col: Column | str) -> Column:
     (Spark round() is decimal HALF_UP, DuckDB rounds binary; this form
     is bit-identical in both). Every operator that sums or ranks money
     must use this helper, not a hand-copied expression: four inline
-    copies had already drifted into existence by round 6, and a future
+    copies had already drifted into existence, and a future
     edit to one of them would silently diverge the others' oracle
     hashes. sketches.to_cents wraps the same rule at DataFrame level."""
     c = F.col(col) if isinstance(col, str) else col
@@ -59,8 +59,8 @@ def micros(col: Column | str) -> Column:
     """Exact integer micro-units from a measure double: floor(x*1e6+0.5)
     as BIGINT — the cents rule at 1e-6 resolution, used wherever a
     non-currency measure must aggregate/percentile order-free
-    (q_ts_mad/q_ts_anomaly established the pattern; the r12 review
-    counted ~8 hand-copied instances across timeseries.py/windows.py,
+    (q_ts_mad/q_ts_anomaly established the pattern; ~8 hand-copied
+    instances once existed across timeseries.py/windows.py,
     the same drift hazard cents() was extracted to kill). New operators
     must call this."""
     c = F.col(col) if isinstance(col, str) else col
@@ -104,7 +104,7 @@ def finite_or_null(df: DataFrame, *cols: str) -> DataFrame:
     downstream operators consume FINITE-OR-NULL doubles only.
 
     Why a contract instead of 226 NaN-hardened queries: a NaN-injection
-    diagnostic (round 9, NANCHECK.json) failed 39 of 226 queries, and
+    diagnostic (NANCHECK.json) failed 39 of 226 queries, and
     the failure modes are not guardable cross-engine — ANSI Spark and
     DuckDB both hard-error casting NaN to BIGINT (every exact-cents
     expression), stddev aggregates range-error, and the engines disagree
@@ -118,11 +118,11 @@ def finite_or_null(df: DataFrame, *cols: str) -> DataFrame:
 
     At 100 TB this is one narrow projection fused into the ingest scan —
     no shuffle, no extra pass. It is also ONE projection in the logical
-    plan, not a per-column withColumn chain: the r11 interleaved A/B
+    plan, not a per-column withColumn chain: an interleaved A/B
     traced the contract's whole bench cost to DRIVER-SIDE plan analysis
     of the deeper tree (executor time was identical with the contract
     on or off once the plan was built), and collapsing the chain into a
-    single withColumns halves that analysis overhead (BASELINE.md r11
+    single withColumns halves that analysis overhead (BASELINE.md
     adjudication row)."""
 
     def norm(c: str):

@@ -1,4 +1,4 @@
-"""Corpus-level curation outputs (round-2 additions).
+"""Corpus-level curation outputs.
 
 Registered after the aggregates module on purpose: the driver verifies a
 fixed-size registry prefix, and that window is already exactly filled

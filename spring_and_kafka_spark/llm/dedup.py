@@ -308,7 +308,7 @@ def _band_structs(bands: int, rows_per_band: int):
     asymmetric/incremental (_band_bucket_rows) candidate generators so
     the two paths' bucketing cannot drift apart (the exec_utils.cents
     anti-drift rule; pinned by
-    tests/test_opt_r18.py::test_band_structs_symmetric_incremental_agree)."""
+    tests/test_kernels.py::test_band_structs_symmetric_incremental_agree)."""
     return F.array(
         *[
             F.struct(
@@ -393,9 +393,9 @@ def lsh_candidate_pairs(
     ``docs_in_hot_buckets`` (Σ bucket sizes over those). Oracle-verified
     callers use this to assert the cap was inert (hot_buckets == 0) on
     the data they ran — without it, drift into the saturated regime would
-    surface only as an opaque hash mismatch (ADVICE r2).
+    surface only as an opaque hash mismatch.
 
-    r17 shape (guide §2.4): ONE groupBy(band, bucket) collects each
+    Shape: ONE groupBy(band, bucket) collects each
     bucket's sorted doc list and the a < b pairs expand INSIDE the
     array — replacing the materialize + count-groupBy + broadcast +
     bucket self-join of the previous form (A/B at sf0.1: warm 1.11 s vs
@@ -403,7 +403,7 @@ def lsh_candidate_pairs(
     cap bound carries over: pair expansion only runs on buckets with
     2 ≤ size ≤ bucket_cap, so no task ever expands more than cap²/2
     pairs; an over-cap bucket's list is collected then dropped. Memory
-    bound of that collect (ADVICE r17): a collect_list buffer is
+    bound of that collect: a collect_list buffer is
     RESIDENT in the aggregating task — it does not stream like join
     shuffle rows — so in the saturated regime the cap guards against,
     one task holds an O(bucket-size) long array per hot bucket it
@@ -415,7 +415,7 @@ def lsh_candidate_pairs(
     pair fan-out (which the filter prevents). A pre-filtering count
     groupBy + anti-join would cap the buffer at bucket_cap longs but
     re-introduces the second aggregation pass over the full membership
-    stream the r17 rewrite removed; at these bounds the resident buffer
+    stream this shape removes; at these bounds the resident buffer
     is the cheaper side of the trade."""
     band_structs = _band_structs(bands, rows_per_band)
     buckets = sig.select("doc_id", F.explode(band_structs).alias("bb")).select(
@@ -676,7 +676,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     are dropped, the standard LSH frequent-bucket guard. A pair is missed
     only if ALL FOUR of its chunks land in hot buckets.
 
-    Fully hash-oracled (was rows-only through round 2): the per-shingle
+    Fully hash-oracled: the per-shingle
     hash is md5-hex-digit arithmetic — see _simhash_bit_spark/_duck —
     instead of xxhash64, so DuckDB replays fingerprinting, banding,
     capping, and Hamming verification bit-for-bit."""
@@ -1308,7 +1308,7 @@ def q_dedup_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_matches/{_MHEST_PERMS} (an unbiased estimator), and mean_abs_err
     is the resolution the LSH banding (q_dedup_near) actually operates
     at. Run BEFORE committing _MINHASH_PERMS at a new corpus, exactly
-    like the two r14 threshold curves precede their cutoffs.
+    like the two threshold curves precede their cutoffs.
 
     The permutation hash here is sha256-derived (first 12 hex chars →
     48-bit BIGINT) rather than production xxhash64
@@ -1699,7 +1699,7 @@ def q_dedup_seg_df_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- arbitrary-offset span alignment (r17, the gap q_dedup_substring's
+# --- arbitrary-offset span alignment (the gap q_dedup_substring's
 # docstring names: tumbling segments only catch boundary-ALIGNED
 # duplication; a passage copied at an arbitrary offset needs the
 # anchor-ngram / exact-substring alignment family of RefinedWeb / Lee et
@@ -1919,7 +1919,7 @@ def q_dedup_span_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     shifted by {_ALIGN_SHIFT} tokens (doc_id + 200000; {_ALIGN_SHIFT}
     is deliberately coprime to the segment width), pairs segment dedup
     is structurally blind to and this operator must pin at
-    delta = −{_ALIGN_SHIFT} (tests/test_property_r17.py plants and
+    delta = −{_ALIGN_SHIFT} (tests/test_property_text.py plants and
     asserts exactly that).
 
     Cross-engine determinism: the anchor hash is the shared
@@ -2059,8 +2059,8 @@ def q_dedup_span_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_dedup_span_align (anchor-generated candidates, df-capped hash
     equi-join, never doc×doc); the sweep-event stream is 4 rows per
     surviving alignment (interval start/end × both endpoint docs,
-    emitted by ONE explode in a single pass — r17 replaced the two
-    union layers that planned the alignment subtree once per side) —
+    emitted by ONE explode in a single pass — two union layers would
+    plan the alignment subtree once per side) —
     duplication-sized, not corpus-sized — and the sweep is one
     doc_id-keyed shuffle with two windows over the SAME (doc_id, pos)
     sort (Spark plans one Exchange + one Sort for both). The span count rides THROUGH the sweep (a start-event
@@ -2081,7 +2081,7 @@ def _span_cover_readout(g: DataFrame, sizes: DataFrame) -> DataFrame:
     verbatim with streaming.spananchor.maintained_span_cover so stream
     and batch produce the identical readout by construction."""
     sizes = sizes.select("doc_id", F.col("n").cast("long").alias("n"))
-    # r17 (guide §2.4): ONE explode emits all four sweep events per
+    # ONE explode emits all four sweep events per
     # alignment — interval start/end for BOTH endpoint docs — replacing
     # the previous two unionByName layers, which planned the (expensive,
     # unmaterialized) anchor/alignment subtree once per union side and

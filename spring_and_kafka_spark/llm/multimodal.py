@@ -59,7 +59,7 @@ def decode_media(df: DataFrame, payload_col: str, id_col: str) -> DataFrame:
     A MISSING payload (NULL cell — failed fetch upstream) passes through
     as a NULL-metadata row rather than reaching the codec: the
     dead-letter pattern every 100 TB media ingest needs, since one bad
-    object must not kill the batch (NULLCHECK r9). The codec itself
+    object must not kill the batch (NULLCHECK). The codec itself
     still raises on genuinely corrupt non-null bytes."""
 
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -85,7 +85,7 @@ def q_pipeline_curate(
     surviving token budget per language.
 
     ``bucket_cap``/``lsh_stats`` expose the dedup stage's frequent-bucket
-    guard at the pipeline entry point (ADVICE r2 / VERDICT r2 #8): the cap
+    guard at the pipeline entry point: the cap
     trades candidate-generation cost for recall once buckets saturate
     (inert on every fixture SF — asserted via lsh_stats in tests; ~35%
     planted-pair loss only on the adversarial small-vocab smoke corpus,
@@ -125,7 +125,7 @@ def q_pipeline_curate(
         bucket_cap=bucket_cap,
         stats=lsh_stats,
     )
-    # r18 (guide §7.2/§2.4, the q_pipeline_curate plan audit): the
+    # (the q_pipeline_curate plan audit): the
     # victims list is MATERIALIZED before the anti-join. `kept` is a
     # projection of the planted-corpus UNION, and Spark pushes the
     # LeftAnti join into the union — so an unmaterialized dup_victims

@@ -65,8 +65,8 @@ def _ratio6_sql(num: str, den: str | int) -> str:
 
 
 def load_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding scan under the NULL-payload contract (NULLCHECK sweep,
-    round 9): a NULL embedding cell — an upstream encode failure, routine
+    """Embedding scan under the NULL-payload contract (NULLCHECK
+    sweep): a NULL embedding cell — an upstream encode failure, routine
     in a 100 TB ingest — is SKIPPED at the scan, never propagated into
     dot products, k-means, LSH planes, or the Arrow-batched GEMM paths
     (DuckDB's list_inner_product hard-errors on NULL and the pandas UDFs
@@ -95,7 +95,7 @@ def _vecs(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
 # BIGINT shift would overflow past dim 64), while Spark's zip_with pads
 # and folds NULL — so a corrupt row (sparse-encode bug, truncated write)
 # must be excluded at the scan in BOTH engines, exactly like the
-# finite-or-null ingest contract excludes NaN (r14 review finding).
+# finite-or-null ingest contract excludes NaN.
 # Zero-norm vectors remain INCLUDED (valid shape; cosine answers NULL).
 _WF_DIM = 64
 _WF_SQL = (
@@ -227,8 +227,7 @@ def _cos_heap_sql(k: int, src: str = "e") -> str:
 def q_sim_pairwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise cosine between consecutive vectors (equi-join on id).
     The oracle's NULLIF pin mirrors the guarded `cosine` helper on
-    zero-norm vectors (the q_embed_centroid precedent, discharged here
-    as the r15 rotation backlog was pre-paid in r14)."""
+    zero-norm vectors (the q_embed_centroid precedent)."""
     e = _vecs(spark, sf_dir)
     a = e.alias("a")
     b = e.alias("b")
@@ -253,7 +252,7 @@ def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the embedding table is scanned once, orderBy().limit() plans
     TakeOrderedAndProject (no global sort at 100 TB). Tie-break: vec_id;
     zero-norm vectors cosine to NULL under the guarded helper, pinned
-    NULLS LAST on both sides (the NULLIF backlog discharged in r14)."""
+    NULLS LAST on both sides."""
     e = _vecs(spark, sf_dir)
     q = e.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
     return _cosine_heap(e, q, 10).select(
@@ -389,7 +388,7 @@ def blocked_pair_replicate(
     its two block ids from (i, j). Shared by knn_all_topk and
     q_dedup_embed so the replication shape cannot drift (a broadcast
     pair-table with an OR predicate plans BroadcastNestedLoopJoin and
-    goes quadratic in B — review finding, round 5)."""
+    goes quadratic in B)."""
     blk = (F.abs(F.xxhash64(F.col(id_col).cast("string"))) % n_blocks).cast(
         "int"
     )
@@ -630,7 +629,7 @@ def q_sim_lsh_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns the bucket histogram; the bucket id co-partitions similar
     vectors so a 100 TB ANN search joins per-bucket instead of all-pairs.
 
-    Fully hash-oracled (was rows-only through round 2): vectors are
+    Fully hash-oracled: vectors are
     quantized to integers (floor(x·1000 + 0.5) — exact and identical in
     both engines) and the hyperplanes are integer-valued, so every dot
     product is exact integer arithmetic and the sign bits cannot drift
@@ -894,7 +893,7 @@ def q_embed_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined groupBy on the (16 × |labels|)-sized key and a
     window over that tiny aggregate. The quantizer is built from every
     non-NULL embedding — the same index q_sim_ann_ivf routes with —
-    while only labeled vectors vote (round-9 NULL-payload admission
+    while only labeled vectors vote (the NULL-payload admission
     rule: no vote from an unlabeled or failed-encode row); ties on the
     majority break by smaller label id in both engines; purity is a
     bare IEEE division of exact longs."""
@@ -904,7 +903,7 @@ def q_embed_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast-centroid argmax (constant per vec_id, so first() is
     # exact) — an ivf_assign + join-back would shuffle the per-vector
     # table a second time and drag the discarded embedding payload
-    # through the aggregate (r11 review finding)
+    # through the aggregate
     scored = (
         e.filter(F.col("label").isNotNull())
         .crossJoin(F.broadcast(cents))
@@ -1012,7 +1011,7 @@ def q_embed_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # label) makes the raw cutoff mu — off the 4-dp grid by engine-
     # specific accumulation ulps; rounding restores the exact grid
     # double in both engines so cos_r < cutoff is false on the tie
-    # everywhere, never a cross-engine coin flip (r12 review finding)
+    # everywhere, never a cross-engine coin flip
     cutoff = F.round(F.col("mu") - 2 * F.col("sd"), 4)
     return (
         scored.join(F.broadcast(st), "label")
@@ -1261,7 +1260,7 @@ def q_embed_pq_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     to NULL under the guarded helper in both engines; the floor form
     on the integer hit ratio).
 
-    Shape at 100 TB (single-consumer discipline, the r13 lesson): the
+    Shape at 100 TB (single-consumer discipline): the
     codebook is M·K = {_PQ_M}·{_PQ_K} tiny rows built from the seed
     slice and broadcast; encoding is ONE corpus pass (explode to M
     subvectors, broadcast-join the codebook, one map-side argmin
@@ -1342,8 +1341,7 @@ def _signatures(e: DataFrame) -> DataFrame:
     the scan, zero shuffle. EMPTY arrays are excluded to mirror the
     DuckDB twin exactly: _SIG_CTE's unnest emits no row for a
     zero-length list, while the Spark fold would emit (0, 0) — a
-    phantom all-zero sketch the oracle never sees (r14 review
-    finding)."""
+    phantom all-zero sketch the oracle never sees."""
     return e.filter(F.size("v") > 0).select(
         "vec_id",
         F.expr(_sig_expr_sql("v", 0)).alias("lo"),
@@ -1779,8 +1777,8 @@ def q_embed_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract (64 components, none NULL) like the rest of the
     sketch/eval family: a NULL-element or truncated vector in the
     sample would hard-error DuckDB's list_dot_product while Spark's
-    fold silently NULLs the sim out of n_scored (r14 ADVICE item,
-    closed r15; pinned in test_vector_edge_shapes_parity_r14_review).
+    fold silently NULLs the sim out of n_scored (pinned in
+    tests/test_degenerate.py).
 
     Shape at 100 TB: the sample is id-bounded at the scan (pushed
     predicate), the pair space is sample², never corpus², and the
@@ -2311,7 +2309,7 @@ _GRID_NQ = 8  # evaluated query sample: vec_id < 8 (the NDCG/RBO budget)
 def q_sim_rerank_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-query recall-vs-shortlist-length grid for the two-tier
     retrieval pair — the statistically meaningful version of
-    q_sim_rerank_curve's readout (r16 verdict: recall@1-query is a
+    q_sim_rerank_curve's readout (recall@1-query is a
     coin-flippy estimate to commit a production knob on): a bounded
     {_GRID_NQ}-query sample (vec_id < {_GRID_NQ}, the
     q_embed_ndcg_eval / q_embed_rbo budget) each runs the per-qid
@@ -2326,8 +2324,8 @@ def q_sim_rerank_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer Hamming with vec_id tiebreak at the per-qid heap edges,
     IEEE +,*-chained dot products with correctly-rounded sqrt at the
     rerank/truth edges (the registry stable-key rule; the association
-    order is additionally pinned by the r17 adversarial near-tie
-    fixture, tests/test_property_r17.py), NULLIF-pinned zero norms
+    order is additionally pinned by the adversarial near-tie
+    fixture, tests/test_property_similarity.py), NULLIF-pinned zero norms
     NULLS LAST, and floor-form recalls on exact integer hit/truth
     counts (the worst-recall min is taken over per-query floor-form
     ratios of integers — division by 1e6 is monotone, so the min is

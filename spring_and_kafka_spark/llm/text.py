@@ -1388,7 +1388,7 @@ def js_from_counts(tc: DataFrame) -> DataFrame:
     reuse the exchange (the corpus side stacks a second aggregation on
     it), so the batch query would scan+explode the corpus TWICE. The
     window form is one corpus pass at any scale. Cost of the
-    unpartitioned total window, stated precisely (ADVICE r11): the
+    unpartitioned total window, stated precisely: the
     single-partition sort sees the whole (source, tok) COUNT table —
     Σ_s |V_s| rows, i.e. up to (#sources × vocab), not just one
     vocabulary — fine while the source dimension is a handful of
@@ -1397,7 +1397,7 @@ def js_from_counts(tc: DataFrame) -> DataFrame:
     with the data, switch ntot to a broadcast scalar agg and ctok to
     the tok-partitioned window's own sum — both already tok-local —
     so nothing unpartitioned remains. Measured at sf0.1 the window
-    form is ~0.6x the double-scan (r11 within-JVM A/B)."""
+    form is ~0.6x the double-scan (within-JVM A/B)."""
     j = tc.select(
         "source",
         "c",
@@ -1595,7 +1595,7 @@ def q_hist_log2(spark: SparkSession, sf_dir: str) -> DataFrame:
     hazardous exactly AT the powers of two that define every bucket
     edge. Bounds come from INTEGER shifts in BOTH engines (Spark
     shiftleft, DuckDB BIGINT << — a double 2**(b+1) is inexact past
-    2^53, the ADVICE r13 asymmetry), the share from the
+    2^53), the share from the
     floor(x·1e6+0.5)/1e6 form on the integer ratio.
 
     Shape at 100 TB: one map-side-combined aggregation to ≤ ~40 bucket
@@ -1743,7 +1743,7 @@ def q_text_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_ubi = F.coalesce("n_uniq_bigrams", F.lit(0))
     # the NULL-source group (untagged docs) is a legitimate grain in
     # both gram tables — the rejoin must be NULL-SAFE or its bigram
-    # stats silently vanish to 0 in both engines (r14 review finding);
+    # stats silently vanish to 0 in both engines;
     # the b side's key is renamed first so the surviving `source`
     # column unambiguously resolves to u's
     b = b.withColumnRenamed("source", "b_source")

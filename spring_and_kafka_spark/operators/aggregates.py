@@ -23,7 +23,7 @@ from spring_and_kafka_spark.sources.tables import load_table
 
 # q_agg_approx and q_agg_collect register first in this module: the driver
 # verifies a fixed-size prefix of the registry, and both needed reshaping
-# after round 1 (within-tolerance boolean / serialized set) — keeping them
+# (within-tolerance boolean / serialized set) — keeping them
 # at the head guarantees their fixes land in the verification window.
 
 
@@ -93,10 +93,9 @@ def q_agg_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Registered third in this module (definition order = registration order)
-# so it sits inside the round-3 driver window: its struct-key max_by and
-# rewritten row_number oracle landed in the round-2 diff AFTER that
-# round's window was fixed, so the new oracle had no driver validation
-# (ADVICE r2 #1).
+# so it sits inside the hash-verified 50-entry prefix (registry
+# _WINDOW_PREFIX): its struct-key max_by and row_number oracle are
+# checked there.
 @register(
     "q_agg_argmax",
     oracle="""
@@ -526,7 +525,7 @@ def q_hist_equiwidth(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL prices form their OWN bucket (NULL id, NULL bounds) instead of
     polluting a value bucket: both engines' least() skips NULL args, so
     the unguarded form silently filed every missing value under the top
-    bucket — found by tests/test_property_r10.py on random inputs, the
+    bucket — found by tests/test_property_tabular.py on random inputs, the
     exact misclassification a data-quality histogram exists to expose
     (and reachable at scale: the ingest contract normalizes NaN to
     NULL)."""
@@ -844,7 +843,7 @@ def q_agg_ols2(spark: SparkSession, sf_dir: str) -> DataFrame:
     det = c11 * c22 - c12 * c12
     # NULL on a singular normal matrix (collinear/constant regressors):
     # ANSI Spark throws on /0 where DuckDB yields NULL — the guard makes
-    # the degenerate answer NULL in BOTH engines (robustness sweep, r7)
+    # the degenerate answer NULL in BOTH engines (robustness sweep)
     return s.select(
         F.col("n").cast("long").alias("n_rows"),
         F.when(
@@ -1020,7 +1019,7 @@ def q_hist_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cross-engine: both engines interpolate quantiles with the same
     (n-1)*p POSITION rule but DIFFERENT arithmetic — Spark's Percentile
     evaluates lo + (hi - lo)·f, DuckDB's quantile_cont lo·(1-f) + hi·f,
-    and on raw doubles the two roundings can disagree (the r16
+    and on raw doubles the two roundings can disagree (a
     hypothesis find: two subnormal ties rounded the lerp's p=0.5
     boundary half-to-even to 0.0 while Spark's (hi-lo)·f term was
     exactly 0, flipping a bucket id). Boundaries therefore interpolate
@@ -1041,7 +1040,7 @@ def q_hist_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # ONE array-percentile aggregate: all 7 octiles from a single sorted
     # pass (seven scalar F.percentile calls plan seven independent
-    # sort-aggregates — 4.6x slower at sf0.1, measured r12)
+    # sort-aggregates — 4.6x slower at sf0.1)
     qs = o.agg(
         F.percentile(
             "c",

@@ -454,7 +454,7 @@ def pareto_frontier(
     rows-frame running max: a rows frame ordered (min asc, max desc)
     would see an equal-(min,max) twin in its preceding frame and
     wrongly drop BOTH copies of a tied frontier point (caught by
-    tests/test_analytics_r5.py::test_skyline_keeps_equal_ties)."""
+    tests/test_invariants.py::test_skyline_keeps_equal_ties)."""
     mn, mx = F.col(minimize), F.col(maximize)
     # phase 1: local frontier per bucket (parallel prune). The bucket is
     # a function of the minimized value, so a whole value group lands in
@@ -638,7 +638,7 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         # no round(): exact-cents / 100.0 is a single IEEE division whose
         # true value sits exactly ON the 2-dp boundary — engine round()
         # there adds only cross-build divergence (the q_compaction_plan
-        # round-6 lesson), never precision
+        # lesson), never precision
         (
             (bal_cents + F.coalesce("delta_cents", F.lit(0).cast("long")))
             / 100.0
@@ -841,7 +841,7 @@ def peak_from_intervals(sess: DataFrame) -> DataFrame:
     ``s``, ``e`` in microseconds): one row (peak_concurrency,
     peak_ts_micros). Exposed separately so the prefix-sum decomposition
     is property-testable against brute force on arbitrary interval sets
-    (tests/test_property.py), not just the sessionized fixture."""
+    (tests/test_property_tabular.py), not just the sessionized fixture."""
     bounds = sess.select(
         F.col("s").alias("us"), F.lit(1).cast("long").alias("delta")
     ).unionAll(
@@ -1002,7 +1002,7 @@ def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     # independent last(ignorenulls) carries can pair one click's k with
     # a later untagged click's timestamp, attributing through an
     # expired lookback (the asof-join struct rule, found here by the
-    # r9 property test; value-neutral on fixtures, where every click
+    # property test; value-neutral on fixtures, where every click
     # is tagged)
     touch = F.when(
         (F.col("event_type") == "click") & k.isNotNull(),
@@ -1214,7 +1214,7 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("a.o_totalprice") != F.col("b.price"), F.lit("update"))
         .otherwise(F.lit("unchanged"))
         .alias("change_type"),
-        # per-row integer cents BEFORE the sum (round 7): the previous
+        # per-row integer cents BEFORE the sum: the previous
         # floor(sum(double)·100+0.5) rounded an order-dependent float
         # sum, and at sf0.1 the true net drift sits near a half-cent
         # boundary — Spark's partitioned partial sums and DuckDB's
@@ -1363,7 +1363,7 @@ def q_seq_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cross-engine determinism: the lag ordering key is (ts, event_id,
     event_type), each pinned NULLS FIRST in the oracle (Spark asc
     default ≡ pinned DuckDB — the registry NULL rule). The event_type
-    tail-tiebreak (ADVICE r13) makes the ordering total over the
+    tail-tiebreak makes the ordering total over the
     VALUES lag() reads even when (ts, event_id) duplicates or goes
     both-NULL — two rows tied on the full key are then interchangeable
     for prev_type, so transition counts cannot flip with engine sort
@@ -1563,7 +1563,7 @@ def q_user_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
     events) are dropped at the scan in both engines — a streak is
     per-identity per-day by definition, and a NULL ts would otherwise
     form a phantom single-day island inflating n_active_days/n_streaks
-    by one (r14 review finding).
+    by one.
 
     Shape at 100 TB: the fact scan pre-aggregates to (user, day)
     distinct grain map-side, then ONE user-keyed shuffle serves the

@@ -110,7 +110,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterates TO CONVERGENCE and therefore must cut lineage per round —
     unbounded unrolling is where plans blow up. The driver holds no
     data, only the loop index."""
-    # NOTE (r17): the per-order collect_set+explode build that replaced
+    # NOTE: the per-order collect_set+explode build that replaced
     # the items self-join for the THINNED edge family (see
     # _co_order_pairs) was A/B-measured SLOWER here: pagerank's edge set
     # is the unthinned DISTINCT pair set, so the build has no (u,v)
@@ -142,7 +142,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks = nodes.select(
         "node", F.lit(_PR_SCALE).cast("long").alias("pr")
     )
-    # NOTE (r17 change 8 A/B): the message-union form that won on the
+    # NOTE (A/B-measured): the message-union form that won on the
     # min/argmax iteratives (CC/BFS/k-core/LPA) — replace this LEFT
     # JOIN with a union of 0-contribution node rows into the sum —
     # was measured consistently ~80% SLOWER here (interleaved same-JVM,
@@ -200,8 +200,8 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = materialize(_co_order_und(spark, sf_dir))
     n_edges = und.count()
     # degree per node over the undirected edge set (explode both
-    # endpoints in one pass over the checkpoint — r17, vs the union of
-    # two projections)
+    # endpoints in one pass over the checkpoint, not a union of two
+    # projections)
     deg = (
         und.select(F.explode(F.array(F.col("u"), F.col("v"))).alias("n"))
         .groupBy("n")
@@ -272,7 +272,7 @@ def q_graph_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = _co_order_und(spark, sf_dir)
     # explode both endpoints in ONE pass: the union of two projections
     # of the unmaterialized und planned the whole edge build twice
-    # (r17 plan audit; guide §2.4)
+    # (plan audit)
     deg = (
         und.select(F.explode(F.array(F.col("u"), F.col("v"))).alias("n"))
         .groupBy("n")
@@ -507,8 +507,8 @@ def q_graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     "one shingle shared by d docs emits d² join rows"): wedges expand
     only through centers with degree ≤ the cap, so shuffle volume is
     ≤ Σ min(deg, cap)² — O(nodes·cap²) worst case — instead of the
-    unbounded Θ(Σ deg²) a power-law hub explodes at 100× scale (the
-    r13 `weak` grade). Trade, documented as dedup documents its cap:
+    unbounded Θ(Σ deg²) a power-law hub explodes at 100× scale.
+    Trade, documented as dedup documents its cap:
     a hub's wedges are dropped, so a pair's reported `common` is a
     LOWER BOUND when one of its shared neighbors is a hub, and a pair
     whose ONLY shared neighbors are hubs is absent — hubs that
@@ -661,8 +661,8 @@ def _co_order_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(u, v) co-order part pair INSTANCES (u < v), one row per
     (order, unordered pair of distinct parts in it).
 
-    r17 optimization (guide §2.4, remove shuffles outright): the
-    original build was ``distinct(l_orderkey, l_partkey)`` followed by
+    Shape (remove shuffles outright): the
+    obvious build is ``distinct(l_orderkey, l_partkey)`` followed by
     a self-join on l_orderkey — two lineitem scans, a distinct
     exchange per side, and a join whose build side is the whole item
     table. This form collects each order's DISTINCT parts into one
@@ -695,7 +695,7 @@ def _co_order_und(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNMATERIALIZED; multi-consumer callers cut it themselves (the
     q_graph_lcc lesson). Built from the per-order pair expansion
     (_co_order_pairs) instead of the items self-join — same multiset,
-    one fewer exchange and no join (r17, guide §2.4)."""
+    one fewer exchange and no join."""
     return (
         _co_order_pairs(spark, sf_dir)
         .groupBy("u", "v")
@@ -781,7 +781,7 @@ def q_graph_lcc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("deg"))
     )
     # deg feeds du, dv AND the final left join — cut once (the
-    # assortativity discipline, applied here after the r14 review)
+    # assortativity discipline)
     deg = materialize(deg)
     du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
@@ -890,7 +890,7 @@ def q_graph_degree_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     the beyond-the-reference analytics family."""
     und = _co_order_und(spark, sf_dir)
     # explode both endpoints in one pass (the union form planned the
-    # whole unmaterialized edge build once per side — r17 plan audit)
+    # whole unmaterialized edge build once per side — plan audit)
     deg = (
         und.select(F.explode(F.array(F.col("u"), F.col("v"))).alias("node"))
         .groupBy("node")
@@ -1112,7 +1112,7 @@ def modularity_readout(und: DataFrame, nb: DataFrame) -> DataFrame:
     table: ``und`` is the MATERIALIZED thinned (u < v) edge set, ``nb``
     the MATERIALIZED (node, d, com) table assigning every node its
     degree and candidate community. Q·4m² integer-exact per the
-    q_graph_modularity docstring; extracted in r16 so the LPA scorer
+    q_graph_modularity docstring; extracted so the LPA scorer
     (q_graph_lpa) and the brand-partition scorer share ONE readout
     instead of a hand copy (the exec_utils.cents precedent)."""
     m = und.agg(F.count(F.lit(1)).alias("m"))
@@ -1166,7 +1166,7 @@ _LPA_ROUNDS = 10  # ≥ measured fixpoint on every fixture (self-vote LPA:
 # The Spark loop runs _LPA_ROUNDS // 2 two-round blocks and the
 # early-stop check compares labels ACROSS a block (round k vs k-2), so
 # both the round-count parity with the oracle's unroll AND the
-# period-2-oscillation argument require an even cap (ADVICE r16).
+# period-2-oscillation argument require an even cap.
 assert _LPA_ROUNDS % 2 == 0, "_LPA_ROUNDS must be even (2 rounds/block)"
 
 
@@ -1239,7 +1239,7 @@ def q_graph_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     node starts as its own community, and each synchronized round
     adopts the most frequent label among its neighbors PLUS its own
     current label (the self-vote), ties broken by the smallest label.
-    Completes the community side the r14/r15 verdicts asked for:
+    Completes the community side of the graph family:
     q_graph_cc finds connectivity (communities ignore density),
     q_graph_modularity SCORES an externally-given partition (brands) —
     this DISCOVERS the partition from the edge structure and reports
@@ -1266,15 +1266,15 @@ def q_graph_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape at 100 TB: per round, one edges⋈labels shuffle + map-side
     combined (node, lab) count + a map-side-combinable max_by argmax
-    per node (r17: replaced the row_number window — one exchange +
-    per-partition SORT per round — with the second aggregation; both
+    per node (a row_number window would add one exchange +
+    per-partition SORT per round; both
     aggs key on the node, so AQE reuses one partitioning); the shared
     fixpoint kernel cuts lineage every 2 rounds (each LPA round is two
     aggregations deep). The modularity tail is the extracted
     modularity_readout — dimension-sized joins, |communities| output
     rows.
 
-    Hot-node bound (r16 verdict watch item, adjudicated r17): a hub
+    Hot-node bound: a hub
     node's per-round vote table is degree-sized — but only BEFORE the
     map-side combine. The groupBy(vnode, lab) partial-aggregates within
     each map task, so the SHUFFLED rows per node are bounded by its
@@ -1289,7 +1289,7 @@ def q_graph_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     centers. An adversarial hub that SURVIVES thinning (every pair
     genuinely repeats) is handled by the combine bound above and
     pinned by the planted-star skew test
-    (tests/test_property_r16.py::test_graph_lpa_planted_star_hub);
+    (tests/test_property_graph.py::test_graph_lpa_planted_star_hub);
     the max_by argmax holds one running (c, -lab) maximum per node —
     no per-node sort is ever materialized.
 

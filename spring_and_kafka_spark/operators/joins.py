@@ -341,7 +341,7 @@ def asof_join(
     # struct is non-null exactly when a right row exists, so a right row
     # whose VALUE column is NULL still wins as the latest match (a
     # per-column last(ignorenulls) would skip it and resurrect an older
-    # row — the NULLCHECK r9 finding). ignorenulls then only skips
+    # row — a NULLCHECK finding). ignorenulls then only skips
     # left-side rows, which is the intent.
     row_struct = F.when(
         F.col("__side") == 0,

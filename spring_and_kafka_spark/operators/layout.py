@@ -414,8 +414,8 @@ def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     DIV target. Emits the compaction manifest: per-bin file count, total
     bytes, and fill level vs the target in integer BASIS POINTS
     (fill_bp = bytes*10^4 DIV target — exact integer arithmetic in both
-    engines; round 6's driver-red taught that a rounded-DOUBLE ratio
-    derived from exact integers is a cross-engine ULP hazard, so the
+    engines; an oracle hash mismatch once taught that a rounded-DOUBLE
+    ratio derived from exact integers is a cross-engine ULP hazard, so the
     ratio column is integer by construction). This is the nightly job
     that keeps a streaming-ingested table's file count (and thus its
     scan task count and driver planning cost) bounded.

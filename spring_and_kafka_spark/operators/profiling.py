@@ -258,7 +258,7 @@ def q_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     The event table reduces to per-user bits in one groupBy (map-side
     combined), then two tiny reduces; every z-statistic input is an exact
     integer, so both engines run the identical IEEE expression tree and
-    the 4-decimal rounding is stable (the ADVICE r4 centroid lesson:
+    the 4-decimal rounding is stable (the centroid lesson:
     never hash-compare an order-dependent float sum)."""
     e = load_table(spark, sf_dir, "events")
     u = (
@@ -481,8 +481,8 @@ def q_agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         # no round(): tot/100.0 is ONE IEEE division on an exact integer
         # (bit-identical across engines) whose true value sits exactly ON
         # the 2-dp boundary — wrapping it in engine round() adds only the
-        # cross-build divergence that made q_compaction_plan driver-red
-        # in round 6, never precision
+        # cross-build divergence that once broke q_compaction_plan's
+        # oracle hash, never precision
         (F.col("tot") / 100.0).alias("total_revenue"),
         # unrounded: an order-matched chain of single IEEE ops on the
         # identical exact integers (n, tot, wsum) is bit-identical
@@ -575,7 +575,7 @@ def q_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
             # bit-identical across engines (see gini's note above).
             # NULL when total revenue is 0: share is undefined and ANSI
             # mode would otherwise throw DIVIDE_BY_ZERO (hypothesis
-            # found the all-zero-revenue corpus, round 7)
+            # found the all-zero-revenue corpus)
             F.when(
                 F.max("tot") != 0,
                 F.sum("cents") * 1.0 / F.max("tot"),
@@ -726,7 +726,7 @@ def q_tcloseness(spark: SparkSession, sf_dir: str) -> DataFrame:
     |QI groups|×|categories|), so cell has exactly ONE consumer and
     the fact join is planned once. The join-back formulation
     re-planned the fact join per re-aggregating branch (20 parquet
-    scans in the static plan, caught by the r13 plan audit); the
+    scans in the static plan, caught by the plan audit); the
     window formulation is one scan, one fact shuffle, and window
     shuffles of a few hundred rows. NULL priorities form their own
     category in BOTH engines (groupBy keeps NULL groups; window
@@ -748,7 +748,7 @@ def q_tcloseness(spark: SparkSession, sf_dir: str) -> DataFrame:
     # group size, category marginal, and grand total as WINDOW sums over
     # the one cell pass — cell has exactly one consumer, so Spark plans
     # the fact join ONCE (the join-back formulation re-planned it per
-    # branch: 20 parquet scans in the static plan, caught by the r13
+    # branch: 20 parquet scans in the static plan, caught by the
     # plan audit). The windows shuffle only the tiny cell table; window
     # PARTITION BY groups NULL keys together in both engines, which is
     # precisely the null-safe rejoin the join form needed eqNullSafe for

@@ -304,16 +304,15 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two shuffles: a rank window producing one tiny band-edge row per
     segment, broadcast back over a second scan that clamps and
     re-aggregates. Band edges are computed by EXACT INTEGER RANK
-    DECOMPOSITION over integer cents (r17, closing the ADVICE r16
-    residual on the r16 cents fix): the percentile rank (n-1)·5/100
+    DECOMPOSITION over integer cents: the percentile rank (n-1)·5/100
     splits into an integer index and an integer fractional NUMERATOR
     rem ∈ 0..99, the lo/hi order statistics are picked by row_number,
     and the interpolant lo·(100−rem) + hi·rem is an exact BIGINT in
     percent-units — NO engine percentile function and no lossy float
     arithmetic anywhere (the only divisions are /100.0 of integers,
     whose floor is provably exact: a quotient at an integer boundary is
-    exactly representable). The r16 form still fed quantile_cont/
-    Percentile, whose double interpolation (Spark lo + (hi−lo)·f vs
+    exactly representable). Feeding cents to quantile_cont/
+    Percentile would not do: their double interpolation (Spark lo + (hi−lo)·f vs
     DuckDB lo·(1−f) + hi·f) could disagree on interpolants within 1 ulp
     of a half-cent; this removes the hazard structurally, the way
     dyadic k/8 did for q_hist_equidepth. Clipping then compares integer
@@ -325,7 +324,7 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     and spillable; NULL market segments keep their own band via the
     null-safe broadcast join (registry NULL rule), and a segment whose
     balances are all NULL keeps its rows through the LEFT join with a
-    NULL band, exactly as the r16 inner-join-on-NULL-percentile did."""
+    NULL band, exactly as an inner join on a NULL percentile would."""
     cust = load_table(spark, sf_dir, "customer").select(
         "c_mktsegment",
         "c_acctbal",
@@ -395,7 +394,7 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("mean_trim"),
         # a NULL balance is MISSING, not clipped: when(inside,
         # 0).otherwise(1) would fall through NULL between() into the
-        # otherwise branch and count it (NULLCHECK r9); the positive
+        # otherwise branch and count it (NULLCHECK); the positive
         # test mirrors the oracle's CASE, whose NULL comparison lands
         # in ELSE 0
         F.sum(
@@ -601,8 +600,8 @@ def q_dq_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
     the correct plan. events.ts is TIMESTAMP(NANOS) parquet — Spark
     reads NTZ, DuckDB naive timestamp; CAST→date agrees on both.
 
-    The lag window pins NULLS FIRST explicitly in BOTH engines (ADVICE
-    r6): engine defaults differ (Spark ASC = nulls first, DuckDB =
+    The lag window pins NULLS FIRST explicitly in BOTH engines:
+    engine defaults differ (Spark ASC = nulls first, DuckDB =
     nulls last), so a NULL ts day — absent in fixtures but legal —
     would silently shift every lag neighbor.
 
@@ -611,8 +610,8 @@ def q_dq_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
     — bit-identical across engines — and daily row counts routinely
     divide 10^4/10^6 (a 500-row day puts every value exactly ON the
     rounding grid), so wrapping them in engine round() adds only the
-    cross-build boundary divergence of the q_compaction_plan round-6
-    driver-red, never precision."""
+    cross-build boundary divergence that once broke q_compaction_plan's
+    oracle hash, never precision."""
     e = load_table(spark, sf_dir, "events")
     d = e.groupBy(F.to_date("ts").alias("day")).agg(
         F.count("*").alias("n_rows"),

@@ -78,8 +78,8 @@ def q_sample_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     (df.sampleBy with per-lang fractions), reduced to an oracled CLAIM.
 
     Spark's seeded RNG is engine-specific, so the sampled rows themselves
-    can never hash-match a DuckDB oracle (and through round 2 this query
-    was rows-only — structurally non-green under the driver contract).
+    can never hash-match a DuckDB oracle (a rows-only query can never
+    pass the hash check).
     The q_agg_approx treatment instead: emit, per language, the
     SQL-derivable stratum size and a boolean asserting the seeded sample
     behaved like the Bernoulli process it claims to be —
@@ -105,7 +105,7 @@ def q_sample_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a NULL-lang stratum has no sampleBy fraction (sampleBy skips keys
     # absent from its dict), so only the plain 0.2 Bernoulli applies to
     # it — and the stratum joins null-safely or its sampled count would
-    # silently read as 0 and fail the claim (NULLCHECK r9)
+    # silently read as 0 and fail the claim (NULLCHECK)
     p_lang = (
         F.when(F.col("t.lang").isNull(), 0.0)
         .when(F.col("t.lang") == "en", 0.1)
@@ -228,7 +228,7 @@ def q_sample_ks_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample-vs-population, because the two-sample critical constant
     assumes INDEPENDENT samples: a sample nested inside its superset
     shares its own rows with the comparison side, deflating D and
-    making the flag silently conservative (ADVICE r15). Disjoint
+    making the flag silently conservative. Disjoint
     halves restore the calibrated test; a NULL doc_id row hashes to
     NULL and belongs to NEITHER side in both engines. Completes the
     sampling family: the generators (hash / threshold / stratified /

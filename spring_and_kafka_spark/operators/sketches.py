@@ -61,7 +61,7 @@ def q_agg_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eqNullSafe on the type key: a NULL event_type is a real rollup
     # group (both aggregates produce it; the oracle's single GROUP BY
     # keeps it) — a plain equi-join would silently drop those days
-    # (NULLCHECK r9: 150 vs 180 rows)
+    # (NULLCHECK: 150 vs 180 rows)
     ex, est = daily_exact.alias("ex"), daily_est.alias("est")
     return ex.join(
         est,
@@ -339,7 +339,7 @@ def q_agg_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ±0.5 midpoints are exact doubles."""
     # quantiles skip NULL measures (mirrors the oracle's IS NOT NULL):
     # a NULL cents bucket's window position differs between engine NULL
-    # orderings and would shift every cumulative rank (NULLCHECK r9)
+    # orderings and would shift every cumulative rank (NULLCHECK)
     li = to_cents(load_table(spark, sf_dir, "lineitem")).filter(
         F.col("cents").isNotNull()
     )

@@ -29,8 +29,8 @@ def _content_salt(df: DataFrame, salt_buckets: int, salt_on: Column | None) -> C
     content fallback degrades when a hot key's rows are byte-identical:
     they all map to one salt and the spread silently collapses back to a
     hot-key join — which is why callers with any unique-ish column should
-    pass it, and why salted_join exposes ``stats`` to detect exactly this
-    (ADVICE r2 #5)."""
+    pass it, and why salted_join exposes ``stats`` to detect exactly
+    this."""
     if salt_on is not None:
         return (F.abs(F.xxhash64(salt_on)) % salt_buckets).cast("int")
     from pyspark.sql import types as T

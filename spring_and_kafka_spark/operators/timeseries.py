@@ -281,7 +281,7 @@ def q_ts_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) / (_ANOM_WIN - 1)
     # NULL z on a CONSTANT window (var = 0): the var > 0 filter below
     # drops those rows anyway, but under ANSI the projection evaluates
-    # before the filter and an unguarded /0 throws (robustness sweep, r7)
+    # before the filter and an unguarded /0 throws (robustness sweep)
     z = F.when(var > 0, (vd - mean) / F.sqrt(var))
     return (
         framed.select("user_id", "event_id", "value", var.alias("var"), z.alias("zr"))
@@ -413,7 +413,7 @@ def q_join_pit(spark: SparkSession, sf_dir: str) -> DataFrame:
     each feature is "the latest prior <type> event WITH a known value" —
     a NULL-valued purchase is skipped in favor of the older known one.
     Unlike q_attribution (where pairing k with a different click's
-    timestamp corrupted the lookback — the r9 struct-carry fix), these
+    timestamp corrupted the lookback — the struct-carry fix), these
     carries are SEPARATE features by design, so per-column independence
     is the semantics, not a bug."""
     e = load_table(spark, sf_dir, "events")
@@ -506,7 +506,7 @@ def q_ts_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULL dev/mad on every row, and sum over all-NULL returns NULL
     # while the oracle's CASE..ELSE 0 returns 0 — count skips the NULLs
     # and answers 0 like the oracle (value-identical whenever one
-    # non-NULL value exists; the q_ts_cusum r11 review lesson)
+    # non-NULL value exists; the q_ts_cusum lesson)
     n_out = F.count(F.when(is_out, F.lit(1)))
     return j.groupBy("event_type").agg(
         F.count("*").alias("n"),
@@ -590,7 +590,7 @@ def q_ts_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cusum on every row, and sum over all-NULL returns NULL while
         # the oracle's CASE..ELSE 0 returns 0 — count skips the NULLs
         # and answers 0 like the oracle (value-identical on any key
-        # with at least one non-NULL deviation; r11 review finding)
+        # with at least one non-NULL deviation)
         F.count(F.when(alarm, F.lit(1))).alias("n_alarms"),
         F.max("cusum").alias("max_cusum_micros"),
         F.min(F.when(alarm, F.col("us"))).alias("first_alarm_us"),

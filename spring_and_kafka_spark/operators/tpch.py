@@ -15,7 +15,7 @@ carry a column subset of official TPC-H:
   shipped unit price; Q9's profit without ps_supplycost; Q11's stock
   value = shipped revenue from a region's suppliers; supplier counts
   and volumes from shipped lines). With q_agg_group serving as Q1, the
-  full 22-query suite is registered (r12).
+  full 22-query suite is registered.
 - No ``l_commitdate``/``l_receiptdate``/``l_shipmode`` → Q4's EXISTS
   uses a late-shipment predicate (shipped >60 days after order) instead
   of receipt-after-commit; Q12 groups by a derived ship-SPEED class
@@ -971,7 +971,7 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     FRACTION is 0.0001/SF (explicitly scale-adjusted by the spec), and
     the 2x-mean form is the scale-FREE restatement: selectivity stays
     comparable at every SF, where any fixed fraction of the total goes
-    vacuous as part cardinality grows (0 rows at sf0.1, measured r12).
+    vacuous as part cardinality grows (0 rows at sf0.1, measured).
 
     Scale shape: supplier⋈nation⋈region broadcasts (the fact side never
     shuffles for the dimension filter); ONE map-side-combined groupBy on

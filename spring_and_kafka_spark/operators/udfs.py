@@ -42,7 +42,7 @@ def q_udf_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     The None guard is part of the lesson: built-in expressions
     NULL-propagate for free, but a Python UDF receives a raw None and
     must answer NULL itself (matching SQL's upper(NULL) || '!' -> NULL)
-    or die on the first NULL-bearing partition (NULLCHECK r9)."""
+    or die on the first NULL-bearing partition (NULLCHECK)."""
     shout = F.udf(
         lambda s: None if s is None else s.upper() + "!", T.StringType()
     )

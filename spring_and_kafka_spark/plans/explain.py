@@ -1,7 +1,7 @@
 """Physical-plan introspection helpers.
 
-Used by the plan-audit tests (tests/test_plans.py) and the PLANS.md
-generator (tools/explain_audit.py) to assert the properties the 100 TB
+Used by the plan-audit tests (tests/test_plans.py) and the plan dump
+(tools/explain_audit.py, which regenerates PLANS.md on demand) to assert the properties the 100 TB
 design depends on: pushdown, pruning, join strategy, shuffle counts.
 """
 

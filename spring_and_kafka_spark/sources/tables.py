@@ -31,7 +31,7 @@ TABLES = (
 
 # Known external double columns per table — the ingest surface of the
 # engine's finite-or-null float contract (exec_utils.finite_or_null).
-# NANCHECK.json (round 9) proved 39/226 queries misbehave on raw NaN,
+# NANCHECK.json proved 39/226 queries misbehave on raw NaN,
 # with failure modes that are NOT guardable cross-engine (ANSI Spark
 # and DuckDB both hard-error casting NaN to BIGINT; Spark floor(NaN)→0
 # silently; moment aggregates poison vs range-error; NaN grouping
@@ -51,7 +51,7 @@ DOUBLE_COLS = {
 # useless for every consumer (dot products, centroids, quantization all
 # poison), so the contract nulls the WHOLE vector — which routes it to
 # the NULL-embedding path every operator already filters/handles
-# (the round-9 NULL-payload admission filters).
+# (the NULL-payload admission filters).
 VECTOR_COLS = {
     "embeddings": ("embedding",),
 }
@@ -101,10 +101,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     The resolved (scan + contract) DataFrame is MEMOIZED per
     (SparkSession, sf_dir, table): DataFrames are immutable, so sharing
     one logical subtree across query builds is safe, and it removes the
-    per-build file listing + contract re-analysis that the r11
+    per-build file listing + contract re-analysis that an
     interleaved A/B traced the whole bench inflation to (≈half the wall
     time of sub-second sf0.1 queries was driver-side plan work repeated
-    per build; BASELINE.md r11 row). This is the programmatic equivalent
+    per build; BASELINE.md). This is the programmatic equivalent
     of registering tables in a catalog once instead of re-listing 100 TB
     of object-store files on every query. Registering launches no Spark
     job: the scan takes its schema from :func:`parquet_schema`, one
@@ -122,8 +122,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         )
     per_session = _TABLE_CACHE.setdefault(spark, {})
     # realpath, not abspath: a symlinked alias of an sf_dir must hit the
-    # same cache entry as its target (ADVICE r11 — abspath keyed symlinks
-    # separately, double-analyzing identical scans).
+    # same cache entry as its target (abspath keys symlinks separately,
+    # double-analyzing identical scans).
     key = (os.path.realpath(sf_dir), name)
     cached = per_session.get(key)
     if cached is not None:

@@ -200,7 +200,7 @@ def q_stream_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     # late.cast sums NULL for that row — invisible while every group
     # also holds non-null rows (sum skips NULLs = oracle's ELSE 0), but
     # a group consisting ONLY of first-arrival rows returned NULL vs the
-    # oracle's 0 (found by the 1-row sweep, round 7).
+    # oracle's 0 (found by the 1-row sweep).
     late_n = F.when(
         F.col("us") < F.col("seen_max") - 600_000_000, F.lit(1)
     ).otherwise(F.lit(0))

@@ -121,9 +121,18 @@ def _batch_partitions(spark, table_dir: str) -> tuple[set[str], set[str]]:
     return done, torn
 
 
-def read_partial_state(
-    spark, state_dir: str, subtables, what: str, require_success: bool = True
-):
+def _markers_written(spark) -> bool:
+    """Whether Spark's file commits leave ``_SUCCESS`` markers: the
+    ``mapreduce.fileoutputcommitter.marksuccessfuljobs`` setting of the
+    session's Hadoop conf (session SQL-conf overrides included), default
+    true — the conf every ``foreachBatch`` parquet write commits under."""
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return conf.getBoolean(
+        "mapreduce.fileoutputcommitter.marksuccessfuljobs", True
+    )
+
+
+def read_partial_state(spark, state_dir: str, subtables, what: str):
     """Read the partial state :func:`partial_state_stream` wrote,
     RAISING on torn state instead of silently absorbing it (independent
     silent reads of sibling state are the bug shape: one try around two
@@ -146,14 +155,13 @@ def read_partial_state(
        dir-presence checks pass while the data inside is partial). With
        one table, this is the only level that can fire.
 
-    ``require_success=False`` skips level 3 for deployments whose
-    committer writes no markers
-    (``mapreduce.fileoutputcommitter.marksuccessfuljobs=false``, the
-    common object-store-committer setting): each marker-less partition
-    is then merged as a batch, with a logged warning because a mid-write
-    crash looks identical, and levels 1-2 still apply. The default
-    assumes markers, which Spark's parquet batch writes under
-    ``foreachBatch`` produce out of the box.
+    Level 3 follows the setting that decides whether markers are
+    written at all, ``mapreduce.fileoutputcommitter.marksuccessfuljobs``
+    in the session's Hadoop conf (default true), read once per call.
+    With it false (the common object-store-committer setting) no write
+    leaves a marker, so each marker-less partition is merged as a batch,
+    with a logged warning because a mid-write crash looks identical;
+    levels 1-2 still apply.
 
     All checks are driver-side Hadoop FS metadata listings (works on
     object stores), never a Spark job."""
@@ -181,6 +189,7 @@ def read_partial_state(
             spark.createDataFrame([], sch) for _, sch in subtables
         )
 
+    require_success = _markers_written(spark)
     sets = {}
     for sub, _ in subtables:
         done, torn = _batch_partitions(spark, f"{state_dir}/{sub}")
@@ -194,11 +203,11 @@ def read_partial_state(
         # with markers disabled, a marker-less partition is simply a
         # batch (the committer never wrote markers) — include it in the
         # sibling-alignment check rather than treating it as torn, but
-        # log it: a mid-write crash looks identical (ADVICE r16)
+        # log it: a mid-write crash looks identical
         if torn and not require_success:
             _LOG.warning(
                 "%s state under %s/%s: merging %d marker-less batch "
-                "partition(s) (%s ...) under require_success=False — "
+                "partition(s) (%s ...) with marksuccessfuljobs=false — "
                 "expected for markerless committers, but "
                 "indistinguishable from a mid-write crash",
                 what,

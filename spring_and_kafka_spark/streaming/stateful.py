@@ -10,7 +10,7 @@ one micro-batch or twenty.
 
 State-schema compatibility: the state StructTypes in this module are part
 of each query's CHECKPOINT contract. Spark validates stored state rows
-against the current schema on restart, so widening one (as r11 did when
+against the current schema on restart, so widening one (as when
 CUSUM_STATE_SCHEMA gained ``seen``) breaks resume-from-old-checkpoint with
 a state-schema-compatibility error. Upgrades that change a state schema
 must either discard the query's checkpoint directory (replay from the
@@ -94,7 +94,7 @@ CUSUM_STATE_SCHEMA = T.StructType(
         # 0 until the key has seen ONE non-NULL deviation: a key whose
         # history is all NULL has no cusum value at all in the batch
         # form (every window sum is NULL), so max_cusum must read NULL,
-        # not the state's 0 seed (r11 review finding)
+        # not the state's 0 seed
         T.StructField("seen", T.LongType()),
     ]
 )
@@ -220,8 +220,8 @@ def _update_attribution(
         # carry (operators/analytics.py::q_attribution): two separate
         # carries can pair a tagged click's k with a LATER untagged
         # click's timestamp and attribute through an expired lookback
-        # (the r9 property-battery bug, reproduced on the streaming
-        # path by tests/test_streaming_nullnan.py in r11).
+        # (a property-battery bug, reproduced on the streaming
+        # path by tests/test_streaming_nullnan.py).
         tagged = (
             (pdf["event_type"] == "click").to_numpy()
             & pdf["k"].notna().to_numpy()

@@ -9,9 +9,8 @@ the non-mergeable readout derived at read time):
   (source, seg)), and its KEY SET doubles as the distinct
   (seg, source) presence table the cross-source template flag needs
   (a distinct count is not a foldable counter, so the flag derives on
-  read from the presence keys — an r15 review simplification: an
-  earlier draft wrote a separate ``pairs`` presence table whose rows
-  were exactly these keys);
+  read from the presence keys — a separate ``pairs`` presence
+  table would hold exactly these keys);
 - ``docs``:   distinct (source, doc_id) presence for the n_docs
   readout. At 100 TB this table is the one worth sketching (HLL, the
   q_agg_hll_rollup primitive) — kept exact here so stream ≡ batch is
@@ -89,7 +88,7 @@ def maintained_templates(spark: SparkSession, state_dir: str) -> DataFrame:
     partitioned partials appends the batch_id partition column even
     when the user schema omits it, so a bare distinct() would key on
     batch_id and double-count a pair or document re-seen in a later
-    batch (r15 review finding). count_distinct itself then dedups —
+    batch. count_distinct itself then dedups —
     no extra pre-distinct shuffle — and, on doc_id, skips NULLs
     exactly as the batch twin's count_distinct does (untagged rows
     contribute segments but not to n_docs, in both). Instance counts

@@ -5,7 +5,7 @@ Python-coerced cell values, under which a DuckDB HUGEINT equals a Spark
 bigint. The driver's hash, however, runs at the Arrow level, where
 ``sum(BIGINT)`` promoted to HUGEINT arrives as ``decimal128(38,0)`` and
 hashes differently from ``int64``. That gap kept ``q_compaction_plan``
-locally green but driver-red for three rounds (r5-r7): the uncast
+locally green but hash-red in the external check: the uncast
 ``// 10000`` group key was invisible to every local check.
 
 This module is the schema-level gate both local checkers now run *before*

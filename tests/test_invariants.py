@@ -1,26 +1,30 @@
-"""Semantic property tests for the round-5 operators — invariants the
-oracle diff can't see (dominance, leakage, brute-force agreement)."""
+"""Invariant tests on the smoke fixture — what the DuckDB oracle diff
+cannot see: the oracle proves Spark equals the shared SQL, these prove
+the shared spec is the intended algorithm (Pareto dominance, no feature
+leakage, partitions that sum to their whole, ECDF identities,
+brute-force agreement)."""
 
 from __future__ import annotations
 
 from collections import defaultdict
 
+import numpy as np
 from pyspark.sql import functions as F
 
+from spring_and_kafka_spark.llm.multimodal import q_multimodal_dedup
+from spring_and_kafka_spark.llm.text import q_text_zipf
+from spring_and_kafka_spark.operators.aggregates import (
+    q_agg_corr,
+    q_hist_equiwidth,
+)
 from spring_and_kafka_spark.operators.analytics import (
     q_basket_pairs,
     q_merge_upsert,
     q_rfm,
     q_skyline,
 )
-from spring_and_kafka_spark.operators.aggregates import (
-    q_agg_corr,
-    q_hist_equiwidth,
-)
 from spring_and_kafka_spark.operators.graph import q_graph_triangles
 from spring_and_kafka_spark.operators.timeseries import q_join_pit
-from spring_and_kafka_spark.llm.multimodal import q_multimodal_dedup
-from spring_and_kafka_spark.llm.text import q_text_zipf
 from spring_and_kafka_spark.sources.tables import load_table
 
 from .conftest import SF_SMOKE

@@ -1,12 +1,10 @@
-"""Round-17 optimization equivalence pins.
-
-Each r17 rewrite replaced a join/union-shaped subplan with an
-algebraically identical cheaper form. These tests pin the equivalence
-DIRECTLY — new form vs a locally re-built reference implementation of
-the old form — on fixture data plus a NULL-bearing micro frame, so a
-future edit to either side cannot silently diverge them. (The oracle
-hash sweeps cover the composed queries; these cover the extracted
-builders, including paths the fixtures only lightly exercise.)
+"""Kernel-equivalence pins: each builder that replaced a
+join/union-shaped subplan with an algebraically identical cheaper form
+is checked against a locally rebuilt reference of the form it replaced,
+on fixture data plus NULL-bearing micro frames, so a later edit to
+either side cannot silently diverge them. (The oracle hash sweeps cover
+the composed queries; these cover the extracted builders, including
+paths the fixtures only lightly exercise.)
 """
 
 from __future__ import annotations
@@ -23,6 +21,8 @@ from spring_and_kafka_spark.exec_utils import (
 from spring_and_kafka_spark.llm.dedup import (
     _MINHASH_PERMS,
     _SHINGLE_DF_CAP,
+    _band_bucket_rows,
+    _band_structs,
     _doc_features,
     lsh_candidate_pairs,
     planted_corpus,
@@ -31,7 +31,7 @@ from spring_and_kafka_spark.llm.dedup import (
 from spring_and_kafka_spark.operators.graph import _co_order_pairs
 from spring_and_kafka_spark.sources.tables import load_table
 
-SF = "/root/testdata/sf0.001"
+from .conftest import SF_SMOKE
 
 
 def _rows(df):
@@ -39,7 +39,7 @@ def _rows(df):
 
 
 def _co_order_und_reference(li):
-    """The pre-r17 build: distinct (order, part) items + self-join."""
+    """The replaced build: distinct (order, part) items + self-join."""
     items = li.distinct()
     a, b = items.alias("a"), items.alias("b")
     return (
@@ -58,9 +58,9 @@ def _co_order_und_reference(li):
 
 def test_co_order_pairs_match_self_join_reference(spark):
     # full thinned edge set: per-order array expansion == items self-join
-    li = load_table(spark, SF, "lineitem").select("l_orderkey", "l_partkey")
+    li = load_table(spark, SF_SMOKE, "lineitem").select("l_orderkey", "l_partkey")
     new = (
-        _co_order_pairs(spark, SF)
+        _co_order_pairs(spark, SF_SMOKE)
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).alias("m"))
         .filter(F.col("m") >= 2)
@@ -124,7 +124,7 @@ def test_sym_edges_matches_union_form(spark):
 
 def test_lsh_candidate_pairs_match_bucket_join_reference(spark):
     # grouped in-array pair expansion == the bucket self-join it replaced
-    corpus = planted_corpus(spark, SF)
+    corpus = planted_corpus(spark, SF_SMOKE)
     docfeat = _doc_features(corpus, 3, _SHINGLE_DF_CAP)
     sig = docfeat.select("doc_id", "mh")
     new = _rows(lsh_candidate_pairs(sig, 16, 2, bucket_cap=500))
@@ -185,11 +185,10 @@ def test_lsh_candidate_pairs_bucket_cap_drops_hot_buckets(spark):
 
 def test_doc_features_window_df_matches_hot_join_reference(spark):
     # shipped doc-frequency == an independent window-count reference.
-    # (r17 shipped the window and pinned it against a hot-join
-    # reference; r18 shipped the map-side-combined hot-join — ADVICE
-    # r17's skew item — so the reference flipped to the window form to
-    # keep the two computations independent.)
-    corpus = planted_corpus(spark, SF)
+    # (the package ships the map-side-combined hot-join, so the
+    # reference is the window form, keeping the two computations
+    # independent.)
+    corpus = planted_corpus(spark, SF_SMOKE)
     new = _doc_features(corpus, 3, _SHINGLE_DF_CAP).select(
         "doc_id", "mh", "n", "hs"
     )
@@ -228,9 +227,8 @@ def test_doc_features_window_df_cap_fires_identically(spark):
     # tiny cap forces the df guard to FIRE: the shipped hot-join form
     # must drop exactly the shingles an independent window-count
     # reference drops (fixture caps are inert, so this path needs its
-    # own exercise; reference flipped window<->hot-join with the r18
-    # swap, see the test above)
-    corpus = planted_corpus(spark, SF)
+    # own exercise; see the test above for the reference form)
+    corpus = planted_corpus(spark, SF_SMOKE)
     cap = 2
     new = _doc_features(corpus, 3, cap)
     sh = materialize(
@@ -251,15 +249,6 @@ def test_doc_features_window_df_cap_fires_identically(spark):
         )
     )
     assert _rows(new.select("doc_id", "n", "hs")) == _rows(old)
-
-
-# ---------------------------------------------------------------------------
-# Change 8: self-loop message propagation ≡ the join-back round forms.
-# One round of each iterative kernel, new form vs a locally rebuilt
-# reference of the old aggregate+LEFT-JOIN round, on a micro graph that
-# exercises every per-round case: a path (labels still moving), a hub
-# star, an isolated node (no neighbor messages — the self-loop/coalesce
-# path), and for BFS a NULL (∞) frontier.
 
 
 def _edges_with_self_loops(spark, pairs, nodes):
@@ -376,3 +365,79 @@ def test_self_loop_lpa_votes_match_union_reference(spark):
         "node", F.coalesce(F.col("nlab"), F.col("lab")).alias("lab")
     )
     assert set(map(tuple, new.collect())) == set(map(tuple, old.collect()))
+
+
+def test_band_structs_symmetric_incremental_agree(spark):
+    # the banding expression is extracted into _band_structs
+    # so lsh_candidate_pairs (symmetric) and _band_bucket_rows
+    # (incremental) derive IDENTICAL buckets from the same signatures.
+    # Pin it end to end: the symmetric path's exploded bucket rows must
+    # equal the incremental path's materialized bucket table (cap lifted
+    # so neither side filters).
+    sig = _doc_features(planted_corpus(spark, SF_SMOKE), n=3, df_cap=5000).select(
+        "doc_id", "mh"
+    )
+    sym_buckets = sig.select(
+        "doc_id", F.explode(_band_structs(16, 2)).alias("bb")
+    ).select(
+        "doc_id",
+        F.col("bb.band").alias("band"),
+        F.col("bb.bucket").alias("bucket"),
+    )
+    inc_buckets = _band_bucket_rows(sig, 16, 2, bucket_cap=10**9).select(
+        "doc_id", "band", "bucket"
+    )
+    assert _rows(sym_buckets) == _rows(inc_buckets)
+
+
+def test_graph_jaccard_grouped_wedges_match_self_join_reference(spark):
+    # q_graph_jaccard's candidate generation is ONE grouped adjacency
+    # build (degree = size(ds), cap = size filter, wedges = in-array
+    # u<v pairs). Pin the full query against the replaced
+    # reference: deg groupBy + cap semi-join + wedge self-join.
+    from spring_and_kafka_spark.exec_utils import materialize, sym_edges
+    from spring_and_kafka_spark.operators.graph import (
+        _JACCARD_CENTER_CAP,
+        _co_order_und,
+        q_graph_jaccard,
+    )
+
+    eh = materialize(_co_order_und(spark, SF_SMOKE))
+    edges = sym_edges(eh)
+    deg = edges.groupBy(F.col("src").alias("node")).agg(
+        F.count(F.lit(1)).alias("d")
+    )
+    ecap = edges.join(
+        deg.filter(F.col("d") <= _JACCARD_CENTER_CAP).select(
+            F.col("node").alias("cn")
+        ),
+        edges.src == F.col("cn"),
+        "semi",
+    )
+    e1, e2 = ecap.alias("e1"), ecap.alias("e2")
+    cand = (
+        e1.join(
+            e2,
+            (F.col("e1.src") == F.col("e2.src"))
+            & (F.col("e1.dst") < F.col("e2.dst")),
+        )
+        .groupBy(F.col("e1.dst").alias("u"), F.col("e2.dst").alias("v"))
+        .agg(F.count(F.lit(1)).alias("common"))
+    )
+    du = deg.select(F.col("node").alias("u"), F.col("d").alias("deg_u"))
+    dv = deg.select(F.col("node").alias("v"), F.col("d").alias("deg_v"))
+    probe = eh.select("u", "v", F.lit(1).alias("_e"))
+    j = cand.join(du, "u").join(dv, "v").join(probe, ["u", "v"], "left")
+    union_sz = F.col("deg_u") + F.col("deg_v") - F.col("common")
+    old = j.select(
+        "u",
+        "v",
+        "common",
+        "deg_u",
+        "deg_v",
+        (
+            F.floor(F.col("common") * 1e6 / union_sz + F.lit(0.5)) / 1e6
+        ).alias("jaccard"),
+        F.col("_e").isNotNull().alias("is_edge"),
+    )
+    assert _rows(q_graph_jaccard(spark, SF_SMOKE)) == _rows(old)

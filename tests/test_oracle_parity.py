@@ -62,7 +62,8 @@ _ROUND_POW10_ALLOWED = {
 # order-dependent across engines, so rounding it is a per-(query,
 # dataset) coin flip that q_snapshot_diff lost at sf0.1 in round 7.
 # Every name here is pinned green by BOTH full-registry sweeps
-# (SELFCHECK_r07.json at sf0.01, SELFCHECK_r07_sf01.json at sf0.1);
+# (`git show 75b82e1:SELFCHECK_r07.json` at sf0.01, `..._r07_sf01.json`
+# at sf0.1);
 # many round sums of exact integers, which are safe outright. A NEW
 # query must either sum integer cents per row (the convention) or be
 # added here after passing a two-scale sweep.
@@ -87,7 +88,8 @@ _ROUNDED_SUM_AUDITED = {
     # r17: floor-form ratios over sums of exact INTEGER hit/truth/
     # candidate counts (the q_ldiversity class — order-independent by
     # construction); both additionally hash-audited at sf0.01 AND
-    # sf0.1 (SELFCHECK_r17 / SELFCHECK_r17_sf01) and replayed by the
+    # sf0.1 (`git show 75b82e1:SELFCHECK_r17.json` / `..._r17_sf01.json`)
+    # and replayed by the
     # r17 Hypothesis battery.
     "q_sim_ivf_probe_curve",
     "q_sim_rerank_grid",

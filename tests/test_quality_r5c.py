@@ -1,7 +1,8 @@
-"""Semantic property tests for the round-5 governance/warehouse batch —
-invariants and brute-force agreement the DuckDB oracle diff cannot see
-(the oracle proves Spark≡SQL; these prove the shared spec is the
-intended algorithm)."""
+"""Data-quality, warehouse and governance invariants on the smoke
+fixture: clean referential checks, Benford and winsorize partitions,
+brute-force blocking, PII and keyphrase replays, handshake and numpy
+agreement. Kept under its original module name so the node ids stay
+stable; it joins ``test_invariants.py`` in a later change."""
 
 from __future__ import annotations
 
@@ -38,7 +39,7 @@ from .conftest import SF_SMOKE
 def test_dq_checks_clean_fixture_and_counts(spark):
     rows = {r.check_name: r for r in q_dq_checks(spark, SF_SMOKE).collect()}
     assert len(rows) == 6
-    # driver fixtures are referentially clean: every check passes
+    # the smoke fixtures are referentially clean: every check passes
     for r in rows.values():
         assert r.n_violations == 0 and r.passed == 1
     n_orders = load_table(spark, SF_SMOKE, "orders").count()

@@ -42,7 +42,7 @@ from spring_and_kafka_spark.streaming.templates import (
     template_delta_stream,
 )
 
-from .conftest import SF_SMOKE, mv_base_and_changelog
+from .conftest import SF_SMOKE, drain, mv_base_and_changelog
 
 
 def test_foreach_batch_sees_every_batch(spark, tmp_path):
@@ -53,8 +53,7 @@ def test_foreach_batch_sees_every_batch(spark, tmp_path):
     def handle(batch_df, batch_id: int) -> None:
         seen.append((batch_id, batch_df.count()))
 
-    q = foreach_batch_sink(stream, handle).trigger(availableNow=True).start()
-    q.awaitTermination()
+    drain(foreach_batch_sink(stream, handle))
     assert len(seen) >= 3  # 6 files / 2 per trigger
     assert sum(n for _, n in seen) == 1000  # every event delivered once
     assert [b for b, _ in seen] == sorted({b for b, _ in seen})  # ordered, unique
@@ -67,8 +66,7 @@ def test_parquet_sink_exactly_once_restart(spark, tmp_path):
 
     def run():
         stream = read_event_stream(spark, staged, max_files_per_trigger=2)
-        q = parquet_sink(stream, out, ckpt).trigger(availableNow=True).start()
-        q.awaitTermination()
+        drain(parquet_sink(stream, out, ckpt))
 
     run()
     n1 = spark.read.parquet(out).count()
@@ -186,12 +184,12 @@ def test_maintainer_resumes_after_crash(
     staged = _stage(rows(spark), str(tmp_path / "stage"))
     state = str(tmp_path / "state")
 
-    def drain():
+    def run():
         start(_file_stream(spark, staged), state).awaitTermination()
 
     _crash_writes(monkeypatch, f"/{table}/batch_id=2", mid_write=during)
     with pytest.raises(StreamingQueryException):
-        drain()
+        run()
     if during:
         torn = f"batch_id=2 under {table}/ has no _SUCCESS"
     else:
@@ -200,7 +198,7 @@ def test_maintainer_resumes_after_crash(
         read(spark, state)
 
     monkeypatch.undo()
-    drain()
+    run()
     got = read(spark, state)
     cols = got.columns
     assert {tuple(r[c] for c in cols) for r in got.collect()} == {
@@ -278,6 +276,35 @@ def test_reader_raises_on_legacy_state_layout(spark, tmp_path):
     ).write.parquet(f"{ok}/day_users/batch_id=0")
     open(f"{ok}/_hidden", "w").close()
     assert maintained_freshness(spark, ok).count() == 1
+
+
+def test_markerless_committer_state_merges_with_a_warning(
+    spark, tmp_path, caplog
+):
+    """With ``mapreduce.fileoutputcommitter.marksuccessfuljobs=false``
+    (the common object-store-committer setting) Spark's own writes leave
+    no ``_SUCCESS`` marker, so a drained maintainer's state has none.
+    The public reader follows the same setting: it merges that state to
+    the batch answer and logs the marker-less warning."""
+    import glob
+    import logging
+
+    key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    staged = _stage(load_table(spark, SF_SMOKE, "events"), str(tmp_path / "stage"))
+    state = str(tmp_path / "state")
+    spark.conf.set(key, "false")
+    try:
+        freshness_delta_stream(_file_stream(spark, staged), state).awaitTermination()
+        assert glob.glob(f"{state}/day_users/batch_id=*")
+        assert not glob.glob(f"{state}/**/_SUCCESS", recursive=True)
+        with caplog.at_level(
+            logging.WARNING, logger="spring_and_kafka_spark.streaming.sinks"
+        ):
+            got = _audit(maintained_freshness(spark, state))
+    finally:
+        spark.conf.unset(key)
+    assert got == _audit(q_dq_freshness(spark, SF_SMOKE))
+    assert any("marker-less" in r.getMessage() for r in caplog.records)
 
 
 def test_maintained_freshness_with_nulls_equals_batch(spark, tmp_path):

@@ -27,6 +27,8 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
+from .conftest import drain
+
 ROCKSDB = (
     "org.apache.spark.sql.execution.streaming.state."
     "RocksDBStateStoreProvider"
@@ -109,17 +111,14 @@ def test_stateful_query_writes_rocksdb_state(spark, tmp_path):
     ).write.parquet(src)
 
     sdf = spark.readStream.schema("k long, v long").parquet(src)
-    q = (
+    drain(
         sdf.groupBy("k")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("s"))
         .writeStream.outputMode("complete")
         .format("memory")
         .queryName("rocksdb_state_probe")
         .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
     out = spark.table("rocksdb_state_probe")
     assert out.count() == 13
@@ -168,25 +167,22 @@ def test_tumbling_counts_resumes_from_checkpoint(spark, tmp_path):
     stage = str(tmp_path / "events")
     ck = str(tmp_path / "ck")
 
-    def drain(name: str) -> set:
-        q = (
+    def run(name: str) -> set:
+        drain(
             tumbling_counts(read_event_stream(spark, stage))
             .writeStream.format("memory")
             .queryName(name)
             .outputMode("complete")
             .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
         return {tuple(r) for r in spark.table(name).collect()}
 
     batch = {tuple(r) for r in tumbling_counts(ev).collect()}
     stage_time_ordered_chunks(ev, stage, lo=1, hi=4)
-    first = drain("tumble_first_half")
+    first = run("tumble_first_half")
     assert first and first != batch  # phase 1 saw only half the events
     stage_time_ordered_chunks(ev, stage, lo=4, hi=7)  # lands while down
-    assert drain("tumble_resumed") == batch
+    assert run("tumble_resumed") == batch
     assert glob.glob(
         os.path.join(ck, "state", "**", "*.changelog"), recursive=True
     ), "the resumed aggregate left no RocksDB changelog"
@@ -238,15 +234,12 @@ def test_cusum_keyed_state_resumes_from_checkpoint(spark, tmp_path):
         def on_batch(bdf, bid):
             bdf.write.mode("overwrite").parquet(f"{out_dir}/batch_id={bid}")
 
-        q = (
+        drain(
             cusum_stream(dev)
             .writeStream.foreachBatch(on_batch)
             .option("checkpointLocation", ck)
             .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
 
     add_chunks(1, 4)
     run_phase()  # drains the first half, then stops (availableNow)
@@ -370,15 +363,12 @@ def test_attribution_keyed_state_resumes_from_checkpoint(spark, tmp_path):
         def on_batch(bdf, bid):
             bdf.write.mode("overwrite").parquet(f"{out_dir}/batch_id={bid}")
 
-        q = (
+        drain(
             attribution_stream(e)
             .writeStream.foreachBatch(on_batch)
             .option("checkpointLocation", ck)
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
 
     stage_time_ordered_chunks(ev, stage, lo=1, hi=4)
     run_phase()  # first half, stop

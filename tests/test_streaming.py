@@ -24,7 +24,7 @@ from spring_and_kafka_spark.streaming.windows import (
     tumbling_counts,
 )
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, drain
 
 
 @pytest.fixture(scope="module")
@@ -35,14 +35,11 @@ def staged(spark, tmp_path_factory):
 
 def _drain(spark, sdf, mode):
     name = f"t_{uuid.uuid4().hex[:8]}"
-    q = (
+    drain(
         sdf.writeStream.format("memory")
         .queryName(name)
         .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return spark.table(name)
 
 
@@ -104,6 +101,34 @@ def test_stream_tumble_equals_batch(spark, staged):
     out = _drain(spark, stream, "complete")
     batch = tumbling_counts(load_table(spark, SF_SMOKE, "events"))
     assert _as_set(out) == _as_set(batch)
+
+
+def test_tumbling_counts_progress_accounts_for_every_row(spark, tmp_path):
+    """The stream's own progress metrics, read off the query ``drain``
+    returns: the micro-batches' ``numInputRows`` add up to the staged
+    events, and after the drain the windowed aggregate's state holds only
+    the windows the 2-hour watermark keeps open — at most three 1-hour
+    windows per event type — far fewer than the windows append mode
+    emitted over the fixture's 30 days."""
+    from .conftest import stage_time_ordered_chunks
+
+    ev = load_table(spark, SF_SMOKE, "events")
+    stage = stage_time_ordered_chunks(ev, str(tmp_path / "events"))
+    name = f"t_{uuid.uuid4().hex[:8]}"
+    q = drain(
+        tumbling_counts(read_event_stream(spark, stage))
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+    )
+    progress = q.recentProgress
+    assert sum(p.numInputRows for p in progress) == ev.count() == 1000
+    held = progress[-1].stateOperators[0].numRowsTotal
+    n_types = ev.select("event_type").distinct().count()
+    emitted = spark.table(name).count()
+    assert 0 < held <= 3 * n_types
+    assert held * 10 < emitted
 
 
 def test_stream_slide_equals_batch(spark, staged):
@@ -201,15 +226,12 @@ def test_kafka_real_broker_roundtrip(spark, tmp_path):
     )
     consumed = read_stream(spark, topic=topic, max_offsets_per_trigger=None)
     name = f"kafka_rt_{uuid.uuid4().hex[:8]}"
-    q = (
+    drain(
         consumed.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     got = spark.table(name)
     assert got.count() == n
     assert got.filter(~F.col("value").startswith("#")).count() == 0

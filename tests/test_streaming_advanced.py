@@ -15,7 +15,7 @@ from spring_and_kafka_spark.streaming.replay import (
 )
 from spring_and_kafka_spark.streaming.stateful import running_user_totals
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, drain
 
 import pytest
 
@@ -36,14 +36,11 @@ def staged(spark, tmp_path_factory):
 
 def _drain(spark, sdf, mode):
     name = f"t_{uuid.uuid4().hex[:8]}"
-    q = (
+    drain(
         sdf.writeStream.format("memory")
         .queryName(name)
         .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     return spark.table(name)
 
 
@@ -209,14 +206,11 @@ def test_stream_cusum_equals_batch(spark, tmp_path):
         .parquet(stage)
     )
     out = cusum_stream(stream)
-    q = (
+    drain(
         out.writeStream.format("memory")
         .queryName("cusum_stream_out")
         .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
     # update mode emits one row per key per batch; the final (largest
     # n_events) row per key is the full-history answer
@@ -289,15 +283,12 @@ def test_stream_attribution_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(stage)
     )
-    q = (
+    drain(
         attribution_stream(stream)
         .writeStream.format("memory")
         .queryName("attr_stream_out")
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
     streamed = {
         r.campaign: (r.n, round(r.rev, 2))
@@ -682,11 +673,11 @@ def test_single_table_maintainers_raise_on_torn_batch(
     segdf) read their one ``{state}/{table}/batch_id=N`` table through
     read_partial_state, so a batch_id partition missing its _SUCCESS
     marker (a crash DURING that write) RAISES at read time instead of
-    silently merging partial state — and require_success=False
-    explicitly restores the marker-less committer behavior, logging a
-    warning per merged marker-less partition batch so operators can
-    distinguish a markerless committer from an actual mid-write
-    crash."""
+    silently merging partial state — and a session whose committer
+    writes no markers (``marksuccessfuljobs=false``) restores the
+    marker-less behavior, logging a warning per merged marker-less
+    partition batch so operators can distinguish a markerless committer
+    from an actual mid-write crash."""
     import logging
     import os
 
@@ -699,6 +690,7 @@ def test_single_table_maintainers_raise_on_torn_batch(
     from spring_and_kafka_spark.streaming.sinks import read_partial_state
     from spring_and_kafka_spark.streaming.sketch import merged_quantiles
 
+    MARKERS = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
     base_mv = spark.createDataFrame(
         [(1, 2, 300)], "month_id long, n_orders long, revenue_cents long"
     )
@@ -754,23 +746,24 @@ def test_single_table_maintainers_raise_on_torn_batch(
         with pytest.raises(RuntimeError, match="no _SUCCESS marker"):
             read(state).collect()
         # marker-less committer mode: the SAME state reads through when
-        # the caller explicitly opts out of the marker check — with a
-        # logged warning naming the merged marker-less partition
-        with caplog.at_level(
-            logging.WARNING,
-            logger="spring_and_kafka_spark.streaming.sinks",
-        ):
-            caplog.clear()
-            assert (
-                read_partial_state(
-                    spark,
-                    state,
-                    ((table, schema),),
-                    name,
-                    require_success=False,
-                )[0].count()
-                == len(rows)
-            )
+        # the session's committer writes no markers — with a logged
+        # warning naming the merged marker-less partition
+        spark.conf.set(MARKERS, "false")
+        try:
+            with caplog.at_level(
+                logging.WARNING,
+                logger="spring_and_kafka_spark.streaming.sinks",
+            ):
+                caplog.clear()
+                assert (
+                    read_partial_state(
+                        spark, state, ((table, schema),), name
+                    )[0].count()
+                    == len(rows)
+                )
+                assert read(state).count() >= 1
+        finally:
+            spark.conf.unset(MARKERS)
         assert any(
             "marker-less" in r.getMessage()
             and "batch_id=0" in r.getMessage()

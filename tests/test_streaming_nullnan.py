@@ -44,7 +44,7 @@ from spring_and_kafka_spark.sources.tables import (
 )
 from spring_and_kafka_spark.streaming.replay import read_event_stream
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, drain
 
 # r18 (VERDICT r17 item 1): this sweep battery exceeds the driver's
 # pytest-verify budget (full suite 37m; driver cut off at ~95%). It is
@@ -126,15 +126,12 @@ def test_injected_stream_applies_float_contract(spark, staged_ordered):
     assert dirty > 100  # injection actually landed
 
     name = "nullnan_contract_probe"
-    q = (
+    drain(
         read_event_stream(spark, staged_ordered, max_files_per_trigger=2)
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     out = spark.table(name)
     assert out.count() == raw.count()
     assert (
@@ -167,15 +164,12 @@ def test_cusum_stream_nullnan_equals_batch(spark, inj_sf, staged_ordered):
             - 60_000_000
         ).alias("d"),
     )
-    q = (
+    drain(
         cusum_stream(dev)
         .writeStream.format("memory")
         .queryName("cusum_nullnan_out")
         .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
     last = {}
     for r in spark.sql("SELECT * FROM cusum_nullnan_out").collect():
@@ -216,15 +210,12 @@ def test_attribution_stream_nullnan_equals_batch(
         "value",
         F.get_json_object("props", "$.k").cast("long").alias("k"),
     )
-    q = (
+    drain(
         attribution_stream(ev)
         .writeStream.format("memory")
         .queryName("attr_nullnan_out")
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
 
     out = spark.table("attr_nullnan_out")
     # contract compliance: emitted purchase values are finite-or-null
@@ -259,14 +250,11 @@ def test_user_totals_stream_nullnan_equals_batch(
     stream = running_user_totals(
         read_event_stream(spark, staged_ordered, max_files_per_trigger=2)
     )
-    q = (
+    drain(
         stream.writeStream.format("memory")
         .queryName("totals_nullnan_out")
         .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     out = spark.table("totals_nullnan_out")
     final = (
         out.withColumn(
@@ -492,15 +480,12 @@ def test_cusum_all_null_key_matches_batch_and_oracle(spark, tmp_path):
             - 60_000_000
         ).alias("d"),
     )
-    q = (
+    drain(
         cusum_stream(dev)
         .writeStream.format("memory")
         .queryName("cusum_allnull_out")
         .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
     last = {}
     for r in spark.sql("SELECT * FROM cusum_allnull_out").collect():
         if (

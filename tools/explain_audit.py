@@ -1,6 +1,7 @@
-"""Dump formatted physical plans for the headline queries into PLANS.md —
+"""Dump formatted physical plans for the headline queries as markdown —
 the .explain('formatted') audit as a reviewable artifact (pushdown, pruning,
-broadcast choices, exchange counts).
+broadcast choices, exchange counts). PLANS.md is regenerated on demand,
+not committed (the last committed copy: `git show 75b82e1:PLANS.md`):
 
     python tools/explain_audit.py > PLANS.md
 """

@@ -6,9 +6,11 @@ multiset of normalized values. Run before every milestone commit:
 
     python tools/selfcheck.py [--vanilla] [--json out.json] [sf_dir] [query ...]
 
---json writes a per-query result artifact (the full-registry sweep is
-committed each round as SELFCHECK_r{N}.json so oracle changes are provably
-validated beyond the driver's 50-slot window — ADVICE r2 #1).
+--json writes a per-query result artifact. The latest full-registry
+sweeps are committed as SELFCHECK_r18.json (sf0.01) and
+SELFCHECK_r18_sf01.json (sf0.1), so oracle changes are provably
+validated beyond the 50-entry verified window; earlier sweeps are in git
+history (e.g. `git show 75b82e1:SELFCHECK_r17.json`).
 
 --vanilla uses a default-config SparkSession (200 shuffle partitions, no
 tuning) — the same kind of session the driver uses — instead of the
