@@ -80,6 +80,11 @@ def ratio6(num: Column | str, den: Column | str) -> Column:
     return F.floor(n * 1e6 / d + F.lit(0.5)) / 1e6
 
 
+def ratio6_sql(num: str, den: str | int) -> str:
+    """DuckDB twin of ratio6."""
+    return f"floor({num} * 1e6 / {den} + 0.5) / 1e6"
+
+
 def array_pairs(arr: Column | str, a: str, b: str) -> Column:
     """ARRAY<STRUCT<a, b>> of every (x, y) with x before y in `arr` — the
     in-array pair expansion behind the grouped candidate generators

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spring_and_kafka_spark.llm.similarity import load_vectors
+from spring_and_kafka_spark.llm.text import posexplode_sql, tok_array, tok_array_sql
 from spring_and_kafka_spark.registry import register
 from spring_and_kafka_spark.sources.tables import load_table
 
@@ -61,12 +62,10 @@ def q_fn_array(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_fn_explode",
-    oracle="""
+    oracle=f"""
     SELECT doc_id, tok, CAST(pos AS INT) AS pos
     FROM (
-      SELECT doc_id,
-             unnest(string_split(text, ' ')) AS tok,
-             unnest(range(len(string_split(text, ' ')))) AS pos
+      SELECT doc_id, {posexplode_sql(tok_array_sql(), "tok", "pos")}
       FROM documents WHERE doc_id < 20
     )
     """,
@@ -76,7 +75,7 @@ def q_fn_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (generator expands inline — no shuffle)."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 20)
     return d.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
+        "doc_id", F.posexplode(tok_array()).alias("pos", "tok")
     ).select("doc_id", "tok", F.col("pos").cast("int").alias("pos"))
 
 

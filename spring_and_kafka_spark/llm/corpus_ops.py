@@ -18,6 +18,7 @@ from spring_and_kafka_spark.llm.dedup import (
     q_dedup_clusters_lsh,
 )
 from spring_and_kafka_spark.llm.similarity import load_vectors
+from spring_and_kafka_spark.llm.text import n_tokens, n_tokens_sql
 from spring_and_kafka_spark.registry import register
 from spring_and_kafka_spark.sources.tables import load_table
 
@@ -55,11 +56,8 @@ def q_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_corpus_budget",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, lang, len(string_split(text, ' ')) AS n_toks
-      FROM documents
-    ),
+    oracle=f"""
+    WITH toks AS (SELECT doc_id, lang, {n_tokens_sql()} AS n_toks FROM documents),
     cum AS (
       SELECT doc_id, lang, n_toks,
              sum(n_toks) OVER (PARTITION BY lang ORDER BY doc_id
@@ -80,9 +78,7 @@ def q_corpus_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan. At 100 TB the per-partition running sum shuffles each language
     once — the same shape as any windowed aggregation."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", "lang", F.size(F.split("text", " ")).alias("n_toks")
-    )
+    toks = d.select("doc_id", "lang", n_tokens().alias("n_toks"))
     w = (
         Window.partitionBy("lang")
         .orderBy("doc_id")
@@ -184,12 +180,12 @@ def q_text_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_corpus_pack",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE docs AS (
       -- packable docs carry a payload and a language route: NULL text
       -- has no token count (pack_kernel would see NaN) and NULL lang
-      -- breaks the recursive equi-join on lang (NULLCHECK r9 contract)
-      SELECT lang, doc_id, len(string_split(text, ' ')) AS n_toks,
+      -- breaks the recursive equi-join on lang
+      SELECT lang, doc_id, {n_tokens_sql()} AS n_toks,
              row_number() OVER (PARTITION BY lang ORDER BY doc_id) AS rn
       FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL
     ),
@@ -225,10 +221,7 @@ def q_corpus_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & F.col("lang").isNotNull()
     )
-    toks = d.select(
-        "doc_id", "lang", F.size(F.split("text", " ")).alias("n_toks")
-    )
-    return corpus_pack(toks)
+    return corpus_pack(d.select("doc_id", "lang", n_tokens().alias("n_toks")))
 
 
 # Contiguous doc_id span per (lang, shard) packing group. Bins never span a

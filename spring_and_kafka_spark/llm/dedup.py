@@ -33,9 +33,21 @@ from spring_and_kafka_spark.exec_utils import (
     message_edges,
     min_step,
     ratio6,
+    ratio6_sql,
     spread,
 )
-from spring_and_kafka_spark.llm.text import _BP_SEG, boilerplate_segments
+from spring_and_kafka_spark.llm.text import (
+    boilerplate_segments,
+    boilerplate_segments_sql,
+    grams,
+    grams_sql,
+    n_tokens_sql,
+    posexplode_sql,
+    shingles,
+    shingles_sql,
+    tok_array,
+    tok_array_sql,
+)
 from spring_and_kafka_spark.registry import register
 from spring_and_kafka_spark.sources.tables import load_table
 
@@ -61,31 +73,22 @@ _NGRAM_JACCARD = 0.6
 # every oracle that shingles text composes these fragments instead of
 # hand-copying them.
 
-_PLANTED_CORPUS_SQL = """corpus AS (
-      SELECT doc_id, text FROM documents
+def _planted_corpus_sql(where: str = "") -> str:
+    """DuckDB twin of planted() over `documents` filtered by `where`."""
+    return f"""corpus AS (
+      SELECT doc_id, text FROM documents {where}
       UNION ALL
       SELECT doc_id + 100000, regexp_replace(text, '\\s+\\S+$', '')
-      FROM documents
+      FROM documents {where}
     )"""
 
 
-def shingle_ctes_sql(src: str = "corpus") -> str:
-    """CTEs mirroring shingles() + sizes + the df-cap filter over `src`.
+_PLANTED_CORPUS_SQL = _planted_corpus_sql()
 
-    The WHERE guard mirrors shingles()'s null/empty-text exclusion —
-    without it DuckDB fabricates one ''-shingle per empty doc (DuckDB
-    string_split('') is ['']) and would pair degenerate docs the Spark
-    side correctly ignores."""
-    return f"""sh AS (
-      SELECT DISTINCT doc_id, shingle FROM (
-        SELECT doc_id,
-               unnest(list_transform(
-                 range(greatest(len(string_split(text, ' ')) - 2, 1)),
-                 i -> array_to_string(string_split(text, ' ')[i + 1 : i + 3], ' ')
-               )) AS shingle
-        FROM {src} WHERE text IS NOT NULL AND text <> ''
-      )
-    ),
+
+def shingle_ctes_sql(src: str = "corpus") -> str:
+    """CTEs mirroring shingles() + sizes + the df-cap filter over `src`."""
+    return f"""sh AS ({shingles_sql(src)}),
     sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
     shj AS (
       SELECT doc_id, shingle FROM sh
@@ -125,35 +128,24 @@ _EDGES_SQL = f"""{_OV_SQL},
     )"""
 
 
-def planted_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents ∪ perturbed copies (drop last token, doc_id+100000)."""
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    perturbed = d.select(
+def perturbed(d: DataFrame) -> DataFrame:
+    """The planted near-dup copies of (doc_id, text) rows: last token
+    dropped, doc_id + 100000."""
+    return d.select(
         (F.col("doc_id") + 100000).alias("doc_id"),
         F.regexp_replace("text", r"\s+\S+$", "").alias("text"),
     )
-    return d.unionByName(perturbed)
 
 
-def shingles(df: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, shingle) distinct pairs; shingle = n consecutive tokens.
-    Docs shorter than n tokens contribute their whole text as one shingle.
+def planted(d: DataFrame) -> DataFrame:
+    """(doc_id, text) rows ∪ their perturbed copies."""
+    d = d.select("doc_id", "text")
+    return d.unionByName(perturbed(d))
 
-    Built with a sliding transform over the token array — no UDF, no
-    explode-then-self-join.
 
-    Null/empty text is excluded up front: without the filter, concat_ws's
-    null-swallowing plus greatest(size-n, 0) would fabricate one empty-
-    string shingle per degenerate doc — an artificial hot shingle that
-    equi-joins every null/empty doc against every other (quadratic on
-    exactly the rows that carry no content)."""
-    clean = df.filter(F.col("text").isNotNull() & (F.length("text") > 0))
-    toks = F.split("text", " ")
-    sh = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-    )
-    return clean.select("doc_id", F.explode(F.array_distinct(sh)).alias("shingle"))
+def planted_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents ∪ perturbed copies (drop last token, doc_id+100000)."""
+    return planted(load_table(spark, sf_dir, "documents"))
 
 
 def hot_keys(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
@@ -487,6 +479,37 @@ def _doc_features(corpus: DataFrame, n: int, df_cap: int) -> DataFrame:
     )
 
 
+def _verified_pairs(
+    docfeat: DataFrame,
+    cand: DataFrame,
+    a: str,
+    b: str,
+    threshold: float,
+    *keep: str,
+) -> DataFrame:
+    """(a, b, j, keep_a…, keep_b…): the candidate pairs (a, b) whose
+    exact Jaccard j = |hs_a ∩ hs_b| / (n_a + n_b − |hs_a ∩ hs_b|) over
+    _doc_features rows reaches `threshold` — the one verify join of the
+    symmetric (lsh_verified_pairs) and the incremental
+    (incremental_near_matches) detectors. `keep` names more feature
+    columns to carry per side, suffixed _a/_b."""
+
+    def side(id_col: str, sfx: str) -> DataFrame:
+        cols = ("hs", "n", *keep)
+        return docfeat.select(
+            F.col("doc_id").alias(id_col), *[F.col(c).alias(c + sfx) for c in cols]
+        )
+
+    c = F.size(F.array_intersect("hs_a", "hs_b"))
+    jac = c / (F.col("n_a") + F.col("n_b") - c)
+    return (
+        cand.join(side(a, "_a"), a)
+        .join(side(b, "_b"), b)
+        .filter(jac >= threshold)
+        .select(a, b, jac.alias("j"), *[k + x for k in keep for x in ("_a", "_b")])
+    )
+
+
 def lsh_verified_pairs(
     corpus: DataFrame,
     n: int = 3,
@@ -537,27 +560,15 @@ def lsh_verified_pairs(
         bucket_cap=bucket_cap,
         stats=stats,
     )
-    a_cols = [F.col("hs").alias("ha"), F.col("n").alias("na")]
-    b_cols = [F.col("hs").alias("hb"), F.col("n").alias("nb")]
-    if with_estimate:
-        a_cols.append(F.col("mh").alias("ma"))
-        b_cols.append(F.col("mh").alias("mb"))
-    ha = docfeat.select(F.col("doc_id").alias("a_id"), *a_cols)
-    hb = docfeat.select(F.col("doc_id").alias("b_id"), *b_cols)
-    c = F.size(F.array_intersect("ha", "hb"))
-    jac = c / (F.col("na") + F.col("nb") - c)
-    out_cols = [F.col("a_id"), F.col("b_id"), F.round(jac, 4).alias("jaccard")]
+    keep = ("mh",) if with_estimate else ()
+    pairs = _verified_pairs(docfeat, candidates, "a_id", "b_id", threshold, *keep)
+    out_cols = ["a_id", "b_id", F.round("j", 4).alias("jaccard")]
     if with_estimate:
         est = F.size(
-            F.filter(F.zip_with("ma", "mb", lambda x, y: x == y), lambda t: t)
+            F.filter(F.zip_with("mh_a", "mh_b", lambda x, y: x == y), lambda t: t)
         ) / float(_MINHASH_PERMS)
         out_cols.append(F.round(est, 4).alias("est_jaccard"))
-    return (
-        candidates.join(ha, "a_id")
-        .join(hb, "b_id")
-        .filter(jac >= threshold)
-        .select(*out_cols)
-    )
+    return pairs.select(*out_cols)
 
 
 @register(
@@ -1036,24 +1047,9 @@ def incremental_near_matches(
     candidates = (
         old_b.join(new_b, ["band", "bucket"]).select("old_id", "new_id").distinct()
     )
-    ha = docfeat.select(
-        F.col("doc_id").alias("old_id"),
-        F.col("hs").alias("ha"),
-        F.col("n").alias("na"),
-    )
-    hb = docfeat.select(
-        F.col("doc_id").alias("new_id"),
-        F.col("hs").alias("hb"),
-        F.col("n").alias("nb"),
-    )
-    c = F.size(F.array_intersect("ha", "hb"))
-    jac = c / (F.col("na") + F.col("nb") - c)
-    matches = (
-        candidates.join(ha, "old_id")
-        .join(hb, "new_id")
-        .filter(jac >= threshold)
-        .select("new_id", F.col("old_id").alias("match_id"), jac.alias("j"))
-    )
+    matches = _verified_pairs(
+        docfeat, candidates, "old_id", "new_id", threshold
+    ).select("new_id", F.col("old_id").alias("match_id"), "j")
     w = W.partitionBy("new_id").orderBy(F.col("j").desc(), "match_id")
     best = (
         matches.withColumn("rn", F.row_number().over(w))
@@ -1128,18 +1124,12 @@ _JCURVE_TS = [(1, 2), (3, 5), (7, 10), (4, 5)]
 # path. Covers ALL docs at sf0.01 (hash-identical to the unbounded
 # form there); caps the pair space structurally at every larger scale.
 _JCURVE_DOC_CAP = 1000
-_JCURVE_CORPUS_SQL = f"""corpus AS (
-      SELECT doc_id, text FROM documents WHERE doc_id < {_JCURVE_DOC_CAP}
-      UNION ALL
-      SELECT doc_id + 100000, regexp_replace(text, '\\s+\\S+$', '')
-      FROM documents WHERE doc_id < {_JCURVE_DOC_CAP}
-    )"""
 
 
 @register(
     "q_dedup_threshold_curve",
     oracle=f"""
-    WITH {_JCURVE_CORPUS_SQL},
+    WITH {_planted_corpus_sql(f"WHERE doc_id < {_JCURVE_DOC_CAP}")},
     {shingle_ctes_sql()},
     {_OV_SQL},
     scored AS (SELECT c, na + nb - c AS u FROM ov),
@@ -1155,7 +1145,7 @@ _JCURVE_CORPUS_SQL = f"""corpus AS (
     SELECT CAST(t.threshold AS DOUBLE) AS threshold, a.n_considered,
            t.n_pairs,
            CASE WHEN a.n_considered > 0
-                THEN floor(t.n_pairs * 1e6 / a.n_considered + 0.5) / 1e6
+                THEN {ratio6_sql("t.n_pairs", "a.n_considered")}
            END AS pair_rate
     FROM agg a CROSS JOIN (
       {' UNION ALL '.join(
@@ -1196,14 +1186,11 @@ def q_dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_dedup_ngram's ground-truth class (df-capped shingle equi-join),
     reduced by ONE conditional aggregation (all four thresholds in one
     pass, no rescan) to a single row, then a 4-row unpivot."""
-    base = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < _JCURVE_DOC_CAP
-    ).select("doc_id", "text")
-    perturbed = base.select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.regexp_replace("text", r"\s+\S+$", "").alias("text"),
+    corpus = planted(
+        load_table(spark, sf_dir, "documents").filter(
+            F.col("doc_id") < _JCURVE_DOC_CAP
+        )
     )
-    corpus = base.unionByName(perturbed)
     scored = shingle_overlap(corpus, 3, _SHINGLE_DF_CAP).select(
         "c", (F.col("na") + F.col("nb") - F.col("c")).alias("u")
     )
@@ -1232,11 +1219,7 @@ def q_dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_considered",
         F.col("r.n_pairs").alias("n_pairs"),
         F.when(
-            F.col("n_considered") > 0,
-            F.floor(
-                F.col("r.n_pairs") * 1e6 / F.col("n_considered") + F.lit(0.5)
-            )
-            / 1e6,
+            F.col("n_considered") > 0, ratio6("r.n_pairs", "n_considered")
         ).alias("pair_rate"),
     )
 
@@ -1443,26 +1426,15 @@ def q_dedup_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SUBSTR_MIN_DOCS = 2  # a segment in >= 2 distinct docs is duplicated text
+# The keyed corpus of the per-doc segment readouts: a NULL doc_id row has
+# no doc to report on (Spark side: the doc_id filter before the segments).
+_KEYED_DOCS_SQL = "(SELECT * FROM documents WHERE doc_id IS NOT NULL)"
 
 
 @register(
     "q_dedup_substring",
     oracle=f"""
-    WITH d AS (
-      SELECT doc_id, string_split(text, ' ') AS ts,
-             len(string_split(text, ' ')) AS n
-      FROM documents
-      WHERE text IS NOT NULL AND text <> '' AND doc_id IS NOT NULL
-    ),
-    seg AS (
-      SELECT doc_id, start_tok // {_BP_SEG} AS seg_idx,
-             array_to_string(ts[start_tok + 1 : start_tok + {_BP_SEG}], ' ')
-               AS seg
-      FROM (SELECT doc_id, ts,
-                   unnest(generate_series(0, greatest(n - 1, 0), {_BP_SEG}))
-                     AS start_tok
-            FROM d)
-    ),
+    WITH seg AS ({boilerplate_segments_sql(_KEYED_DOCS_SQL)}),
     flag AS (
       SELECT seg, count(DISTINCT doc_id) >= {_SUBSTR_MIN_DOCS} AS dup
       FROM seg GROUP BY seg
@@ -1492,8 +1464,7 @@ _SUBSTR_MIN_DOCS = 2  # a segment in >= 2 distinct docs is duplicated text
       ) GROUP BY doc_id
     )
     SELECT s.doc_id, s.n_segments, s.n_dup, s.dup_chars,
-           CASE WHEN s.chars > 0 THEN
-             floor(s.dup_chars * 1e6 / s.chars + 0.5) / 1e6
+           CASE WHEN s.chars > 0 THEN {ratio6_sql("s.dup_chars", "s.chars")}
            END AS dup_char_frac,
            coalesce(r.longest_run, 0) AS longest_run
     FROM stats s LEFT JOIN runs r ON s.doc_id = r.doc_id
@@ -1583,11 +1554,9 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_segments",
         "n_dup",
         "dup_chars",
-        F.when(
-            F.col("chars") > 0,
-            F.floor(F.col("dup_chars") * 1e6 / F.col("chars") + F.lit(0.5))
-            / 1e6,
-        ).alias("dup_char_frac"),
+        F.when(F.col("chars") > 0, ratio6("dup_chars", "chars")).alias(
+            "dup_char_frac"
+        ),
         F.coalesce(F.col("longest_run"), F.lit(0)).alias("longest_run"),
     )
 
@@ -1595,21 +1564,7 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_dedup_seg_df_hist",
     oracle=f"""
-    WITH d AS (
-      SELECT doc_id, string_split(text, ' ') AS ts,
-             len(string_split(text, ' ')) AS n
-      FROM documents
-      WHERE text IS NOT NULL AND text <> '' AND doc_id IS NOT NULL
-    ),
-    seg AS (
-      SELECT doc_id,
-             array_to_string(ts[start_tok + 1 : start_tok + {_BP_SEG}], ' ')
-               AS seg
-      FROM (SELECT doc_id, ts,
-                   unnest(generate_series(0, greatest(n - 1, 0), {_BP_SEG}))
-                     AS start_tok
-            FROM d)
-    ),
+    WITH seg AS ({boilerplate_segments_sql(_KEYED_DOCS_SQL)}),
     f AS (
       SELECT seg, CAST(count(DISTINCT doc_id) AS BIGINT) AS df,
              CAST(count(*) AS BIGINT) AS inst
@@ -1627,7 +1582,7 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
            (CAST(1 AS BIGINT) << bucket) AS lo,
            (CAST(1 AS BIGINT) << (bucket + 1)) - 1 AS hi,
            n_segments, n_instances,
-           floor(n_instances * 1e6 / total + 0.5) / 1e6 AS inst_share
+           {ratio6_sql("n_instances", "total")} AS inst_share
     FROM w
     """,
     tags=("dedup", "text"),
@@ -1674,6 +1629,13 @@ def q_dedup_seg_df_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count_distinct("doc_id").alias("df"),
         F.count(F.lit(1)).alias("inst"),
     )
+    return seg_df_histogram(f)
+
+
+def seg_df_histogram(f: DataFrame) -> DataFrame:
+    """q_dedup_seg_df_hist's readout from a (seg, df, inst) table —
+    shared with streaming.segdf.maintained_seg_df_hist so stream ≡
+    batch is an identity on the readout."""
     h = f.groupBy(
         (F.length(F.bin(F.col("df"))) - 1).cast("long").alias("bucket")
     ).agg(
@@ -1692,10 +1654,7 @@ def q_dedup_seg_df_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("shiftleft(1L, cast(bucket AS INT) + 1) - 1L").alias("hi"),
         "n_segments",
         "n_instances",
-        (
-            F.floor(F.col("n_instances") * 1e6 / F.col("total") + F.lit(0.5))
-            / 1e6
-        ).alias("inst_share"),
+        ratio6("n_instances", "total").alias("inst_share"),
     )
 
 
@@ -1734,8 +1693,7 @@ def _span_ctes_sql(with_shift: bool) -> str:
       SELECT doc_id, text FROM base
       UNION ALL
       SELECT doc_id + 200000,
-             array_to_string(
-               string_split(text, ' ')[{_ALIGN_SHIFT + 1}:], ' ')
+             array_to_string({tok_array_sql()}[{_ALIGN_SHIFT + 1}:], ' ')
       FROM base
     ),"""
         if with_shift
@@ -1747,16 +1705,12 @@ def _span_ctes_sql(with_shift: bool) -> str:
     ),
     {corpus}
     d AS (
-      SELECT doc_id, string_split(text, ' ') AS ts,
-             len(string_split(text, ' ')) AS n
+      SELECT doc_id, {tok_array_sql()} AS ts, {n_tokens_sql()} AS n
       FROM corpus WHERE text <> ''
     ),
     sg AS (
-      SELECT doc_id, pos,
-             array_to_string(ts[pos + 1 : pos + {_ALIGN_K}], ' ') AS seg
-      FROM (SELECT doc_id, ts,
-                   unnest(range(greatest(n - {_ALIGN_K}, 0) + 1)) AS pos
-            FROM d)
+      SELECT doc_id, {posexplode_sql(grams_sql("ts", _ALIGN_K, True), "seg", "pos")}
+      FROM d
     ),
     hvt AS (
       SELECT doc_id, pos, {_mhest_hash_sql()} AS hv
@@ -1789,18 +1743,24 @@ def _span_ctes_sql(with_shift: bool) -> str:
     )"""
 
 
+def span_docs(df: DataFrame) -> DataFrame:
+    """(doc_id, ts, n): the token table the span family anchors over —
+    keyed docs with text only (NULL doc_id, NULL and empty text are
+    dropped, the base CTE of _span_ctes_sql)."""
+    keyed = df.filter(
+        F.col("doc_id").isNotNull() & F.col("text").isNotNull() & (F.col("text") != "")
+    )
+    ts = tok_array()
+    return keyed.select("doc_id", ts.alias("ts"), F.size(ts).alias("n"))
+
+
 def _span_anchor_table(docs: DataFrame) -> DataFrame:
     """(doc_id, hv, pos): mod-{_ALIGN_MOD}-sampled sha2-prefix anchors
     at MIN position per (doc, hash), from a token table
     (doc_id, ts, n). min-pos is a FOLDABLE merge — per-batch partials
     re-min-merged across batches reproduce this table exactly, which is
     what streaming.spananchor relies on."""
-    seq = F.sequence(
-        F.lit(0), F.greatest(F.col("n") - _ALIGN_K, F.lit(0))
-    )
-    segs = F.transform(
-        seq, lambda i: F.concat_ws(" ", F.slice(F.col("ts"), i + 1, _ALIGN_K))
-    )
+    segs = grams(F.col("ts"), _ALIGN_K, whole=True)
     sg = docs.select("doc_id", F.posexplode(segs).alias("pos", "seg"))
     return (
         spread(sg)
@@ -1851,35 +1811,22 @@ def _span_alignments(
     shared anchor-table builder and alignment tail so the streaming
     maintainer (streaming/spananchor.py) runs the IDENTICAL code over
     its merged anchor state."""
-    base = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .filter(
-            F.col("doc_id").isNotNull()
-            & F.col("text").isNotNull()
-            & (F.col("text") != "")
-        )
-    )
+    corpus = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     if with_shift:
-        toks0 = F.split("text", " ")
-        shifted = base.select(
+        ts = tok_array()
+        shifted = corpus.select(
             (F.col("doc_id") + 200000).alias("doc_id"),
             F.array_join(
                 F.slice(
-                    toks0,
+                    ts,
                     _ALIGN_SHIFT + 1,
-                    F.greatest(F.size(toks0) - _ALIGN_SHIFT, F.lit(0)),
+                    F.greatest(F.size(ts) - _ALIGN_SHIFT, F.lit(0)),
                 ),
                 " ",
             ).alias("text"),
         )
-        corpus = base.unionByName(shifted).filter(F.col("text") != "")
-    else:
-        corpus = base
-    toks = F.split("text", " ")
-    docs = corpus.select(
-        "doc_id", toks.alias("ts"), F.size(toks).alias("n")
-    )
+        corpus = corpus.unionByName(shifted)
+    docs = span_docs(corpus)
     an = materialize(_span_anchor_table(docs))
     return docs, _alignments_from_anchors(an)
 
@@ -1896,7 +1843,7 @@ def _span_alignments(
       FROM g
     )
     SELECT b.a_id, b.b_id, b.delta, b.n_anchors, b.span_tokens,
-           floor(b.span_tokens * 1e6 / s.n + 0.5) / 1e6 AS span_frac
+           {ratio6_sql("b.span_tokens", "s.n")} AS span_frac
     FROM best b JOIN d s ON s.doc_id = b.a_id
     WHERE b.rn = 1
     """,
@@ -1983,10 +1930,7 @@ def q_dedup_span_align(spark: SparkSession, sf_dir: str) -> DataFrame:
         "delta",
         "n_anchors",
         "span_tokens",
-        (
-            F.floor(F.col("span_tokens") * 1e6 / F.col("n") + F.lit(0.5))
-            / 1e6
-        ).alias("span_frac"),
+        ratio6("span_tokens", "n").alias("span_frac"),
     )
 
 
@@ -2024,7 +1968,7 @@ def q_dedup_span_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT c.doc_id, ns.n_spans,
            least(c.cv, d.n) AS covered_tokens,
            CAST(d.n AS BIGINT) AS n_tokens,
-           floor(least(c.cv, d.n) * 1e6 / d.n + 0.5) / 1e6 AS cover_frac
+           {ratio6_sql("least(c.cv, d.n)", "d.n")} AS cover_frac
     FROM cov c
     JOIN ns ON ns.doc_id = c.doc_id
     JOIN d ON d.doc_id = c.doc_id

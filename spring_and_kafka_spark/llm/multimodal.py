@@ -95,7 +95,7 @@ _META_ORACLE = """
            CAST(octet_length(encode(text)) % 640 + 1 AS INT) AS width,
            CAST((octet_length(encode(text)) * 7) % 480 + 1 AS INT) AS height,
            -- missing payload -> NULL format: a bare CASE's ELSE branch
-           -- would silently stamp NULL payloads 'jpeg' (NULLCHECK r9)
+           -- would silently stamp NULL payloads 'jpeg'
            CASE WHEN text IS NULL THEN NULL
                 WHEN octet_length(encode(text)) % 2 = 0
                 THEN 'png' ELSE 'jpeg' END AS format

@@ -25,6 +25,15 @@ from spring_and_kafka_spark.llm.dedup import (
     planted_corpus,
     shingle_ctes_sql,
 )
+from spring_and_kafka_spark.llm.text import (
+    grams,
+    grams_sql,
+    n_tokens,
+    n_tokens_sql,
+    quality_gate,
+    tok_array,
+    tok_array_sql,
+)
 from spring_and_kafka_spark.registry import register
 from spring_and_kafka_spark.sources.tables import load_table
 
@@ -41,10 +50,9 @@ _PIPE_JACCARD = 0.6
     oracle=f"""
     WITH {_PLANTED_CORPUS_SQL},
     quality AS (
-      SELECT doc_id, text,
-             len(string_split(text, ' ')) AS n_toks,
-             len(list_filter(string_split(text, ' '), t -> t IN ('a', 'the')))
-               / CAST(len(string_split(text, ' ')) AS DOUBLE) AS stop_ratio
+      SELECT doc_id, text, {n_tokens_sql()} AS n_toks,
+             len(list_filter({tok_array_sql()}, t -> t IN ('a', 'the')))
+               / CAST({n_tokens_sql()} AS DOUBLE) AS stop_ratio
       FROM corpus
     ),
     kept AS (
@@ -99,19 +107,7 @@ def q_pipeline_curate(
     one small groupBy. The dedup removal is an anti-join on the higher-id
     side of each verified duplicate pair."""
     corpus = planted_corpus(spark, sf_dir)
-    toks = F.split("text", " ")
-    quality = corpus.select(
-        "doc_id",
-        "text",
-        F.size(toks).alias("n_toks"),
-        (
-            F.size(F.filter(toks, lambda t: t.isin("a", "the")))
-            / F.size(toks).cast("double")
-        ).alias("stop_ratio"),
-    )
-    kept = quality.filter(
-        (F.col("n_toks") >= 30) & (F.col("stop_ratio") <= 0.2)
-    ).select("doc_id", "text", "n_toks")
+    kept = quality_gate(corpus, "doc_id", "text").select("doc_id", "text", "n_toks")
 
     # dedup: LSH candidates + exact verify on candidates (the 100 TB
     # path, shared with q_dedup_clusters_lsh); remove the higher-id side
@@ -163,7 +159,7 @@ _MIX_WEIGHTS = (("en", 0.5), ("fr", 0.15), ("es", 0.15), ("de", 0.1), ("zh", 0.1
     "q_corpus_mix",
     oracle=f"""
     WITH avail AS (
-      SELECT lang, CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_toks
+      SELECT lang, CAST(sum({n_tokens_sql()}) AS BIGINT) AS n_toks
       FROM documents GROUP BY lang
     ),
     w(lang, weight) AS (
@@ -191,7 +187,7 @@ def q_corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-trivial. All ratios floor-form rounded (cross-engine stable)."""
     d = load_table(spark, sf_dir, "documents")
     avail = d.groupBy("lang").agg(
-        F.sum(F.size(F.split("text", " "))).alias("n_toks")
+        F.sum(n_tokens()).alias("n_toks")
     )
     w = d.sparkSession.createDataFrame(
         list(_MIX_WEIGHTS), "lang STRING, weight DOUBLE"
@@ -214,7 +210,7 @@ def q_corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_corpus_split",
-    oracle="""
+    oracle=f"""
     WITH tagged AS (
       SELECT lang,
              CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'cd'
@@ -222,7 +218,7 @@ def q_corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
                   WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'e6'
                     THEN 'val'
                   ELSE 'test' END AS split,
-             len(string_split(text, ' ')) AS n_toks
+             {n_tokens_sql()} AS n_toks
       FROM documents
     )
     SELECT lang, split,
@@ -253,7 +249,7 @@ def q_corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select(
             "lang",
             split.alias("split"),
-            F.size(F.split("text", " ")).alias("n_toks"),
+            n_tokens().alias("n_toks"),
         )
         .groupBy("lang", "split")
         .agg(F.count("*").alias("n_docs"), F.sum("n_toks").alias("n_toks"))
@@ -336,7 +332,7 @@ def q_sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_decontaminate",
-    oracle="""
+    oracle=f"""
     WITH tagged AS (
       -- NULL-payload contract (the q_text_contamination lesson): only
       -- docs with payloads enter the scrub on either engine
@@ -345,10 +341,8 @@ def q_sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM documents WHERE text IS NOT NULL
     ),
     grams AS (
-      SELECT doc_id, lang, pfx, unnest(list_distinct(list_transform(
-               range(greatest(len(string_split(text, ' ')) - 3, 1)),
-               i -> array_to_string(string_split(text, ' ')[i + 1 : i + 4], ' ')
-             ))) AS shingle
+      SELECT doc_id, lang, pfx,
+             unnest(list_distinct({grams_sql(tok_array_sql(), 4, True)})) AS shingle
       FROM tagged
     ),
     bench AS (
@@ -384,23 +378,15 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combined. If the test-gram set ever outgrows broadcast,
     the same plan degrades gracefully to a shuffled semi-join on the
     gram key — the code path is identical DataFrame ops either way."""
-    # NULL-payload contract (the q_text_contamination lesson): Spark's
-    # concat_ws would mint ''-shingles from NULL text and cross-match
-    # every missing-payload doc; the scrub admits docs with payloads
+    # NULL-payload contract (as in q_text_contamination): the scrub
+    # admits docs with payloads
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
     )
     pfx = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
-    ts = F.split("text", " ")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(ts) - 4, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(ts, i + 1, 4)),
-    )
+    sh4 = F.array_distinct(grams(tok_array(), 4, whole=True))
     sh = d.select(
-        "doc_id",
-        "lang",
-        pfx.alias("pfx"),
-        F.explode(F.array_distinct(grams)).alias("shingle"),
+        "doc_id", "lang", pfx.alias("pfx"), F.explode(sh4).alias("shingle")
     )
     bench = sh.filter(F.col("pfx") >= "e6").select("shingle").distinct()
     flagged = (
@@ -427,8 +413,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_corpus_repeat",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, lang, len(string_split(text, ' ')) AS n_tok
-      FROM documents
+      SELECT doc_id, lang, {n_tokens_sql()} AS n_tok FROM documents
     ),
     avail AS (
       SELECT lang, CAST(sum(n_tok) AS BIGINT) AS n_toks FROM toks GROUP BY lang
@@ -481,9 +466,7 @@ def q_corpus_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     accounting groupBy (a real deployment writes the exploded stream
     straight to the sink, so even that disappears)."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", "lang", F.size(F.split("text", " ")).alias("n_tok")
-    )
+    toks = d.select("doc_id", "lang", n_tokens().alias("n_tok"))
     avail = toks.groupBy("lang").agg(F.sum("n_tok").alias("n_toks"))
     w = d.sparkSession.createDataFrame(
         list(_MIX_WEIGHTS), "lang STRING, weight DOUBLE"

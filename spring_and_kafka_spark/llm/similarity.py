@@ -14,7 +14,7 @@ the rule: the scan (`_vecs` / `_E_SQL`), the NULL-at-zero-norm cosine
 `_sample_sql`), the row_number top-k cut (`_rank` / `_rank_sql`), the
 exact and Hamming per-query tops, the single-query heaps, IVF
 assignment and probing, the PQ encode, and the floor-form ratio
-(`exec_utils.ratio6` / `_ratio6_sql`). An edit to a rule is one edit per
+(`exec_utils.ratio6` / `exec_utils.ratio6_sql`). An edit to a rule is one edit per
 engine, so a query's two halves cannot drift apart.
 """
 
@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from spring_and_kafka_spark.exec_utils import materialize, micros, ratio6
+from spring_and_kafka_spark.exec_utils import materialize, micros, ratio6, ratio6_sql
 from spring_and_kafka_spark.registry import register
 from spring_and_kafka_spark.sources.tables import load_table
 
@@ -57,11 +57,6 @@ def _cos_sql(a: str, b: str) -> str:
         f" / NULLIF(sqrt(list_dot_product({a}, {a}))"
         f" * sqrt(list_dot_product({b}, {b})), 0)"
     )
-
-
-def _ratio6_sql(num: str, den: str | int) -> str:
-    """DuckDB twin of `exec_utils.ratio6`."""
-    return f"floor({num} * 1e6 / {den} + 0.5) / 1e6"
 
 
 def load_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -853,10 +848,10 @@ def q_embed_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     -- the quantizer is LABEL-AGNOSTIC: the same 16 seed centroids
     -- q_sim_ann_ivf routes with (an unlabeled seed must not shrink the
-    -- index being evaluated — r11 review finding); only the VOTING
-    -- vectors require a label. _cos_sql's NULLIF pins the zero-norm
-    -- sim to NULL in every division mode (ADVICE r11) and the NULLS
-    -- LAST rank is the total order Spark's max_by walks
+    -- index being evaluated); only the VOTING vectors require a
+    -- label. _cos_sql's NULLIF pins the zero-norm sim to NULL in every
+    -- division mode, and the NULLS LAST rank is the total order
+    -- Spark's max_by walks
     {_CENTS_SQL},
     assigned AS (
       {_assign_sql("cents", "(SELECT * FROM e WHERE label IS NOT NULL)")}
@@ -871,7 +866,8 @@ def q_embed_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT cluster, CAST(n AS BIGINT) AS n_vectors,
            CAST(label AS INT) AS top_label,
-           -- bare IEEE division of exact integers (r7 ratio rule)
+           -- bare IEEE division of exact integers: one correctly
+           -- rounded op, bit-identical in both engines
            n_lab * 1.0 / n AS purity
     FROM r WHERE rn = 1
     """,
@@ -953,7 +949,7 @@ def q_embed_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent AS ({_centroids_sql("label", "e")}),
     scored AS (
       -- _cos_sql's NULLIF pins zero-norm cosine to NULL in every
-      -- division mode (the q_embed_cluster_purity ADVICE r11 lesson)
+      -- division mode, as in q_embed_cluster_purity
       SELECT e.vec_id, e.label, round({_cos_sql('v', 'cv')}, 4) AS cos_r
       FROM e JOIN cent USING (label)
     ),
@@ -967,7 +963,7 @@ def q_embed_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
       -- (a label whose members share one 4-dp cosine) the raw cutoff
       -- is mu, an avg that drifts from the grid value by engine-
       -- specific ulps — rounding both sides back to the 4-dp grid
-      -- makes the structural tie exact in both engines (r12 review)
+      -- makes the structural tie exact in both engines
       SELECT s.vec_id, s.label, s.cos_r,
              round(st.mu - 2 * st.sd, 4) AS cutoff
       FROM scored s JOIN st USING (label)
@@ -1080,7 +1076,7 @@ def _recall_stats_sql(truth: str, cand: str, name: str) -> str:
       SELECT q.qid, coalesce(s.n_true, 0) AS n_true,
              coalesce(s.n_ca, 0) AS {name}, coalesce(s.hits, 0) AS hits,
              CASE WHEN coalesce(s.n_true, 0) > 0
-                  THEN {_ratio6_sql("coalesce(s.hits, 0)", "s.n_true")}
+                  THEN {ratio6_sql("coalesce(s.hits, 0)", "s.n_true")}
              END AS recall
       FROM qs q LEFT JOIN st s ON s.qid = q.qid
     )"""
@@ -1583,7 +1579,7 @@ _NDCG_DISC_SQL = "[" + ", ".join(repr(d) for d in _NDCG_DISC) + "]"
           FROM terms GROUP BY qid)
     SELECT q.qid,
            coalesce(d.dcg_micros, 0) AS dcg_micros,
-           {_ratio6_sql(
+           {ratio6_sql(
                "CAST(coalesce(d.dcg_micros, 0) AS DOUBLE)", _NDCG_IDCG_MICROS
            )} AS ndcg
     FROM qs q LEFT JOIN d ON d.qid = q.qid
@@ -1660,8 +1656,8 @@ def q_embed_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM counts
     )
     SELECT cluster, n_vecs,
-           {_ratio6_sql("n_vecs", "total")} AS share,
-           {_ratio6_sql("mx * ncl", "total")} AS imbalance,
+           {ratio6_sql("n_vecs", "total")} AS share,
+           {ratio6_sql("mx * ncl", "total")} AS imbalance,
            n_vecs * ncl > 2 * total AS hot
     FROM w
     """,
@@ -1741,7 +1737,7 @@ _CURVE_TS = [0.8, 0.9, 0.95, 0.99]
     SELECT CAST(t.threshold AS DOUBLE) AS threshold, a.n_scored,
            t.n_pairs,
            CASE WHEN a.n_scored > 0
-                THEN {_ratio6_sql("t.n_pairs", "a.n_scored")}
+                THEN {ratio6_sql("t.n_pairs", "a.n_scored")}
            END AS dup_rate
     FROM agg a CROSS JOIN (
       {' UNION ALL '.join(
@@ -1865,7 +1861,7 @@ _RBO_MAX_NANOS = sum(
     SELECT qid,
            CAST(max(ov_at_k) AS BIGINT) AS n_common,
            CAST(sum(tm) AS BIGINT) AS rbo_nanos,
-           {_ratio6_sql("CAST(sum(tm) AS DOUBLE)", _RBO_MAX_NANOS)} AS rbo
+           {ratio6_sql("CAST(sum(tm) AS DOUBLE)", _RBO_MAX_NANOS)} AS rbo
     FROM terms GROUP BY qid
     """,
     tags=("ann", "eval"),
@@ -1979,7 +1975,7 @@ _MRL_K = 10  # recall@k against the full-dimension ranking
     nq AS (SELECT CAST(count(*) AS BIGINT) AS n_queries FROM qs)
     SELECT dm.d AS trunc_dim, nq.n_queries,
            CAST(coalesce(ov.sum_overlap, 0) AS BIGINT) AS sum_overlap,
-           CASE WHEN nq.n_queries > 0 THEN {_ratio6_sql(
+           CASE WHEN nq.n_queries > 0 THEN {ratio6_sql(
                "coalesce(ov.sum_overlap, 0)", f"(nq.n_queries * {_MRL_K})"
            )} END AS mean_recall
     FROM dims dm CROSS JOIN nq LEFT JOIN ov ON ov.d = dm.d
@@ -2185,7 +2181,7 @@ _RERANK_LS = [10, 25, 50, 100]  # shortlist lengths swept by the curve
            CAST(count(t.vec_id) AS BIGINT) AS n_hits,
            max(tn.n_truth) AS n_truth,
            CASE WHEN max(tn.n_truth) > 0 THEN
-             {_ratio6_sql("count(t.vec_id)", "max(tn.n_truth)")}
+             {ratio6_sql("count(t.vec_id)", "max(tn.n_truth)")}
            END AS recall
     FROM sel s LEFT JOIN truth t ON t.vec_id = s.vec_id CROSS JOIN tn
     GROUP BY s.shortlist_len
@@ -2299,9 +2295,9 @@ _GRID_NQ = 8  # evaluated query sample: vec_id < 8 (the NDCG/RBO budget)
            CAST(count(*) AS BIGINT) AS n_queries,
            CAST(sum(h) AS BIGINT) AS n_hits,
            CAST(sum(nt) AS BIGINT) AS n_truth,
-           CASE WHEN sum(nt) > 0 THEN {_ratio6_sql("sum(h)", "sum(nt)")}
+           CASE WHEN sum(nt) > 0 THEN {ratio6_sql("sum(h)", "sum(nt)")}
            END AS recall,
-           min({_ratio6_sql("h", "nt")}) AS worst_recall
+           min({ratio6_sql("h", "nt")}) AS worst_recall
     FROM perq GROUP BY shortlist_len
     """,
     tags=("ann", "eval"),
@@ -2433,12 +2429,12 @@ _PROBE_LS = [1, 2, 4, 8, 16]  # swept probed-cluster counts (16 = scan all)
            FROM perq p JOIN tn USING (qid))
     SELECT nprobe, CAST(count(*) AS BIGINT) AS n_queries,
            CAST(sum(n_cand) AS BIGINT) AS n_cand,
-           {_ratio6_sql("sum(n_cand)", "na.n_all")} AS cand_frac,
+           {ratio6_sql("sum(n_cand)", "na.n_all")} AS cand_frac,
            CAST(sum(h) AS BIGINT) AS n_hits,
            CAST(sum(nt) AS BIGINT) AS n_truth,
-           CASE WHEN sum(nt) > 0 THEN {_ratio6_sql("sum(h)", "sum(nt)")}
+           CASE WHEN sum(nt) > 0 THEN {ratio6_sql("sum(h)", "sum(nt)")}
            END AS recall,
-           min({_ratio6_sql("h", "nt")}) AS worst_recall
+           min({ratio6_sql("h", "nt")}) AS worst_recall
     FROM pq CROSS JOIN na GROUP BY nprobe, na.n_all
     """,
     tags=("ann", "eval"),
@@ -2585,7 +2581,7 @@ def q_sim_ivf_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
            coalesce(p.n_ivfpq, 0) AS n_ivfpq,
            coalesce(p.hits, 0) AS hits,
            CASE WHEN coalesce(tn.nt, 0) > 0
-                THEN {_ratio6_sql("coalesce(p.hits, 0)", "tn.nt")}
+                THEN {ratio6_sql("coalesce(p.hits, 0)", "tn.nt")}
            END AS recall
     FROM qs q
     LEFT JOIN perq p ON p.qid = q.qid

@@ -5,15 +5,24 @@ language ID, document fingerprinting.
 All token work is split/explode/groupBy — pure built-ins, partitioned by
 doc or token key, map-side combined. The sentiment/langid lexicons are tiny
 literal tables broadcast to executors (never a shuffle of the corpus side).
+
+Three rules decide what a text query sees, and both engines must apply
+them identically: how text splits into tokens, how tokens slide into
+n-grams, and how tokens tumble into segments. Each rule has ONE Spark
+kernel with its DuckDB twin beside it (`tok_array`/`tok_array_sql`,
+`grams`/`grams_sql`, `segments`/`segments_sql`, and the token streams
+built on them); every query of the text family, the dedup family and
+the streaming maintainers composes the pair, so an edge-case fix (NULL
+text, '', a doc shorter than the window) is one edit.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from spring_and_kafka_spark.exec_utils import materialize, ratio6
+from spring_and_kafka_spark.exec_utils import materialize, ratio6, ratio6_sql
 from spring_and_kafka_spark.registry import register
 from spring_and_kafka_spark.sources.tables import load_table
 
@@ -24,24 +33,170 @@ NEGATIVE = ("slow", "big", "dup")
 STOPWORDS = ("a", "the")
 
 
-def tokens(df: DataFrame) -> DataFrame:
-    """(doc_id, tok) exploded token stream."""
-    return df.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
+# ---------------------------------------------------------------------------
+# Rule 1, the tokenizer: split on every single space. Empty tokens stay
+# ('a  b' → a, '', b; '' → ['']) and NULL text stays NULL — callers that
+# want neither filter for it themselves.
 
 
-def tokens_lower(df: DataFrame) -> DataFrame:
-    """(doc_id, tok) lower-cased token stream, empty tokens dropped — the
-    shared normalization for vocabulary-level stats (zipf, OOV)."""
+def tok_array(lower: bool = False) -> Column:
+    """The token array of the `text` column (lower-cased first if
+    `lower`)."""
+    return F.split(F.lower("text") if lower else F.col("text"), " ")
+
+
+def tok_array_sql(lower: bool = False) -> str:
+    """DuckDB twin of tok_array."""
+    return f"string_split({'lower(text)' if lower else 'text'}, ' ')"
+
+
+def n_tokens() -> Column:
+    """Token count of the `text` column (NULL for NULL text)."""
+    return F.size(tok_array())
+
+
+def n_tokens_sql() -> str:
+    """DuckDB twin of n_tokens."""
+    return f"len({tok_array_sql()})"
+
+
+def vocab_array() -> Column:
+    """The vocabulary normalization: lower-cased tokens with the empty
+    tokens of doubled or trailing spaces dropped."""
+    return F.filter(tok_array(lower=True), lambda x: x != "")
+
+
+def vocab_array_sql() -> str:
+    """DuckDB twin of vocab_array."""
+    return f"list_filter({tok_array_sql(lower=True)}, x -> x <> '')"
+
+
+def tokens(df: DataFrame, *keys: str) -> DataFrame:
+    """(keys…, tok) token stream; keys default to doc_id."""
+    return df.select(*(keys or ("doc_id",)), F.explode(tok_array()).alias("tok"))
+
+
+def tokens_sql(keys: str = "doc_id") -> str:
+    """DuckDB twin of tokens over `documents`."""
+    return f"SELECT {keys}, unnest({tok_array_sql()}) AS tok FROM documents"
+
+
+def vocab_tokens(df: DataFrame, *keys: str) -> DataFrame:
+    """(keys…, tok) stream of vocab_array tokens — the shared stream of
+    the vocabulary-level stats (zipf, OOV, hapax, entropy, JS shift)."""
     return df.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("tok")
-    ).filter(F.col("tok") != "")
+        *(keys or ("doc_id",)), F.explode(vocab_array()).alias("tok")
+    )
+
+
+def vocab_tokens_sql(keys: str = "doc_id") -> str:
+    """DuckDB twin of vocab_tokens over `documents`."""
+    return f"SELECT {keys}, unnest({vocab_array_sql()}) AS tok FROM documents"
+
+
+def posexplode_sql(arr: str, val: str, pos: str) -> str:
+    """DuckDB twin of F.posexplode(arr).alias(pos, val): 0-based
+    positions zipped with the elements."""
+    return f"unnest({arr}) AS {val}, generate_subscripts({arr}, 1) - 1 AS {pos}"
+
+
+# ---------------------------------------------------------------------------
+# Rule 2, the sliding n-gram window: gram i joins tokens i..i+n-1 with one
+# space. A doc shorter than n tokens has two edge rules, both in use:
+# whole=True yields its whole text as the one gram (shingles, anchors,
+# contamination), whole=False yields no gram (bigram models, sketches).
+# NULL text has no gram under either rule.
+
+
+def _joined(ts: Column, starts: Column, width: int) -> Column:
+    """For each start i, tokens i..i+width-1 of `ts` joined by spaces."""
+    return F.transform(starts, lambda i: F.concat_ws(" ", F.slice(ts, i + 1, width)))
+
+
+def _joined_sql(ts: str, starts: str, width: int) -> str:
+    """DuckDB twin of _joined."""
+    return (
+        f"list_transform({starts}, "
+        f"i -> array_to_string({ts}[i + 1 : i + {width}], ' '))"
+    )
+
+
+def grams(ts: Column, n: int, whole: bool) -> Column:
+    """The n-gram array of token array `ts` under the chosen edge rule."""
+    size = F.size(ts)
+    if not whole:
+        # guarded: sequence(0, -1) would count DOWN for a 1-token doc
+        starts = F.when(size >= n, F.sequence(F.lit(0), size - n)).otherwise(
+            F.array().cast("array<int>")
+        )
+        return _joined(ts, starts, n)
+    # guarded: greatest() skips a NULL size, so NULL text would mint a
+    # '' gram here (and a NULL one in DuckDB)
+    starts = F.sequence(F.lit(0), F.greatest(size - n, F.lit(0)))
+    return F.when(ts.isNotNull(), _joined(ts, starts, n))
+
+
+def grams_sql(ts: str, n: int, whole: bool) -> str:
+    """DuckDB twin of grams over the list expression `ts`."""
+    starts = f"range(greatest(len({ts}) - {n - 1}, {int(whole)}))"
+    out = _joined_sql(ts, starts, n)
+    return f"CASE WHEN {ts} IS NOT NULL THEN {out} END" if whole else out
+
+
+def shingles(df: DataFrame, n: int = 3) -> DataFrame:
+    """(doc_id, shingle) distinct pairs: the whole-rule n-grams of every
+    doc with text.
+
+    Null/empty text is excluded up front: an empty doc's whole-doc gram
+    is '' — an artificial hot shingle that would equi-join every empty
+    doc against every other (quadratic on exactly the rows that carry
+    no content)."""
+    clean = df.filter(F.col("text").isNotNull() & (F.length("text") > 0))
+    sh = F.array_distinct(grams(tok_array(), n, whole=True))
+    return clean.select("doc_id", F.explode(sh).alias("shingle"))
+
+
+def shingles_sql(src: str, n: int = 3) -> str:
+    """DuckDB twin of shingles over table `src`."""
+    return f"""SELECT DISTINCT doc_id, shingle FROM (
+        SELECT doc_id, unnest({grams_sql(tok_array_sql(), n, True)}) AS shingle
+        FROM {src} WHERE text IS NOT NULL AND text <> ''
+      )"""
+
+
+# ---------------------------------------------------------------------------
+# Rule 3, the tumbling segment window: segments start at 0, step, 2·step…
+# below the token count, each `width` tokens long (clipped at the end). A
+# doc of at most one token — and NULL text — still gets the start 0.
+
+
+def seg_starts(ts: Column, step: int) -> Column:
+    """Start offsets of the tumbling window over token array `ts`."""
+    return F.sequence(F.lit(0), F.greatest(F.size(ts) - 1, F.lit(0)), F.lit(step))
+
+
+def seg_starts_sql(ts: str, step: int) -> str:
+    """DuckDB twin of seg_starts."""
+    return f"generate_series(0, greatest(len({ts}) - 1, 0), {step})"
+
+
+def segments(ts: Column, width: int) -> Column:
+    """The tumbling `width`-token segments of `ts`, as strings; NULL
+    text has none (the grams guard)."""
+    return F.when(ts.isNotNull(), _joined(ts, seg_starts(ts, width), width))
+
+
+def segments_sql(ts: str, width: int) -> str:
+    """DuckDB twin of segments."""
+    out = _joined_sql(ts, seg_starts_sql(ts, width), width)
+    return f"CASE WHEN {ts} IS NOT NULL THEN {out} END"
 
 
 @register(
     "q_text_tokens",
-    oracle="""
+    oracle=f"""
     SELECT tok, count(*) AS n, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-    FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
+    FROM ({tokens_sql()})
     GROUP BY tok
     """,
 )
@@ -55,10 +210,8 @@ def q_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_tfidf",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-    ),
+    oracle=f"""
+    WITH toks AS ({tokens_sql()}),
     tf AS (SELECT doc_id, tok, count(*) AS cnt FROM toks GROUP BY 1, 2),
     dfreq AS (SELECT tok, count(DISTINCT doc_id) AS df FROM toks GROUP BY 1)
     SELECT tf.doc_id, tf.tok,
@@ -103,10 +256,8 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_sentiment",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-    )
+    oracle=f"""
+    WITH toks AS ({tokens_sql()})
     SELECT doc_id,
            round(sum(CASE WHEN tok IN ('fast', 'small', 'value', 'key', 'spark') THEN 1
                           WHEN tok IN ('slow', 'big', 'dup') THEN -1
@@ -159,9 +310,9 @@ def q_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_quality",
-    oracle="""
+    oracle=f"""
     WITH t AS (
-      SELECT doc_id, string_split(text, ' ') AS toks, n_chars FROM documents
+      SELECT doc_id, {tok_array_sql()} AS toks, n_chars FROM documents
     )
     SELECT doc_id,
            CAST(len(toks) AS INT) AS n_toks,
@@ -178,7 +329,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     stopword ratio, chars/token — standard pre-training corpus filters,
     all array built-ins (no explode, no shuffle)."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
+    toks = tok_array()
     n_toks = F.size(toks)
     n_uniq = F.size(F.array_distinct(toks))
     n_stop = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
@@ -192,12 +343,23 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_text_langid",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, lang, unnest(string_split(text, ' ')) AS tok FROM documents
-    ),
+def quality_gate(df: DataFrame, *cols: str) -> DataFrame:
+    """(cols…, n_toks, stop_ratio) of the docs that pass the curation
+    quality gate (>= 30 tokens, stopword ratio <= 0.2) — one definition
+    for the batch pipeline (q_pipeline_curate) and the ingest stream
+    (streaming/curation.py), so batch ≡ stream holds by construction."""
+    toks = tok_array()
+    n = F.size(toks)
+    stops = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
+    return df.select(
+        *cols, n.alias("n_toks"), (stops / n.cast("double")).alias("stop_ratio")
+    ).filter((F.col("n_toks") >= 30) & (F.col("stop_ratio") <= 0.2))
+
+
+# DuckDB twin of langid_predictions: `pred` holds each doc's winning
+# (p_lang, hits) joined with its labeled lang.
+_LANGID_SQL = f"""
+    WITH toks AS ({tokens_sql(keys="doc_id, lang")}),
     freq AS (
       -- profiles come from LABELED docs only: an unlabeled (NULL-lang)
       -- doc must not mint a NULL-language profile (whose tie-break
@@ -217,11 +379,20 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, p_lang, hits,
              row_number() OVER (PARTITION BY doc_id ORDER BY hits DESC, p_lang) AS rn
       FROM overlap
-    )
-    SELECT r.doc_id, r.p_lang AS pred_lang, CAST(r.hits AS BIGINT) AS hits,
-           (r.p_lang = d.lang) AS correct
-    FROM ranked r JOIN documents d ON r.doc_id = d.doc_id
-    WHERE r.rn = 1
+    ),
+    pred AS (
+      SELECT r.doc_id, r.p_lang, r.hits, d.lang FROM ranked r
+      JOIN documents d ON r.doc_id = d.doc_id WHERE r.rn = 1
+    )"""
+
+
+@register(
+    "q_text_langid",
+    oracle=_LANGID_SQL
+    + """
+    SELECT doc_id, p_lang AS pred_lang, CAST(hits AS BIGINT) AS hits,
+           (p_lang = lang) AS correct
+    FROM pred
     """,
 )
 def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -245,9 +416,7 @@ def langid_predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # toks feeds BOTH the profile build and the per-doc overlap — without
     # materializing, the scan + explode runs twice (it was 14 exchanges)
-    toks = materialize(
-        d.select("doc_id", "lang", F.explode(F.split("text", " ")).alias("tok"))
-    )
+    toks = materialize(tokens(d, "doc_id", "lang"))
     # profiles from LABELED docs only (mirrors the oracle's WHERE lang
     # IS NOT NULL): unlabeled docs are classified but never train
     freq = (
@@ -276,15 +445,10 @@ def langid_predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_bigram_ppl",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, string_split(text, ' ') AS ts FROM documents
-    ),
-    bigrams AS (
-      SELECT doc_id,
-             unnest(list_transform(range(greatest(len(ts) - 1, 0)),
-                                   i -> ts[i + 1] || ' ' || ts[i + 2])) AS big
-      FROM toks
+    oracle=f"""
+    WITH bigrams AS (
+      SELECT doc_id, unnest({grams_sql(tok_array_sql(), 2, False)}) AS big
+      FROM documents
     ),
     cb AS (SELECT big, count(*) AS n FROM bigrams GROUP BY 1),
     cf AS (SELECT string_split(big, ' ')[1] AS first_tok, count(*) AS n
@@ -305,16 +469,9 @@ def q_text_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal a pre-training pipeline uses to rank documents by fluency.
     Model tables are vocabulary²-bounded → broadcast joins."""
     d = load_table(spark, sf_dir, "documents")
-    ts = F.split("text", " ")
-    # guard: sequence(0, -1) would count DOWN for 1-token docs
-    bigram_arr = F.when(
-        F.size(ts) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(ts) - 2),
-            lambda i: F.concat_ws(" ", F.slice(ts, i + 1, 2)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    bigrams = d.select("doc_id", F.explode(bigram_arr).alias("big"))
+    bigrams = d.select(
+        "doc_id", F.explode(grams(tok_array(), 2, whole=False)).alias("big")
+    )
     cb = bigrams.groupBy("big").agg(F.count("*").alias("cbn"))
     first = F.split("big", " ")[0]
     cf = bigrams.groupBy(first.alias("first_tok")).agg(F.count("*").alias("cfn"))
@@ -332,12 +489,12 @@ def q_text_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_tokens_bpe",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           CAST(len(string_split(text, ' ')) AS INT) AS ws_tokens,
-           CAST(len(regexp_extract_all(text, '[a-z]{1,3}')) AS INT) AS sub_tokens,
-           round(CAST(len(regexp_extract_all(text, '[a-z]{1,3}')) AS DOUBLE)
-                 / len(string_split(text, ' ')), 4) AS subs_per_word
+           CAST({n_tokens_sql()} AS INT) AS ws_tokens,
+           CAST(len(regexp_extract_all(text, '[a-z]{{1,3}}')) AS INT) AS sub_tokens,
+           round(CAST(len(regexp_extract_all(text, '[a-z]{{1,3}}')) AS DOUBLE)
+                 / {n_tokens_sql()}, 4) AS subs_per_word
     FROM documents
     """,
 )
@@ -347,7 +504,7 @@ def q_text_tokens_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizer when budgeting token counts over a corpus. Pure regex both
     engines (greedy semantics agree)."""
     d = load_table(spark, sf_dir, "documents")
-    ws = F.size(F.split("text", " "))
+    ws = n_tokens()
     subs = F.size(F.regexp_extract_all("text", F.lit("[a-z]{1,3}"), F.lit(0)))
     return d.select(
         "doc_id",
@@ -359,28 +516,17 @@ def q_text_tokens_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_contamination",
-    oracle="""
-    WITH bench AS (
-      SELECT DISTINCT shingle FROM (
-        SELECT unnest(list_transform(
-                 range(greatest(len(string_split(text, ' ')) - 3, 1)),
-                 i -> array_to_string(string_split(text, ' ')[i + 1 : i + 4], ' ')
-               )) AS shingle
-        FROM documents WHERE doc_id < 5 AND text IS NOT NULL
+    oracle=f"""
+    WITH sh AS (
+      SELECT DISTINCT doc_id, shingle FROM (
+        SELECT doc_id, unnest({grams_sql(tok_array_sql(), 4, True)}) AS shingle
+        FROM documents WHERE text IS NOT NULL
       )
     ),
-    doc_sh AS (
-      SELECT DISTINCT doc_id, shingle FROM (
-        SELECT doc_id,
-               unnest(list_transform(
-                 range(greatest(len(string_split(text, ' ')) - 3, 1)),
-                 i -> array_to_string(string_split(text, ' ')[i + 1 : i + 4], ' ')
-               )) AS shingle
-        FROM documents WHERE doc_id >= 5 AND text IS NOT NULL
-      )
-    )
+    bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id < 5)
     SELECT d.doc_id, count(*) AS n_hits
-    FROM doc_sh d JOIN bench b ON d.shingle = b.shingle
+    FROM sh d JOIN bench b ON d.shingle = b.shingle
+    WHERE d.doc_id >= 5
     GROUP BY d.doc_id
     """,
 )
@@ -391,20 +537,13 @@ def q_text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-training. The benchmark shingle set is tiny → broadcast; the
     corpus side streams through with one hash join, no shuffle of the
     corpus beyond the per-doc count."""
-    # NULL-payload contract: Spark's greatest() and concat_ws() both
-    # SKIP NULLs, so an unfiltered NULL text would mint one ''-shingle
-    # per doc and every missing-payload doc would "contaminate" every
-    # other (71 phantom hits in the NULLCHECK sweep); DuckDB instead
-    # yields NULL shingles that never join. Both engines filter.
+    # NULL-payload contract: only docs with text enter, in both
+    # engines (a NULL text has no gram, so it could never match)
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
     )
-    ts = F.split("text", " ")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(ts) - 4, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(ts, i + 1, 4)),
-    )
-    sh = d.select("doc_id", F.explode(F.array_distinct(grams)).alias("shingle"))
+    sh4 = F.array_distinct(grams(tok_array(), 4, whole=True))
+    sh = d.select("doc_id", F.explode(sh4).alias("shingle"))
     bench = (
         sh.filter(F.col("doc_id") < 5).select("shingle").distinct()
     )
@@ -418,16 +557,9 @@ def q_text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_repetition",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, string_split(text, ' ') AS ts FROM documents
-    ),
-    g AS (
-      SELECT doc_id, ts,
-             list_transform(range(greatest(len(ts) - 1, 0)),
-                            i -> ts[i + 1] || ' ' || ts[i + 2]) AS bigs
-      FROM t
-    )
+    oracle=f"""
+    WITH t AS (SELECT doc_id, {tok_array_sql()} AS ts FROM documents),
+    g AS (SELECT doc_id, ts, {grams_sql("ts", 2, False)} AS bigs FROM t)
     SELECT doc_id,
            round(1.0 - len(list_distinct(ts)) / CAST(greatest(len(ts), 1) AS DOUBLE), 4)
              AS dup_token_ratio,
@@ -445,14 +577,8 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     with array expressions on the token array — no explode, no shuffle;
     the whole query is a projection over the scan."""
     d = load_table(spark, sf_dir, "documents")
-    ts = F.split("text", " ")
-    bigs = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(ts) - 2, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(ts, i + 1, 2)),
-    )
-    # DuckDB's range(greatest(len-1,0)) yields len-1 elements (0 for a
-    # 1-token doc); trim the sequence's inclusive upper bound to match
-    bigs = F.slice(bigs, 1, F.greatest(F.size(ts) - 1, F.lit(0)))
+    ts = tok_array()
+    bigs = grams(ts, 2, whole=False)
     dup_tok = 1.0 - F.size(F.array_distinct(ts)) / F.greatest(
         F.size(ts), F.lit(1)
     ).cast("double")
@@ -469,15 +595,15 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_fingerprint",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            -- NULL text has no fingerprint: without the CASE, DuckDB's
            -- list_prepend(0, NULL) yields [0] and reduces to 0 while
-           -- Spark's aggregate(NULL, ...) NULL-propagates (NULLCHECK r9)
+           -- Spark's aggregate(NULL, ...) NULL-propagates
            CASE WHEN text IS NULL THEN NULL ELSE
              list_reduce(
                list_prepend(CAST(0 AS BIGINT),
-                 list_transform(string_split(text, ' '),
+                 list_transform({tok_array_sql()},
                                 t -> CAST(ascii(t) * 31 + length(t) AS BIGINT))),
                (acc, x) -> (acc * 1000003 + x) % 2147483647
              )
@@ -493,11 +619,11 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", fingerprint_expr().alias("fingerprint"))
 
 
-def fingerprint_expr(text_col: str = "text"):
+def fingerprint_expr():
     """The rolling-hash fingerprint as a reusable Column (shared by
     q_text_fingerprint and the streaming ingest dedup)."""
     tok_codes = F.transform(
-        F.split(text_col, " "),
+        tok_array(),
         lambda t: (F.ascii(t) * 31 + F.length(t)).cast("long"),
     )
     return F.aggregate(
@@ -509,17 +635,8 @@ def fingerprint_expr(text_col: str = "text"):
 
 @register(
     "q_text_dup_fraction",
-    oracle="""
-    WITH sh AS (
-      SELECT DISTINCT doc_id, shingle FROM (
-        SELECT doc_id,
-               unnest(list_transform(
-                 range(greatest(len(string_split(text, ' ')) - 2, 1)),
-                 i -> array_to_string(string_split(text, ' ')[i + 1 : i + 3], ' ')
-               )) AS shingle
-        FROM documents WHERE text IS NOT NULL AND text <> ''
-      )
-    ),
+    oracle=f"""
+    WITH sh AS ({shingles_sql("documents")}),
     df AS (SELECT shingle, count(*) AS df FROM sh GROUP BY shingle)
     SELECT sh.doc_id,
            CAST(count(*) AS BIGINT) AS n_shingles,
@@ -543,8 +660,6 @@ def q_text_dup_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shingles stay strings here (not s64-hashed) so the DuckDB oracle
     replays the grouping exactly; the hot path q_dedup_* family is where
     the fixed-width optimization pays."""
-    from spring_and_kafka_spark.llm.dedup import shingles
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     sh = shingles(d, 3)
     df = sh.groupBy("shingle").agg(F.count("*").alias("df"))
@@ -572,14 +687,11 @@ _STRIDE = 24
     "q_text_chunk",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, string_split(text, ' ') AS ts,
-             len(string_split(text, ' ')) AS n
+      SELECT doc_id, {tok_array_sql()} AS ts, {n_tokens_sql()} AS n
       FROM documents
     ),
     s AS (
-      SELECT doc_id, ts, n,
-             unnest(generate_series(0, greatest(n - 1, 0), {_STRIDE}))
-               AS start_tok
+      SELECT doc_id, ts, n, unnest({seg_starts_sql("ts", _STRIDE)}) AS start_tok
       FROM t
     )
     SELECT doc_id,
@@ -604,20 +716,12 @@ def q_text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     len/stride per doc and stays inside whole-stage codegen. Writers
     partition the chunk stream straight to parquet."""
     d = load_table(spark, sf_dir, "documents")
-    t = d.select(
+    ts = tok_array()
+    s = d.select(
         "doc_id",
-        F.split("text", " ").alias("ts"),
-        F.size(F.split("text", " ")).alias("n"),
-    )
-    s = t.select(
-        "doc_id",
-        "ts",
-        "n",
-        F.explode(
-            F.sequence(
-                F.lit(0), F.greatest(F.col("n") - 1, F.lit(0)), F.lit(_STRIDE)
-            )
-        ).alias("start_tok"),
+        ts.alias("ts"),
+        F.size(ts).alias("n"),
+        F.explode(seg_starts(ts, _STRIDE)).alias("start_tok"),
     )
     n_toks = F.least(F.lit(_CHUNK), F.col("n") - F.col("start_tok"))
     return s.select(
@@ -638,9 +742,7 @@ _BM25_B = 0.75
 @register(
     "q_text_bm25",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-    ),
+    WITH toks AS ({tokens_sql()}),
     dl AS (
       SELECT doc_id, CAST(count(*) AS DOUBLE) AS dl FROM toks GROUP BY doc_id
     ),
@@ -683,7 +785,7 @@ def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     term filter prunes the exploded stream before its shuffle, and a
     real inverted-index build is this same query grouped by term."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
+    toks = tokens(d)
     dl = toks.groupBy("doc_id").agg(F.count("*").cast("double").alias("dl"))
     stats = dl.agg(
         F.count("*").cast("double").alias("n"), F.avg("dl").alias("avgdl")
@@ -709,12 +811,10 @@ def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_zipf",
-    oracle="""
+    oracle=f"""
     WITH tf AS (
-      SELECT t.tok, CAST(count(*) AS BIGINT) AS freq
-      FROM documents, unnest(string_split(lower(text), ' ')) AS t(tok)
-      WHERE t.tok <> ''
-      GROUP BY t.tok
+      SELECT tok, CAST(count(*) AS BIGINT) AS freq
+      FROM ({vocab_tokens_sql()}) GROUP BY tok
     ),
     ranked AS (
       SELECT ln(CAST(row_number() OVER (ORDER BY freq DESC, tok) AS DOUBLE))
@@ -741,7 +841,7 @@ def q_text_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     var_pop definitions DuckDB uses."""
     d = load_table(spark, sf_dir, "documents")
     tf = (
-        tokens_lower(d)
+        vocab_tokens(d)
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
@@ -767,12 +867,8 @@ def q_text_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_vocab_coverage",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, tk.tok FROM documents,
-             unnest(string_split(lower(text), ' ')) AS tk(tok)
-      WHERE tk.tok <> ''
-    ),
+    oracle=f"""
+    WITH t AS ({vocab_tokens_sql()}),
     v AS (
       SELECT tok FROM (
         SELECT tok, count(*) AS c FROM t GROUP BY tok
@@ -804,7 +900,7 @@ def q_text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     except the per-doc reduce. Docs with no tokens surface with
     n_tokens=0 and NULL rate via the outer join, not silently dropped."""
     d = load_table(spark, sf_dir, "documents")
-    toks = tokens_lower(d)
+    toks = vocab_tokens(d)
     vocab = (
         toks.groupBy("tok")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -840,11 +936,7 @@ _II_MIN_DF = 50  # index only terms appearing in ≥50 docs (head vocab)
     oracle=f"""
     WITH td AS (
       SELECT tok AS term, doc_id, count(*) AS tf
-      FROM (
-        SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
-        FROM documents
-      ) WHERE tok <> ''
-      GROUP BY 1, 2
+      FROM ({vocab_tokens_sql()}) GROUP BY 1, 2
     ),
     w AS (
       SELECT term, doc_id, tf,
@@ -881,7 +973,7 @@ def q_text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar-typed output so the driver's pandas-based value hasher —
     which cannot factorize list cells — can process the column."""
     d = load_table(spark, sf_dir, "documents")
-    td = tokens_lower(d).groupBy(
+    td = vocab_tokens(d).groupBy(
         F.col("tok").alias("term"), "doc_id"
     ).agg(F.count("*").alias("tf"))
     wt = W.partitionBy("term")
@@ -914,11 +1006,9 @@ def q_text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_keyphrase",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
-      SELECT doc_id,
-             unnest(string_split(lower(text), ' ')) AS tok,
-             generate_subscripts(string_split(lower(text), ' '), 1) AS pos
+      SELECT doc_id, {posexplode_sql(tok_array_sql(lower=True), "tok", "pos")}
       FROM documents
     ),
     big AS (
@@ -966,7 +1056,7 @@ def q_text_keyphrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
-        F.posexplode(F.split(F.lower("text"), " ")).alias("pos", "tok"),
+        F.posexplode(tok_array(lower=True)).alias("pos", "tok"),
     )
     w = W.partitionBy("doc_id").orderBy("pos")
     big = tok.select(
@@ -1015,12 +1105,8 @@ def q_text_keyphrase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_hapax",
-    oracle="""
-    WITH tok AS (
-      SELECT lower(t.tok) AS tok FROM (
-        SELECT unnest(string_split(text, ' ')) AS tok FROM documents
-      ) t WHERE t.tok <> ''
-    ),
+    oracle=f"""
+    WITH tok AS ({vocab_tokens_sql()}),
     freq AS (SELECT tok, count(*) AS n FROM tok GROUP BY tok)
     SELECT CAST(count(*) AS BIGINT) AS vocab_size,
            CAST(sum(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax,
@@ -1045,7 +1131,7 @@ def q_text_hapax(spark: SparkSession, sf_dir: str) -> DataFrame:
     then one summary row) — no joins, no windows; the type table is the
     only shuffle and is vocabulary-sized, not corpus-sized."""
     d = load_table(spark, sf_dir, "documents")
-    freq = tokens_lower(d).groupBy("tok").agg(F.count("*").alias("n"))
+    freq = vocab_tokens(d).groupBy("tok").agg(F.count("*").alias("n"))
     one = F.sum(F.when(F.col("n") == 1, 1).otherwise(0))
     two = F.sum(F.when(F.col("n") == 2, 1).otherwise(0))
     return freq.agg(
@@ -1057,15 +1143,28 @@ def q_text_hapax(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def token_counts(df: DataFrame) -> DataFrame:
+    """(source, tok, c): vocab-token counts per source — the sufficient
+    statistic of q_text_entropy and q_text_js_shift, and the state their
+    streaming twin (streaming/drift.py) maintains."""
+    return (
+        vocab_tokens(df, "source")
+        .groupBy("source", "tok")
+        .agg(F.count("*").alias("c"))
+    )
+
+
+# DuckDB twin of token_counts over `documents`, as the CTE `tc`.
+_TOKEN_COUNTS_SQL = f"""tc AS (
+      SELECT source, tok, count(*) AS c
+      FROM ({vocab_tokens_sql(keys="source")}) GROUP BY 1, 2
+    )"""
+
+
 @register(
     "q_text_entropy",
-    oracle="""
-    WITH tok AS (
-      SELECT source, lower(t.tok) AS tok FROM (
-        SELECT source, unnest(string_split(text, ' ')) AS tok FROM documents
-      ) t WHERE t.tok <> ''
-    ),
-    tc AS (SELECT source, tok, count(*) AS c FROM tok GROUP BY 1, 2),
+    oracle=f"""
+    WITH {_TOKEN_COUNTS_SQL},
     tot AS (
       SELECT source, sum(c) AS n, count(*) AS vocab FROM tc GROUP BY 1
     )
@@ -1103,11 +1202,7 @@ def q_text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     at any corpus scale; rounding to 4 dp absorbs summation-order double
     drift between the engines (the repo's ratio convention, registry.py
     header)."""
-    d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "source", F.explode(F.split(F.lower("text"), " ")).alias("tok")
-    ).filter(F.col("tok") != "")
-    tc = toks.groupBy("source", "tok").agg(F.count("*").alias("c"))
+    tc = token_counts(load_table(spark, sf_dir, "documents"))
     w = W.partitionBy("source")
     j = tc.select(
         "source",
@@ -1147,34 +1242,11 @@ def q_text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_langid_confusion",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, lang, unnest(string_split(text, ' ')) AS tok FROM documents
-    ),
-    freq AS (
-      SELECT lang, tok, count(*) AS n,
-             row_number() OVER (PARTITION BY lang ORDER BY count(*) DESC, tok) AS rn
-      FROM toks WHERE lang IS NOT NULL GROUP BY lang, tok
-    ),
-    profile AS (SELECT lang AS p_lang, tok FROM freq WHERE rn <= 8),
-    overlap AS (
-      SELECT t.doc_id, p.p_lang, count(DISTINCT t.tok) AS hits
-      FROM (SELECT DISTINCT doc_id, tok FROM toks) t
-      JOIN profile p USING (tok)
-      GROUP BY 1, 2
-    ),
-    ranked AS (
-      SELECT doc_id, p_lang, hits,
-             row_number() OVER (PARTITION BY doc_id ORDER BY hits DESC, p_lang) AS rn
-      FROM overlap
-    ),
-    pred AS (
-      SELECT d.lang, r.p_lang FROM ranked r
-      JOIN documents d ON r.doc_id = d.doc_id WHERE r.rn = 1
-    )
+    oracle=_LANGID_SQL
+    + """
     SELECT lang, p_lang AS pred_lang, CAST(count(*) AS BIGINT) AS n,
-           -- bare IEEE division (r7 ratio rule): one op over exact
-           -- integers is bit-identical cross-engine, so no round()
+           -- bare IEEE division: one op over exact integers is
+           -- bit-identical cross-engine, so no round()
            count(*) * 1.0 / sum(count(*)) OVER (PARTITION BY lang) AS frac
     FROM pred GROUP BY lang, p_lang
     """,
@@ -1314,17 +1386,12 @@ def q_text_length_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_text_js_shift",
-    oracle="""
-    WITH tok AS (
-      SELECT source, lower(t.tok) AS tok FROM (
-        SELECT source, unnest(string_split(text, ' ')) AS tok FROM documents
-      ) t WHERE t.tok <> ''
-    ),
-    tc AS (SELECT source, tok, count(*) AS c FROM tok GROUP BY 1, 2),
+    oracle=f"""
+    WITH {_TOKEN_COUNTS_SQL},
     -- corpus totals via STACKED WINDOWS over the one count table (no
-    -- groupBy+join-back: that re-derived the whole scan+explode on the
-    -- corpus side — the r11 within-JVM A/B measured the window form at
-    -- ~0.6x the double-scan and it is one corpus pass at any scale)
+    -- groupBy+join-back: that would re-derive the whole scan+explode
+    -- on the corpus side; the window form is one corpus pass at any
+    -- scale)
     j AS (
       SELECT source, ns,
              c * 1.0 / ns AS p,
@@ -1365,12 +1432,7 @@ def q_text_js_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     only Σ_s |Vs|. Rounded to 4 dp per the entropy-family convention
     (absorbs summation-order double drift), +0.0 collapses the
     single-source corpus's -0.0."""
-    d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "source", F.explode(F.split(F.lower("text"), " ")).alias("tok")
-    ).filter(F.col("tok") != "")
-    tc = toks.groupBy("source", "tok").agg(F.count("*").alias("c"))
-    return js_from_counts(tc)
+    return js_from_counts(token_counts(load_table(spark, sf_dir, "documents")))
 
 
 def js_from_counts(tc: DataFrame) -> DataFrame:
@@ -1556,7 +1618,7 @@ def q_text_script_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_hist_log2",
-    oracle="""
+    oracle=f"""
     WITH b AS (
       SELECT CASE WHEN n_chars > 0
                   THEN CAST(length(printf('%b', n_chars)) - 1 AS BIGINT)
@@ -1576,7 +1638,7 @@ def q_text_script_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
            CASE WHEN bucket IS NOT NULL
                 THEN (CAST(1 AS BIGINT) << (bucket + 1)) - 1 END AS hi,
            n_docs,
-           floor(n_docs * 1e6 / total + 0.5) / 1e6 AS share
+           {ratio6_sql("n_docs", "total")} AS share
     FROM w
     """,
 )
@@ -1623,19 +1685,15 @@ def q_hist_log2(spark: SparkSession, sf_dir: str) -> DataFrame:
             " THEN shiftleft(1L, cast(bucket AS INT) + 1) - 1L END"
         ).alias("hi"),
         "n_docs",
-        (
-            F.floor(F.col("n_docs") * 1e6 / F.col("total") + F.lit(0.5)) / 1e6
-        ).alias("share"),
+        ratio6("n_docs", "total").alias("share"),
     )
 
 
 @register(
     "q_text_diversity",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT source,
-             list_filter(string_split(lower(text), ' '),
-                         x -> x <> '') AS t
+      SELECT source, {vocab_array_sql()} AS t
       FROM documents WHERE text IS NOT NULL
     ),
     uni AS (
@@ -1649,10 +1707,7 @@ def q_hist_log2(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     bi AS (
       SELECT source, bg, CAST(count(*) AS BIGINT) AS c FROM (
-        SELECT source,
-               unnest(list_transform(range(1, len(t)),
-                                     i -> t[i] || ' ' || t[i + 1])) AS bg
-        FROM toks
+        SELECT source, unnest({grams_sql("t", 2, False)}) AS bg FROM toks
       ) GROUP BY 1, 2
     ),
     b AS (
@@ -1662,13 +1717,12 @@ def q_hist_log2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT u.source, u.n_toks, u.n_uniq_toks,
            CASE WHEN u.n_toks > 0
-                THEN floor(u.n_uniq_toks * 1e6 / u.n_toks + 0.5) / 1e6
+                THEN {ratio6_sql("u.n_uniq_toks", "u.n_toks")}
            END AS distinct_1,
            coalesce(b.n_bigrams, 0) AS n_bigrams,
            coalesce(b.n_uniq_bigrams, 0) AS n_uniq_bigrams,
            CASE WHEN coalesce(b.n_bigrams, 0) > 0
-                THEN floor(b.n_uniq_bigrams * 1e6 / b.n_bigrams + 0.5)
-                     / 1e6
+                THEN {ratio6_sql("b.n_uniq_bigrams", "b.n_bigrams")}
            END AS distinct_2
     FROM u LEFT JOIN b ON b.source IS NOT DISTINCT FROM u.source
     """,
@@ -1682,12 +1736,9 @@ def q_text_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio at the source grain, which is exactly where dedup budgets
     (q_corpus_budget) should then be spent.
 
-    Tokenization is the module contract (lower + whitespace split,
-    empty tokens removed — here BEFORE bigram pairing, so 'a  b' pairs
-    (a,b) in both engines); bigrams come from an index transform over
-    the filtered token ARRAY (1-based element_at mirroring DuckDB's
-    1-based list indexing; a <2-token doc contributes zero bigrams via
-    the size guard — DuckDB's exclusive range(1,1) does the same).
+    Tokens are vocab_array's (lower-cased, empty tokens removed BEFORE
+    bigram pairing, so 'a  b' pairs (a,b) in both engines); bigrams
+    are grams(t, 2, whole=False), so a <2-token doc contributes none.
     All counts are exact BIGINTs from groupBy; ratios use the
     floor(x·1e6+0.5)/1e6 form with a zero-denominator guard on the
     bigram ratio (a source with tokens but no ≥2-token doc has
@@ -1709,12 +1760,7 @@ def q_text_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
     )
-    toks = d.select(
-        "source",
-        F.filter(
-            F.split(F.lower("text"), " "), lambda x: x != ""
-        ).alias("t"),
-    )
+    toks = d.select("source", vocab_array().alias("t"))
     uni = (
         toks.select("source", F.explode("t").alias("tok"))
         .groupBy("source", "tok")
@@ -1723,15 +1769,8 @@ def q_text_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = uni.groupBy("source").agg(
         F.sum("c").alias("n_toks"), F.count(F.lit(1)).alias("n_uniq_toks")
     )
-    bigrams = F.when(
-        F.size("t") >= 2,
-        F.expr(
-            "transform(sequence(1, size(t) - 1), "
-            "i -> concat(element_at(t, i), ' ', element_at(t, i + 1)))"
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     bi = (
-        toks.select("source", F.explode(bigrams).alias("bg"))
+        toks.select("source", F.explode(grams(F.col("t"), 2, False)).alias("bg"))
         .groupBy("source", "bg")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -1778,35 +1817,23 @@ def boilerplate_segments(d: DataFrame) -> DataFrame:
     adding it costs nothing and consumers that only need (doc_id,
     source, seg) simply never select it."""
     clean = d.filter(F.col("text").isNotNull() & (F.col("text") != ""))
-    toks = F.split("text", " ")
-    segs = F.transform(
-        F.sequence(
-            F.lit(0), F.greatest(F.size(toks) - 1, F.lit(0)), F.lit(_BP_SEG)
-        ),
-        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, _BP_SEG)),
-    )
+    segs = segments(tok_array(), _BP_SEG)
     return clean.select(
         "doc_id", "source", F.posexplode(segs).alias("seg_idx", "seg")
     )
 
 
+def boilerplate_segments_sql(src: str = "documents") -> str:
+    """DuckDB twin of boilerplate_segments over table `src`."""
+    segs = segments_sql(tok_array_sql(), _BP_SEG)
+    return f"""SELECT doc_id, source, {posexplode_sql(segs, "seg", "seg_idx")}
+      FROM {src} WHERE text IS NOT NULL AND text <> ''"""
+
+
 @register(
     "q_text_boilerplate",
     oracle=f"""
-    WITH d AS (
-      SELECT doc_id, source, string_split(text, ' ') AS ts,
-             len(string_split(text, ' ')) AS n
-      FROM documents WHERE text IS NOT NULL AND text <> ''
-    ),
-    seg AS (
-      SELECT doc_id, source,
-             array_to_string(ts[start_tok + 1 : start_tok + {_BP_SEG}], ' ')
-               AS seg
-      FROM (SELECT doc_id, source, ts,
-                   unnest(generate_series(0, greatest(n - 1, 0), {_BP_SEG}))
-                     AS start_tok
-            FROM d)
-    ),
+    WITH seg AS ({boilerplate_segments_sql()}),
     flag AS (
       SELECT seg,
              count(DISTINCT coalesce(source, chr(1))) >= {_BP_MIN_SRC}
@@ -1817,8 +1844,8 @@ def boilerplate_segments(d: DataFrame) -> DataFrame:
            CAST(count(DISTINCT s.doc_id) AS BIGINT) AS n_docs,
            CAST(count(*) AS BIGINT) AS n_segments,
            CAST(count(CASE WHEN f.boiler THEN 1 END) AS BIGINT) AS n_boiler,
-           floor(count(CASE WHEN f.boiler THEN 1 END) * 1e6 / count(*) + 0.5)
-             / 1e6 AS boiler_rate
+           {ratio6_sql("count(CASE WHEN f.boiler THEN 1 END)", "count(*)")}
+             AS boiler_rate
     FROM seg s JOIN flag f USING (seg)
     GROUP BY s.source
     """,
@@ -1836,11 +1863,11 @@ def q_text_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources need segment-level cleaning before the token budget
     (q_corpus_budget) is spent on them.
 
-    Cross-engine: segments are built with the exact q_text_chunk
-    slice arithmetic (1-based clamped slices match Spark's slice());
-    the distinct-source count coalesces NULL source to a CHR(1)
-    sentinel because COUNT(DISTINCT) skips NULLs in both engines but
-    untagged docs still carry template text; counts are exact BIGINTs
+    Cross-engine: segments are the shared tumbling window (segments /
+    segments_sql, the q_text_chunk window); the distinct-source count
+    coalesces NULL source to a CHR(1) sentinel because COUNT(DISTINCT)
+    skips NULLs in both engines but untagged docs still carry template
+    text; counts are exact BIGINTs
     and the rate is floor-form (denominator >= 1 by construction —
     every surviving doc emits at least one segment).
 
@@ -1879,12 +1906,7 @@ def q_text_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_docs",
             "n_segments",
             "n_boiler",
-            (
-                F.floor(
-                    F.col("n_boiler") * 1e6 / F.col("n_segments") + F.lit(0.5)
-                )
-                / 1e6
-            ).alias("boiler_rate"),
+            ratio6("n_boiler", "n_segments").alias("boiler_rate"),
         )
     )
 
@@ -1906,8 +1928,7 @@ _GOPHER_UNIQ_DEN = 10
     "q_quality_gopher",
     oracle=f"""
     WITH d AS (
-      SELECT lang, text, string_split(text, ' ') AS ts,
-             len(string_split(text, ' ')) AS n
+      SELECT lang, text, {tok_array_sql()} AS ts, {n_tokens_sql()} AS n
       FROM documents WHERE text IS NOT NULL AND text <> ''
     ),
     rules AS (
@@ -1933,9 +1954,8 @@ _GOPHER_UNIQ_DEN = 10
            CAST(count(CASE WHEN r_uniq THEN 1 END) AS BIGINT) AS pass_uniq,
            CAST(count(CASE WHEN r_len AND r_wlen AND r_stop AND r_rep
                            AND r_uniq THEN 1 END) AS BIGINT) AS n_clean,
-           floor(count(CASE WHEN r_len AND r_wlen AND r_stop AND r_rep
-                            AND r_uniq THEN 1 END) * 1e6 / count(*) + 0.5)
-             / 1e6 AS clean_rate
+           {ratio6_sql("count(CASE WHEN r_len AND r_wlen AND r_stop AND r_rep"
+                       " AND r_uniq THEN 1 END)", "count(*)")} AS clean_rate
     FROM rules GROUP BY lang
     """,
     tags=("text", "quality"),
@@ -1975,7 +1995,7 @@ def q_quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & (F.col("text") != "")
     )
-    ts = F.split("text", " ")
+    ts = tok_array()
     n = F.size(ts)
     chars_w = F.length("text") - (n - 1)
     r_len = (n >= _GOPHER_MIN_TOKS) & (n <= _GOPHER_MAX_TOKS)
@@ -2016,12 +2036,7 @@ def q_quality_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(F.col("r_rep"), 1)).alias("pass_rep"),
         F.count(F.when(F.col("r_uniq"), 1)).alias("pass_uniq"),
         F.count(F.when(clean, 1)).alias("n_clean"),
-        (
-            F.floor(
-                F.count(F.when(clean, 1)) * 1e6 / F.count(F.lit(1)) + F.lit(0.5)
-            )
-            / 1e6
-        ).alias("clean_rate"),
+        ratio6(F.count(F.when(clean, 1)), F.count(F.lit(1))).alias("clean_rate"),
     )
 
 
@@ -2033,8 +2048,7 @@ _PMI_K = 20  # collocations returned
     "q_text_pmi",
     oracle=f"""
     WITH toks AS (
-      SELECT list_filter(string_split(lower(text), ' '), x -> x <> '') AS t
-      FROM documents WHERE text IS NOT NULL
+      SELECT {vocab_array_sql()} AS t FROM documents WHERE text IS NOT NULL
     ),
     uni AS (
       SELECT tok, CAST(count(*) AS BIGINT) AS c
@@ -2044,11 +2058,8 @@ _PMI_K = 20  # collocations returned
     bi AS (
       SELECT split_part(bg, ' ', 1) AS w1, split_part(bg, ' ', 2) AS w2,
              CAST(count(*) AS BIGINT) AS c12
-      FROM (
-        SELECT unnest(list_transform(range(1, len(t)),
-                                     i -> t[i] || ' ' || t[i + 1])) AS bg
-        FROM toks
-      ) GROUP BY 1, 2
+      FROM (SELECT unnest({grams_sql("t", 2, False)}) AS bg FROM toks)
+      GROUP BY 1, 2
     ),
     btot AS (SELECT CAST(sum(c12) AS BIGINT) AS n_big FROM bi),
     sel AS (
@@ -2084,10 +2095,10 @@ def q_text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned multiply/divide chain, bit-identical across engines — never
     the log2 of it (libm, 1-ulp divergent); log2 only styles the
     already-ranked rows, rounded to 4 dp (+0.0 normalizes -0.0). Ties
-    at the LIMIT edge break on (w1, w2). Tokenization is the module
-    contract (lower + whitespace split, empties removed); bigram pairs
-    travel as 'w1 w2' strings in the oracle (tokens are space-free by
-    construction) and as structs in Spark.
+    at the LIMIT edge break on (w1, w2). Tokens are vocab_array's and
+    bigrams grams(t, 2, whole=False); a bigram travels as its 'w1 w2'
+    string and splits back into (w1, w2) — tokens are space-free by
+    construction.
 
     Shape at 100 TB: two map-side-combined groupBys (unigrams O(vocab),
     bigrams O(vocab²)-bounded but support-filtered), two equi-joins of
@@ -2103,9 +2114,7 @@ def q_text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
     )
-    toks = d.select(
-        F.filter(F.split(F.lower("text"), " "), lambda x: x != "").alias("t")
-    )
+    toks = d.select(vocab_array().alias("t"))
     # the vocab-sized unigram table feeds THREE consumers (the total
     # and both join sides) and the bigram table two (total + report) —
     # materialize each so the corpus explode runs once per gram order
@@ -2115,18 +2124,11 @@ def q_text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
     )
     tot = uni.agg(F.sum("c").alias("n_tok"))
-    pairs = F.when(
-        F.size("t") >= 2,
-        F.expr(
-            "transform(sequence(1, size(t) - 1), "
-            "i -> struct(element_at(t, i) AS w1, element_at(t, i + 1) AS w2))"
-        ),
-    ).otherwise(
-        F.array().cast("array<struct<w1:string,w2:string>>")
-    )
     bi = materialize(
-        toks.select(F.explode(pairs).alias("p"))
-        .select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
+        toks.select(F.explode(grams(F.col("t"), 2, False)).alias("bg"))
+        # a bigram splits back into its two tokens (tokens hold no space)
+        .select(F.split("bg", " ").alias("p"))
+        .select(F.col("p")[0].alias("w1"), F.col("p")[1].alias("w2"))
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c12"))
     )

@@ -487,9 +487,8 @@ def q_agg_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH b AS (
       -- NULL price -> NULL bucket. least() SKIPS NULL args in both
       -- engines, so an unguarded least(floor(NULL/50000), 11) lands
-      -- every missing value in the TOP bucket — the r10 property
-      -- battery caught exactly that (misclassifying missing data as
-      -- the largest-value bucket)
+      -- every missing value in the TOP bucket (misclassifying
+      -- missing data as the largest-value bucket)
       SELECT CASE WHEN o_totalprice IS NULL THEN NULL
                   ELSE CAST(least(floor(o_totalprice / 50000), 11)
                             AS BIGINT) END AS bucket
@@ -952,9 +951,9 @@ def q_agg_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
       -- boundaries interpolate over EXACT INTEGER CENTS (the repo's one
       -- currency rule): Spark's Percentile computes lo + (hi-lo)*f,
       -- DuckDB's quantile_cont lo*(1-f) + hi*f — on raw doubles the two
-      -- roundings can disagree (hypothesis r16: two subnormal ties put
-      -- the p=0.5 boundary at 0.0 in one engine and 5e-324 in the
-      -- other, flipping a bucket id); on integers with dyadic f = k/8
+      -- roundings can disagree (two subnormal ties can put the p=0.5
+      -- boundary at 0.0 in one engine and 5e-324 in the other,
+      -- flipping a bucket id); on integers with dyadic f = k/8
       -- both products are exact dyadics, so both formulas yield the
       -- identical true rational and the divergence is structurally gone
       SELECT o_totalprice,

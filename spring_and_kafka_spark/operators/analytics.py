@@ -951,10 +951,9 @@ _ATTRIB_WINDOW_US = 7 * 86_400_000_000  # 7-day last-touch lookback
     tagged AS (
       -- ONE struct carry, not two independent last_value()s: separate
       -- carries can pair a tagged click's k with a LATER untagged
-      -- click's timestamp, attributing through an expired lookback
-      -- (found by tests/test_property.py::
-      -- test_attribution_matches_brute_force, r9). The touchpoint is
-      -- the most recent TAGGED click — its k and us travel together.
+      -- click's timestamp, attributing through an expired lookback.
+      -- The touchpoint is the most recent TAGGED click — its k and us
+      -- travel together.
       SELECT user_id, us, event_type, value,
              struct_extract(last_value(
                CASE WHEN event_type = 'click' AND k IS NOT NULL

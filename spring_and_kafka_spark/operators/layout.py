@@ -389,9 +389,8 @@ _COMPACT_TARGET = 10_000  # target bytes per compacted output file
       SELECT file_id, size_bytes,
              -- DuckDB types sum(BIGINT) as HUGEINT, so this // lands
              -- HUGEINT -> Arrow decimal128(38,0) while Spark emits
-             -- bigint; the r6/r7 driver-red was exactly this uncast
-             -- group key (the measures below were cast, the key was
-             -- not). Every HUGEINT-reachable oracle output column
+             -- bigint, and the uncast group key would fail the hash
+             -- compare. Every HUGEINT-reachable oracle output column
              -- must be BIGINT-cast (registry.py conventions).
              CAST((sum(size_bytes) OVER (ORDER BY file_id) - size_bytes)
                // {_COMPACT_TARGET} AS BIGINT) AS bin_id

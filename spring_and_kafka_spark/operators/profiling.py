@@ -321,7 +321,7 @@ def q_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     -- count(*) over SELECT DISTINCT, not count(DISTINCT ...): a NULL
     -- event_type is a real category (both engines give it a group in c,
     -- and the Spark side counts groups), but count(DISTINCT) would skip
-    -- it and shrink the Laplace denominator by one (NULLCHECK r9)
+    -- it and shrink the Laplace denominator by one
     k AS (SELECT count(*) AS n_types
           FROM (SELECT DISTINCT event_type FROM tagged)),
     c AS (

@@ -217,8 +217,8 @@ def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bc
       FROM customer
     ),
-    -- band edges by EXACT INTEGER RANK DECOMPOSITION (r17, closing the
-    -- ADVICE r16 residual): rank r = (n-1)*5/100 splits into integer
+    -- band edges by EXACT INTEGER RANK DECOMPOSITION: rank
+    -- r = (n-1)*5/100 splits into integer
     -- part idx = (n-1)*5 // 100 and fractional NUMERATOR rem =
     -- (n-1)*5 - idx*100 (an integer in 0..99); the interpolant in
     -- percent-units is the exact integer x = lo*(100-rem) + hi*rem, so
@@ -270,7 +270,7 @@ def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
            -- means over exact integer cents: one IEEE division of
            -- exact BIGINTs then the cents floor — bit-identical, where
            -- round(avg(double), 2) was order-dependent AND diverged at
-           -- manufactured half-cent boundaries (the r16 probe)
+           -- manufactured half-cent boundaries
            CASE WHEN count(c.bc) > 0 THEN
              floor(CAST(sum(c.bc) AS DOUBLE) / count(c.bc) + 0.5) / 100.0
            END AS mean_raw,

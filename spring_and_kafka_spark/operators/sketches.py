@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from spring_and_kafka_spark.exec_utils import cents
+from spring_and_kafka_spark.llm.text import grams, grams_sql, tok_array, tok_array_sql
 from spring_and_kafka_spark.registry import register
 from spring_and_kafka_spark.sources.tables import load_table
 
@@ -86,13 +87,8 @@ _CM_WIDTH = 256  # one md5 hex-digit pair per row → buckets 0..255
     "q_agg_countmin",
     oracle=f"""
     WITH bi AS (
-      SELECT doc_id, ts[i + 1] || ' ' || ts[i + 2] AS bigram
-      FROM (
-        SELECT doc_id, string_split(text, ' ') AS ts,
-               unnest(range(greatest(len(string_split(text, ' ')) - 1, 0)))
-                 AS i
-        FROM documents
-      )
+      SELECT unnest({grams_sql(tok_array_sql(), 2, False)}) AS bigram
+      FROM documents
     ),
     counts AS (SELECT bigram, count(*) AS n FROM bi GROUP BY bigram),
     keyed AS (
@@ -138,16 +134,7 @@ def q_agg_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer grid as an accumulator instead — this query demonstrates the
     estimate/guarantee semantics on the same arithmetic."""
     d = load_table(spark, sf_dir, "documents")
-    ts = F.split("text", " ")
-    # guard: sequence(0, -1) would count DOWN for 1-token docs
-    bigram_arr = F.when(
-        F.size(ts) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(ts) - 2),
-            lambda i: F.concat_ws(" ", F.slice(ts, i + 1, 2)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    bi = d.select(F.explode(bigram_arr).alias("bigram"))
+    bi = d.select(F.explode(grams(tok_array(), 2, whole=False)).alias("bigram"))
     counts = bi.groupBy("bigram").agg(F.count("*").alias("n"))
     keyed = counts.select(
         "bigram",

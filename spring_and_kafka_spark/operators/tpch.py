@@ -943,7 +943,7 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
       -- rule) so the value, the mean threshold, and the survival
       -- comparison are all order-free — a float sum drifts by
       -- association order across engines and makes the threshold a
-      -- knife edge (r12 review finding)
+      -- knife edge
       SELECT l_partkey,
              CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT))
                   AS BIGINT) AS raw_cents

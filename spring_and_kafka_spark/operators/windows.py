@@ -195,7 +195,7 @@ def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY o_orderpriority
                  -- NULLS FIRST pins Spark's asc default; DuckDB defaults
                  -- NULLS LAST, so a NULL price would shift every rank
-                 -- ratio in its partition (NULLCHECK r9)
+                 -- ratio in its partition
                  ORDER BY o_totalprice NULLS FIRST, o_orderkey)
     """,
 )
@@ -387,7 +387,7 @@ def q_win_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT user_id, event_type, streak_len,
              -- NULLS FIRST on both type keys: a NULL-type island is a
              -- legal streak and Spark's asc default ranks it first at
-             -- ties; DuckDB would rank it last (NULLCHECK r9)
+             -- ties; DuckDB would rank it last
              row_number() OVER (PARTITION BY user_id
                                 ORDER BY streak_len DESC,
                                          length(event_type) NULLS FIRST,

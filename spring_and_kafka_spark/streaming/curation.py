@@ -17,7 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spring_and_kafka_spark.llm.text import fingerprint_expr
+from spring_and_kafka_spark.llm.dedup import incremental_near_matches, perturbed
+from spring_and_kafka_spark.llm.text import fingerprint_expr, quality_gate
 from spring_and_kafka_spark.sources.tables import load_table, parquet_schema
 from spring_and_kafka_spark.streaming.sinks import foreach_batch_sink
 
@@ -50,20 +51,11 @@ def read_document_stream(
 
 
 def curate_stream(docs: DataFrame) -> DataFrame:
-    """Quality gate + stateful exact-content dedup; identical expressions
-    to the batch pipeline's quality stage, so batch ≡ stream holds (the
-    tests drain the stream and compare against the batch run)."""
-    toks = F.split("text", " ")
-    quality = docs.select(
-        "doc_id",
-        "text",
-        "lang",
-        F.size(toks).alias("n_toks"),
-        (
-            F.size(F.filter(toks, lambda t: t.isin("a", "the")))
-            / F.size(toks).cast("double")
-        ).alias("stop_ratio"),
-    ).filter((F.col("n_toks") >= 30) & (F.col("stop_ratio") <= 0.2))
+    """Quality gate + stateful exact-content dedup; the gate is the
+    batch pipeline's own (llm.text.quality_gate), so batch ≡ stream
+    holds (the tests drain the stream and compare against the batch
+    run)."""
+    quality = quality_gate(docs, "doc_id", "text", "lang")
     return quality.withColumn("fp", fingerprint_expr()).dropDuplicates(["fp"])
 
 
@@ -73,11 +65,7 @@ def stage_new_batch_chunks(
     """Stage the dedup family's planted NEW batch (doc_id+100000, last
     token dropped — llm/dedup.py:planted_corpus) as chunk files: the
     arrival stream for ingest-time near-dup admission."""
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    newb = d.select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.regexp_replace("text", r"\s+\S+$", "").alias("text"),
-    )
+    newb = perturbed(load_table(spark, sf_dir, "documents"))
     newb.repartition(n_chunks).write.mode("overwrite").parquet(stage_dir)
     return stage_dir
 
@@ -97,7 +85,6 @@ def admission_stream(
     doc-features/buckets are a precomputed index refreshed as admitted
     docs join the corpus; here the corpus is static so stream-of-batches
     must equal one big batch (asserted in tests/test_streaming.py)."""
-    from spring_and_kafka_spark.llm.dedup import incremental_near_matches
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.select("doc_id", "text")

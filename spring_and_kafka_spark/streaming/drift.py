@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spring_and_kafka_spark.llm.text import js_from_counts
+from spring_and_kafka_spark.llm.text import js_from_counts, token_counts
 from spring_and_kafka_spark.streaming.sinks import (
     partial_state_stream,
     read_partial_state,
@@ -45,22 +45,14 @@ _SUBTABLES = (("counts", "source STRING, tok STRING, c BIGINT"),)
 
 def token_delta_stream(docs: DataFrame, state_dir: str):
     """Fold a document stream (source, text) into per-batch partial
-    (source, tok, c) count deltas under ``state_dir``. Tokenization is
-    IDENTICAL to the batch query's (lower, split on space, drop empty)
-    — divergent normalization is the classic way stream and batch
-    drift monitors silently disagree."""
+    (source, tok, c) count deltas under ``state_dir``. The counts are
+    the batch query's own (llm.text.token_counts) — divergent
+    normalization is the classic way stream and batch drift monitors
+    silently disagree."""
     return partial_state_stream(
         docs,
         state_dir,
-        {
-            "counts": lambda b: b.select(
-                "source",
-                F.explode(F.split(F.lower("text"), " ")).alias("tok"),
-            )
-            .filter(F.col("tok") != "")
-            .groupBy("source", "tok")
-            .agg(F.count("*").alias("c"))
-        },
+        {"counts": token_counts},
     )
 
 

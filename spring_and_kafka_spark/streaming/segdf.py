@@ -40,8 +40,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
+from spring_and_kafka_spark.llm.dedup import seg_df_histogram
 from spring_and_kafka_spark.llm.text import boilerplate_segments
 from spring_and_kafka_spark.streaming.sinks import (
     partial_state_stream,
@@ -91,26 +91,4 @@ def maintained_seg_df_hist(spark: SparkSession, state_dir: str) -> DataFrame:
             F.sum("n").alias("inst"),
         )
     )
-    h = f.groupBy(
-        (F.length(F.bin(F.col("df"))) - 1).cast("long").alias("bucket")
-    ).agg(
-        F.count(F.lit(1)).alias("n_segments"),
-        F.sum("inst").alias("n_instances"),
-    )
-    w = h.select(
-        "bucket",
-        "n_segments",
-        "n_instances",
-        F.sum("n_instances").over(W.partitionBy()).alias("total"),
-    )
-    return w.select(
-        "bucket",
-        F.expr("shiftleft(1L, cast(bucket AS INT))").alias("lo"),
-        F.expr("shiftleft(1L, cast(bucket AS INT) + 1) - 1L").alias("hi"),
-        "n_segments",
-        "n_instances",
-        (
-            F.floor(F.col("n_instances") * 1e6 / F.col("total") + F.lit(0.5))
-            / 1e6
-        ).alias("inst_share"),
-    )
+    return seg_df_histogram(f)

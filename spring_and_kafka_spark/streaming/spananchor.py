@@ -46,6 +46,7 @@ from spring_and_kafka_spark.llm.dedup import (
     _alignments_from_anchors,
     _span_anchor_table,
     _span_cover_readout,
+    span_docs,
 )
 from spring_and_kafka_spark.streaming.sinks import (
     partial_state_stream,
@@ -63,7 +64,6 @@ def span_anchor_delta_stream(docs: DataFrame, state_dir: str):
     stops, the replay harness convention). NULL-doc_id / NULL-text /
     empty-text rows are excluded exactly as the batch query's corpus
     filter excludes them."""
-    toks = F.split("text", " ")
     return partial_state_stream(
         docs,
         state_dir,
@@ -73,11 +73,7 @@ def span_anchor_delta_stream(docs: DataFrame, state_dir: str):
                 "doc_id", F.col("n").cast("long").alias("n")
             ),
         },
-        prep=lambda b: b.filter(
-            F.col("doc_id").isNotNull()
-            & F.col("text").isNotNull()
-            & (F.col("text") != "")
-        ).select("doc_id", toks.alias("ts"), F.size(toks).alias("n")),
+        prep=span_docs,
     )
 
 

@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spring_and_kafka_spark.exec_utils import ratio6
 from spring_and_kafka_spark.llm.text import (
     _BP_MIN_SRC,
     _BP_NULL_SRC,
@@ -130,11 +131,6 @@ def maintained_templates(spark: SparkSession, state_dir: str) -> DataFrame:
             "n_docs",
             "n_segments",
             "n_boiler",
-            (
-                F.floor(
-                    F.col("n_boiler") * 1e6 / F.col("n_segments") + F.lit(0.5)
-                )
-                / 1e6
-            ).alias("boiler_rate"),
+            ratio6("n_boiler", "n_segments").alias("boiler_rate"),
         )
     )

@@ -89,8 +89,8 @@ def oracle_type_issues(describe_rows, spark_schema) -> list[str]:
             issues.append(
                 f"{col}: oracle type {duck_type} reaches the driver as "
                 "Arrow decimal128, which hashes differently from int64 "
-                "even when values are equal (the q_compaction_plan r5-r7 "
-                "red) — CAST the oracle column to BIGINT/DOUBLE"
+                "even when values are equal — CAST the oracle column to "
+                "BIGINT/DOUBLE"
             )
             continue
         st = spark_types.get(col)

@@ -4,11 +4,14 @@ is checked against a locally rebuilt reference of the form it replaced,
 on fixture data plus NULL-bearing micro frames, so a later edit to
 either side cannot silently diverge them. (The oracle hash sweeps cover
 the composed queries; these cover the extracted builders, including
-paths the fixtures only lightly exercise.)
+paths the fixtures only lightly exercise.) Each text-rule kernel is
+likewise pinned against its DuckDB twin on degenerate documents.
 """
 
 from __future__ import annotations
 
+import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from spring_and_kafka_spark.exec_utils import (
@@ -28,10 +31,12 @@ from spring_and_kafka_spark.llm.dedup import (
     planted_corpus,
     shingles,
 )
+from spring_and_kafka_spark.llm import text
 from spring_and_kafka_spark.operators.graph import _co_order_pairs
 from spring_and_kafka_spark.sources.tables import load_table
+from tools.selfcheck import row_multiset
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, staged
 
 
 def _rows(df):
@@ -441,3 +446,71 @@ def test_graph_jaccard_grouped_wedges_match_self_join_reference(spark):
         F.col("_e").isNotNull().alias("is_edge"),
     )
     assert _rows(q_graph_jaccard(spark, SF_SMOKE)) == _rows(old)
+
+
+# Degenerate docs for the text rules: NULL text, '', one token, n-1 = 2
+# tokens, doubled and trailing spaces, upper case, and docs longer than
+# one 8-token segment.
+_DEGENERATE_DOCS = [
+    (0, None),
+    (1, ""),
+    (2, "Alpha"),
+    (3, "a b"),
+    (4, "a  b c"),
+    (5, "spark merge sort "),
+    (6, " The Quick  Brown FOX"),
+    (7, " ".join(f"w{i % 5}" for i in range(19))),
+    (8, "x " * 9),
+]
+
+
+def _text_twin_cases():
+    """(kernel frame, twin SQL) per text rule over `documents`."""
+    ts_sql = text.tok_array_sql()
+
+    def tokens(d):
+        return text.tokens(d), text.tokens_sql()
+
+    def vocab_tokens(d):
+        return text.vocab_tokens(d), text.vocab_tokens_sql()
+
+    def window(d, arr, arr_sql):
+        df = d.select("doc_id", F.posexplode(arr).alias("i", "g"))
+        sql = f"SELECT doc_id, {text.posexplode_sql(arr_sql, 'g', 'i')} FROM documents"
+        return df, sql
+
+    def grams_whole(d):
+        ts = text.tok_array()
+        return window(d, text.grams(ts, 3, True), text.grams_sql(ts_sql, 3, True))
+
+    def grams_exact(d):
+        ts = text.tok_array()
+        return window(d, text.grams(ts, 2, False), text.grams_sql(ts_sql, 2, False))
+
+    def segments(d):
+        ts = text.tok_array()
+        return window(d, text.segments(ts, 8), text.segments_sql(ts_sql, 8))
+
+    return [tokens, vocab_tokens, grams_whole, grams_exact, segments]
+
+
+@pytest.mark.parametrize("case", _text_twin_cases(), ids=lambda f: f.__name__)
+def test_text_kernel_matches_its_duckdb_twin(spark, case):
+    """Each text-rule kernel and its DuckDB twin return the same row
+    multiset on degenerate docs, so a query composed from the pair
+    cannot drift between engines on them."""
+    with staged(spark, documents=(_DEGENERATE_DOCS, "doc_id long, text string")) as d:
+        df, sql = case(load_table(spark, d, "documents"))
+        srows = df.collect()
+        con = duckdb.connect()
+        con.execute(
+            "CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{d}/documents.parquet/*.parquet')"
+        )
+        res = con.execute(sql)
+        ocols = [c[0] for c in res.description]
+        orows = res.fetchall()
+    assert sorted(df.columns) == sorted(ocols)
+    order = sorted(range(len(ocols)), key=lambda i: ocols[i])
+    sorder = sorted(range(len(df.columns)), key=lambda i: df.columns[i])
+    assert srows and row_multiset(srows, sorder) == row_multiset(orows, order)

@@ -14,9 +14,6 @@ from pathlib import Path
 
 TESTS = Path(__file__).resolve().parent
 ROUND_NUMBERED = re.compile(r"test_.*_r\d+.*\.py")
-# Kept under its old name so its node ids stay stable while the other
-# round-numbered modules move; it folds into test_invariants.py next.
-PENDING_FOLD = {"test_quality_r5c.py"}
 
 
 def _test_names(tree: ast.AST) -> list[str]:
@@ -39,7 +36,7 @@ def test_no_round_numbered_test_modules():
     numbered = sorted(
         p.name
         for p in TESTS.glob("test_*.py")
-        if ROUND_NUMBERED.fullmatch(p.name) and p.name not in PENDING_FOLD
+        if ROUND_NUMBERED.fullmatch(p.name)
     )
     assert numbered == [], f"name test modules by family, not round: {numbered}"
 
