@@ -55,6 +55,11 @@ def cents(col: Column | str) -> Column:
     return F.floor(c * 100 + F.lit(0.5)).cast("long")
 
 
+def cents_sql(col: str) -> str:
+    """DuckDB twin of cents."""
+    return f"CAST(floor({col} * 100 + 0.5) AS BIGINT)"
+
+
 def micros(col: Column | str) -> Column:
     """Exact integer micro-units from a measure double: floor(x*1e6+0.5)
     as BIGINT — the cents rule at 1e-6 resolution, used wherever a
@@ -65,6 +70,11 @@ def micros(col: Column | str) -> Column:
     must call this."""
     c = F.col(col) if isinstance(col, str) else col
     return F.floor(c * 1e6 + F.lit(0.5)).cast("long")
+
+
+def micros_sql(col: str) -> str:
+    """DuckDB twin of micros."""
+    return f"CAST(floor({col} * 1e6 + 0.5) AS BIGINT)"
 
 
 def ratio6(num: Column | str, den: Column | str) -> Column:

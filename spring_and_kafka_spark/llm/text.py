@@ -558,7 +558,10 @@ def q_text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_text_repetition",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {tok_array_sql()} AS ts FROM documents),
+    WITH t AS (
+      SELECT doc_id, {tok_array_sql()} AS ts
+      FROM documents WHERE text IS NOT NULL
+    ),
     g AS (SELECT doc_id, ts, {grams_sql("ts", 2, False)} AS bigs FROM t)
     SELECT doc_id,
            round(1.0 - len(list_distinct(ts)) / CAST(greatest(len(ts), 1) AS DOUBLE), 4)
@@ -575,8 +578,10 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate and spam repeat themselves): fraction of duplicate tokens
     and duplicate bigrams per doc, plus a threshold flag. Computed entirely
     with array expressions on the token array — no explode, no shuffle;
-    the whole query is a projection over the scan."""
-    d = load_table(spark, sf_dir, "documents")
+    the whole query is a projection over the scan. NULL text filters at
+    the scan in both engines (payload rule): it has no tokens to
+    repeat."""
+    d = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     ts = tok_array()
     bigs = grams(ts, 2, whole=False)
     dup_tok = 1.0 - F.size(F.array_distinct(ts)) / F.greatest(
@@ -688,7 +693,7 @@ _STRIDE = 24
     oracle=f"""
     WITH t AS (
       SELECT doc_id, {tok_array_sql()} AS ts, {n_tokens_sql()} AS n
-      FROM documents
+      FROM documents WHERE text IS NOT NULL
     ),
     s AS (
       SELECT doc_id, ts, n, unnest({seg_starts_sql("ts", _STRIDE)}) AS start_tok
@@ -714,8 +719,9 @@ def q_text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape at 100 TB: pure narrow work — tokenize, generate the start
     offsets, explode — no shuffle, no UDF; the explode fan-out is
     len/stride per doc and stays inside whole-stage codegen. Writers
-    partition the chunk stream straight to parquet."""
-    d = load_table(spark, sf_dir, "documents")
+    partition the chunk stream straight to parquet. NULL text filters
+    at the scan in both engines (payload rule): it has no chunk."""
+    d = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     ts = tok_array()
     s = d.select(
         "doc_id",

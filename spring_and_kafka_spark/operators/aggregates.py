@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from spring_and_kafka_spark.exec_utils import cents as ex_cents
+from spring_and_kafka_spark.exec_utils import cents_sql
 from spring_and_kafka_spark.registry import register
 from spring_and_kafka_spark.sources.tables import load_table
 
@@ -554,10 +555,10 @@ def q_hist_equiwidth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_agg_weighted",
-    oracle="""
+    oracle=f"""
     WITH j AS (
       SELECT p.p_brand,
-             CAST(floor(l.l_extendedprice * 100 + 0.5) AS BIGINT)
+             {cents_sql('l.l_extendedprice')}
                * CAST(floor(l.l_quantity + 0.5) AS BIGINT) AS wprice_cents,
              CAST(floor(l.l_quantity + 0.5) AS BIGINT) AS qty
       FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
@@ -695,10 +696,10 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_share_of_total",
-    oracle="""
+    oracle=f"""
     WITH rev AS (
       SELECT n.n_regionkey, r.r_name, n.n_name,
-             sum(CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT))
+             sum({cents_sql('o.o_totalprice')})
                AS cents
       FROM orders o
       JOIN customer c ON o.o_custkey = c.c_custkey
@@ -766,11 +767,11 @@ def q_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_agg_ols2",
-    oracle="""
+    oracle=f"""
     WITH z AS (
       SELECT CAST(l_quantity AS BIGINT) AS x1,
-             CAST(floor(l_discount * 100 + 0.5) AS BIGINT) AS x2,
-             CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS y
+             {cents_sql('l_discount')} AS x2,
+             {cents_sql('l_extendedprice')} AS y
       FROM lineitem
     ),
     s AS (
@@ -946,7 +947,7 @@ def q_agg_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_hist_equidepth",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       -- boundaries interpolate over EXACT INTEGER CENTS (the repo's one
       -- currency rule): Spark's Percentile computes lo + (hi-lo)*f,
@@ -957,7 +958,7 @@ def q_agg_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
       -- both products are exact dyadics, so both formulas yield the
       -- identical true rational and the divergence is structurally gone
       SELECT o_totalprice,
-             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS c
+             {cents_sql('o_totalprice')} AS c
       FROM orders
     ),
     q AS (

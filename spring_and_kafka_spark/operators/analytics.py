@@ -14,7 +14,21 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from spring_and_kafka_spark.exec_utils import cents as ex_cents
-from spring_and_kafka_spark.exec_utils import materialize, ts_micros
+from spring_and_kafka_spark.exec_utils import (
+    cents_sql,
+    materialize,
+    ratio6,
+    ratio6_sql,
+    ts_micros,
+)
+from spring_and_kafka_spark.operators.timeseries import (
+    event_window,
+    event_window_sql,
+    session_break,
+    session_break_sql,
+    session_ids,
+    session_ids_sql,
+)
 from spring_and_kafka_spark.registry import register
 from spring_and_kafka_spark.sources.tables import load_table
 
@@ -89,7 +103,7 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_ts_simsearch",
-    oracle="""
+    oracle=f"""
     WITH seqs AS (
       -- list_filter mirrors Spark's collect_list, which SKIPS NULL
       -- values: a window touching a missing reading shrinks below 8 and
@@ -98,7 +112,7 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
       -- before the filter and list_inner_product errors on NULLs.
       SELECT user_id, event_id,
              list_filter(
-               list(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
+               list(value) OVER ({event_window_sql()}
                  ROWS BETWEEN CURRENT ROW AND 7 FOLLOWING),
                x -> x IS NOT NULL) AS w
       FROM events
@@ -127,14 +141,8 @@ def q_ts_simsearch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only per-window arithmetic; top-5 via TakeOrderedAndProject."""
     pattern = [5.0, 10.0, 15.0, 20.0, 15.0, 10.0, 5.0, 0.0]
     qq = sum(x * x for x in pattern)  # 1300.0
-    from pyspark.sql import Window as W
-
     e = load_table(spark, sf_dir, "events")
-    w = (
-        W.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(W.currentRow, 7)
-    )
+    w = event_window().rowsBetween(W.currentRow, 7)
     seqs = e.select(
         "user_id", "event_id", F.collect_list("value").over(w).alias("w")
     ).filter(F.size("w") == 8)
@@ -201,59 +209,25 @@ def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def gap_session_ids(e: DataFrame, gap_us: int = 1_800_000_000) -> DataFrame:
-    """The shared 30-minute gap-sessionize recipe: (user_id, event_id,
-    us, sess_id) rows where a >gap_us silence opens a new session. One
-    shuffle on user_id; the boundary lag and the running session-id sum
-    reuse the same (us, event_id) total order, which is unique, so the
-    numbering is deterministic. Callers: q_sessionize (per-session
-    aggregates) and q_interval_peak (session intervals) — one
-    definition, so the gap rule and tie-break cannot drift apart."""
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    us = ts_micros("ts")
-    prev = F.lag(us).over(w)
-    marked = e.select(
-        "user_id",
-        "event_id",
-        us.alias("us"),
-        F.when(prev.isNull() | (us - prev > gap_us), 1)
-        .otherwise(0)
-        .alias("new_sess"),
+def gap_session_ids(e: DataFrame) -> DataFrame:
+    """(user_id, event_id, us, sess_id) rows: the `session_ids` of each
+    user's events in the per-user event order. Callers: q_sessionize
+    (per-session aggregates), q_interval_peak and q_join_overlap
+    (session intervals)."""
+    return session_ids(
+        e, event_window(), "user_id", "event_id", ts_micros("ts").alias("us")
     )
-    w2 = (
-        W.partitionBy("user_id")
-        .orderBy("us", "event_id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    return marked.select(
-        "user_id", "event_id", "us", F.sum("new_sess").over(w2).alias("sess_id")
-    )
+
+
+_GAP_SESSIONS_SQL = session_ids_sql(
+    event_window_sql(), "user_id, event_id, epoch_us(ts) AS us"
+)
 
 
 @register(
     "q_sessionize",
-    oracle="""
-    WITH ordered AS (
-      SELECT user_id, event_id, epoch_us(ts) AS us,
-             lag(epoch_us(ts)) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-             ) AS prev_us
-      FROM events
-    ),
-    marked AS (
-      SELECT user_id, event_id, us,
-             CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000
-                  THEN 1 ELSE 0 END AS new_sess
-      FROM ordered
-    ),
-    numbered AS (
-      SELECT user_id, event_id,
-             sum(new_sess) OVER (
-               PARTITION BY user_id ORDER BY us, event_id
-               ROWS UNBOUNDED PRECEDING
-             ) AS sess_id
-      FROM marked
-    ),
+    oracle=f"""
+    WITH numbered AS ({_GAP_SESSIONS_SQL}),
     per_sess AS (
       SELECT user_id, sess_id, count(*) AS n_events
       FROM numbered GROUP BY 1, 2
@@ -266,16 +240,13 @@ def gap_session_ids(e: DataFrame, gap_us: int = 1_800_000_000) -> DataFrame:
     """,
 )
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization: a user's events belong to one session
-    until a >30-minute silence; report per-user session count, event
-    count, and largest session.
+    """Gap-based sessionization (`gap_session_ids`): per-user session
+    count, event count, and largest session.
 
-    Timestamps compare as exact integer microseconds (unix_micros /
-    epoch_us) on both engines — no float epoch seconds, no truncation
-    ambiguity. One shuffle on user_id; the lag window, the running
-    session-id sum, and both aggregations all reuse that partitioning
-    (the (user_id, sess_id) groupBy is a prefix-compatible re-agg, and
-    partial aggregation keeps the final per-user rollup map-side). At
+    One shuffle on user_id; the lag window, the running session-id sum,
+    and both aggregations all reuse that partitioning (the (user_id,
+    sess_id) groupBy is a prefix-compatible re-agg, and partial
+    aggregation keeps the final per-user rollup map-side). At
     100 TB this is the canonical sessionize shape: no self-join, state
     bounded by one user's events per partition, AQE free to coalesce."""
     e = load_table(spark, sf_dir, "events")
@@ -293,13 +264,13 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_scd2",
-    oracle="""
+    oracle=f"""
     WITH changes AS (
       SELECT user_id, event_type, ts, event_id,
              lag(event_type) OVER w AS prev_type,
              row_number() OVER w AS rn
       FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+      WINDOW w AS ({event_window_sql()})
     ),
     starts AS (
       SELECT user_id, event_type, ts AS valid_from, event_id
@@ -327,10 +298,8 @@ def q_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     change's start. One shuffle on user_id; both window passes and the
     filter reuse that partitioning. At 100 TB this is the standard
     changelog→dimension compaction and stays a single exchange."""
-    from spring_and_kafka_spark.sources.tables import load_table
-
     e = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    w = event_window()
     changes = e.select(
         "user_id", "event_type", "ts", "event_id",
         F.lag("event_type").over(w).alias("prev_type"),
@@ -493,12 +462,12 @@ def pareto_frontier(
 
 @register(
     "q_rfm",
-    oracle="""
+    oracle=f"""
     WITH m AS (
       SELECT o_custkey,
              max(o_orderdate) AS recency,
              CAST(count(*) AS BIGINT) AS frequency,
-             CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
+             CAST(sum({cents_sql('o_totalprice')})
                   AS BIGINT) AS monetary_cents
       FROM orders GROUP BY 1
     ),
@@ -565,10 +534,10 @@ def q_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_merge_upsert",
-    oracle="""
+    oracle=f"""
     WITH delta AS (
       SELECT o_custkey,
-             CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
+             CAST(sum({cents_sql('o_totalprice')})
                   AS BIGINT) AS delta_cents
       FROM orders GROUP BY 1
     ),
@@ -585,7 +554,7 @@ def q_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
                 WHEN c.c_custkey IS NULL THEN 'inserted'
                 ELSE 'updated' END AS status,
            (CASE WHEN c.c_custkey IS NULL THEN 0
-                 ELSE CAST(floor(c.c_acctbal * 100 + 0.5) AS BIGINT)
+                 ELSE {cents_sql('c.c_acctbal')}
             END + coalesce(s.delta_cents, 0)) / 100.0 AS new_acctbal
     FROM customer c FULL OUTER JOIN src s ON c.c_custkey = s.k
     ORDER BY c_custkey
@@ -648,11 +617,11 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_seq_pattern",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT user_id, event_id, epoch_us(ts) AS us, event_type,
              sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-               OVER (PARTITION BY user_id ORDER BY ts, event_id
+               OVER ({event_window_sql()}
                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                AS cum_clicks
       FROM events
@@ -704,11 +673,7 @@ def q_seq_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank-1 filter picks the earliest. Per-user key join, no cross-user
     blow-up; the oracle states the identical join."""
     e = load_table(spark, sf_dir, "events")
-    w_cum = (
-        W.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
+    w_cum = event_window().rowsBetween(W.unboundedPreceding, W.currentRow)
     base = e.select(
         "user_id",
         "event_id",
@@ -764,23 +729,8 @@ def q_seq_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_interval_peak",
-    oracle="""
-    WITH ordered AS (
-      SELECT user_id, event_id, epoch_us(ts) AS us,
-             lag(epoch_us(ts)) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-             ) AS prev_us
-      FROM events
-    ),
-    numbered AS (
-      SELECT user_id, us,
-             sum(CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000
-                      THEN 1 ELSE 0 END) OVER (
-               PARTITION BY user_id ORDER BY us, event_id
-               ROWS UNBOUNDED PRECEDING
-             ) AS sess_id
-      FROM ordered
-    ),
+    oracle=f"""
+    WITH numbered AS ({_GAP_SESSIONS_SQL}),
     sess AS (
       SELECT user_id, sess_id, min(us) AS s, max(us) AS e
       FROM numbered GROUP BY 1, 2
@@ -804,8 +754,8 @@ def q_seq_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_interval_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Peak concurrency over session intervals: sessionize (30-min gap,
-    the q_sessionize recipe), then sweep +1/−1 session boundaries in
+    """Peak concurrency over session intervals: sessionize
+    (`gap_session_ids`), then sweep +1/−1 session boundaries in
     time order to find the maximum number of simultaneously-open
     sessions and the earliest instant it is reached — the capacity-
     planning question interval data exists to answer. Closed-interval
@@ -885,7 +835,7 @@ def peak_from_intervals(sess: DataFrame) -> DataFrame:
 
 @register(
     "q_cohort_revenue",
-    oracle="""
+    oracle=f"""
     WITH fo AS (
       SELECT o_custkey,
              min(date_trunc('month', o_orderdate)) AS cohort_month
@@ -896,7 +846,7 @@ def peak_from_intervals(sess: DataFrame) -> DataFrame:
                 - (year(fo.cohort_month) * 12 + month(fo.cohort_month))
                 AS INT) AS age_months,
            CAST(count(DISTINCT o.o_custkey) AS BIGINT) AS n_customers,
-           CAST(sum(CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT))
+           CAST(sum({cents_sql('o.o_totalprice')})
                 AS BIGINT) AS revenue_cents
     FROM orders o JOIN fo ON o.o_custkey = fo.o_custkey
     GROUP BY 1, 2
@@ -1035,26 +985,10 @@ def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_join_overlap",
-    oracle="""
-    WITH ordered AS (
-      SELECT user_id, event_id, epoch_us(ts) AS us,
-             lag(epoch_us(ts)) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-             ) AS prev_us
-      FROM events
-    ),
-    numbered AS (
-      SELECT user_id, event_id, us,
-             sum(CASE WHEN prev_us IS NULL OR us - prev_us > 1800000000
-                      THEN 1 ELSE 0 END) OVER (
-               PARTITION BY user_id ORDER BY us, event_id
-               ROWS UNBOUNDED PRECEDING
-             ) AS sess_id
-      FROM ordered
-    ),
+    oracle=f"""
+    WITH numbered AS ({_GAP_SESSIONS_SQL}),
     sess AS (
-      SELECT user_id, CAST(sess_id AS BIGINT) AS sess_id,
-             min(us) AS s, max(us) AS e
+      SELECT user_id, sess_id, min(us) AS s, max(us) AS e
       FROM numbered GROUP BY 1, 2
     )
     SELECT a.user_id, a.sess_id,
@@ -1066,11 +1000,10 @@ def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("interval",),
 )
 def q_join_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval-overlap join: sessionize (30-min gap, the shared
-    q_sessionize recipe), then for every session count how many OTHER
-    users had a session overlapping it in time (closed intervals) — the
-    concurrent-audience readout behind collaborative-session and
-    co-presence features.
+    """Interval-overlap join: sessionize (`gap_session_ids`), then for
+    every session count how many OTHER users had a session overlapping
+    it in time (closed intervals) — the concurrent-audience readout
+    behind collaborative-session and co-presence features.
 
     The oracle states the spec as a quadratic range join; the Spark plan
     runs the scalable binned decomposition: each interval replicates to
@@ -1157,9 +1090,8 @@ _CDC_KEY_OFFSET = 100_000_000
                WHEN a.o_totalprice <> b.price THEN 'update'
                ELSE 'unchanged'
              END AS change_type,
-             COALESCE(CAST(floor(b.price * 100 + 0.5) AS BIGINT), 0)
-               - COALESCE(CAST(floor(a.o_totalprice * 100 + 0.5)
-                               AS BIGINT), 0) AS delta_cents
+             COALESCE({cents_sql('b.price')}, 0)
+               - COALESCE({cents_sql('a.o_totalprice')}, 0) AS delta_cents
       FROM orders a
       FULL OUTER JOIN snap_b b ON a.o_orderkey = b.o_orderkey
     )
@@ -1325,7 +1257,7 @@ def q_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_seq_markov",
-    oracle="""
+    oracle=f"""
     WITH ordered AS (
       SELECT user_id, event_type,
              lag(event_type) OVER (
@@ -1347,7 +1279,7 @@ def q_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM t
     )
     SELECT prev_type, curr_type, n,
-           floor(n * 1e6 / row_total + 0.5) / 1e6 AS p
+           {ratio6_sql("n", "row_total")} AS p
     FROM w
     """,
 )
@@ -1372,9 +1304,9 @@ def q_seq_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     out of a missing state are uncountable in this formulation and are
     dropped identically in both engines (documented trade; transitions
     INTO a missing state keep their row via curr_type NULL, the honest
-    count). Probabilities use the floor(x·1e6+0.5)/1e6 form on an
-    n/row_total integer ratio (engine round() diverges exactly on
-    half-digit boundaries, which small-integer ratios DO hit).
+    count). Probabilities are `ratio6` of the n/row_total integer ratio
+    (engine round() diverges exactly on half-digit boundaries, which
+    small-integer ratios DO hit).
 
     Shape at 100 TB: one shuffle to (user) for the lag window —
     sessions are user-bounded so the sort is within-key and skew-free —
@@ -1413,13 +1345,8 @@ def q_seq_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
         "prev_type",
         "curr_type",
         "n",
-        (
-            F.floor(F.col("n") * 1e6 / F.col("row_total") + F.lit(0.5)) / 1e6
-        ).alias("p"),
+        ratio6("n", "row_total").alias("p"),
     )
-
-
-_MARKOV_SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min, the q_stream_session gap
 
 
 @register(
@@ -1428,10 +1355,7 @@ _MARKOV_SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min, the q_stream_session gap
     WITH ordered AS (
       SELECT user_id, event_type,
              lag(event_type) OVER w AS prev_type,
-             CASE WHEN lag(ts) OVER w IS NULL
-                  OR epoch_us(ts) - epoch_us(lag(ts) OVER w)
-                       > {_MARKOV_SESSION_GAP_US}
-                  THEN 1 ELSE 0 END AS brk
+             {session_break_sql("w")} AS brk
       FROM events
       WINDOW w AS (PARTITION BY user_id
                    ORDER BY ts NULLS FIRST, event_id NULLS FIRST,
@@ -1449,14 +1373,14 @@ _MARKOV_SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min, the q_stream_session gap
       FROM t
     )
     SELECT prev_type, curr_type, n,
-           floor(n * 1e6 / row_total + 0.5) / 1e6 AS p
+           {ratio6_sql("n", "row_total")} AS p
     FROM w2
     """,
 )
 def q_seq_markov_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-SESSION Markov transition matrix — q_seq_markov's twin with
-    the q_stream_session boundary: transitions are counted only between
-    consecutive events of the same user separated by ≤ 30 minutes, so a
+    the `session_break` boundary: transitions are counted only between
+    consecutive events of the same user in one session, so a
     signup→purchase pair spanning a week of absence no longer counts as
     one "journey step". The lifetime matrix (q_seq_markov) minus this
     one is exactly the cross-session transition mass — the readout a
@@ -1465,16 +1389,14 @@ def q_seq_markov_session(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ONE window pass does both jobs (no second sessionize-then-lag
     shuffle): the user-keyed lag window yields prev_type AND the
-    session-break flag (gap > 30 min or no/NULL predecessor timestamp,
-    the q_stream_session rule) from the same sort; a transition is kept
-    iff the CURRENT row is not a session start. Ordering key is the
-    q_seq_markov total key (ts, event_id, event_type), each pinned
-    NULLS FIRST. NULL-ts rows sort first per user and each one breaks —
-    an event that cannot be placed in time cannot be sessionized, so it
-    contributes no transition in EITHER direction (identical CASE in
-    both engines); boundary-vs-data NULL prev_type drops per the
-    q_seq_markov documented trade. Probabilities via the
-    floor(x·1e6+0.5)/1e6 form on the n/row_total integer ratio.
+    session-break flag from the same sort; a transition is kept iff the
+    CURRENT row is not a session start. Ordering key is the q_seq_markov
+    total key (ts, event_id, event_type), each pinned NULLS FIRST.
+    NULL-ts rows sort first per user and each one breaks — an event that
+    cannot be placed in time cannot be sessionized, so it contributes no
+    transition in EITHER direction; boundary-vs-data NULL prev_type
+    drops per the q_seq_markov documented trade. Probabilities are
+    `ratio6` of the n/row_total integer ratio.
 
     Shape at 100 TB: identical to q_seq_markov — one shuffle to
     (user_id) for the window (sessions are user-bounded, skew-free),
@@ -1487,17 +1409,10 @@ def q_seq_markov_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = W.partitionBy("user_id").orderBy(
         F.col("ts").asc(), F.col("event_id").asc(), F.col("event_type").asc()
     )
-    prev_ts = F.lag("ts").over(w)
     ordered = e.select(
         "event_type",
         F.lag("event_type").over(w).alias("prev_type"),
-        F.when(
-            prev_ts.isNull()
-            | (ts_micros("ts") - ts_micros(prev_ts) > _MARKOV_SESSION_GAP_US),
-            1,
-        )
-        .otherwise(0)
-        .alias("brk"),
+        session_break(w).alias("brk"),
     )
     t = (
         ordered.filter((F.col("brk") == 0) & F.col("prev_type").isNotNull())
@@ -1514,9 +1429,7 @@ def q_seq_markov_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         "prev_type",
         "curr_type",
         "n",
-        (
-            F.floor(F.col("n") * 1e6 / F.col("row_total") + F.lit(0.5)) / 1e6
-        ).alias("p"),
+        ratio6("n", "row_total").alias("p"),
     )
 
 

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from spring_and_kafka_spark.exec_utils import cents, ts_micros
+from spring_and_kafka_spark.exec_utils import cents, cents_sql, ts_micros
 from spring_and_kafka_spark.registry import register
 from spring_and_kafka_spark.sources.tables import load_table
 
@@ -293,7 +293,7 @@ from spring_and_kafka_spark.operators.analytics import (  # noqa: E402
     SELECT CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT)
              AS month_id,
            CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(sum(CAST(floor(price * 100 + 0.5) AS BIGINT)) AS BIGINT)
+           CAST(sum({cents_sql('price')}) AS BIGINT)
              AS revenue_cents
     FROM snap_b
     GROUP BY 1

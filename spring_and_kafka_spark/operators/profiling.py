@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from spring_and_kafka_spark.exec_utils import cents as ex_cents
-from spring_and_kafka_spark.exec_utils import ratio6, ts_micros
+from spring_and_kafka_spark.exec_utils import cents_sql, ratio6, ts_micros
 from spring_and_kafka_spark.registry import register
 from spring_and_kafka_spark.sources.tables import load_table
 
@@ -414,10 +414,10 @@ def q_dist_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_agg_gini",
-    oracle="""
+    oracle=f"""
     WITH rev AS (
       SELECT o_custkey,
-             CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
+             CAST(sum({cents_sql('o_totalprice')})
                   AS BIGINT) AS cents
       FROM orders GROUP BY 1
     ),
@@ -501,10 +501,10 @@ def q_agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_pareto_abc",
-    oracle="""
+    oracle=f"""
     WITH rev AS (
       SELECT o_custkey,
-             CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
+             CAST(sum({cents_sql('o_totalprice')})
                   AS BIGINT) AS cents
       FROM orders GROUP BY 1
     ),

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from spring_and_kafka_spark.exec_utils import cents as ex_cents
+from spring_and_kafka_spark.exec_utils import cents_sql
 from spring_and_kafka_spark.registry import register
 from spring_and_kafka_spark.sources.tables import load_table
 
@@ -211,10 +212,10 @@ def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_winsorize",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT c_mktsegment, c_acctbal,
-             CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bc
+             {cents_sql('c_acctbal')} AS bc
       FROM customer
     ),
     -- band edges by EXACT INTEGER RANK DECOMPOSITION: rank
@@ -634,10 +635,10 @@ def q_dq_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_er_score",
-    oracle="""
+    oracle=f"""
     WITH b AS (
       SELECT c_custkey, c_name, c_nationkey, c_mktsegment,
-             CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bal_cents,
+             {cents_sql('c_acctbal')} AS bal_cents,
              substr(c_name, 10, 8) AS blk
       FROM customer
     ),

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from spring_and_kafka_spark.exec_utils import cents
+from spring_and_kafka_spark.exec_utils import cents, cents_sql
 from spring_and_kafka_spark.llm.text import grams, grams_sql, tok_array, tok_array_sql
 from spring_and_kafka_spark.registry import register
 from spring_and_kafka_spark.sources.tables import load_table
@@ -251,12 +251,12 @@ def select_quantile_buckets(
 
 @register(
     "q_agg_quantile_sketch",
-    oracle="""
+    oracle=f"""
     WITH c AS (
       -- quantiles skip NULL measures (standard percentile semantics):
       -- an unfiltered NULL would mint a NULL bucket whose position in
       -- the rank windows differs between engine NULL orderings
-      SELECT CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents
+      SELECT {cents_sql('l_extendedprice')} AS cents
       FROM lineitem WHERE l_extendedprice IS NOT NULL
     ),
     cg AS (

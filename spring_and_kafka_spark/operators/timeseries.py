@@ -1,21 +1,284 @@
-"""Time-series operators: gap-filling/resampling and subquery shapes.
+"""Time-series operators: gap-filling/resampling, smoothing, robust
+outliers, trends and subquery shapes.
 
 Gap-fill is the canonical analytics-engine op the relational core can't
 express with a plain groupBy: missing buckets must EXIST with zero counts.
 The spine (bucket × dimension grid) is generated, not scanned — O(days ×
 types) rows broadcast against the aggregated side, never against raw
 events.
+
+The rules the event-sequence and time-series queries share (here, in
+`operators/analytics.py`, `operators/windows.py` and
+`streaming/batch_equiv.py`) each have ONE Spark kernel with its DuckDB
+twin beside it: the per-key event order (`event_window`/
+`event_window_sql`), the 30-minute session break and its numbering
+(`session_break`/`session_break_sql`, `session_ids`/`session_ids_sql`),
+the integer frame moments (`frame_moments`/`frame_moments_sql` with
+`moment_num`/`moment_det`), the per-user smoothing recurrence
+(`smooth`/`smooth_sql`) and the MAD cut (`mad_cut`/`mad_cut_sql`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession, WindowSpec
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from spring_and_kafka_spark.exec_utils import materialize, micros, ts_micros
+from spring_and_kafka_spark.exec_utils import (
+    materialize,
+    micros,
+    micros_sql,
+    ratio6,
+    ratio6_sql,
+    ts_micros,
+)
 from spring_and_kafka_spark.registry import register
 from spring_and_kafka_spark.sources.tables import load_table
+
+# ---------------------------------------------------------------------------
+# The per-key event order: (ts, event_id), unique per key, so lag, lead,
+# row_number and running frames are deterministic in both engines. The
+# SQL twin pins NULLS FIRST, Spark's ascending default.
+
+
+def event_window(*keys: str) -> WindowSpec:
+    """The event order partitioned by `keys` (default user_id)."""
+    return W.partitionBy(*(keys or ("user_id",))).orderBy("ts", "event_id")
+
+
+def event_window_sql(keys: str = "user_id") -> str:
+    """DuckDB twin of event_window: the body of its window clause."""
+    return f"PARTITION BY {keys} ORDER BY ts NULLS FIRST, event_id NULLS FIRST"
+
+
+# ---------------------------------------------------------------------------
+# The session break: an event opens a session when it has no predecessor
+# timestamp in its key's order, or when more than 30 minutes separate it
+# from that predecessor. Timestamps compare as exact integer µs.
+
+SESSION_GAP_US = 1_800_000_000
+
+
+def session_break(w: WindowSpec) -> Column:
+    """1 where the event opens a session in the order `w`, else 0."""
+    prev = F.lag("ts").over(w)
+    gap = ts_micros("ts") - ts_micros(prev)
+    return F.when(prev.isNull() | (gap > SESSION_GAP_US), 1).otherwise(0)
+
+
+def session_break_sql(w: str) -> str:
+    """DuckDB twin of session_break; `w` is a window name or a
+    parenthesized window clause."""
+    prev = f"lag(ts) OVER {w}"
+    return (
+        f"CASE WHEN {prev} IS NULL OR epoch_us(ts) - epoch_us({prev}) "
+        f"> {SESSION_GAP_US} THEN 1 ELSE 0 END"
+    )
+
+
+def session_ids(df: DataFrame, w: WindowSpec, *cols: Column | str) -> DataFrame:
+    """(cols…, sess_id) rows: sess_id counts the session breaks up to and
+    including each event in the order `w`, so it numbers a key's
+    sessions 1, 2, … The break flag and the running count share `w`:
+    one sort per key."""
+    running = w.rowsBetween(W.unboundedPreceding, W.currentRow)
+    return df.withColumn("_brk", session_break(w)).select(
+        *cols, F.sum("_brk").over(running).alias("sess_id")
+    )
+
+
+def session_ids_sql(w: str, cols: str) -> str:
+    """DuckDB twin of session_ids over `events`; `w` is the body of the
+    window clause, `cols` the select list."""
+    return f"""
+      SELECT {cols},
+             CAST(sum(brk) OVER ({w} ROWS UNBOUNDED PRECEDING) AS BIGINT)
+               AS sess_id
+      FROM (SELECT *, {session_break_sql(f"({w})")} AS brk FROM events)"""
+
+
+# ---------------------------------------------------------------------------
+# The frame moments of two BIGINT columns x, y: n, Σx, Σy, Σxy, Σx² (and
+# Σy²), named n, sx, sy, sxy, sxx, syy. Integer sums commute, so both
+# engines hold the same integers whatever the aggregation order or the
+# sliding-window algorithm; slopes and correlations then divide them
+# along identical IEEE paths. The caller bounds the products under 2^63.
+
+
+def frame_moments(
+    x: str, y: str, w: WindowSpec | None = None, n: str = "n", yy: bool = False
+) -> list[Column]:
+    """The moments as aggregates of a groupBy, or over the frame `w`; the
+    count is named `n`, Σy² is included if `yy`."""
+    cx, cy = F.col(x), F.col(y)
+    aggs = {
+        n: F.count(F.lit(1)),
+        "sx": F.sum(x),
+        "sy": F.sum(y),
+        "sxy": F.sum(cx * cy),
+        "sxx": F.sum(cx * cx),
+    }
+    if yy:
+        aggs["syy"] = F.sum(cy * cy)
+    return [(a if w is None else a.over(w)).alias(k) for k, a in aggs.items()]
+
+
+def frame_moments_sql(
+    x: str, y: str, w: str | None = None, n: str = "n", yy: bool = False
+) -> str:
+    """DuckDB twin of frame_moments; `w` is a window name or a
+    parenthesized window clause."""
+    over = "" if w is None else f" OVER {w}"
+    aggs = {
+        n: "count(*)",
+        "sx": f"sum({x})",
+        "sy": f"sum({y})",
+        "sxy": f"sum({x} * {y})",
+        "sxx": f"sum({x} * {x})",
+    }
+    if yy:
+        aggs["syy"] = f"sum({y} * {y})"
+    return ", ".join(f"CAST({a}{over} AS BIGINT) AS {k}" for k, a in aggs.items())
+
+
+def moment_num(n: str = "n") -> Column:
+    """n·Σxy − Σx·Σy: the numerator of the closed-form slope and of
+    Pearson's r."""
+    return F.col(n) * F.col("sxy") - F.col("sx") * F.col("sy")
+
+
+def moment_num_sql(n: str = "n") -> str:
+    """DuckDB twin of moment_num."""
+    return f"({n} * sxy - sx * sy)"
+
+
+def moment_det(v: str = "x", n: str = "n") -> Column:
+    """n·Σv² − (Σv)² for v in {x, y}: the slope's determinant, n² times
+    the variance of v (0 on a constant frame)."""
+    return F.col(n) * F.col(f"s{v}{v}") - F.col(f"s{v}") * F.col(f"s{v}")
+
+
+def moment_det_sql(v: str = "x", n: str = "n") -> str:
+    """DuckDB twin of moment_det."""
+    return f"({n} * s{v}{v} - s{v} * s{v})"
+
+
+# ---------------------------------------------------------------------------
+# The per-user smoothing recurrence over the event order: the state
+# starts at init(x₁) and steps state = step(x, *state) per event, in
+# IEEE doubles; every output is a function of the state, micro-rounded
+# in the floor form. Each row depends on the previous OUTPUT, which no
+# SQL window frame expresses: Spark runs a sorted numpy loop per user
+# (applyInPandas, one shuffle on user_id), DuckDB a recursive CTE whose
+# expressions are written in the same IEEE order, so the doubles agree
+# bit for bit. A key whose history outgrows a task decomposes by time
+# shards: the recurrence is affine in its state, so shard partials fold
+# left to right.
+
+
+def smooth(
+    e: DataFrame,
+    init: Callable[..., tuple],
+    step: Callable[..., tuple],
+    out: dict[str, Callable[..., object]],
+) -> DataFrame:
+    """(user_id, event_id, value, out…) rows of the recurrence over the
+    events `e`."""
+    import numpy as np
+    import pandas as pd
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(["ts", "event_id"], na_position="first")
+        xs = pdf["value"].to_numpy(dtype=np.float64)
+        st: list[tuple] = []
+        for i, x in enumerate(xs):
+            st.append(init(x) if i == 0 else step(x, *st[-1]))
+        cols = np.array(st, dtype=np.float64).reshape(len(xs), -1).T
+        res = {c: pdf[c] for c in ("user_id", "event_id", "value")}
+        for name, f in out.items():
+            res[name] = np.floor(f(*cols) * 1e6 + 0.5) / 1e6
+        return pd.DataFrame(res)
+
+    schema = "user_id LONG, event_id LONG, value DOUBLE, " + ", ".join(
+        f"{c} DOUBLE" for c in out
+    )
+    return (
+        e.select("user_id", "event_id", "ts", "value")
+        .groupBy("user_id")
+        .applyInPandas(kernel, schema)
+    )
+
+
+def smooth_sql(state: dict[str, tuple[str, str]], out: dict[str, str]) -> str:
+    """DuckDB twin of smooth over `events`: `state` maps each state
+    column to (its first-row SQL over value, its step SQL over s.value
+    and the previous row's r.<column>), `out` each output to its SQL
+    over the state."""
+    init = ", ".join(f"{a} AS {c}" for c, (a, _) in state.items())
+    step = ", ".join(b for _, b in state.values())
+    outs = ", ".join(
+        f"floor({x} * 1e6 + 0.5) / 1e6 AS {c}" for c, x in out.items()
+    )
+    return f"""
+    WITH RECURSIVE seq AS (
+      SELECT user_id, event_id, value,
+             row_number() OVER ({event_window_sql()}) AS rn
+      FROM events
+    ),
+    r AS (
+      SELECT user_id, event_id, value, rn, {init}
+      FROM seq WHERE rn = 1
+      UNION ALL
+      SELECT s.user_id, s.event_id, s.value, s.rn, {step}
+      FROM seq s JOIN r ON s.user_id = r.user_id AND s.rn = r.rn + 1
+    )
+    SELECT user_id, event_id, value, {outs}
+    FROM r
+    """
+
+
+# ---------------------------------------------------------------------------
+# The MAD cut: a value is an outlier when |v − median(v)| > 3·1.4826·MAD,
+# the 3σ-equivalent cut on the median absolute deviation. Values are
+# exact integers (micros), so both medians interpolate on an exact .5/.25
+# grid, the deviations are exact, and the one threshold multiply is the
+# same IEEE op in both engines. A NULL value is never an outlier: count
+# the flag with count(when(…)) / count(CASE …), which answer 0, not NULL.
+
+MAD_K = 4.4478
+
+
+def mad_cut(df: DataFrame, key: str, *cols: str) -> DataFrame:
+    """`df` plus med_c, dev_c = |c − med_c|, mad_c and the outlier flag
+    out_c (NULL for a NULL value) per column c, the stats per `key` (rows with a NULL key drop). The
+    two exact per-key percentiles ride back as broadcasts: the fact
+    side shuffles on `key` for them and never self-joins."""
+    med = df.groupBy(key).agg(
+        *(F.percentile(c, F.lit(0.5)).alias(f"med_{c}") for c in cols)
+    )
+    d = df.join(F.broadcast(med), key).withColumns(
+        {f"dev_{c}": F.abs(F.col(c) - F.col(f"med_{c}")) for c in cols}
+    )
+    mad = d.groupBy(key).agg(
+        *(F.percentile(f"dev_{c}", F.lit(0.5)).alias(f"mad_{c}") for c in cols)
+    )
+    return d.join(F.broadcast(mad), key).withColumns(
+        {f"out_{c}": F.col(f"dev_{c}") > F.lit(MAD_K) * F.col(f"mad_{c}") for c in cols}
+    )
+
+
+def mad_cut_sql(src: str, key: str, *cols: str) -> str:
+    """DuckDB twin of mad_cut over the CTE `src`: CTEs ending in `mad`."""
+    med = ", ".join(f"quantile_cont({c}, 0.5) AS med_{c}" for c in cols)
+    dev = ", ".join(f"abs({c} - med_{c}) AS dev_{c}" for c in cols)
+    mad = ", ".join(f"quantile_cont(dev_{c}, 0.5) AS mad_{c}" for c in cols)
+    out = ", ".join(f"dev_{c} > {MAD_K} * mad_{c} AS out_{c}" for c in cols)
+    return f"""_med AS (SELECT {key}, {med} FROM {src} GROUP BY 1),
+    _dev AS (SELECT *, {dev} FROM {src} JOIN _med USING ({key})),
+    _mad AS (SELECT {key}, {mad} FROM _dev GROUP BY 1),
+    mad AS (SELECT *, {out} FROM _dev JOIN _mad USING ({key}))"""
 
 
 @register(
@@ -141,66 +404,28 @@ _EWMA_ALPHA = 0.2
 
 @register(
     "q_ts_ewma",
-    oracle=f"""
-    WITH RECURSIVE seq AS (
-      SELECT user_id, event_id, value,
-             row_number() OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-             ) AS rn
-      FROM events
+    oracle=smooth_sql(
+        {
+            "ewma": (
+                "CAST(value AS DOUBLE)",
+                f"{_EWMA_ALPHA} * s.value + {1 - _EWMA_ALPHA} * r.ewma",
+            )
+        },
+        {"ewma": "ewma"},
     ),
-    r AS (
-      SELECT user_id, event_id, value, rn,
-             CAST(value AS DOUBLE) AS ewma
-      FROM seq WHERE rn = 1
-      UNION ALL
-      SELECT s.user_id, s.event_id, s.value, s.rn,
-             {_EWMA_ALPHA} * s.value + {1 - _EWMA_ALPHA} * r.ewma
-      FROM seq s JOIN r ON s.user_id = r.user_id AND s.rn = r.rn + 1
-    )
-    SELECT user_id, event_id, value,
-           floor(ewma * 1e6 + 0.5) / 1e6 AS ewma
-    FROM r
-    """,
 )
 def q_ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user exponential moving average of event value (α=0.2) — the
-    classic sequential-state smoothing operator SQL windows cannot express
-    (each row depends on the previous OUTPUT, not a frame of inputs).
-
-    Kernel: applyInPandas per user, recurrence y_i = αx_i + (1-α)y_{i-1}
-    in IEEE double — the DuckDB oracle replays the identical recurrence as
-    a recursive CTE, so the doubles agree bit-for-bit before the floor-form
-    rounding. Shape at 100 TB: one shuffle on user_id, per-group state is
-    one float; a key whose history exceeds a task decomposes by time-range
-    shards whose partials compose associatively — shard result =
-    (local ewma, (1-α)^len decay factor), folded left-to-right — the same
-    partial-merge discipline as corpus_pack's (lang, shard) split."""
-    import numpy as np
-    import pandas as pd
-
-    e = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", "ts", "value"
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "event_id"])
-        out = np.empty(len(pdf), dtype=np.float64)
-        y = 0.0
-        for i, x in enumerate(pdf["value"].to_numpy(dtype=np.float64)):
-            y = x if i == 0 else _EWMA_ALPHA * x + (1 - _EWMA_ALPHA) * y
-            out[i] = y
-        return pd.DataFrame(
-            {
-                "user_id": pdf["user_id"],
-                "event_id": pdf["event_id"],
-                "value": pdf["value"],
-                "ewma": np.floor(out * 1e6 + 0.5) / 1e6,
-            }
-        )
-
-    return e.groupBy("user_id").applyInPandas(
-        kernel, "user_id LONG, event_id LONG, value DOUBLE, ewma DOUBLE"
+    """Per-user exponential moving average of event value (α=0.2),
+    y_i = αx_i + (1-α)y_{i-1}, y_1 = x_1 — the classic sequential-state
+    smoothing operator SQL windows cannot express (each row depends on
+    the previous OUTPUT, not a frame of inputs). Runs on the `smooth`
+    recurrence; per-group state is one float, and shard partials fold
+    as (local ewma, (1-α)^len decay factor)."""
+    return smooth(
+        load_table(spark, sf_dir, "events"),
+        lambda x: (x,),
+        lambda x, y: (_EWMA_ALPHA * x + (1 - _EWMA_ALPHA) * y,),
+        {"ewma": lambda y: y},
     )
 
 
@@ -213,7 +438,7 @@ _ANOM_Z = 2.5
     oracle=f"""
     WITH scaled AS (
       SELECT user_id, event_id, ts, value,
-             CAST(floor(value * 1e6 + 0.5) AS BIGINT) AS vi
+             {micros_sql('value')} AS vi
       FROM events
     ),
     framed AS (
@@ -222,7 +447,7 @@ _ANOM_Z = 2.5
              sum(vi) OVER w AS s1,
              sum(vi * vi) OVER w AS s2
       FROM scaled
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
+      WINDOW w AS ({event_window_sql()}
                    ROWS BETWEEN {_ANOM_WIN - 1} PRECEDING AND CURRENT ROW)
     ),
     stats AS (
@@ -259,11 +484,7 @@ def q_ts_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     vi = micros("value")
     scaled = e.select("user_id", "event_id", "ts", "value", vi.alias("vi"))
-    w = (
-        W.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-(_ANOM_WIN - 1), 0)
-    )
+    w = event_window().rowsBetween(-(_ANOM_WIN - 1), 0)
     framed = scaled.select(
         "user_id",
         "event_id",
@@ -304,7 +525,7 @@ _BUCKET_US = 6 * 3600 * 1_000_000  # 6-hour resample buckets
     WITH keyed AS (
       SELECT user_id, event_id, value,
              epoch_us(ts) // {_BUCKET_US} AS bucket,
-             CAST(floor(value * 1e6 + 0.5) AS BIGINT) AS vi,
+             {micros_sql('value')} AS vi,
              row_number() OVER (
                PARTITION BY user_id, epoch_us(ts) // {_BUCKET_US}
                ORDER BY ts, event_id) AS rn_a,
@@ -376,17 +597,17 @@ def q_ts_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_join_pit",
-    oracle="""
+    oracle=f"""
     WITH tagged AS (
       SELECT event_id, user_id, ts, event_type, value,
              last_value(CASE WHEN event_type = 'purchase' THEN value END
                         IGNORE NULLS)
-               OVER (PARTITION BY user_id ORDER BY ts, event_id
+               OVER ({event_window_sql()}
                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
                AS last_purchase_value,
              last_value(CASE WHEN event_type = 'view' THEN value END
                         IGNORE NULLS)
-               OVER (PARTITION BY user_id ORDER BY ts, event_id
+               OVER ({event_window_sql()}
                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
                AS last_view_value
       FROM events
@@ -417,11 +638,7 @@ def q_join_pit(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries are SEPARATE features by design, so per-column independence
     is the semantics, not a bug."""
     e = load_table(spark, sf_dir, "events")
-    w = (
-        W.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
+    w = event_window().rowsBetween(W.unboundedPreceding, -1)
 
     def last_prior(ev_type: str):
         feat = F.when(F.col("event_type") == ev_type, F.col("value"))
@@ -443,75 +660,39 @@ def q_join_pit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_ts_mad",
-    oracle="""
+    oracle=f"""
     WITH s AS (
-      SELECT event_type, CAST(floor(value * 1e6 + 0.5) AS BIGINT) AS vi
+      SELECT event_type, {micros_sql('value')} AS vi
       FROM events
     ),
-    m AS (
-      SELECT event_type, quantile_cont(vi, 0.5) AS med
-      FROM s GROUP BY 1
-    ),
-    d AS (
-      SELECT s.event_type, s.vi, m.med, abs(s.vi - m.med) AS dev
-      FROM s JOIN m USING (event_type)
-    ),
-    md AS (
-      SELECT event_type, quantile_cont(dev, 0.5) AS mad
-      FROM d GROUP BY 1
-    )
-    SELECT d.event_type, count(*) AS n,
-           min(d.med) AS med_micros,
-           min(md.mad) AS mad_micros,
-           CAST(sum(CASE WHEN d.dev > 4.4478 * md.mad THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_outliers,
-           round(sum(CASE WHEN d.dev > 4.4478 * md.mad THEN 1 ELSE 0 END)
-                 * 1.0 / count(*), 6) AS outlier_rate
-    FROM d JOIN md USING (event_type)
+    {mad_cut_sql("s", "event_type", "vi")}
+    SELECT event_type, count(*) AS n,
+           min(med_vi) AS med_micros,
+           min(mad_vi) AS mad_micros,
+           count(CASE WHEN out_vi THEN 1 END) AS n_outliers,
+           round(count(CASE WHEN out_vi THEN 1 END) * 1.0 / count(*), 6)
+             AS outlier_rate
+    FROM mad
     GROUP BY 1
     """,
 )
 def q_ts_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust outlier detection per event type: median absolute deviation
-    (MAD) with the standard 3σ-equivalent cut |v − median| > 3·1.4826·MAD
-    — the monitoring primitive that, unlike q_ts_anomaly's z-score, does
-    not let the outliers themselves inflate the threshold.
-
-    Cross-engine determinism: values scale to exact micro-unit BIGINTs
-    first, so both medians interpolate on integers (results land on an
-    exact .5 / .25 grid — no float-order drift), deviations are exact,
-    and the single threshold multiply 4.4478·MAD is one identical IEEE
-    op in both engines. Shape: two grouped exact percentiles with the
-    tiny per-type stats broadcast back — the fact table shuffles on
-    event_type twice and never self-joins. At 100 TB the exact
-    percentile's per-group value map is the deliberate luxury (the
-    oracle replays it exactly); approx_percentile drops into the same
-    slot when 1e-3 quantile error is acceptable."""
+    """Robust outlier detection per event type: the `mad_cut` on
+    micro-unit values — the monitoring primitive that, unlike
+    q_ts_anomaly's z-score, does not let the outliers themselves inflate
+    the threshold. At 100 TB the exact percentile's per-group value map
+    is the deliberate luxury (the oracle replays it exactly);
+    approx_percentile drops into the same slot when 1e-3 quantile error
+    is acceptable."""
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
         micros("value").alias("vi"),
     )
-    med = e.groupBy("event_type").agg(
-        F.percentile("vi", F.lit(0.5)).alias("med")
-    )
-    d = e.join(F.broadcast(med), "event_type").withColumn(
-        "dev", F.abs(F.col("vi") - F.col("med"))
-    )
-    mad = d.groupBy("event_type").agg(
-        F.percentile("dev", F.lit(0.5)).alias("mad")
-    )
-    j = d.join(F.broadcast(mad), "event_type")
-    is_out = F.col("dev") > F.lit(4.4478) * F.col("mad")
-    # count(when), not sum(cast): a group whose every value is NULL has
-    # NULL dev/mad on every row, and sum over all-NULL returns NULL
-    # while the oracle's CASE..ELSE 0 returns 0 — count skips the NULLs
-    # and answers 0 like the oracle (value-identical whenever one
-    # non-NULL value exists; the q_ts_cusum lesson)
-    n_out = F.count(F.when(is_out, F.lit(1)))
-    return j.groupBy("event_type").agg(
+    n_out = F.count(F.when(F.col("out_vi"), 1))
+    return mad_cut(e, "event_type", "vi").groupBy("event_type").agg(
         F.count("*").alias("n"),
-        F.min("med").alias("med_micros"),
-        F.min("mad").alias("mad_micros"),
+        F.min("med_vi").alias("med_micros"),
+        F.min("mad_vi").alias("mad_micros"),
         n_out.alias("n_outliers"),
         F.round(n_out / F.count("*"), 6).alias("outlier_rate"),
     )
@@ -519,10 +700,10 @@ def q_ts_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_ts_cusum",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT event_type, event_id, epoch_us(ts) AS us,
-             CAST(floor(value * 1e6 + 0.5) AS BIGINT) - 60000000 AS d
+             {micros_sql('value')} - 60000000 AS d
       FROM events
     ),
     p AS (
@@ -717,98 +898,54 @@ def q_ts_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _HOLT_ALPHA = 0.5  # level smoothing
 _HOLT_BETA = 0.3  # trend smoothing
+_HOLT_LEVEL = f"{_HOLT_ALPHA} * s.value + {1 - _HOLT_ALPHA} * (r.lvl + r.trd)"
 
 
 @register(
     "q_ts_holt",
-    oracle=f"""
-    WITH RECURSIVE seq AS (
-      SELECT user_id, event_id, value,
-             row_number() OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-             ) AS rn
-      FROM events
+    oracle=smooth_sql(
+        {
+            "lvl": ("CAST(value AS DOUBLE)", _HOLT_LEVEL),
+            "trd": (
+                "CAST(0 AS DOUBLE)",
+                f"{_HOLT_BETA} * (({_HOLT_LEVEL}) - r.lvl)"
+                f" + {1 - _HOLT_BETA} * r.trd",
+            ),
+        },
+        {"level": "lvl", "trend": "trd", "forecast": "(lvl + trd)"},
     ),
-    r AS (
-      SELECT user_id, event_id, value, rn,
-             CAST(value AS DOUBLE) AS lvl, CAST(0 AS DOUBLE) AS trd
-      FROM seq WHERE rn = 1
-      UNION ALL
-      SELECT s.user_id, s.event_id, s.value, s.rn,
-             {_HOLT_ALPHA} * s.value
-               + {1 - _HOLT_ALPHA} * (r.lvl + r.trd),
-             {_HOLT_BETA} * (({_HOLT_ALPHA} * s.value
-                              + {1 - _HOLT_ALPHA} * (r.lvl + r.trd)) - r.lvl)
-               + {1 - _HOLT_BETA} * r.trd
-      FROM seq s JOIN r ON s.user_id = r.user_id AND s.rn = r.rn + 1
-    )
-    SELECT user_id, event_id, value,
-           floor(lvl * 1e6 + 0.5) / 1e6 AS level,
-           floor(trd * 1e6 + 0.5) / 1e6 AS trend,
-           floor((lvl + trd) * 1e6 + 0.5) / 1e6 AS forecast
-    FROM r
-    """,
 )
 def q_ts_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user Holt double exponential smoothing (level α=0.5, trend
     β=0.3, init l₁=x₁, b₁=0) with the one-step-ahead forecast l+b — the
     trend-aware upgrade of q_ts_ewma, and with q_ts_seasonality's
     day-of-week indices the classic decomposition forecaster
-    (deseasonalize → Holt → reseasonalize).
+    (deseasonalize → Holt → reseasonalize). Runs on the `smooth`
+    recurrence with the 2-vector state (level, trend)."""
 
-    Same execution shape as q_ts_ewma: applyInPandas per user, the
-    coupled recurrence in IEEE doubles, replayed bit-for-bit by the
-    DuckDB recursive CTE before floor-form rounding — the expression
-    trees are written identically on both sides so every intermediate
-    double agrees. One shuffle on user_id; over-long keys decompose by
-    time shards whose partials carry (level, trend) forward — the
-    recurrence is linear in its 2-vector state, so shard composition is
-    an affine map, same discipline as the EWMA decay-factor fold."""
-    import numpy as np
-    import pandas as pd
+    # nested, so the Python workers unpickle it by value
+    def step(x: float, l: float, b: float) -> tuple:
+        l_new = _HOLT_ALPHA * x + (1 - _HOLT_ALPHA) * (l + b)
+        return l_new, _HOLT_BETA * (l_new - l) + (1 - _HOLT_BETA) * b
 
-    e = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", "ts", "value"
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "event_id"])
-        xs = pdf["value"].to_numpy(dtype=np.float64)
-        lvl = np.empty(len(pdf), dtype=np.float64)
-        trd = np.empty(len(pdf), dtype=np.float64)
-        l, b = 0.0, 0.0
-        for i, x in enumerate(xs):
-            if i == 0:
-                l, b = x, 0.0
-            else:
-                l_new = _HOLT_ALPHA * x + (1 - _HOLT_ALPHA) * (l + b)
-                b = _HOLT_BETA * (l_new - l) + (1 - _HOLT_BETA) * b
-                l = l_new
-            lvl[i], trd[i] = l, b
-        return pd.DataFrame(
-            {
-                "user_id": pdf["user_id"],
-                "event_id": pdf["event_id"],
-                "value": pdf["value"],
-                "level": np.floor(lvl * 1e6 + 0.5) / 1e6,
-                "trend": np.floor(trd * 1e6 + 0.5) / 1e6,
-                "forecast": np.floor((lvl + trd) * 1e6 + 0.5) / 1e6,
-            }
-        )
-
-    return e.groupBy("user_id").applyInPandas(
-        kernel,
-        "user_id LONG, event_id LONG, value DOUBLE, "
-        "level DOUBLE, trend DOUBLE, forecast DOUBLE",
+    return smooth(
+        load_table(spark, sf_dir, "events"),
+        lambda x: (x, 0.0),
+        step,
+        {
+            "level": lambda l, b: l,
+            "trend": lambda l, b: b,
+            "forecast": lambda l, b: l + b,
+        },
     )
 
 
 @register(
     "q_ts_theilsen",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT event_type, CAST(ts AS DATE) AS day,
-             CAST(floor(value * 1e6 + 0.5) AS BIGINT) AS vi
+             {micros_sql('value')} AS vi
       FROM events WHERE ts IS NOT NULL
     ),
     d AS (
@@ -836,7 +973,7 @@ def q_ts_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
     monitoring pipeline trusts on dirty daily volumes.
 
     Cross-engine determinism: daily revenue is exact micro-unit
-    BIGINTs (q_ts_mad rule); each pairwise slope is ONE identical IEEE
+    BIGINTs (`micros`); each pairwise slope is ONE identical IEEE
     division of exact integers in both engines, and the median
     interpolates those identical doubles with the shared (n-1)·p rule
     (q_winsorize pin) — rounded to 4 dp for the boundary discipline.
@@ -885,10 +1022,10 @@ def q_ts_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_ts_stl_residual",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT event_type, isodow(ts) AS dow,
-             CAST(floor(value * 1e6 + 0.5) AS BIGINT) AS vi
+             {micros_sql('value')} AS vi
       FROM events
     ),
     g AS (
@@ -903,35 +1040,19 @@ def q_ts_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
         ON s.event_type IS NOT DISTINCT FROM g.event_type
        AND s.dow IS NOT DISTINCT FROM g.dow
     ),
-    m AS (
-      SELECT event_type, quantile_cont(vi, 0.5) AS med_v,
-             quantile_cont(r, 0.5) AS med_r
-      FROM w GROUP BY 1
-    ),
-    d AS (
-      SELECT w.event_type, w.vi, w.r, m.med_r,
-             abs(w.vi - m.med_v) AS dev_v, abs(w.r - m.med_r) AS dev_r
-      FROM w JOIN m USING (event_type)
-    ),
-    md AS (
-      SELECT event_type, quantile_cont(dev_v, 0.5) AS mad_v,
-             quantile_cont(dev_r, 0.5) AS mad_r
-      FROM d GROUP BY 1
-    ),
+    {mad_cut_sql("w", "event_type", "vi", "r")},
     agg AS (
-      SELECT d.event_type, count(*) AS n,
-             CAST(sum(CASE WHEN d.dev_v > 4.4478 * md.mad_v
-                           THEN 1 ELSE 0 END) AS BIGINT) AS n_out_raw,
-             CAST(sum(CASE WHEN d.dev_r > 4.4478 * md.mad_r
-                           THEN 1 ELSE 0 END) AS BIGINT) AS n_out_adj,
-             min(d.med_r) AS med_res_micros,
-             min(md.mad_r) AS mad_res_micros
-      FROM d JOIN md USING (event_type)
+      SELECT event_type, count(*) AS n,
+             count(CASE WHEN out_vi THEN 1 END) AS n_out_raw,
+             count(CASE WHEN out_r THEN 1 END) AS n_out_adj,
+             min(med_r) AS med_res_micros,
+             min(mad_r) AS mad_res_micros
+      FROM mad
       GROUP BY 1
     )
     SELECT event_type, n, n_out_raw, n_out_adj,
-           floor(n_out_raw * 1e6 / n + 0.5) / 1e6 AS outlier_rate_raw,
-           floor(n_out_adj * 1e6 / n + 0.5) / 1e6 AS outlier_rate_adj,
+           {ratio6_sql("n_out_raw", "n")} AS outlier_rate_raw,
+           {ratio6_sql("n_out_adj", "n")} AS outlier_rate_adj,
            med_res_micros, mad_res_micros
     FROM agg
     """,
@@ -939,32 +1060,29 @@ def q_ts_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ts_stl_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonal-adjusted robust anomaly detection per event type: remove
     the day-of-week component additively (residual = value − its
-    (type, dow) mean), then apply the MAD cut |r − median(r)| >
-    3·1.4826·MAD(r) on the DESEASONALIZED residual — the alert a
-    monitoring pipeline actually wants (q_ts_mad's raw cut flags every
-    high-traffic Saturday; this one flags what is anomalous FOR a
-    Saturday). Composes q_ts_seasonality's dow profile with q_ts_mad's
-    robust threshold, and reports the raw-cut counts alongside so the
-    two detectors can be compared per type in one pass.
+    (type, dow) mean), then apply the `mad_cut` to the DESEASONALIZED
+    residual — the alert a monitoring pipeline actually wants
+    (q_ts_mad's raw cut flags every high-traffic Saturday; this one
+    flags what is anomalous FOR a Saturday). Composes q_ts_seasonality's
+    dow profile with q_ts_mad's robust threshold, and reports the
+    raw-cut counts alongside so the two detectors can be compared per
+    type in one pass.
 
     Cross-engine determinism: values scale to exact micro-unit BIGINTs;
     the per-(type, dow) mean uses truncating INTEGER division (Spark
     `div` ≡ DuckDB `//`, both toward zero — verified on negatives), so
-    residuals are exact BIGINTs, both medians interpolate on integers
-    (.5/.25 grids), and the threshold multiply 4.4478·MAD is one
-    identical IEEE op per engine. NULL rules: the (type, dow) spine
-    join is NULL-SAFE (eqNullSafe / IS NOT DISTINCT FROM — a NULL ts
-    yields a NULL dow group that must rejoin its own mean, and NULL
-    event_type likewise); an all-NULL group's guarded mean keeps
-    residuals NULL, and count(when)/CASE-ELSE-0 both answer 0 outliers.
+    residuals are exact BIGINTs and the cut stays exact. NULL rules: the
+    (type, dow) spine join is NULL-SAFE (eqNullSafe / IS NOT DISTINCT
+    FROM — a NULL ts yields a NULL dow group that must rejoin its own
+    mean, and NULL event_type likewise); an all-NULL group's guarded
+    mean keeps residuals NULL, which flag 0 outliers.
 
     Shape at 100 TB: the seasonal profile is a ≤ types×7-row aggregate
     broadcast back onto the fact table (deseasonalize is a projection,
-    not a shuffle — the q_ts_seasonality window-free discipline);
-    after that it is q_ts_mad's shape twice-as-wide: two grouped exact
-    percentiles over (vi, r) with tiny stats broadcast back. The fact
-    table shuffles only on event_type for the percentile groups and
-    never self-joins."""
+    not a shuffle — the q_ts_seasonality window-free discipline); after
+    that it is q_ts_mad's shape over (vi, r). The fact table shuffles
+    only on event_type for the percentile groups and never
+    self-joins."""
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
         (F.weekday("ts") + 1).cast("int").alias("dow"),
@@ -984,31 +1102,10 @@ def q_ts_stl_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         e["event_type"].eqNullSafe(F.col("g_type"))
         & e["dow"].eqNullSafe(F.col("g_dow")),
     ).select("event_type", "vi", (F.col("vi") - F.col("dmean")).alias("r"))
-    med = w.groupBy("event_type").agg(
-        F.percentile("vi", F.lit(0.5)).alias("med_v"),
-        F.percentile("r", F.lit(0.5)).alias("med_r"),
-    )
-    d = w.join(F.broadcast(med), "event_type").select(
-        "event_type",
-        "vi",
-        "r",
-        "med_r",
-        F.abs(F.col("vi") - F.col("med_v")).alias("dev_v"),
-        F.abs(F.col("r") - F.col("med_r")).alias("dev_r"),
-    )
-    mad = d.groupBy("event_type").agg(
-        F.percentile("dev_v", F.lit(0.5)).alias("mad_v"),
-        F.percentile("dev_r", F.lit(0.5)).alias("mad_r"),
-    )
-    j = d.join(F.broadcast(mad), "event_type")
-    out_raw = F.col("dev_v") > F.lit(4.4478) * F.col("mad_v")
-    out_adj = F.col("dev_r") > F.lit(4.4478) * F.col("mad_r")
-    n_raw = F.count(F.when(out_raw, F.lit(1)))
-    n_adj = F.count(F.when(out_adj, F.lit(1)))
-    agg = j.groupBy("event_type").agg(
+    agg = mad_cut(w, "event_type", "vi", "r").groupBy("event_type").agg(
         F.count("*").alias("n"),
-        n_raw.alias("n_out_raw"),
-        n_adj.alias("n_out_adj"),
+        F.count(F.when(F.col("out_vi"), 1)).alias("n_out_raw"),
+        F.count(F.when(F.col("out_r"), 1)).alias("n_out_adj"),
         F.min("med_r").alias("med_res_micros"),
         F.min("mad_r").alias("mad_res_micros"),
     )
@@ -1017,20 +1114,24 @@ def q_ts_stl_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "n_out_raw",
         "n_out_adj",
-        (
-            F.floor(F.col("n_out_raw") * 1e6 / F.col("n") + F.lit(0.5)) / 1e6
-        ).alias("outlier_rate_raw"),
-        (
-            F.floor(F.col("n_out_adj") * 1e6 / F.col("n") + F.lit(0.5)) / 1e6
-        ).alias("outlier_rate_adj"),
+        ratio6("n_out_raw", "n").alias("outlier_rate_raw"),
+        ratio6("n_out_adj", "n").alias("outlier_rate_adj"),
         "med_res_micros",
         "mad_res_micros",
     )
 
 
+_VX_SQL = moment_det_sql("x", "n_pairs")
+_VY_SQL = moment_det_sql("y", "n_pairs")
+_XCORR_SQL = ratio6_sql(
+    f"CAST({moment_num_sql('n_pairs')} AS DOUBLE)",
+    f"(sqrt(CAST({_VX_SQL} AS DOUBLE)) * sqrt(CAST({_VY_SQL} AS DOUBLE)))",
+)
+
+
 @register(
     "q_ts_crosscorr",
-    oracle="""
+    oracle=f"""
     WITH d AS (
       SELECT CAST(ts AS DATE) AS day,
              CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
@@ -1047,22 +1148,12 @@ def q_ts_stl_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
       JOIN d d2 ON d2.day = d1.day + CAST(l.lag_days AS INT)
     ),
     m AS (
-      SELECT lag_days,
-             CAST(count(*) AS BIGINT) AS n_pairs,
-             CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-             CAST(sum(x * y) AS BIGINT) AS sxy,
-             CAST(sum(x * x) AS BIGINT) AS sxx,
-             CAST(sum(y * y) AS BIGINT) AS syy
+      SELECT lag_days, {frame_moments_sql("x", "y", n="n_pairs", yy=True)}
       FROM paired GROUP BY 1
     )
     SELECT lag_days, n_pairs,
-           CASE WHEN (n_pairs * sxx - sx * sx) > 0
-                 AND (n_pairs * syy - sy * sy) > 0
-                THEN floor(CAST(n_pairs * sxy - sx * sy AS DOUBLE) * 1e6
-                           / (sqrt(CAST(n_pairs * sxx - sx * sx AS DOUBLE))
-                              * sqrt(CAST(n_pairs * syy - sy * sy
-                                          AS DOUBLE)))
-                           + 0.5) / 1e6
+           CASE WHEN {_VX_SQL} > 0 AND {_VY_SQL} > 0
+                THEN {_XCORR_SQL}
            END AS xcorr
     FROM m
     """,
@@ -1077,12 +1168,10 @@ def q_ts_crosscorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation pass over events (no second scan, no union), so a day
     appears iff it has any event, identically in both engines.
 
-    Cross-engine determinism — the q_graph_assortativity discipline:
-    daily counts are exact BIGINTs, so the per-lag moment sums (n, Σx,
-    Σy, Σxy, Σx², Σy²) are exact integers whatever the aggregation
-    order; Pearson r is then formed from those integers with IEEE
-    sqrt/mult/div only (all correctly rounded, engine-identical) and
-    rounded via the floor(x·1e6+0.5)/1e6 form. A constant series
+    Cross-engine determinism: daily counts are exact BIGINTs, so the
+    per-lag `frame_moments` are exact integers; Pearson r is then formed
+    from them with IEEE sqrt/mult/div only (all correctly rounded,
+    engine-identical) and rounded by `ratio6`. A constant series
     (variance 0 on either side — weekends with no purchases fixture-
     degenerate) answers NULL through the CASE guard instead of ANSI
     Spark's DIVIDE_BY_ZERO.
@@ -1117,39 +1206,29 @@ def q_ts_crosscorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("lag_days", F.col("d1.x").alias("x"), F.col("d2.y").alias("y"))
     )
     m = paired.groupBy("lag_days").agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
+        *frame_moments("x", "y", n="n_pairs", yy=True)
     )
-    vx = F.col("n_pairs") * F.col("sxx") - F.col("sx") * F.col("sx")
-    vy = F.col("n_pairs") * F.col("syy") - F.col("sy") * F.col("sy")
-    num = F.col("n_pairs") * F.col("sxy") - F.col("sx") * F.col("sy")
+    vx, vy = moment_det("x", "n_pairs"), moment_det("y", "n_pairs")
     return m.select(
         "lag_days",
         "n_pairs",
         F.when(
             (vx > 0) & (vy > 0),
-            F.floor(
-                num.cast("double")
-                * 1e6
-                / (F.sqrt(vx.cast("double")) * F.sqrt(vy.cast("double")))
-                + F.lit(0.5)
-            )
-            / 1e6,
+            ratio6(
+                moment_num("n_pairs").cast("double"),
+                F.sqrt(vx.cast("double")) * F.sqrt(vy.cast("double")),
+            ),
         ).alias("xcorr"),
     )
 
 
 @register(
     "q_ts_changepoint",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
              CAST(coalesce(
-               sum(CAST(floor(value * 1e6 + 0.5) AS BIGINT)), 0) AS BIGINT)
+               sum({micros_sql('value')}), 0) AS BIGINT)
                AS s
       FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
     ),

@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from spring_and_kafka_spark.exec_utils import cents
+from spring_and_kafka_spark.exec_utils import cents, cents_sql
 from spring_and_kafka_spark.registry import register
 from spring_and_kafka_spark.sources.tables import load_table
 
@@ -935,7 +935,7 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_tpch_q11",
-    oracle="""
+    oracle=f"""
     WITH val AS (
       -- lineitem-derived stock value (no partsupp availability): a
       -- part's value from a region's suppliers is their shipped
@@ -945,7 +945,7 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
       -- association order across engines and makes the threshold a
       -- knife edge
       SELECT l_partkey,
-             CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT))
+             CAST(sum({cents_sql('l_extendedprice')})
                   AS BIGINT) AS raw_cents
       FROM lineitem
       JOIN supplier ON l_suppkey = s_suppkey

@@ -14,8 +14,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from spring_and_kafka_spark.exec_utils import cents as ex_cents
+from spring_and_kafka_spark.exec_utils import cents_sql, micros_sql, ts_micros
 from spring_and_kafka_spark.exec_utils import micros as ex_micros
-from spring_and_kafka_spark.exec_utils import ts_micros
+from spring_and_kafka_spark.operators.timeseries import (
+    event_window,
+    event_window_sql,
+    frame_moments,
+    frame_moments_sql,
+    moment_det,
+    moment_det_sql,
+    moment_num,
+    moment_num_sql,
+)
 from spring_and_kafka_spark.registry import register
 from spring_and_kafka_spark.sources.tables import load_table
 
@@ -48,21 +58,21 @@ def q_win_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_win_lag",
-    oracle="""
+    oracle=f"""
     SELECT event_id, user_id,
            lag(value)  OVER w AS prev_value,
            lead(value) OVER w AS next_value,
-           first_value(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
+           first_value(value) OVER ({event_window_sql()}
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS first_value
     FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+    WINDOW w AS ({event_window_sql()})
     """,
 )
 def q_win_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Analytic family: lag/lead/first_value along each user's timeline.
     No arithmetic → raw stored doubles compare exactly."""
     e = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    w = event_window()
     wf = w.rowsBetween(W.unboundedPreceding, W.currentRow)
     return e.select(
         "event_id",
@@ -220,10 +230,10 @@ def q_win_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_win_running_distinct",
-    oracle="""
+    oracle=f"""
     SELECT user_id, event_id,
            CAST(count(DISTINCT event_type) OVER (
-             PARTITION BY user_id ORDER BY ts, event_id
+             {event_window_sql()}
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
            ) AS INTEGER) AS n_types_seen
     FROM events
@@ -242,11 +252,7 @@ def q_win_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     here; small by construction for categorical columns — for unbounded
     value domains use the approx_count_distinct sketch instead)."""
     e = load_table(spark, sf_dir, "events")
-    w = (
-        W.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
+    w = event_window().rowsBetween(W.unboundedPreceding, 0)
     return e.select(
         "user_id",
         "event_id",
@@ -292,27 +298,24 @@ def q_win_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_win_trend",
-    oracle="""
+    oracle=f"""
     WITH base AS (
       SELECT user_id, event_id,
              (epoch_us(ts) - epoch_us(TIMESTAMP '2024-01-01 00:00:00'))
                // 1000000 AS x,
-             CAST(floor(value * 100 + 0.5) AS BIGINT) AS y
+             {cents_sql('value')} AS y
       FROM events
     ),
     frames AS (
-      SELECT user_id, event_id,
-             count(*) OVER w AS n,
-             sum(x) OVER w AS sx, sum(y) OVER w AS sy,
-             sum(x * y) OVER w AS sxy, sum(x * x) OVER w AS sxx
+      SELECT user_id, event_id, {frame_moments_sql("x", "y", "w")}
       FROM base
       WINDOW w AS (PARTITION BY user_id ORDER BY x, event_id
                    ROWS BETWEEN 7 PRECEDING AND CURRENT ROW)
     )
     SELECT user_id, event_id,
-           round((n * sxy - sx * sy)
-                 / (100.0 * (n * sxx - sx * sx)), 6) + 0.0 AS slope
-    FROM frames WHERE n = 8 AND n * sxx - sx * sx <> 0
+           round({moment_num_sql()} / (100.0 * {moment_det_sql()}), 6) + 0.0
+             AS slope
+    FROM frames WHERE n = 8 AND {moment_det_sql()} <> 0
     """,
 )
 def q_win_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -320,15 +323,13 @@ def q_win_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     each user's trailing 8 events — the streaming trend-detection
     operator (alert when a metric's local slope flips sign).
 
-    The slope is assembled from four integer frame sums (Σx, Σy, Σxy,
-    Σx²) — frame aggregation order differs between engines, so summing
-    DOUBLES here would flake the hash; integers commute exactly. x is
+    The slope is the closed form over the integer `frame_moments`. x is
     seconds since the fixture epoch (rebasing keeps n·Σx² below 2^63;
     raw epoch-micros squared would overflow), y is cents; the closed
-    form (nΣxy−ΣxΣy)/(nΣx²−(Σx)²) is shift-invariant so the rebase
-    does not change the slope. One user_id shuffle, all four sums share
-    one window frame. Degenerate frames (all events in the same second)
-    are excluded rather than divided by zero."""
+    form is shift-invariant so the rebase does not change the slope.
+    One user_id shuffle, all sums share one window frame. Degenerate
+    frames (all events in the same second) are excluded rather than
+    divided by zero."""
     e = load_table(spark, sf_dir, "events")
     x = (
         (ts_micros("ts") - F.lit(1704067200000000)) / F.lit(1000000)
@@ -342,40 +343,24 @@ def q_win_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("x", "event_id")
         .rowsBetween(-7, W.currentRow)
     )
-    frames = base.select(
-        "user_id",
-        "event_id",
-        F.count(F.lit(1)).over(w).alias("n"),
-        F.sum("x").over(w).alias("sx"),
-        F.sum("y").over(w).alias("sy"),
-        F.sum(F.col("x") * F.col("y")).over(w).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).over(w).alias("sxx"),
-    )
-    det = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
+    frames = base.select("user_id", "event_id", *frame_moments("x", "y", w))
+    det = moment_det()
     return frames.filter((F.col("n") == 8) & (det != 0)).select(
         "user_id",
         "event_id",
         # + 0.0 collapses IEEE -0.0 to 0.0 (semistructured.py convention)
-        (
-            F.round(
-                (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
-                / (100.0 * det),
-                6,
-            )
-            + F.lit(0.0)
-        ).alias("slope"),
+        (F.round(moment_num() / (100.0 * det), 6) + F.lit(0.0)).alias("slope"),
     )
 
 
 @register(
     "q_win_streak",
-    oracle="""
+    oracle=f"""
     WITH numbered AS (
       SELECT user_id, event_type,
-             row_number() OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS rn,
-             row_number() OVER (PARTITION BY user_id, event_type
-                                ORDER BY ts, event_id) AS rn_t
+             row_number() OVER ({event_window_sql()}) AS rn,
+             row_number() OVER ({event_window_sql("user_id, event_type")})
+               AS rn_t
       FROM events
     ),
     islands AS (
@@ -410,8 +395,8 @@ def q_win_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
     window passes and two groupBys, all partitioned on user_id — one
     shuffle."""
     e = load_table(spark, sf_dir, "events")
-    wu = W.partitionBy("user_id").orderBy("ts", "event_id")
-    wt = W.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
+    wu = event_window()
+    wt = event_window("user_id", "event_type")
     numbered = e.select(
         "user_id",
         "event_type",
@@ -442,27 +427,20 @@ _RSLOPE_WIN = 20
     oracle=f"""
     WITH seq AS (
       SELECT user_id, event_id, value,
-             CAST(floor(value * 1e6 + 0.5) AS BIGINT) AS vi,
-             CAST(row_number() OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-             ) AS BIGINT) AS rn
+             {micros_sql('value')} AS vi,
+             CAST(row_number() OVER ({event_window_sql()}) AS BIGINT) AS rn
       FROM events
     ),
     framed AS (
-      SELECT user_id, event_id, value, rn,
-             count(*) OVER w AS n,
-             sum(rn) OVER w AS sx,
-             sum(rn * rn) OVER w AS sxx,
-             sum(vi) OVER w AS sy,
-             sum(rn * vi) OVER w AS sxy
+      SELECT user_id, event_id, value, {frame_moments_sql("rn", "vi", "w")}
       FROM seq
       WINDOW w AS (PARTITION BY user_id ORDER BY rn
                    ROWS BETWEEN {_RSLOPE_WIN - 1} PRECEDING AND CURRENT ROW)
     )
     SELECT user_id, event_id, value,
            CASE WHEN n >= 3
-             THEN floor((n * sxy - sx * sy) * 1.0
-                        / (n * sxx - sx * sx) / 1e6 * 1e4 + 0.5) / 1e4 + 0.0
+             THEN floor({moment_num_sql()} * 1.0
+                        / {moment_det_sql()} / 1e6 * 1e4 + 0.5) / 1e4 + 0.0
            END AS roll_slope
     FROM framed
     """,
@@ -475,21 +453,16 @@ def q_win_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     step-change view). NULL until the frame has 3 points.
 
     Exactness discipline: value scaled to integer micro-units and the
-    regressor is the integer row index, so every frame sum (Σx, Σx²,
-    Σy, Σxy) is an exact BIGINT windowed aggregate — the closed-form
-    slope then divides identical integers in both engines (q_ts_anomaly's
-    pattern extended with the cross-moment). One shuffle on user_id,
-    running frame sums, no per-row recompute of the frame."""
+    regressor is the integer row index, so the slope is the closed form
+    over exact integer `frame_moments`. One shuffle on user_id, running
+    frame sums, no per-row recompute of the frame."""
     e = load_table(spark, sf_dir, "events")
     seq = e.select(
         "user_id",
         "event_id",
         "value",
         ex_micros("value").alias("vi"),
-        F.row_number()
-        .over(W.partitionBy("user_id").orderBy("ts", "event_id"))
-        .cast("long")
-        .alias("rn"),
+        F.row_number().over(event_window()).cast("long").alias("rn"),
     )
     w = (
         W.partitionBy("user_id")
@@ -497,17 +470,9 @@ def q_win_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(-(_RSLOPE_WIN - 1), 0)
     )
     framed = seq.select(
-        "user_id",
-        "event_id",
-        "value",
-        F.count("*").over(w).alias("n"),
-        F.sum("rn").over(w).alias("sx"),
-        F.sum(F.col("rn") * F.col("rn")).over(w).alias("sxx"),
-        F.sum("vi").over(w).alias("sy"),
-        F.sum(F.col("rn") * F.col("vi")).over(w).alias("sxy"),
+        "user_id", "event_id", "value", *frame_moments("rn", "vi", w)
     )
-    num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
-    den = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
+    num, den = moment_num(), moment_det()
     return framed.select(
         "user_id",
         "event_id",
@@ -524,10 +489,10 @@ def q_win_rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_win_rolling_median",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT event_type, CAST(ts AS DATE) AS day,
-             CAST(floor(value * 1e6 + 0.5) AS BIGINT) AS vi
+             {micros_sql('value')} AS vi
       FROM events
     ),
     d AS (
@@ -549,7 +514,7 @@ def q_win_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     an exact percentile evaluated over a moving ROWS frame.
 
     Cross-engine determinism: daily revenue scales to exact micro-unit
-    BIGINTs BEFORE the window (the q_ts_mad rule), so the median
+    BIGINTs BEFORE the window (`micros`), so the median
     interpolates on integers and lands on an exact .5 grid — no float-
     order drift inside the frame. Spark `percentile` and DuckDB
     `quantile_cont` share the (n-1)·p interpolation rule (the

@@ -7,8 +7,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import Window as W
 
 from spring_and_kafka_spark.exec_utils import ts_micros
+from spring_and_kafka_spark.operators.timeseries import session_ids, session_ids_sql
 from spring_and_kafka_spark.registry import register
 from spring_and_kafka_spark.sources.tables import load_table
 from spring_and_kafka_spark.streaming.windows import tumbling_counts
@@ -61,58 +63,23 @@ def q_rollup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_stream_session",
-    oracle="""
-    WITH marked AS (
-      SELECT user_id, ts,
-             CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                  OR epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id ORDER BY ts))
-                       > 1800000000
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events
-    ),
-    sessions AS (
-      SELECT user_id, ts,
-             sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-      FROM marked
-    )
-    SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
+    oracle=f"""
+    WITH sessions AS ({session_ids_sql("PARTITION BY user_id ORDER BY ts", "user_id, ts")})
+    SELECT user_id, sess_id AS session_id,
            min(ts) AS session_start, count(*) AS n_events
     FROM sessions GROUP BY 1, 2
     """,
 )
 def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sessionization in batch: gaps > 30 min start a new session (classic
-    lag + running-sum pattern; the streaming twin is session_window —
-    compared rows-only in streaming tests since window ids differ)."""
-    from pyspark.sql import Window as W
-
+    """Sessionization in batch: the `session_ids` of each user's events
+    in ts order (the streaming twin is session_window — compared
+    rows-only in streaming tests since window ids differ)."""
     e = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts")
-    marked = e.select(
-        "user_id",
-        "ts",
-        F.when(
-            F.lag("ts").over(w).isNull()
-            | (
-                ts_micros("ts") - ts_micros(F.lag("ts").over(w))
-                > 30 * 60 * 1_000_000
-            ),
-            1,
-        )
-        .otherwise(0)
-        .alias("new_session"),
-    )
-    sessions = marked.select(
-        "user_id",
-        "ts",
-        F.sum("new_session")
-        .over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
-        .cast("long")
-        .alias("session_id"),
-    )
-    return sessions.groupBy("user_id", "session_id").agg(
-        F.min("ts").alias("session_start"), F.count("*").alias("n_events")
+    return (
+        session_ids(e, w, "user_id", "ts")
+        .groupBy("user_id", F.col("sess_id").alias("session_id"))
+        .agg(F.min("ts").alias("session_start"), F.count("*").alias("n_events"))
     )
 
 
@@ -162,8 +129,6 @@ def q_stream_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back), and the high-water mark before each row =
     greatest(bucket offset, local exclusive max). No single-partition
     window ever sees the event stream."""
-    from pyspark.sql import Window as W
-
     e = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",

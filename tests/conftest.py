@@ -168,6 +168,21 @@ def interp_median(vals):
     return vs[lo] + (vs[hi] - vs[lo]) * f
 
 
+def assert_same_rows(scols, srows, ocols, orows):
+    """The driver's row check: the same column names, the same row count
+    and the same order-insensitive multiset of normalized values
+    (`tools.selfcheck.row_multiset`), columns matched by name."""
+    from tools.selfcheck import row_multiset
+
+    assert sorted(scols) == sorted(ocols)
+    assert len(srows) == len(orows)
+
+    def by_name(cols):
+        return sorted(range(len(cols)), key=lambda i: cols[i])
+
+    assert row_multiset(srows, by_name(scols)) == row_multiset(orows, by_name(ocols))
+
+
 def drain(writer):
     """Run a ``DataStreamWriter`` to completion with
     ``trigger(availableNow=True)``: start it, wait until it ends,

@@ -14,7 +14,7 @@ from spring_and_kafka_spark.llm.dedup import (
     q_dedup_simhash,
 )
 
-from .conftest import SF_CORRECT, SF_SMOKE
+from .conftest import SF_CORRECT, SF_SMOKE, assert_same_rows
 
 
 def planted_pairs(rows, a="a_id", b="b_id"):
@@ -340,15 +340,6 @@ def test_substring_planted_repeated_passages(spark, tmp_path):
         assert got[k]["longest_run"] == 1
 
 
-def _multiset(rows, cols):
-    from tools.selfcheck import normalize
-
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(
-        (tuple(normalize(r[i]) for i in order) for r in rows), key=str
-    )
-
-
 def test_hot_keys_cap_boundary(spark):
     """A key holding exactly `cap` rows is not hot (the anti-join keeps
     its rows); one holding cap + 1 is hot and reports its row count —
@@ -438,8 +429,8 @@ def test_shingle_overlap_matches_its_ov_twin(spark, duck):
     orows, ocols = res.fetchall(), [d[0] for d in res.description]
     srows = df.collect()
     assert df.columns == ocols == ["a_id", "b_id", "c", "na", "nb"]
-    assert srows and len(srows) == len(orows)
-    assert _multiset(srows, df.columns) == _multiset(orows, ocols)
+    assert srows
+    assert_same_rows(df.columns, srows, ocols, orows)
 
 
 def test_containment_matches_its_oracle(spark, duck):
@@ -453,9 +444,8 @@ def test_containment_matches_its_oracle(spark, duck):
     res = duck.execute(spec.oracle)
     orows, ocols = res.fetchall(), [d[0] for d in res.description]
     srows = df.collect()
-    assert sorted(df.columns) == sorted(ocols)
-    assert srows and len(srows) == len(orows)
+    assert srows
     # both directions present: the planted copy is contained in its
     # original, and the original nearly in its copy
     assert any(r["a_id"] > r["b_id"] for r in srows)
-    assert _multiset(srows, df.columns) == _multiset(orows, ocols)
+    assert_same_rows(df.columns, srows, ocols, orows)

@@ -19,8 +19,15 @@ import duckdb
 
 from spring_and_kafka_spark import registry
 
-from .conftest import EVENTS, LINEITEM, ORDERS, SF_SMOKE, lineitem, staged
-from .test_oracle_parity import _multiset
+from .conftest import (
+    EVENTS,
+    LINEITEM,
+    ORDERS,
+    SF_SMOKE,
+    assert_same_rows,
+    lineitem,
+    staged,
+)
 
 import pytest
 
@@ -49,10 +56,7 @@ def assert_parity(spark, name, sf_dir, tables):
     srows = sdf.collect()
     res = con.execute(spec.oracle)
     ocols = [d[0] for d in res.description]
-    orows = res.fetchall()
-    assert sorted(sdf.columns) == sorted(ocols)
-    assert len(srows) == len(orows)
-    assert _multiset(srows, sdf.columns) == _multiset(orows, ocols)
+    assert_same_rows(sdf.columns, srows, ocols, res.fetchall())
     return {c: [r[i] for r in srows] for i, c in enumerate(sdf.columns)}
 
 

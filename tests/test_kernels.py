@@ -4,19 +4,26 @@ is checked against a locally rebuilt reference of the form it replaced,
 on fixture data plus NULL-bearing micro frames, so a later edit to
 either side cannot silently diverge them. (The oracle hash sweeps cover
 the composed queries; these cover the extracted builders, including
-paths the fixtures only lightly exercise.) Each text-rule kernel is
-likewise pinned against its DuckDB twin on degenerate documents.
+paths the fixtures only lightly exercise.) Each text-rule and
+event-sequence kernel is likewise pinned against its DuckDB twin on
+degenerate documents and events.
 """
 
 from __future__ import annotations
+
+import datetime as dt
 
 import duckdb
 import pytest
 from pyspark.sql import functions as F
 
 from spring_and_kafka_spark.exec_utils import (
+    cents,
+    cents_sql,
     materialize,
     message_edges,
+    micros,
+    micros_sql,
     min_step,
     spread,
     sym_edges,
@@ -32,11 +39,11 @@ from spring_and_kafka_spark.llm.dedup import (
     shingles,
 )
 from spring_and_kafka_spark.llm import text
+from spring_and_kafka_spark.operators import timeseries as tsk
 from spring_and_kafka_spark.operators.graph import _co_order_pairs
 from spring_and_kafka_spark.sources.tables import load_table
-from tools.selfcheck import row_multiset
 
-from .conftest import SF_SMOKE, staged
+from .conftest import EVENTS, SF_SMOKE, TS0, assert_same_rows, staged
 
 
 def _rows(df):
@@ -448,6 +455,16 @@ def test_graph_jaccard_grouped_wedges_match_self_join_reference(spark):
     assert _rows(q_graph_jaccard(spark, SF_SMOKE)) == _rows(old)
 
 
+def _duck(d, table):
+    """A DuckDB connection with a view of the staged `table` in `d`."""
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW {table} AS SELECT * FROM "
+        f"read_parquet('{d}/{table}.parquet/*.parquet')"
+    )
+    return con
+
+
 # Degenerate docs for the text rules: NULL text, '', one token, n-1 = 2
 # tokens, doubled and trailing spaces, upper case, and docs longer than
 # one 8-token segment.
@@ -502,15 +519,145 @@ def test_text_kernel_matches_its_duckdb_twin(spark, case):
     with staged(spark, documents=(_DEGENERATE_DOCS, "doc_id long, text string")) as d:
         df, sql = case(load_table(spark, d, "documents"))
         srows = df.collect()
-        con = duckdb.connect()
-        con.execute(
-            "CREATE VIEW documents AS SELECT * FROM "
-            f"read_parquet('{d}/documents.parquet/*.parquet')"
-        )
-        res = con.execute(sql)
+        res = _duck(d, "documents").execute(sql)
         ocols = [c[0] for c in res.description]
         orows = res.fetchall()
-    assert sorted(df.columns) == sorted(ocols)
-    order = sorted(range(len(ocols)), key=lambda i: ocols[i])
-    sorder = sorted(range(len(df.columns)), key=lambda i: df.columns[i])
-    assert srows and row_multiset(srows, sorder) == row_multiset(orows, order)
+    assert srows
+    assert_same_rows(df.columns, srows, ocols, orows)
+
+
+def _events_for_twins():
+    """Degenerate events for the event-sequence rules: user 1 has a NULL
+    ts with a NULL value, an equal-ts tie, a gap of exactly 30 min (no
+    break) and one of 30 min + 1 µs (a break); user 2 has one event;
+    user 3 is a constant series (variance 0, MAD 0)."""
+    us = lambda n: dt.timedelta(microseconds=n)  # noqa: E731
+    t2 = TS0 + us(1_800_000_000)
+    t3 = t2 + us(1_800_000_001)
+    rows = [
+        (1, TS0, 1, "view", 1.5),
+        (2, TS0, 1, "click", 2.25),
+        (3, t2, 1, "view", -4.0),
+        (4, t3, 1, "purchase", 8.125),
+        (5, None, 1, "view", None),
+        (6, t3 + us(10_000_000), 1, "click", None),
+        (7, t3 + us(20_000_000), 1, "view", 3.0),
+        (8, TS0, 2, "view", 7.0),
+    ] + [(10 + i, TS0 + us(60_000_000 * i), 3, "view", 3.0) for i in range(5)]
+    return rows, EVENTS
+
+
+def _event_twin_cases():
+    """(kernel frame, twin SQL) per event-sequence rule over `events`."""
+    ew_sql = f"({tsk.event_window_sql()})"
+
+    def event_order(e):
+        ew = tsk.event_window()
+        df = e.select(
+            "user_id",
+            "event_id",
+            F.row_number().over(ew).alias("rn"),
+            F.lag("value").over(ew).alias("prev"),
+        )
+        sql = (
+            f"SELECT user_id, event_id, row_number() OVER {ew_sql} AS rn, "
+            f"lag(value) OVER {ew_sql} AS prev FROM events"
+        )
+        return df, sql
+
+    def session_ids(e):
+        df = tsk.session_ids(e, tsk.event_window(), "user_id", "event_id")
+        return df, tsk.session_ids_sql(tsk.event_window_sql(), "user_id, event_id")
+
+    def frame_moments(e):
+        frame = tsk.event_window().rowsBetween(-2, 0)
+        base = e.select(
+            "user_id", "event_id", "ts", F.col("event_id").alias("x"),
+            micros("value").alias("y"),
+        )
+        df = base.select(
+            "event_id", *tsk.frame_moments("x", "y", frame, yy=True)
+        ).select(
+            "*",
+            tsk.moment_num().alias("num"),
+            tsk.moment_det("x").alias("det_x"),
+            tsk.moment_det("y").alias("det_y"),
+        )
+        sql_frame = f"({tsk.event_window_sql()} ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)"
+        sql = f"""
+        SELECT *, {tsk.moment_num_sql()} AS num, {tsk.moment_det_sql("x")} AS det_x,
+               {tsk.moment_det_sql("y")} AS det_y
+        FROM (
+          SELECT event_id, {tsk.frame_moments_sql("x", "y", sql_frame, yy=True)}
+          FROM (SELECT *, event_id AS x, {micros_sql("value")} AS y FROM events)
+        )"""
+        return df, sql
+
+    def smooth(e):
+        df = tsk.smooth(
+            e,
+            lambda x: (x, 0.0),
+            lambda x, m, d: (0.5 * x + 0.5 * m, x - m),
+            {"m": lambda m, d: m, "d": lambda m, d: m - d},
+        )
+        sql = tsk.smooth_sql(
+            {
+                "m": ("CAST(value AS DOUBLE)", "0.5 * s.value + 0.5 * r.m"),
+                "d": ("CAST(0 AS DOUBLE)", "s.value - r.m"),
+            },
+            {"m": "m", "d": "(m - d)"},
+        )
+        return df, sql
+
+    def mad_cut(e):
+        df = tsk.mad_cut(
+            e.select("user_id", micros("value").alias("vi")), "user_id", "vi"
+        )
+        sql = f"""
+        WITH s AS (SELECT user_id, {micros_sql("value")} AS vi FROM events),
+        {tsk.mad_cut_sql("s", "user_id", "vi")}
+        SELECT * FROM mad"""
+        return df, sql
+
+    def micros_cents(e):
+        df = e.select("event_id", micros("value").alias("m"), cents("value").alias("c"))
+        sql = (
+            f"SELECT event_id, {micros_sql('value')} AS m, "
+            f"{cents_sql('value')} AS c FROM events"
+        )
+        return df, sql
+
+    return [event_order, session_ids, frame_moments, smooth, mad_cut, micros_cents]
+
+
+@pytest.mark.parametrize("case", _event_twin_cases(), ids=lambda f: f.__name__)
+def test_event_kernel_matches_its_duckdb_twin(spark, case):
+    """Each event-sequence kernel and its DuckDB twin return the same
+    row multiset on degenerate events, so a query composed from the
+    pair cannot drift between engines on them."""
+    with staged(spark, events=_events_for_twins()) as d:
+        df, sql = case(load_table(spark, d, "events"))
+        srows = df.collect()
+        res = _duck(d, "events").execute(sql)
+        ocols = [c[0] for c in res.description]
+        orows = res.fetchall()
+    assert srows
+    assert_same_rows(df.columns, srows, ocols, orows)
+
+
+@pytest.mark.parametrize("name", ["q_text_chunk", "q_text_repetition"])
+def test_text_query_drops_null_text(spark, name):
+    """NULL text has no tokens, so it has no chunk and no repetition
+    ratio: neither engine emits a row for it (the payload rule)."""
+    from spring_and_kafka_spark import registry
+
+    spec = registry.all_specs()[name]
+    docs = [(0, None), (1, "a b a b c")]
+    with staged(spark, documents=(docs, "doc_id long, text string")) as d:
+        sdf = spec.fn(spark, d)
+        srows = sdf.collect()
+        res = _duck(d, "documents").execute(spec.oracle)
+        ocols = [c[0] for c in res.description]
+        orows = res.fetchall()
+    assert {r["doc_id"] for r in srows} == {1}
+    assert_same_rows(sdf.columns, srows, ocols, orows)

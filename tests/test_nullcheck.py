@@ -14,7 +14,7 @@ import pytest
 
 from spring_and_kafka_spark import registry
 
-from .test_oracle_parity import _multiset
+from .conftest import assert_same_rows
 
 SPECS = registry.all_specs()
 
@@ -60,7 +60,4 @@ def test_null_fixture_parity(name, spark, nulled):
     srows = sdf.collect()
     res = con.execute(spec.oracle)
     ocols = [c[0] for c in res.description]
-    orows = res.fetchall()
-    assert sorted(sdf.columns) == sorted(ocols)
-    assert len(srows) == len(orows)
-    assert _multiset(srows, sdf.columns) == _multiset(orows, ocols)
+    assert_same_rows(sdf.columns, srows, ocols, res.fetchall())

@@ -5,13 +5,11 @@ tier; tools/selfcheck.py runs the same at sf0.01, the driver's scale)."""
 
 from __future__ import annotations
 
-import math
-
 import pytest
 
 from spring_and_kafka_spark import registry
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, assert_same_rows
 
 # r18 (VERDICT r17 item 1): this sweep battery exceeds the driver's
 # pytest-verify budget (full suite 37m; driver cut off at ~95%). It is
@@ -22,29 +20,6 @@ from .conftest import SF_SMOKE
 pytestmark = pytest.mark.slow
 
 SPECS = registry.all_specs()
-
-
-def _norm(v):
-    if v is None:
-        return None
-    if isinstance(v, float):
-        # float64 round-trip width — a 1-ulp cross-engine divergence
-        # must fail HERE, not first at the driver's bitwise hash
-        # (tools/selfcheck.py uses the same width; VERDICT r6 item 2)
-        return "NaN" if math.isnan(v) else f"{v:.17g}"
-    if isinstance(v, (list, tuple)):
-        return tuple(_norm(x) for x in v)
-    if hasattr(v, "isoformat"):
-        return v.isoformat()
-    return v
-
-
-def _multiset(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(
-        (tuple(_norm(r[i]) for i in order) for r in rows),
-        key=lambda t: tuple(str(x) for x in t),
-    )
 
 
 # Queries allowed to combine round() with a power-of-ten literal
@@ -205,10 +180,7 @@ def test_query_matches_oracle(name, spark, duck):
         return
     res = duck.execute(spec.oracle)
     ocols = [d[0] for d in res.description]
-    orows = res.fetchall()
-    assert sorted(sdf.columns) == sorted(ocols)
-    assert len(srows) == len(orows)
-    assert _multiset(srows, sdf.columns) == _multiset(orows, ocols)
+    assert_same_rows(sdf.columns, srows, ocols, res.fetchall())
 
 
 # The q_compaction_plan oracle as it stood r5-r7: the measures were

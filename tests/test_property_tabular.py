@@ -2222,10 +2222,8 @@ def test_seq_markov_session_matches_python_replay(spark, evs):
     (ts, event_id)-sorted stream applying the same 30-minute break:
     a transition is kept iff the current row is NOT a session start
     and prev_type is not NULL (the q_seq_markov boundary trade)."""
-    from spring_and_kafka_spark.operators.analytics import (
-        _MARKOV_SESSION_GAP_US,
-        q_seq_markov_session,
-    )
+    from spring_and_kafka_spark.operators.analytics import q_seq_markov_session
+    from spring_and_kafka_spark.operators.timeseries import SESSION_GAP_US
 
     rows = [
         (i, TS0 + dt.timedelta(microseconds=us), u, typ, 1.0)
@@ -2239,7 +2237,7 @@ def test_seq_markov_session_matches_python_replay(spark, evs):
         seq.sort(key=lambda r: (r[0], r[1]))
         for (pts, _, prev), (cts, _, curr) in zip(seq, seq[1:]):
             gap_us = (cts - pts) // dt.timedelta(microseconds=1)
-            if gap_us > _MARKOV_SESSION_GAP_US:
+            if gap_us > SESSION_GAP_US:
                 continue  # current row starts a new session
             if prev is not None:
                 trans[(prev, curr)] += 1

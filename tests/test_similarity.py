@@ -14,16 +14,8 @@ from spring_and_kafka_spark.llm.similarity import (
     q_sim_knn_all,
     q_sim_topk,
 )
-from tools.selfcheck import normalize
 
-from .conftest import SF_SMOKE
-
-
-def _multiset(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(
-        (tuple(normalize(r[i]) for i in order) for r in rows), key=str
-    )
+from .conftest import SF_SMOKE, assert_same_rows
 
 
 def _duck_rows(sf_dir, sql):
@@ -115,8 +107,8 @@ def test_knn_all_zero_norm_vector_keeps_its_neighbors(spark, tmp_path):
     sdf = spec.fn(spark, str(tmp_path))
     srows = sdf.collect()
     orows, ocols = _duck_rows(str(tmp_path), spec.oracle)
-    assert len(srows) == len(orows) == 3 * len(ids)
-    assert _multiset(srows, sdf.columns) == _multiset(orows, ocols)
+    assert len(srows) == 3 * len(ids)
+    assert_same_rows(sdf.columns, srows, ocols, orows)
     own = sorted(
         (r["rn"], r["nid"], r["cos_sim"]) for r in srows if r["qid"] == 5
     )
@@ -166,6 +158,5 @@ def test_kernel_matches_its_duckdb_twin(spark, case):
     df, sql = case(spark)
     srows = df.collect()
     orows, ocols = _duck_rows(SF_SMOKE, sql)
-    assert sorted(df.columns) == sorted(ocols)
-    assert srows and len(srows) == len(orows)
-    assert _multiset(srows, df.columns) == _multiset(orows, ocols)
+    assert srows
+    assert_same_rows(df.columns, srows, ocols, orows)

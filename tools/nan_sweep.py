@@ -28,88 +28,43 @@ sweep's (i+3j)%7 pattern so the two batteries compose):
 from __future__ import annotations
 
 import sys
-import tempfile
 from pathlib import Path
-
-import pyarrow as pa
-import pyarrow.parquet as pq
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from spring_and_kafka_spark.sources.tables import (  # noqa: E402
     DOUBLE_COLS,
-    TABLES,
     VECTOR_COLS,
 )
-
-SRC = "/root/testdata/sf0.001"
+from tools.selfcheck import rewrite_fixture, sweep_main  # noqa: E402
 
 NAN = float("nan")
 INF = float("inf")
 
 
-def build_nan_dir(dst: str) -> None:
-    for t in TABLES:
-        tbl = pq.read_table(f"{SRC}/{t}.parquet")
-        n = tbl.num_rows
-        cols = []
-        for j, name in enumerate(tbl.column_names):
-            col = tbl.column(name).combine_chunks()
-            if name in DOUBLE_COLS.get(t, ()):
-                vals = col.to_pylist()
-                for i in range(n):
-                    m = (i + 5 * j) % 11
-                    if m == 0:
-                        vals[i] = NAN
-                    elif m == 1:
-                        vals[i] = INF
-                    elif m == 2:
-                        vals[i] = -INF
-                col = pa.array(vals, type=col.type)
-            elif name in VECTOR_COLS.get(t, ()):
-                vals = col.to_pylist()
-                for i in range(n):
-                    # empty (but non-NULL) lists would make the index
-                    # below divide by zero — skip them like NULLs
-                    if vals[i] is None or not vals[i]:
-                        continue
-                    if i % 13 == 0:
-                        v = list(vals[i])
-                        v[i % len(v)] = NAN
-                        vals[i] = v
-                    elif i % 13 == 1:
-                        v = list(vals[i])
-                        v[(i + 7) % len(v)] = INF
-                        vals[i] = v
-                col = pa.array(vals, type=col.type)
-            cols.append(col)
-        out = pa.table(cols, schema=tbl.schema)
-        pq.write_table(out, f"{dst}/{t}.parquet")
-
-
-def main() -> int:
-    args = sys.argv[1:]
-    flags: list[str] = []
-    queries: list[str] = []
-    i = 0
-    while i < len(args):
-        if args[i] == "--json":
-            flags += args[i : i + 2]
-            i += 2
-        elif args[i] == "--vanilla":
-            flags.append(args[i])
-            i += 1
+def _non_finite(t: str, name: str, j: int, vals: list) -> list | None:
+    if name in DOUBLE_COLS.get(t, ()):
+        pick = {0: NAN, 1: INF, 2: -INF}
+        return [pick.get((i + 5 * j) % 11, v) for i, v in enumerate(vals)]
+    if name not in VECTOR_COLS.get(t, ()):
+        return None
+    for i, v in enumerate(vals):
+        # empty (but non-NULL) lists would make the index below divide
+        # by zero — skip them like NULLs
+        if not v or i % 13 > 1:
+            continue
+        v = list(v)
+        if i % 13 == 0:
+            v[i % len(v)] = NAN
         else:
-            queries.append(args[i])
-            i += 1
-    dst = tempfile.mkdtemp(prefix="nansweep-")
-    build_nan_dir(dst)
-    print(f"non-finite fixture at {dst}")
-    from tools import selfcheck
+            v[(i + 7) % len(v)] = INF
+        vals[i] = v
+    return vals
 
-    sys.argv = ["selfcheck.py", "--contract-views", *flags, dst, *queries]
-    return selfcheck.main()
+
+def build_nan_dir(dst: str) -> None:
+    rewrite_fixture(dst, _non_finite)
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(sweep_main(build_nan_dir, "nan", "--contract-views"))

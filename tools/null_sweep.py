@@ -28,17 +28,11 @@ Injection policy (deterministic, seed-free):
 from __future__ import annotations
 
 import sys
-import tempfile
 from pathlib import Path
-
-import pyarrow as pa
-import pyarrow.parquet as pq
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from spring_and_kafka_spark.sources.tables import TABLES  # noqa: E402
-
-SRC = "/root/testdata/sf0.001"
+from tools.selfcheck import rewrite_fixture, sweep_main  # noqa: E402
 
 # Columns that receive NULLs, per table. Everything NOT listed is an
 # identity / ordering / tie-break key and stays dense (see module doc).
@@ -63,52 +57,15 @@ NULLABLE = {
 }
 
 
+def _nulled(t: str, name: str, j: int, vals: list) -> list | None:
+    if name not in NULLABLE.get(t, ()):
+        return None
+    return [None if (i + 3 * j) % 7 == 0 else v for i, v in enumerate(vals)]
+
+
 def build_nulled_dir(dst: str) -> None:
-    for t in TABLES:
-        tbl = pq.read_table(f"{SRC}/{t}.parquet")
-        n = tbl.num_rows
-        cols = []
-        for j, name in enumerate(tbl.column_names):
-            col = tbl.column(name).combine_chunks()
-            if name in NULLABLE.get(t, ()):
-                # pylist round-trip: type-agnostic (covers the
-                # list<float> embedding column), exact-schema rebuild,
-                # and sf0.001 is small enough that it costs nothing
-                vals = col.to_pylist()
-                for i in range(n):
-                    if (i + 3 * j) % 7 == 0:
-                        vals[i] = None
-                col = pa.array(vals, type=col.type)
-            cols.append(col)
-        out = pa.table(cols, schema=tbl.schema)
-        pq.write_table(out, f"{dst}/{t}.parquet")
-
-
-def main() -> int:
-    args = sys.argv[1:]
-    flags: list[str] = []
-    queries: list[str] = []
-    i = 0
-    while i < len(args):
-        if args[i] == "--json":
-            flags += args[i : i + 2]
-            i += 2
-        elif args[i] == "--vanilla":
-            flags.append(args[i])
-            i += 1
-        else:
-            queries.append(args[i])
-            i += 1
-    dst = tempfile.mkdtemp(prefix="nullsweep-")
-    build_nulled_dir(dst)
-    print(f"nulled fixture at {dst}")
-    # reuse the full selfcheck machinery (value hash + type gate + --json);
-    # selfcheck's CLI is [flags] sf_dir [query ...]
-    from tools import selfcheck
-
-    sys.argv = ["selfcheck.py", *flags, dst, *queries]
-    return selfcheck.main()
+    rewrite_fixture(dst, _nulled)
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(sweep_main(build_nulled_dir, "null"))

@@ -21,10 +21,14 @@ from __future__ import annotations
 
 import math
 import sys
+import tempfile
 import time
+from collections.abc import Callable
 from pathlib import Path
 
 import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
@@ -88,6 +92,54 @@ def _contract_view_sql(sf_dir: str, t: str) -> str:
     return (
         f"CREATE VIEW {t} AS SELECT {exprs[0]} FROM '{sf_dir}/{t}.parquet'"
     )
+
+
+SMOKE_DIR = "/root/testdata/sf0.001"
+
+
+def rewrite_fixture(
+    dst: str, rewrite: Callable[[str, str, int, list], list | None]
+) -> None:
+    """Write every table of the sf0.001 fixture to `dst`, each column's
+    values passed through ``rewrite(table, column, position, values)``,
+    which returns the new values or None to keep the column (the
+    injection sweeps' fixture builder)."""
+    for t in TABLES:
+        tbl = pq.read_table(f"{SMOKE_DIR}/{t}.parquet")
+        cols = []
+        for j, name in enumerate(tbl.column_names):
+            col = tbl.column(name).combine_chunks()
+            # pylist round-trip: type-agnostic (covers the list<float>
+            # embedding column), exact-schema rebuild, and sf0.001 is
+            # small enough that it costs nothing
+            vals = rewrite(t, name, j, col.to_pylist())
+            cols.append(col if vals is None else pa.array(vals, type=col.type))
+        pq.write_table(pa.table(cols, schema=tbl.schema), f"{dst}/{t}.parquet")
+
+
+def sweep_main(build: Callable[[str], None], name: str, *flags: str) -> int:
+    """The injection sweeps' CLI, ``[--json out.json] [--vanilla]
+    [query ...]``: build a fixture into a fresh temp dir with `build`,
+    then run this selfcheck over it (`flags` go first)."""
+    args = sys.argv[1:]
+    passed: list[str] = []
+    queries: list[str] = []
+    i = 0
+    while i < len(args):
+        if args[i] == "--json":
+            passed += args[i : i + 2]
+            i += 2
+        elif args[i] == "--vanilla":
+            passed.append(args[i])
+            i += 1
+        else:
+            queries.append(args[i])
+            i += 1
+    dst = tempfile.mkdtemp(prefix=f"{name}sweep-")
+    build(dst)
+    print(f"{name} fixture at {dst}")
+    sys.argv = ["selfcheck.py", *flags, *passed, dst, *queries]
+    return main()
 
 
 def main() -> int:
