@@ -319,57 +319,72 @@ def q_mv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows) and the delta scan touches only changed keys — at 100 TB that
     is the difference between re-aggregating the table nightly and
     aggregating the day's changelog."""
-    o = load_table(spark, sf_dir, "orders")
+    base, changelog = mv_base_and_changelog(load_table(spark, sf_dir, "orders"))
+    return mv_readout(base, mv_fold(changelog)).orderBy("month_id")
+
+
+def mv_base_and_changelog(orders: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(base view, CDC changelog) of q_mv_incremental over ``orders``:
+    the base is the monthly (month_id, n_orders, revenue_cents) view of
+    snapshot A; changelog rows (month_id, d_orders, d_cents) retract
+    deletes (-1, -price), carry the repriced updates' cent difference
+    (0, Δ) and add inserts (+1, +price)."""
     month_id = (F.year("o_orderdate") * 12 + F.month("o_orderdate")).cast(
         "long"
-    )
+    ).alias("month_id")
+    price, key = F.col("o_totalprice"), F.col("o_orderkey")
 
-    # the standing MV over snapshot A
-    base = o.groupBy(month_id.alias("month_id")).agg(
+    def rows(cond, d_orders, d_cents):
+        return orders.filter(cond).select(
+            month_id, F.lit(d_orders).alias("d_orders"), d_cents.alias("d_cents")
+        )
+
+    base = orders.groupBy(month_id).agg(
         F.count("*").alias("n_orders"),
-        F.sum(cents(F.col("o_totalprice"))).alias("revenue_cents"),
+        F.sum(cents(price)).alias("revenue_cents"),
+    )
+    changelog = (
+        rows(key % _MV_DEL == 0, -1, -cents(price))
+        .unionByName(
+            rows(
+                (key % _MV_DEL != 0) & (key % _MV_UPD == 0),
+                0,
+                cents(price * 1.1) - cents(price),
+            )
+        )
+        .unionByName(rows(key % _MV_INS == 0, 1, cents(price)))
+    )
+    return base, changelog
+
+
+def mv_fold(changelog: DataFrame) -> DataFrame:
+    """(month_id, n_orders, revenue_cents): a changelog's partial delta,
+    one row per touched month — the map-side combine done early, so
+    state is bounded by group cardinality, not changelog volume. The
+    same shape as the base view, so compaction (folding partials into
+    a new base) is mv_readout written back."""
+    return changelog.groupBy("month_id").agg(
+        F.sum("d_orders").alias("n_orders"),
+        F.sum("d_cents").alias("revenue_cents"),
     )
 
-    # CDC changelog rows: (month_id, d_orders, d_cents)
-    key = F.col("o_orderkey")
-    deletes = o.filter(key % _MV_DEL == 0).select(
-        month_id.alias("month_id"),
-        F.lit(-1).alias("d_orders"),
-        (-cents(F.col("o_totalprice"))).alias("d_cents"),
-    )
-    updates = o.filter((key % _MV_DEL != 0) & (key % _MV_UPD == 0)).select(
-        month_id.alias("month_id"),
-        F.lit(0).alias("d_orders"),
-        (
-            cents(F.col("o_totalprice") * 1.1) - cents(F.col("o_totalprice"))
-        ).alias("d_cents"),
-    )
-    inserts = o.filter(key % _MV_INS == 0).select(
-        month_id.alias("month_id"),
-        F.lit(1).alias("d_orders"),
-        cents(F.col("o_totalprice")).alias("d_cents"),
-    )
-    delta = (
-        deletes.unionByName(updates)
-        .unionByName(inserts)
+
+def mv_readout(base: DataFrame, deltas: DataFrame) -> DataFrame:
+    """Current view = base ⊕ any union of mv_fold partials: union, one
+    sum per month, groups retracted to zero dropped — in the batch
+    query and its streaming twin (streaming/mv.py). Sums commute, so
+    batch boundaries cannot change the merge."""
+    cols = ("month_id", "n_orders", "revenue_cents")
+    return (
+        base.select(*cols)
+        .unionByName(deltas.select(*cols))
         .groupBy("month_id")
         .agg(
-            F.sum("d_orders").alias("d_orders"),
-            F.sum("d_cents").alias("d_cents"),
+            F.sum("n_orders").alias("n_orders"),
+            F.sum("revenue_cents").alias("revenue_cents"),
         )
+        .filter(F.col("n_orders") > 0)
     )
-
-    merged = base.join(delta, "month_id", "full_outer").select(
-        "month_id",
-        (
-            F.coalesce("n_orders", F.lit(0)) + F.coalesce("d_orders", F.lit(0))
-        ).alias("n_orders"),
-        (
-            F.coalesce("revenue_cents", F.lit(0))
-            + F.coalesce("d_cents", F.lit(0))
-        ).alias("revenue_cents"),
-    )
-    return merged.filter(F.col("n_orders") > 0).orderBy("month_id")
 
 
 # Compaction scenario constants.

@@ -593,7 +593,9 @@ def q_dq_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
     stuck upstream; a null-rate step is a schema drift; both fire
     before any downstream query sees the partition).
 
-    One map-side-combined groupBy on the day key (the natural ingest
+    freshness_readout over the events, the readout its streaming twin
+    (streaming/freshness.py) runs over its partials: one
+    map-side-combined groupBy on the day key (the natural ingest
     partition — at scale this aggregate reads per-partition footer
     stats, not the fact rows, if the table is date-partitioned), then a
     lag window over the day-count table, which is days-sized, not
@@ -614,22 +616,58 @@ def q_dq_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-build boundary divergence that once broke q_compaction_plan's
     oracle hash, never precision."""
     e = load_table(spark, sf_dir, "events")
-    d = e.groupBy(F.to_date("ts").alias("day")).agg(
+    # each event goes to the readout as its own one-row partial:
+    # freshness_fold's (day, user_id) pre-aggregation adds a hash pass
+    # to the plan Spark already builds for the count-distinct, and
+    # measured ~20% slower at sf0.1 (noop save, 4-vCPU VM)
+    return freshness_readout(
+        e.select(
+            F.to_date("ts").alias("day"),
+            "user_id",
+            F.lit(1).alias("n_rows"),
+            F.col("value").isNull().cast("long").alias("n_null_value"),
+        )
+    )
+
+
+def freshness_fold(events: DataFrame) -> DataFrame:
+    """(day, user_id, n_rows, n_null_value): q_dq_freshness's partial,
+    one row per (day, user_id) with its row and NULL-value counts — the
+    one table each micro-batch of its streaming twin
+    (streaming/freshness.py) folds to. Row and NULL counts
+    are counters keyed by a prefix of the presence key, so they ride on
+    the presence rows; distinct users are not a counter and derive on
+    read from the presence keys."""
+    return events.groupBy(F.to_date("ts").alias("day"), "user_id").agg(
         F.count("*").alias("n_rows"),
+        (F.count("*") - F.count("value")).alias("n_null_value"),
+    )
+
+
+def freshness_readout(day_users: DataFrame) -> DataFrame:
+    """q_dq_freshness's answer from any union of freshness_fold
+    partials: per day the summed counters and the count-distinct of the
+    presence keys (which skips a NULL user_id, whose rows still count),
+    then the derived columns, never merged — ratios don't merge, their
+    numerators and denominators do. The null rate is the exact
+    1.0 - count(value)/count(*) chain, count(value) = n_rows - n_null
+    as exact integers (n_null/n_rows could differ in the last bit). A
+    NULL day (NULL ts) is its own group."""
+    d = day_users.groupBy("day").agg(
+        F.sum("n_rows").alias("n_rows"),
         F.countDistinct("user_id").alias("n_users"),
-        (1.0 - F.count("value") * 1.0 / F.count("*")).alias(
-            "null_value_rate"
-        ),
+        F.sum("n_null_value").alias("n_null"),
     )
     w = Window.orderBy(F.col("day").asc_nulls_first())
+    non_null = F.col("n_rows") - F.col("n_null")
     return d.select(
         "day",
         "n_rows",
         "n_users",
-        "null_value_rate",
-        (F.col("n_rows") * 1.0 / F.lag("n_rows").over(w)).alias(
-            "dod_ratio"
+        (F.lit(1.0) - non_null * 1.0 / F.col("n_rows")).alias(
+            "null_value_rate"
         ),
+        (F.col("n_rows") * 1.0 / F.lag("n_rows").over(w)).alias("dod_ratio"),
     )
 
 

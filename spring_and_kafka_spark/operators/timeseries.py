@@ -215,7 +215,8 @@ def smooth_sql(state: dict[str, tuple[str, str]], out: dict[str, str]) -> str:
     """DuckDB twin of smooth over `events`: `state` maps each state
     column to (its first-row SQL over value, its step SQL over s.value
     and the previous row's r.<column>), `out` each output to its SQL
-    over the state."""
+    over the state. The NULL user is one key, as in smooth's groupBy,
+    so the recursion steps along it with IS NOT DISTINCT FROM."""
     init = ", ".join(f"{a} AS {c}" for c, (a, _) in state.items())
     step = ", ".join(b for _, b in state.values())
     outs = ", ".join(
@@ -232,7 +233,8 @@ def smooth_sql(state: dict[str, tuple[str, str]], out: dict[str, str]) -> str:
       FROM seq WHERE rn = 1
       UNION ALL
       SELECT s.user_id, s.event_id, s.value, s.rn, {step}
-      FROM seq s JOIN r ON s.user_id = r.user_id AND s.rn = r.rn + 1
+      FROM seq s JOIN r
+        ON s.user_id IS NOT DISTINCT FROM r.user_id AND s.rn = r.rn + 1
     )
     SELECT user_id, event_id, value, {outs}
     FROM r

@@ -64,7 +64,9 @@ def q_rollup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_stream_session",
     oracle=f"""
-    WITH sessions AS ({session_ids_sql("PARTITION BY user_id ORDER BY ts", "user_id, ts")})
+    WITH sessions AS ({session_ids_sql(
+        "PARTITION BY user_id ORDER BY ts NULLS FIRST", "user_id, ts"
+    )})
     SELECT user_id, sess_id AS session_id,
            min(ts) AS session_start, count(*) AS n_events
     FROM sessions GROUP BY 1, 2
@@ -72,8 +74,9 @@ def q_rollup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization in batch: the `session_ids` of each user's events
-    in ts order (the streaming twin is session_window — compared
-    rows-only in streaming tests since window ids differ)."""
+    in ts order, a NULL ts first as in Spark's ascending default (the
+    streaming twin is session_window — compared rows-only in streaming
+    tests since window ids differ)."""
     e = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts")
     return (

@@ -20,7 +20,10 @@ from pyspark.sql import functions as F
 from spring_and_kafka_spark.llm.dedup import incremental_near_matches, perturbed
 from spring_and_kafka_spark.llm.text import fingerprint_expr, quality_gate
 from spring_and_kafka_spark.sources.tables import load_table, parquet_schema
-from spring_and_kafka_spark.streaming.sinks import foreach_batch_sink
+from spring_and_kafka_spark.streaming.sinks import (
+    foreach_batch_sink,
+    run_available_now,
+)
 
 
 def stage_document_chunks(
@@ -76,7 +79,8 @@ def admission_stream(
     """Ingest-time near-dup admission: each micro-batch of arriving docs
     is decided against the EXISTING corpus with the same asymmetric LSH
     matcher as batch q_dedup_incremental (old×new bucket join only), and
-    the per-doc decisions append to a parquet sink.
+    the per-doc decisions append to a parquet sink. Returns the drained
+    query.
 
     foreachBatch is the right shape here — the matcher is a multi-stage
     batch pipeline (shingle → signature → bucket join → verify), not an
@@ -101,8 +105,6 @@ def admission_stream(
             batch.select(F.col("doc_id").alias("new_id")), "new_id", "left_semi"
         ).write.mode("append").parquet(decisions_dir)
 
-    return (
+    return run_available_now(
         foreach_batch_sink(new_docs, on_batch, decisions_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
     )

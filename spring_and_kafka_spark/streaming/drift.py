@@ -40,7 +40,7 @@ from spring_and_kafka_spark.streaming.sinks import (
     read_partial_state,
 )
 
-_SUBTABLES = (("counts", "source STRING, tok STRING, c BIGINT"),)
+_TABLES = {"counts": ("source STRING, tok STRING, c BIGINT", token_counts)}
 
 
 def token_delta_stream(docs: DataFrame, state_dir: str):
@@ -49,11 +49,7 @@ def token_delta_stream(docs: DataFrame, state_dir: str):
     the batch query's own (llm.text.token_counts) — divergent
     normalization is the classic way stream and batch drift monitors
     silently disagree."""
-    return partial_state_stream(
-        docs,
-        state_dir,
-        {"counts": token_counts},
-    )
+    return partial_state_stream(docs, state_dir, _TABLES)
 
 
 def maintained_counts(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -63,7 +59,7 @@ def maintained_counts(spark: SparkSession, state_dir: str) -> DataFrame:
     via streaming.sinks.read_partial_state instead of merging partial
     counts. Compaction = this query written back as the new single
     partial."""
-    (counts,) = read_partial_state(spark, state_dir, _SUBTABLES, "drift")
+    (counts,) = read_partial_state(spark, state_dir, _TABLES, "drift")
     partials = counts.select("source", "tok", "c")
     return partials.groupBy("source", "tok").agg(F.sum("c").alias("c"))
 

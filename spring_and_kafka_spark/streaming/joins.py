@@ -58,23 +58,17 @@ def stream_static_enrich(
 
 
 def purchases_with_recent_clicks(events_stream: DataFrame) -> DataFrame:
-    """Demo composition: purchases joined to same-user clicks from the
-    preceding 30 minutes (both sides carved from one event stream)."""
+    """Demo composition of stream_stream_join: purchases joined to
+    same-user clicks from the preceding 30 minutes under 1-hour
+    watermarks (both sides carved from one event stream)."""
     purchases = events_stream.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("p_id"),
         F.col("user_id"),
         F.col("ts").alias("p_ts"),
     )
     clicks = events_stream.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("c_id"),
-        F.col("user_id").alias("c_user_id"),
-        F.col("ts").alias("c_ts"),
+        F.col("event_id").alias("c_id"), "user_id", F.col("ts").alias("c_ts")
     )
-    lw = _ltz(purchases, "p_ts").withWatermark("p_ts", "1 hour")
-    rw = _ltz(clicks, "c_ts").withWatermark("c_ts", "1 hour")
-    cond = (
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("c_ts") <= F.col("p_ts"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTES"))
-    )
-    return lw.join(rw, cond, "inner").select("p_id", "user_id", "p_ts", "c_id", "c_ts")
+    return stream_stream_join(
+        purchases, clicks, "user_id", "p_ts", "c_ts"
+    ).select("p_id", "l.user_id", "p_ts", "c_id", "c_ts")

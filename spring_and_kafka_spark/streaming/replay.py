@@ -17,6 +17,7 @@ from spring_and_kafka_spark.sources.tables import (
     load_table,
     parquet_schema,
 )
+from spring_and_kafka_spark.streaming.sinks import run_available_now
 
 
 def stage_event_chunks(
@@ -52,16 +53,13 @@ def read_event_stream(
 
 
 def drain_to_memory(stream_df: DataFrame, table_name: str, spark: SparkSession) -> DataFrame:
-    """Run the stream to completion (availableNow) into an in-memory sink
-    in append mode and return the result as a batch DataFrame. An
+    """Drain the stream (run_available_now) into an in-memory sink in
+    append mode and return the result as a batch DataFrame. An
     aggregate without a watermark cannot append, so Spark's analyzer
     rejects it at start."""
-    query = (
+    run_available_now(
         stream_df.writeStream.format("memory")
         .queryName(table_name)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    query.awaitTermination()
     return spark.table(table_name)

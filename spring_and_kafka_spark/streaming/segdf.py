@@ -48,7 +48,14 @@ from spring_and_kafka_spark.streaming.sinks import (
     read_partial_state,
 )
 
-_SCHEMA = "seg STRING, doc_id BIGINT, n BIGINT"
+_TABLES = {
+    "seg_docs": (
+        "seg STRING, doc_id BIGINT, n BIGINT",
+        lambda seg: seg.groupBy("seg", "doc_id").agg(
+            F.count(F.lit(1)).alias("n")
+        ),
+    )
+}
 
 
 def seg_df_delta_stream(docs: DataFrame, state_dir: str):
@@ -59,11 +66,7 @@ def seg_df_delta_stream(docs: DataFrame, state_dir: str):
     return partial_state_stream(
         docs,
         state_dir,
-        {
-            "seg_docs": lambda seg: seg.groupBy("seg", "doc_id").agg(
-                F.count(F.lit(1)).alias("n")
-            )
-        },
+        _TABLES,
         prep=lambda b: boilerplate_segments(
             b.filter(F.col("doc_id").isNotNull())
         ).select("seg", "doc_id"),
@@ -80,9 +83,7 @@ def maintained_seg_df_hist(spark: SparkSession, state_dir: str) -> DataFrame:
     doc) pair re-seen in a later batch would count twice in df.
     Instance counts merge by sum. Torn state raises (module
     docstring)."""
-    (parts,) = read_partial_state(
-        spark, state_dir, (("seg_docs", _SCHEMA),), "seg-df"
-    )
+    (parts,) = read_partial_state(spark, state_dir, _TABLES, "seg-df")
     f = (
         parts.select("seg", "doc_id", "n")
         .groupBy("seg")

@@ -49,18 +49,33 @@ def parquet_sink(stream_df: DataFrame, path: str, checkpoint_dir: str):
     )
 
 
+def run_available_now(writer):
+    """Drain ``writer``, a ``DataStreamWriter``, with
+    ``trigger(availableNow=True)``: start it, wait until it ends and
+    return the terminated query, whose ``recentProgress`` and ``runId``
+    the caller may read. A failed query re-raises its exception
+    (``StreamingQueryException``) from the wait. The package's one
+    availableNow trigger: every drain goes through here."""
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
+
+
 def partial_state_stream(
     stream_df: DataFrame,
     state_dir: str,
-    tables: dict[str, Callable[[DataFrame], DataFrame]],
+    tables: dict[str, tuple[str, Callable[[DataFrame], DataFrame]]],
     prep: Callable[[DataFrame], DataFrame] | None = None,
 ):
-    """Drain ``stream_df`` (availableNow) into a merge-on-read
-    maintainer's partial state and return the started query.
+    """Drain ``stream_df`` (:func:`run_available_now`) into a
+    merge-on-read maintainer's partial state and return the terminated
+    query.
 
-    Each micro-batch is cut once by ``prep`` (the whole batch when
-    None), then every ``tables`` fold, in dict order, writes its partial
-    to ``{state_dir}/{table}/batch_id={batch_id}`` with overwrite. That
+    ``tables`` maps each partial table's name to its ``(schema, fold)``
+    spec, the same mapping :func:`read_partial_state` reads back. Each
+    micro-batch is cut once by ``prep`` (the whole batch when None),
+    then every fold, in dict order, writes its partial to
+    ``{state_dir}/{table}/batch_id={batch_id}`` with overwrite. That
     is the exactly-once half of the contract: foreachBatch is
     at-least-once, so a replayed batch rewrites its own partitions
     instead of double-counting, and :func:`read_partial_state` reads the
@@ -77,7 +92,7 @@ def partial_state_stream(
         if shared:
             cut.persist()
         try:
-            for name, fold in tables.items():
+            for name, (_, fold) in tables.items():
                 fold(cut).write.mode("overwrite").parquet(
                     f"{state_dir}/{name}/batch_id={batch_id}"
                 )
@@ -85,10 +100,8 @@ def partial_state_stream(
             if shared:
                 cut.unpersist()
 
-    return (
+    return run_available_now(
         foreach_batch_sink(stream_df, on_batch, state_dir + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
     )
 
 
@@ -132,19 +145,21 @@ def _markers_written(spark) -> bool:
     )
 
 
-def read_partial_state(spark, state_dir: str, subtables, what: str):
+def read_partial_state(spark, state_dir: str, tables, what: str):
     """Read the partial state :func:`partial_state_stream` wrote,
     RAISING on torn state instead of silently absorbing it (independent
     silent reads of sibling state are the bug shape: one try around two
     reads once discarded a good table when its sibling was missing).
 
-    ``subtables`` is a list of (name, schema) pairs; returns a tuple of
-    DataFrames in the same order (all empty when NO table exists — the
-    stream simply never ran). A visible top-level entry of ``state_dir``
-    that is none of the tables raises too: it is state of an older
-    layout (a flat ``batch_id=N``, or a table a maintainer no longer
-    writes), which would otherwise read as "never ran". Three tear
-    levels are checked:
+    ``tables`` is the maintainer's ``{name: (schema, fold)}`` mapping
+    that :func:`partial_state_stream` took (the folds go unused here,
+    so a bare schema per name, or (name, schema) pairs, read too);
+    returns a tuple of DataFrames in its order (all empty when NO table
+    exists — the stream simply never ran). A visible top-level entry of
+    ``state_dir`` that is none of the tables raises too: it is state of
+    an older layout (a flat ``batch_id=N``, or a table a maintainer no
+    longer writes), which would otherwise read as "never ran". Three
+    tear levels are checked:
 
     1. a top-level table dir missing while a sibling exists — a crash
        between a batch's first and later writes on the FIRST batch;
@@ -165,7 +180,11 @@ def read_partial_state(spark, state_dir: str, subtables, what: str):
 
     All checks are driver-side Hadoop FS metadata listings (works on
     object stores), never a Spark job."""
-    names = [sub for sub, _ in subtables]
+    schemas = {
+        name: spec if isinstance(spec, str) else spec[0]
+        for name, spec in dict(tables).items()
+    }
+    names = list(schemas)
     entries = _names(spark, state_dir)
     stray = sorted(
         e for e in entries if not e.startswith(("_", ".")) and e not in names
@@ -185,13 +204,11 @@ def read_partial_state(spark, state_dir: str, subtables, what: str):
             "writes; replay the last batch or clear the state dir"
         )
     if not present:
-        return tuple(
-            spark.createDataFrame([], sch) for _, sch in subtables
-        )
+        return tuple(spark.createDataFrame([], sch) for sch in schemas.values())
 
     require_success = _markers_written(spark)
     sets = {}
-    for sub, _ in subtables:
+    for sub in names:
         done, torn = _batch_partitions(spark, f"{state_dir}/{sub}")
         if torn and require_success:
             raise RuntimeError(
@@ -218,7 +235,7 @@ def read_partial_state(spark, state_dir: str, subtables, what: str):
             )
         sets[sub] = done if require_success else (done | torn)
     union = set().union(*sets.values())
-    for sub, _ in subtables:
+    for sub in names:
         missing = union - sets[sub]
         if missing:
             b = sorted(missing)[0]
@@ -231,5 +248,5 @@ def read_partial_state(spark, state_dir: str, subtables, what: str):
             )
     return tuple(
         spark.read.schema(sch).parquet(f"{state_dir}/{sub}")
-        for sub, sch in subtables
+        for sub, sch in schemas.items()
     )

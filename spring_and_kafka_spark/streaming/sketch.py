@@ -27,15 +27,18 @@ from spring_and_kafka_spark.streaming.sinks import (
     read_partial_state,
 )
 
-_SUBTABLES = (("hist", "digits BIGINT, first2 BIGINT, bcnt BIGINT"),)
+_TABLES = {
+    "hist": (
+        "digits BIGINT, first2 BIGINT, bcnt BIGINT",
+        lambda b: decimal_histogram(to_cents(b)),
+    )
+}
 
 
 def sketch_stream(prices: DataFrame, state_dir: str):
     """Fold a stream of rows with an ``l_extendedprice`` column into
     per-batch partial histograms under ``state_dir``."""
-    return partial_state_stream(
-        prices, state_dir, {"hist": lambda b: decimal_histogram(to_cents(b))}
-    )
+    return partial_state_stream(prices, state_dir, _TABLES)
 
 
 def merged_quantiles(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -48,7 +51,7 @@ def merged_quantiles(spark: SparkSession, state_dir: str) -> DataFrame:
     partial histogram."""
     from pyspark.sql import functions as F
 
-    (partials,) = read_partial_state(spark, state_dir, _SUBTABLES, "sketch")
+    (partials,) = read_partial_state(spark, state_dir, _TABLES, "sketch")
     b = partials.groupBy("digits", "first2").agg(
         F.sum("bcnt").alias("bcnt")
     )

@@ -53,9 +53,13 @@ from spring_and_kafka_spark.streaming.sinks import (
     read_partial_state,
 )
 
-_ANCHOR_SCHEMA = "doc_id BIGINT, hv BIGINT, pos BIGINT"
-_SIZES_SCHEMA = "doc_id BIGINT, n BIGINT"
-_SUBTABLES = (("anchors", _ANCHOR_SCHEMA), ("sizes", _SIZES_SCHEMA))
+_TABLES = {
+    "anchors": ("doc_id BIGINT, hv BIGINT, pos BIGINT", _span_anchor_table),
+    "sizes": (
+        "doc_id BIGINT, n BIGINT",
+        lambda dd: dd.select("doc_id", F.col("n").cast("long").alias("n")),
+    ),
+}
 
 
 def span_anchor_delta_stream(docs: DataFrame, state_dir: str):
@@ -64,17 +68,7 @@ def span_anchor_delta_stream(docs: DataFrame, state_dir: str):
     stops, the replay harness convention). NULL-doc_id / NULL-text /
     empty-text rows are excluded exactly as the batch query's corpus
     filter excludes them."""
-    return partial_state_stream(
-        docs,
-        state_dir,
-        {
-            "anchors": _span_anchor_table,
-            "sizes": lambda dd: dd.select(
-                "doc_id", F.col("n").cast("long").alias("n")
-            ),
-        },
-        prep=span_docs,
-    )
+    return partial_state_stream(docs, state_dir, _TABLES, prep=span_docs)
 
 
 def maintained_span_cover(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -87,7 +81,7 @@ def maintained_span_cover(spark: SparkSession, state_dir: str) -> DataFrame:
     unchanged over the merged table. Torn state raises (module
     docstring)."""
     anchors, sizes = read_partial_state(
-        spark, state_dir, _SUBTABLES, "span-anchor"
+        spark, state_dir, _TABLES, "span-anchor"
     )
     an = materialize(
         anchors.select("doc_id", "hv", "pos")

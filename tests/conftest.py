@@ -17,6 +17,11 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from spring_and_kafka_spark.session import get_spark
 
+# drain(writer): run a DataStreamWriter to completion through the
+# package's one availableNow drain and return the finished query, whose
+# recentProgress the caller may read.
+from spring_and_kafka_spark.streaming.sinks import run_available_now as drain  # noqa: F401
+
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
@@ -183,18 +188,6 @@ def assert_same_rows(scols, srows, ocols, orows):
     assert row_multiset(srows, by_name(scols)) == row_multiset(orows, by_name(ocols))
 
 
-def drain(writer):
-    """Run a ``DataStreamWriter`` to completion with
-    ``trigger(availableNow=True)``: start it, wait until it ends,
-    re-raise the query's exception and return the finished query, whose
-    ``recentProgress`` the caller may read."""
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
-    if q.exception() is not None:
-        raise q.exception()
-    return q
-
-
 @pytest.fixture(scope="session")
 def duck():
     import duckdb
@@ -231,46 +224,11 @@ def stage_time_ordered_chunks(
 
 
 def mv_base_and_changelog(spark, sf_dir: str):
-    """(base view, CDC changelog) over ``sf_dir``'s orders in the
-    q_mv_incremental convention: the base is the monthly (n_orders,
-    revenue_cents) view of snapshot A; changelog rows (month_id,
-    d_orders, d_cents) retract deletes, carry the repriced updates'
-    cent difference and add inserts. mv_delta_stream folds the
-    changelog; maintained_view over the base must equal
-    q_mv_incremental."""
-    from pyspark.sql import functions as F
-
-    from spring_and_kafka_spark.operators.layout import _MV_DEL, _MV_INS, _MV_UPD
+    """(base view, CDC changelog) over ``sf_dir``'s orders, built by
+    q_mv_incremental's own operators.layout.mv_base_and_changelog.
+    mv_delta_stream folds the changelog; maintained_view over the base
+    must equal q_mv_incremental."""
+    from spring_and_kafka_spark.operators import layout
     from spring_and_kafka_spark.sources.tables import load_table
 
-    o = load_table(spark, sf_dir, "orders")
-    month_id = (F.year("o_orderdate") * 12 + F.month("o_orderdate")).cast(
-        "long"
-    ).alias("month_id")
-    cents = lambda c: F.floor(c * 100 + F.lit(0.5)).cast("long")  # noqa: E731
-    price = F.col("o_totalprice")
-    key = F.col("o_orderkey")
-
-    def rows(cond, d_orders, d_cents):
-        return o.filter(cond).select(
-            month_id,
-            F.lit(d_orders).cast("long").alias("d_orders"),
-            d_cents.alias("d_cents"),
-        )
-
-    base = o.groupBy(month_id).agg(
-        F.count("*").alias("n_orders"),
-        F.sum(cents(price)).alias("revenue_cents"),
-    )
-    changelog = (
-        rows(key % _MV_DEL == 0, -1, -cents(price))
-        .unionByName(
-            rows(
-                (key % _MV_DEL != 0) & (key % _MV_UPD == 0),
-                0,
-                cents(price * 1.1) - cents(price),
-            )
-        )
-        .unionByName(rows(key % _MV_INS == 0, 1, cents(price)))
-    )
-    return base, changelog
+    return layout.mv_base_and_changelog(load_table(spark, sf_dir, "orders"))

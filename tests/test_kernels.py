@@ -530,7 +530,8 @@ def _events_for_twins():
     """Degenerate events for the event-sequence rules: user 1 has a NULL
     ts with a NULL value, an equal-ts tie, a gap of exactly 30 min (no
     break) and one of 30 min + 1 µs (a break); user 2 has one event;
-    user 3 is a constant series (variance 0, MAD 0)."""
+    user 3 is a constant series (variance 0, MAD 0); the NULL user has
+    three events, one key in both engines."""
     us = lambda n: dt.timedelta(microseconds=n)  # noqa: E731
     t2 = TS0 + us(1_800_000_000)
     t3 = t2 + us(1_800_000_001)
@@ -543,6 +544,9 @@ def _events_for_twins():
         (6, t3 + us(10_000_000), 1, "click", None),
         (7, t3 + us(20_000_000), 1, "view", 3.0),
         (8, TS0, 2, "view", 7.0),
+        (20, TS0, None, "view", 1.0),
+        (21, t2, None, "click", 6.5),
+        (22, t3, None, "view", -2.0),
     ] + [(10 + i, TS0 + us(60_000_000 * i), 3, "view", 3.0) for i in range(5)]
     return rows, EVENTS
 
@@ -643,6 +647,30 @@ def test_event_kernel_matches_its_duckdb_twin(spark, case):
         orows = res.fetchall()
     assert srows
     assert_same_rows(df.columns, srows, ocols, orows)
+
+
+def test_stream_session_puts_a_null_ts_first(spark):
+    """q_stream_session orders a user's events NULL ts first, Spark's
+    ascending default, in both engines: the NULL-ts event is a session
+    of its own and the event after it opens the next one."""
+    from spring_and_kafka_spark import registry
+
+    spec = registry.all_specs()["q_stream_session"]
+    hour = dt.timedelta(hours=1)
+    rows = [
+        (1, None, 1, "view", 1.0),
+        (2, TS0, 1, "view", 2.0),
+        (3, TS0 + hour, 1, "click", 3.0),
+        (4, TS0, 2, "view", 4.0),
+    ]
+    with staged(spark, events=(rows, EVENTS)) as d:
+        sdf = spec.fn(spark, d)
+        srows = sdf.collect()
+        res = _duck(d, "events").execute(spec.oracle)
+        ocols = [c[0] for c in res.description]
+        orows = res.fetchall()
+    assert len(srows) == 4
+    assert_same_rows(sdf.columns, srows, ocols, orows)
 
 
 @pytest.mark.parametrize("name", ["q_text_chunk", "q_text_repetition"])

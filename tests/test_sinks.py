@@ -31,7 +31,12 @@ from spring_and_kafka_spark.streaming.segdf import (
     maintained_seg_df_hist,
     seg_df_delta_stream,
 )
-from spring_and_kafka_spark.streaming.sinks import foreach_batch_sink, parquet_sink
+from spring_and_kafka_spark.streaming.sinks import (
+    foreach_batch_sink,
+    log_sink,
+    parquet_sink,
+    run_available_now,
+)
 from spring_and_kafka_spark.streaming.sketch import merged_quantiles, sketch_stream
 from spring_and_kafka_spark.streaming.spananchor import (
     maintained_span_cover,
@@ -57,6 +62,16 @@ def test_foreach_batch_sees_every_batch(spark, tmp_path):
     assert len(seen) >= 3  # 6 files / 2 per trigger
     assert sum(n for _, n in seen) == 1000  # every event delivered once
     assert [b for b, _ in seen] == sorted({b for b, _ in seen})  # ordered, unique
+
+
+def test_log_sink_drain_counts_every_row(spark, tmp_path):
+    """The ``| log`` console sink drained by run_available_now: the
+    terminated query's progress accounts for every event."""
+    staged = stage_event_chunks(spark, SF_SMOKE, str(tmp_path / "stage"), n_chunks=3)
+    stream = read_event_stream(spark, staged, max_files_per_trigger=1)
+    q = run_available_now(log_sink(stream, str(tmp_path / "ckpt"), num_rows=1))
+    assert not q.isActive
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 1000
 
 
 def test_parquet_sink_exactly_once_restart(spark, tmp_path):

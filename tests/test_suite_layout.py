@@ -3,7 +3,8 @@
 Tests are grouped by the package family they exercise, never by the
 round that added them, and a module must not define one test name twice:
 Python keeps only the last definition, so the first test silently stops
-running — the trap a merge of two modules sets."""
+running — the trap a merge of two modules sets. One guard reads the
+package: its streams drain through one availableNow trigger."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ from collections import Counter
 from pathlib import Path
 
 TESTS = Path(__file__).resolve().parent
+PACKAGE = TESTS.parent / "spring_and_kafka_spark"
 ROUND_NUMBERED = re.compile(r"test_.*_r\d+.*\.py")
 
 
@@ -68,3 +70,16 @@ def test_guards_catch_their_traps():
     assert ROUND_NUMBERED.fullmatch("test_property_r17.py")
     assert ROUND_NUMBERED.fullmatch("test_opt_r18_extra.py")
     assert not ROUND_NUMBERED.fullmatch("test_registry_window.py")
+
+
+def test_package_has_one_available_now_trigger():
+    """Every availableNow drain goes through streaming.sinks'
+    run_available_now, so the package passes ``availableNow=True`` once."""
+    sites = [
+        f"{path.relative_to(PACKAGE)}:{node.lineno}"
+        for path in sorted(PACKAGE.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and any(k.arg == "availableNow" for k in node.keywords)
+    ]
+    assert len(sites) == 1, sites

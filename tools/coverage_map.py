@@ -185,18 +185,19 @@ STREAMING_ONLY = [
     ("stateful dedup (dropDuplicatesWithinWatermark)", "streaming/windows.py:stream_dedup"),
     ("ingest-time corpus curation (quality gate + fingerprint dedup)", "streaming/curation.py (tests/test_streaming.py::test_stream_curation_equals_batch)"),
     ("ingest-time near-dup admission (foreachBatch incremental LSH vs corpus)", "streaming/curation.py:admission_stream (tests/test_streaming.py::test_stream_admission_equals_batch_incremental)"),
-    ("incremental quantile-sketch rollup (per-batch partial histograms, merge-on-read, _SUCCESS-aware torn-state guard)", "streaming/sketch.py (tests/test_streaming_advanced.py::test_stream_merged_sketch_equals_batch)"),
-    ("incremental MV maintenance (CDC changelog stream → per-batch partial deltas, merge-on-read view, _SUCCESS-aware torn-state guard)", "streaming/mv.py (tests/test_streaming_advanced.py::test_stream_maintained_mv_equals_batch)"),
-    ("incrementally-maintained ingest freshness audit (one (day, user) presence partial per batch carrying its row/null counters, merge-on-read with the torn-state guard; ratios derived on read)", "streaming/freshness.py (tests/test_streaming_advanced.py::test_stream_maintained_freshness_equals_batch)"),
-    ("incrementally-maintained boilerplate template table (instance-count + doc-presence partials, merge-on-read flag derivation, _SUCCESS-aware torn-state guard; stream ≡ q_text_boilerplate)", "streaming/templates.py (tests/test_streaming_advanced.py::test_stream_maintained_templates_equals_batch)"),
+    ("incremental quantile-sketch rollup (per-batch partial histograms by sketches.decimal_histogram, merge-on-read via select_quantile_buckets, _SUCCESS-aware torn-state guard)", "streaming/sketch.py (tests/test_streaming_advanced.py::test_stream_merged_sketch_equals_batch)"),
+    ("incremental MV maintenance (CDC changelog stream → per-batch partial deltas by layout.mv_fold, merge-on-read by layout.mv_readout, q_mv_incremental's own fold and readout; _SUCCESS-aware torn-state guard)", "streaming/mv.py (tests/test_streaming_advanced.py::test_stream_maintained_mv_equals_batch)"),
+    ("incrementally-maintained ingest freshness audit (one (day, user) presence partial per batch by quality.freshness_fold, merge-on-read by quality.freshness_readout, q_dq_freshness's own fold and readout; torn-state guard)", "streaming/freshness.py (tests/test_streaming_advanced.py::test_stream_maintained_freshness_equals_batch)"),
+    ("incrementally-maintained boilerplate template table (text.boilerplate_counts + boilerplate_docs partials, merge-on-read by text.boilerplate_readout, q_text_boilerplate's own folds and readout; _SUCCESS-aware torn-state guard)", "streaming/templates.py (tests/test_streaming_advanced.py::test_stream_maintained_templates_equals_batch)"),
     ("incrementally-maintained segment-df state (one (seg, doc) presence partial per batch carrying its instance count, merge-on-read bit-length histogram, torn-state guard; stream ≡ q_dedup_seg_df_hist)", "streaming/segdf.py (tests/test_streaming_advanced.py::test_stream_maintained_seg_df_hist_equals_batch)"),
     ("incrementally-maintained span-anchor state (min-pos anchor partials, foldable re-min merge + distinct sizes, batch alignment/sweep tail reused verbatim, torn-state guard; stream ≡ q_dedup_span_cover)", "streaming/spananchor.py (tests/test_streaming_advanced.py::test_stream_maintained_span_cover_equals_batch)"),
-    ("stream-stream join (time-range state bound)", "streaming/joins.py (tests/test_streaming_advanced.py)"),
+    ("stream-stream join (time-range state bound)", "streaming/joins.py:stream_stream_join via purchases_with_recent_clicks (tests/test_streaming_advanced.py::test_stream_stream_join_matches_batch)"),
     ("stream-static enrich (broadcast dim per micro-batch)", "streaming/joins.py:stream_static_enrich"),
     ("arbitrary per-key state (applyInPandasWithState)", "streaming/stateful.py (tests/test_streaming_advanced.py)"),
     ("streaming CUSUM drift detector (resumable clamp recurrence in keyed state)", "streaming/stateful.py:cusum_stream (tests/test_streaming_advanced.py::test_stream_cusum_equals_batch)"),
     ("streaming last-touch attribution (per-user click state, append-mode purchase emission)", "streaming/stateful.py:attribution_stream (tests/test_streaming_advanced.py::test_stream_attribution_equals_batch)"),
-    ("log/console sink, foreachBatch, exactly-once parquet sink", "streaming/sinks.py (tests/test_sinks.py)"),
+    ("log/console sink, foreachBatch, exactly-once parquet sink, the one availableNow drain", "streaming/sinks.py:log_sink, run_available_now (tests/test_sinks.py::test_log_sink_drain_counts_every_row)"),
+    ("binaryFile media ingestion → Arrow-batched decode", "llm/multimodal.py:read_binary_dir, decode_media (tests/test_multimodal.py::test_read_binary_dir_feeds_decode_media)"),
     ("salted join / salted aggregation (skew)", "operators/skew.py (tests/test_skew_and_io.py)"),
     ("CSV/JSON/ORC readers, partitioned/bucketed writers", "sources/files.py (tests/test_skew_and_io.py, test_bucketed.py)"),
 ]

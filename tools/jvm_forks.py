@@ -123,22 +123,20 @@ def drain(spark, job: str, topic: Path, out: Path) -> int:
     non-empty micro-batch count."""
     from spring_and_kafka_spark.streaming.freshness import freshness_delta_stream
     from spring_and_kafka_spark.streaming.replay import read_event_stream
+    from spring_and_kafka_spark.streaming.sinks import run_available_now
     from spring_and_kafka_spark.streaming.windows import tumbling_counts
 
     stream = read_event_stream(spark, str(topic), 1)
     if job == "tumbling_counts":
-        q = (
+        q = run_available_now(
             tumbling_counts(stream)
             .writeStream.format("memory")
             .queryName(out.name)
             .outputMode("complete")
             .option("checkpointLocation", str(out / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
         )
     else:
         q = freshness_delta_stream(stream, str(out / "state"))
-    q.awaitTermination()
     if job == "tumbling_counts":
         spark.catalog.dropTempView(out.name)
     return sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
