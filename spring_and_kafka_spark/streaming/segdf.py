@@ -18,11 +18,12 @@ count — bounded by touched pairs per batch, never by instance volume
   distinct-source flag. At web scale this is the table to sketch
   (HLL); kept exact so stream ≡ batch is bit-testable.
 
-Read-time ``maintained_seg_df_hist`` reproduces q_dedup_seg_df_hist's
-output EXACTLY (same segment builder — llm.text.boilerplate_segments —
-same NULL-doc_id scan exclusion, same bit-length buckets, same
-floor-form share), asserted to bit-equality after a full replay in
-tests/test_streaming_advanced.py.
+Read-time ``maintained_seg_df_hist`` merges the partials to (seg, df,
+inst) and hands them to the batch query's own readout
+(llm.dedup.seg_df_histogram), over the same segment builder
+(llm.text.boilerplate_segments) and NULL-doc_id scan exclusion, so it
+reproduces q_dedup_seg_df_hist's output EXACTLY, asserted to
+bit-equality after a full replay in tests/test_streaming_advanced.py.
 
 Delivery contract: exactly-once per checkpointed document for the
 instance sums (streaming.sinks.partial_state_stream owns the

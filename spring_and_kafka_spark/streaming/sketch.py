@@ -5,7 +5,9 @@ The decimal histogram is a pure counter grid, so the streaming rollup
 needs no stateful operator at all: each micro-batch contributes its own
 partial (digits, first2, bcnt) histogram (written by
 streaming.sinks.partial_state_stream, which owns the exactly-once
-partial-state contract), and a reader merges by summing per bucket —
+partial-state contract), and a reader merges by summing per bucket
+and resolves the quantiles with the batch readout
+(sketches.select_quantile_buckets) —
 the same algebra a 100 TB warehouse uses to keep hourly sketch
 partitions and answer any-time-range quantiles by merging the covered
 hours (cf. q_agg_hll_rollup for the distinct-count analog). Batch boundaries
